@@ -39,6 +39,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from datetime import datetime
 from typing import Any, Iterable, Sequence
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +56,31 @@ DEFAULT_PARTITION_COLS = ["processed_year", "processed_month"]  # utils.py:223
 class ConstraintViolation(ValueError):
     """A write batch (or existing table, at ADD CONSTRAINT time)
     violates a CHECK constraint — the write was aborted untouched."""
+
+
+# Scratch root of every staged rewrite (`LakeEngine._scratch_dir`),
+# followed by the per-operation roots older versions staged under, so
+# the vacuums still reap their crash leftovers.
+_SCRATCH_DIRS = ("_scratch", "_dml", "_compact", "_merge", "_restore", "_mor")
+
+
+def _local_path(uri: str) -> str:
+    """Filesystem path of a ``file:`` URI (either ``file:/p`` or
+    ``file:///p`` form) or of a bare path."""
+    return urlparse(uri).path or uri
+
+
+def _append_jsonl(path: str, entry: dict[str, Any]) -> None:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "a") as f:
+        f.write(json.dumps(entry) + "\n")
+
+
+def _read_jsonl(path: str) -> list[dict[str, Any]]:
+    if not os.path.exists(path):
+        return []
+    with open(path) as f:
+        return [json.loads(line) for line in f if line.strip()]
 
 
 def _delta_available(spark: SparkSession) -> bool:
@@ -401,15 +427,23 @@ class LakeEngine:
     def _snapshot_retain_root(self, table: str, version: int) -> str:
         return os.path.join(self.zones.root, "_snapshot_log", table, f"v{version:05d}")
 
-    def _journal_snapshot(self, table: str) -> None:
+    def _journal_snapshot(self, table: str, files: list[str] | None = None) -> None:
+        """Append the table's next snapshot entry. ``files`` is the new
+        manifest when the caller already knows it (`_commit`); default
+        is a fresh listing of the live table."""
         qtable = self.qualified(table)
-        files = sorted(self.spark.table(qtable).inputFiles())
+        if files is None:
+            files = self.spark.table(qtable).inputFiles()
+        files = sorted(files)
         history = self.snapshot_history(table)
         if history and history[-1]["files"] == files:
             return  # no data change, no new version
         version = len(history) + 1
         loc = self._table_location(qtable).removeprefix("file:")
         retain_root = self._snapshot_retain_root(table, version)
+        # A crash between linking and the append below leaves this
+        # version's dir behind, unjournaled; start it afresh.
+        shutil.rmtree(retain_root, ignore_errors=True)
         # Incremental retention: a file already retained by the previous
         # version links from THAT copy (same filesystem by construction,
         # so this is inode-only even when the table itself lives on a
@@ -467,18 +501,11 @@ class LakeEngine:
             "retain_root": retain_root,
             "partition_cols": pcols,
         }
-        path = self._snapshot_log_path(table)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "a") as f:
-            f.write(json.dumps(entry) + "\n")
+        _append_jsonl(self._snapshot_log_path(table), entry)
 
     def snapshot_history(self, table: str) -> list[dict[str, Any]]:
         """All recorded data snapshots, oldest first."""
-        path = self._snapshot_log_path(table)
-        if not os.path.exists(path):
-            return []
-        with open(path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        return _read_jsonl(self._snapshot_log_path(table))
 
     def read_snapshot(self, table: str, version: int | None = None) -> DataFrame:
         """Read the table as it was at snapshot ``version`` (1-based;
@@ -510,34 +537,6 @@ class LakeEngine:
         if entry.get("base"):
             reader = reader.option("basePath", entry["base"])
         return reader.load(files)
-
-    def restore_table(self, table: str, version: int) -> int:
-        """Delta ``RESTORE TABLE t TO VERSION AS OF v`` parity
-        (round 12): make snapshot ``version`` the CURRENT table
-        content again — as a NEW snapshot, never by rewinding the
-        journal (history stays append-only, so the pre-restore state
-        remains time-travelable and a bad restore is itself
-        restorable). Implementation: materialize the old version
-        (retention hard-links make this a metadata-cheap read), stage
-        it, and land it as an ordinary overwrite through the
-        journaled write path. Returns the new version number."""
-        snap = self.read_snapshot(table, version)
-        parts = [
-            c.name
-            for c in self.spark.catalog.listColumns(self.qualified(table))
-            if c.isPartition
-        ]
-        # stage through scratch: the snapshot read may resolve to the
-        # live table's own files (latest version), and an overwrite
-        # that reads its own input truncates before reading
-        scratch = os.path.join(
-            self.zones.root, "_restore", f"{table}_{uuid.uuid4().hex[:8]}"
-        )
-        snap.write.parquet(scratch)
-        staged = self.spark.read.parquet(scratch)
-        self.write_curated(table, staged, mode="overwrite", partition_cols=parts)
-        shutil.rmtree(scratch, ignore_errors=True)
-        return self.snapshot_history(table)[-1]["version"]
 
     def version_at(self, table: str, timestamp) -> int:
         """Resolve Delta ``TIMESTAMP AS OF`` semantics: the newest
@@ -677,15 +676,31 @@ class LakeEngine:
         # snapshots journaled before partition_cols was recorded fall
         # back to the engine default (legacy entries only)
         source = recorded if recorded is not None else DEFAULT_PARTITION_COLS
-        parts = [c for c in source if c in snap.columns]
-        # Stage first: the snapshot reads the very files the overwrite
-        # truncates (same self-read hazard as compact_table).
-        scratch = os.path.join(self.zones.root, "_compact", f"{table}_restore_{uuid.uuid4().hex[:8]}")
-        snap.write.parquet(scratch)
-        staged = self.spark.read.parquet(scratch)
-        self.write_curated(table, staged, mode="overwrite", partition_cols=parts)
-        shutil.rmtree(scratch, ignore_errors=True)
+        self._overwrite_via_scratch(
+            table, snap, [c for c in source if c in snap.columns]
+        )
         return self.snapshot_history(table)[-1]["version"]
+
+    def _scratch_dir(self, name: str) -> str:
+        return os.path.join(self.zones.root, "_scratch", f"{name}_{uuid.uuid4().hex[:8]}")
+
+    def _overwrite_via_scratch(
+        self, table: str, df: DataFrame, partition_cols: Sequence[str]
+    ) -> None:
+        """Re-create ``table`` from ``df`` with a `write_curated`
+        overwrite — the path of rewrites that change the schema or the
+        partition layout, which a v1 parquet table can only take by
+        being re-created. ``df`` may read the very files the overwrite
+        truncates, so it is staged to scratch first."""
+        scratch = self._scratch_dir(table)
+        df.write.parquet(scratch)
+        self.write_curated(
+            table,
+            self.spark.read.parquet(scratch),
+            mode="overwrite",
+            partition_cols=list(partition_cols),
+        )
+        shutil.rmtree(scratch, ignore_errors=True)
 
     def clone_table(
         self, src_table: str, dst_table: str, version: int | None = None
@@ -780,18 +795,11 @@ class LakeEngine:
             "at": now.strftime("%Y-%m-%d %H:%M:%S"),
             "schema": schema,
         }
-        path = self._journal_path(table)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "a") as f:
-            f.write(json.dumps(entry) + "\n")
+        _append_jsonl(self._journal_path(table), entry)
 
     def schema_history(self, table: str) -> list[dict[str, Any]]:
         """All recorded schema versions, oldest first."""
-        path = self._journal_path(table)
-        if not os.path.exists(path):
-            return []
-        with open(path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        return _read_jsonl(self._journal_path(table))
 
     def _evolve_schema(self, qtable: str, df: DataFrame) -> DataFrame:
         """K8 add-column evolution: new df columns → ALTER TABLE ADD
@@ -901,18 +909,11 @@ class LakeEngine:
     def _journal_metrics(self, table: str, metrics: dict[str, Any]) -> None:
         now = self._now() or datetime.now()
         entry = {"at": now.strftime("%Y-%m-%d %H:%M:%S"), **metrics}
-        path = self._metrics_log_path(table)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "a") as f:
-            f.write(json.dumps(entry) + "\n")
+        _append_jsonl(self._metrics_log_path(table), entry)
 
     def metrics_history(self, table: str) -> list[dict[str, Any]]:
         """Per-batch observed metrics, oldest first."""
-        path = self._metrics_log_path(table)
-        if not os.path.exists(path):
-            return []
-        with open(path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        return _read_jsonl(self._metrics_log_path(table))
 
     # ------------------------------------------------------------------
     # §3.2 end-to-end — API fetch → raw archive → ingest to curated
@@ -2040,17 +2041,10 @@ class LakeEngine:
                 .agg(*self._iv_state_exprs(spec["aggs"], partial=False))
             )
             how = "incremental"
-        out = self._iv_finalize(state, spec["aggs"])
-        # Stage through scratch: the incremental branch reads the MV
-        # table it is about to overwrite (same self-read hazard as
-        # compact_table).
-        scratch = os.path.join(self.zones.root, "_compact", f"{name}_{uuid.uuid4().hex[:8]}")
-        out.write.parquet(scratch)
-        staged = self.spark.read.parquet(scratch)
-        self.write_curated(
-            name, staged, mode="overwrite", partition_cols=spec["partition_cols"]
+        # the incremental branch reads the MV it overwrites
+        self._overwrite_via_scratch(
+            name, self._iv_finalize(state, spec["aggs"]), spec["partition_cols"]
         )
-        shutil.rmtree(scratch, ignore_errors=True)
         defs = self._mview_defs()
         defs[name]["files"] = current
         self._save_mview_defs(defs)
@@ -2213,8 +2207,9 @@ class LakeEngine:
         zorder_bits: int = 8,
     ) -> int:
         """Bin-pack a curated table's files to ~target size. Returns the
-        resulting file count. Rewrites atomically via a temp suffix +
-        rename (single-writer assumption, as in the reference's
+        resulting file count. Commits through `_commit` (stage, move
+        in, journal, unlink — a crash leaves the old or the new
+        version; single-writer assumption, as in the reference's
         one-state-machine-per-table design).
 
         ``cluster_by`` additionally range-partitions + sorts the rewrite
@@ -2246,28 +2241,14 @@ class LakeEngine:
 
         total = estimate_scan_bytes(df)
         n_files = max(1, -(-total // target_file_bytes))  # ceil
-        # OPTIMIZE never changes partitioning: preserve the table's OWN
-        # layout (it may have been evolved via repartition_table or
-        # written with custom partition_cols — DEFAULT_PARTITION_COLS
-        # would silently drop that scheme).
-        schema_parts = [
-            c.name for c in self.spark.catalog.listColumns(qtable) if c.isPartition
-        ]
-        # Round 14 (guide §6, judge r13 #4): ONE write of the data.
-        # The old shape staged a plain copy to scratch (write #1, only
-        # to break the self-read) and then rewrote it clustered through
-        # write_curated overwrite (write #2) — the whole table's bytes
-        # hit disk twice. Now the CLUSTERED rows are staged once and
-        # committed by file splice (`_splice_replacement`, the DML
-        # machinery): the staging write completes before any live file
-        # is removed, so a crash mid-compaction leaves the table
-        # byte-untouched — strictly crash-safer than the old
-        # drop-and-recreate overwrite — and table properties
-        # (constraints, generated columns) survive because the table is
-        # never re-created. Z-value quantile boundaries now train on
-        # the live table instead of the scratch copy: identical rows,
-        # so the sampled cuts are statistically the same (layout
-        # quality is golden-tested, content is oracle-certified).
+        # ONE write of the data: the clustered rows are staged once and
+        # committed by `_commit`, which keeps the table's own partition
+        # layout (OPTIMIZE never changes partitioning) and its
+        # properties (constraints, generated columns) — the table is
+        # never re-created. Staging finishes before any live file is
+        # touched; the new files are moved in and journaled before the
+        # old ones are unlinked, so a crash at any step leaves the old
+        # or the new version, and `vacuum_orphans` tidies the rest.
         if cluster_by and zorder and len(cluster_by) >= 2:
             zcol = self._zvalue(df, list(cluster_by), zorder_bits)
             staged = (
@@ -2292,7 +2273,7 @@ class LakeEngine:
         with _conf_override(
             self.spark, "spark.sql.execution.rangeExchange.sampleSizePerPartition", "1000"
         ):
-            self._splice_replacement(table, qtable, removed, staged.select(*df.columns))
+            self._commit(table, removed, staged.select(*df.columns))
         return len(self.spark.table(qtable).inputFiles())
 
     def compact_partitions(
@@ -2309,11 +2290,9 @@ class LakeEngine:
         yesterday's partition, not the decade.
 
         ``where`` must reference partition columns ONLY (enforced, as
-        Delta does): a data-column predicate under dynamic partition
-        overwrite would silently DROP the partition's non-matching
-        rows. The rewrite stages the selected rows to scratch (the
-        compact_table self-read rule), then lands them with dynamic
-        partition overwrite so exactly the selected partitions swap.
+        Delta does): the rewrite replaces every file of the selected
+        partitions, so a data-column predicate would silently DROP the
+        partitions' non-matching rows. Commits through `_commit`.
         Returns the file count of the rewritten selection."""
         import re as _re
 
@@ -2333,32 +2312,15 @@ class LakeEngine:
         if bad:
             raise ValueError(
                 f"compact_partitions predicate may reference partition columns "
-                f"only; {sorted(bad)} are data columns (a data predicate under "
-                f"dynamic overwrite would drop rows)"
+                f"only; {sorted(bad)} are data columns (a data predicate would "
+                f"drop rows)"
             )
         sel = df_all.filter(where)
         from cbts_datalake_synnex_spark.plans.budget import estimate_scan_bytes
 
         total = estimate_scan_bytes(sel)
         n_files = max(1, -(-total // target_file_bytes))
-        scratch = os.path.join(
-            self.zones.root, "_compact", f"{table}_{uuid.uuid4().hex[:8]}"
-        )
-        sel.write.parquet(scratch)
-        staged = self.spark.read.parquet(scratch)
-        prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                staged.repartition(int(n_files))
-                .select(*df_all.columns)  # insertInto is positional
-                .write.mode("overwrite")
-                .insertInto(qtable)
-            )
-        finally:
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        shutil.rmtree(scratch, ignore_errors=True)
-        self._journal_snapshot(table)
+        self._commit(table, sel.inputFiles(), sel.repartition(int(n_files)))
         return len(self.spark.table(qtable).filter(where).inputFiles())
 
     # ------------------------------------------------------------------
@@ -2695,17 +2657,7 @@ class LakeEngine:
         missing = [c for c in partition_cols if c not in df.columns]
         if missing:
             raise ValueError(f"partition columns not in table: {missing}")
-        # stage to scratch first — overwrite would truncate the files
-        # we are still reading (same discipline as compact_table)
-        scratch = os.path.join(
-            self.zones.root, "_compact", f"{table}_repart_{uuid.uuid4().hex[:8]}"
-        )
-        df.write.parquet(scratch)
-        staged = self.spark.read.parquet(scratch)
-        self.write_curated(
-            table, staged, mode="overwrite", partition_cols=list(partition_cols)
-        )
-        shutil.rmtree(scratch, ignore_errors=True)
+        self._overwrite_via_scratch(table, df, partition_cols)
         return len(self.spark.table(qtable).inputFiles())
 
     def describe_detail(self, table: str) -> DataFrame:
@@ -2760,9 +2712,10 @@ class LakeEngine:
         `vacuum_snapshots` is the retention half). A Hive parquet scan
         reads whatever sits in the directory, so a crash artifact
         isn't invisible — it silently ADDS rows; this restores the
-        directory to the last committed state. Also sweeps stale DML/
-        compaction scratch dirs (``_dml``/``_compact`` under the lake
-        root) left by crashed jobs. Single-writer assumption: don't
+        directory to the last committed state — the recovery step of
+        a `_commit` cut short at any point. Also sweeps the table's
+        stale scratch dirs (under ``_scratch`` in the lake root) left
+        by crashed jobs. Single-writer assumption: don't
         run concurrently with a live rewrite (whose scratch this would
         reap). Returns the number of files removed (counted only, when
         ``dry_run``).
@@ -2777,16 +2730,14 @@ class LakeEngine:
         manifest) anti-joined against the journaled manifest; the
         delete fan-out batches through the store's bulk-delete API.
         The journal side is already bounded (one manifest read)."""
-        from urllib.parse import urlparse
-
         qtable = self.qualified(table)
         if not self.spark.catalog.tableExists(qtable):
             raise ValueError(f"no such table: {qtable}")
         history = self.snapshot_history(table)
         if not history:
             raise ValueError(f"{qtable} has no journaled snapshot to repair to")
-        manifest = {urlparse(f).path or f for f in history[-1]["files"]}
-        loc = urlparse(self._table_location(qtable)).path or self._table_location(qtable)
+        manifest = {_local_path(f) for f in history[-1]["files"]}
+        loc = _local_path(self._table_location(qtable))
         removed = 0
         for dirpath, _dirs, files in os.walk(loc):
             for fname in files:
@@ -2795,20 +2746,10 @@ class LakeEngine:
                     removed += 1
                     if not dry_run:
                         os.remove(p)
-        for scratch in ("_dml", "_compact"):
-            root = os.path.join(self.zones.root, scratch)
-            if os.path.isdir(root):
-                for d in os.listdir(root):
-                    if d.startswith(f"{table}_"):
-                        removed += len(
-                            [
-                                f
-                                for _, _, fs in os.walk(os.path.join(root, d))
-                                for f in fs
-                            ]
-                        )
-                        if not dry_run:
-                            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+        for d in self._scratch_leftovers(f"{table}_"):
+            removed += sum(len(fs) for _, _, fs in os.walk(d))
+            if not dry_run:
+                shutil.rmtree(d, ignore_errors=True)
         if removed and not dry_run:
             self.spark.catalog.refreshTable(qtable)
         return removed
@@ -2893,13 +2834,7 @@ class LakeEngine:
             self.spark.sql(
                 f"ALTER TABLE {qtable} UNSET TBLPROPERTIES ('generated.col.{column}')"
             )
-        scratch = os.path.join(
-            self.zones.root, "_compact", f"{table}_dropcol_{uuid.uuid4().hex[:8]}"
-        )
-        df.drop(column).write.parquet(scratch)
-        staged = self.spark.read.parquet(scratch)
-        self.write_curated(table, staged, mode="overwrite", partition_cols=parts)
-        shutil.rmtree(scratch, ignore_errors=True)
+        self._overwrite_via_scratch(table, df.drop(column), parts)
         return len(self.spark.table(qtable).inputFiles())
 
     def rename_column(self, table: str, old: str, new: str) -> int:
@@ -2929,18 +2864,13 @@ class LakeEngine:
             self.spark.sql(
                 f"ALTER TABLE {qtable} UNSET TBLPROPERTIES ('generated.col.{old}')"
             )
-        scratch = os.path.join(
-            self.zones.root, "_compact", f"{table}_rencol_{uuid.uuid4().hex[:8]}"
-        )
-        self.spark.table(qtable).withColumnRenamed(old, new).write.parquet(scratch)
-        staged = self.spark.read.parquet(scratch)
+        renamed = self.spark.table(qtable).withColumnRenamed(old, new)
         if gen_expr is not None:
             esc = gen_expr.replace("'", "''")
             self.spark.sql(
                 f"ALTER TABLE {qtable} SET TBLPROPERTIES ('generated.col.{new}' = '{esc}')"
             )
-        self.write_curated(table, staged, mode="overwrite", partition_cols=parts)
-        shutil.rmtree(scratch, ignore_errors=True)
+        self._overwrite_via_scratch(table, renamed, parts)
         return len(self.spark.table(qtable).inputFiles())
 
     def table_layout_report(self, table: str, target_file_bytes: int = 128 * 1024 * 1024) -> DataFrame:
@@ -3075,23 +3005,26 @@ class LakeEngine:
         return z
 
     # ------------------------------------------------------------------
-    # Scratch hygiene: compact/merge stage through _compact/_merge and
-    # clean up on success; a crashed job can leave orphans behind. At
+    # Scratch hygiene: every staged rewrite stages under _scratch and
+    # cleans up on success; a crashed job can leave orphans behind. At
     # 100 TB orphaned rewrite attempts are real storage money — this is
     # the engine's (trivial) VACUUM.
-    def vacuum_scratch(self) -> int:
-        """Delete leftover compact/merge scratch dirs (single-writer
-        assumption — nothing references scratch once the owning call
-        returned). Returns the number of dirs removed."""
-        removed = 0
-        for sub in ("_compact", "_merge"):
+    def _scratch_leftovers(self, prefix: str = "") -> list[str]:
+        out = []
+        for sub in _SCRATCH_DIRS:
             base = os.path.join(self.zones.root, sub)
-            if not os.path.isdir(base):
-                continue
-            for d in os.listdir(base):
-                shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-                removed += 1
-        return removed
+            if os.path.isdir(base):
+                out += [os.path.join(base, d) for d in os.listdir(base) if d.startswith(prefix)]
+        return out
+
+    def vacuum_scratch(self) -> int:
+        """Delete every leftover scratch dir (single-writer assumption —
+        nothing references scratch once the owning call returned).
+        Returns the number of dirs removed."""
+        leftovers = self._scratch_leftovers()
+        for d in leftovers:
+            shutil.rmtree(d, ignore_errors=True)
+        return len(leftovers)
 
     # ------------------------------------------------------------------
     # Upsert / MERGE — the lakehouse write mode the reference approximates
@@ -3106,17 +3039,17 @@ class LakeEngine:
         keys: Sequence[str],
         partition_cols: Sequence[str] | None = None,
     ) -> None:
-        """Key-based upsert into a curated table.
+        """Key-based upsert into a curated table: a matched key's row is
+        replaced whole by the batch row, a new key is inserted.
 
         Delta path: a single transactional ``MERGE`` (file-pruned by the
         key predicate — touches only files containing matched keys).
-        Parquet fallback: partition-scoped rewrite — only partitions
-        present in the source batch are re-written (dynamic partition
-        overwrite), so cost scales with the touched slice, not the
-        table. At 100 TB the Delta path is the real answer; the
-        fallback stays correct and bounded when the source batch is
-        partition-aligned (the reference's own layout guarantees this:
-        every batch carries processed_year/month).
+        Parquet path: `merge_rows`, which rewrites only the files
+        holding matched keys (wherever the key lives, so a re-dated key
+        leaves no stale row behind) and adds the inserts as new files;
+        every other file keeps its inode. Duplicate batch keys raise,
+        as on the Delta path. ``partition_cols`` applies only when the
+        call creates the table.
         """
         qtable = self.qualified(table)
         if not self.spark.catalog.tableExists(qtable):
@@ -3125,73 +3058,17 @@ class LakeEngine:
         if self.table_format == "delta":
             self._delta.upsert_all(qtable, df, keys)
             return
-        # Parquet fallback. Align the source to the table schema (adds
-        # genuinely new columns via K8 ALTER, nulls missing ones) ...
+        # Align to the table schema (K8 widening; NULL for columns the
+        # batch lacks) so the SET map covers every non-key column.
         aligned = self._evolve_schema(qtable, df)
-        target = self.spark.table(qtable)
-        # The table's ACTUAL partition columns — not merely columns that
-        # share a name. Dynamic partition overwrite on a table that is
-        # not really partitioned by `parts` would replace the WHOLE
-        # table with just the touched slice (silent data loss).
-        actual_parts = {
-            c.name for c in self.spark.catalog.listColumns(qtable) if c.isPartition
-        }
-        parts = [
-            c for c in (partition_cols or DEFAULT_PARTITION_COLS) if c in actual_parts
-        ]
-        if parts:
-            # ... restrict the rewrite to partitions the batch touches
-            # PLUS partitions where a matched key currently lives — a
-            # key whose partition values changed (PO re-dated to a new
-            # month) would otherwise leave its stale row behind in the
-            # old, un-rewritten partition. The key-location lookup is
-            # one semi-join scan of the target (Delta MERGE's file
-            # pruning is what makes this cheap at scale; here parquet
-            # stats/clustering prune what they can). The partition list
-            # is small by construction (collect is driver-safe).
-            batch_parts = aligned.select(*parts).distinct()
-            moved_parts = (
-                target.join(
-                    aligned.select(*[F.col(k) for k in keys]).distinct(),
-                    on=list(keys),
-                    how="left_semi",
-                )
-                .select(*parts)
-                .distinct()
-            )
-            touched = [
-                tuple(r) for r in batch_parts.union(moved_parts).distinct().collect()
-            ]
-            pred = F.lit(False)
-            for combo in touched:
-                clause = F.lit(True)
-                for c, v in zip(parts, combo):
-                    clause = clause & (F.col(c).eqNullSafe(F.lit(v)))
-                pred = pred | clause
-            target_slice = target.filter(pred)
-        else:
-            target_slice = target
-        kept = target_slice.join(
-            aligned.select(*[F.col(k) for k in keys]).distinct(), on=list(keys), how="left_anti"
+        self.merge_rows(
+            table,
+            aligned,
+            keys,
+            when_matched_update={
+                c: F.col(f"s.`{c}`") for c in aligned.columns if c not in keys
+            },
         )
-        merged = kept.unionByName(aligned)
-        # Self-overwrite would read while truncating → stage to scratch.
-        scratch = os.path.join(self.zones.root, "_merge", f"{table}_{uuid.uuid4().hex[:8]}")
-        merged.write.parquet(scratch)
-        staged = self.spark.read.parquet(scratch)
-        if parts:
-            # dynamic partition overwrite: replace ONLY the touched
-            # partitions, leave the rest of the table's files untouched.
-            with _conf_override(
-                self.spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            ):
-                cols = self.spark.table(qtable).columns
-                staged.select(*cols).write.insertInto(qtable, overwrite=True)
-        else:
-            self.write_curated(table, staged, mode="overwrite", partition_cols=[])
-        shutil.rmtree(scratch, ignore_errors=True)
-        self.spark.catalog.refreshTable(qtable)
-        self._journal_snapshot(table)
 
     # ------------------------------------------------------------------
     # Row-level DML on plain parquet (Delta DELETE/UPDATE parity; the
@@ -3244,8 +3121,6 @@ class LakeEngine:
         rows before splicing (Delta enforces CHECK on UPDATE/MERGE,
         not just INSERT); DELETE passes ``False`` — removing rows
         cannot introduce a violation, so it skips the extra agg."""
-        from urllib.parse import urlparse
-
         qtable = self.qualified(table)
         if not self.spark.catalog.tableExists(qtable):
             raise ValueError(f"no such table: {qtable}")
@@ -3253,8 +3128,8 @@ class LakeEngine:
         cond = F.coalesce(cond.cast("boolean"), F.lit(False))  # NULL ⇒ no match
         target = self.spark.table(qtable)
         # Which files hold matching rows. The scan is predicate-pushed;
-        # the distinct file list is bounded by affected files (driver-
-        # safe the same way merge_upsert's partition list is).
+        # the distinct file list is bounded by affected files, so the
+        # collect is driver-safe.
         matched_files = [
             r[0]
             for r in target.filter(cond)
@@ -3284,7 +3159,7 @@ class LakeEngine:
                 # values.
                 replacement = self._apply_generated_columns(table, replacement)
                 self._enforce_constraints(table, replacement)
-            self._splice_replacement(table, qtable, matched_files, replacement)
+            self._commit(table, matched_files, replacement)
         finally:
             if pinned is not None:
                 pinned.unpersist()
@@ -3317,53 +3192,71 @@ class LakeEngine:
             ]
         )
 
-    def _splice_replacement(
-        self, table: str, qtable: str, removed_files: list[str], replacement: DataFrame
+    def _commit(
+        self, table: str, removed_files: list[str], replacement: DataFrame
     ) -> None:
-        """Atomically-enough swap ``removed_files`` for the rows of
-        ``replacement``: stage the replacement (reading while deleting
-        the files underneath would race), drop the removed files,
-        splice the staged parts in under the same partition dirs."""
-        from urllib.parse import urlparse
+        """Replace ``removed_files`` of ``table`` with the rows of
+        ``replacement`` — the one commit path of every same-schema
+        rewrite (DELETE/UPDATE/MERGE, compaction, deletion-vector
+        folding). Steps, in crash order:
 
+        1. stage the replacement under scratch (its plan may read the
+           very files being replaced);
+        2. move the staged files into the table's partition dirs
+           (``recover_partitions`` if a new dir appeared);
+        3. append the snapshot entry: the previous manifest minus
+           ``removed_files`` plus the moved-in files. This is the
+           commit point;
+        4. unlink ``removed_files`` (retained snapshot links keep their
+           inodes for time travel).
+
+        A crash before step 3 leaves `read_snapshot` on the old
+        version, a crash after it on the new one; either way
+        `vacuum_orphans` puts the directory back in line with that
+        version (until then a directory scan may see rows twice, never
+        lose them). Only local (``file:``) locations: any other scheme
+        raises before anything is staged."""
+        qtable = self.qualified(table)
         loc = self._table_location(qtable)
-        loc_path = urlparse(loc).path or loc
-        actual_parts = [
-            c.name for c in self.spark.catalog.listColumns(qtable) if c.isPartition
-        ]
-        scratch = os.path.join(self.zones.root, "_dml", f"{table}_{uuid.uuid4().hex[:8]}")
+        if urlparse(loc).scheme not in ("", "file"):
+            raise ValueError(
+                f"cannot commit to {qtable} at {loc}: file commits need a "
+                "local (file:) table location"
+            )
+        history = self.snapshot_history(table)
+        live = history[-1]["files"] if history else self.spark.table(qtable).inputFiles()
+        parts = [c.name for c in self.spark.catalog.listColumns(qtable) if c.isPartition]
+        scratch = self._scratch_dir(table)
         writer = replacement.write.option("compression", "snappy")
-        if actual_parts:
-            writer = writer.partitionBy(*actual_parts)
+        if parts:
+            writer = writer.partitionBy(*parts)
         writer.parquet(scratch)
-        # File surgery: drop the removed files, splice in the staged
-        # ones under the same partition dirs. Retained snapshot copies
-        # (hard links) keep the removed inodes alive for time travel.
-        for f in removed_files:
-            p = urlparse(f).path or f
-            if os.path.exists(p):
-                os.remove(p)
-        new_partition_dirs = False
+        added, new_dirs = [], False
         for dirpath, _dirs, files in os.walk(scratch):
+            dst_dir = os.path.normpath(
+                os.path.join(_local_path(loc), os.path.relpath(dirpath, scratch))
+            )
             for fname in files:
                 if not fname.endswith(".parquet"):
                     continue
-                rel = os.path.relpath(dirpath, scratch)
-                dst_dir = loc_path if rel == "." else os.path.join(loc_path, rel)
                 if not os.path.isdir(dst_dir):
                     # a rewrite moved rows to a partition value the
-                    # catalog has never seen — repair below (K9)
-                    new_partition_dirs = True
+                    # catalog has never seen — repaired below (K9)
+                    new_dirs = True
                     os.makedirs(dst_dir, exist_ok=True)
-                os.replace(
-                    os.path.join(dirpath, fname),
-                    os.path.join(dst_dir, f"dml-{uuid.uuid4().hex[:8]}-{fname}"),
-                )
+                dst = os.path.join(dst_dir, f"dml-{uuid.uuid4().hex[:8]}-{fname}")
+                os.replace(os.path.join(dirpath, fname), dst)
+                added.append(f"file://{dst}")
         shutil.rmtree(scratch, ignore_errors=True)
-        if new_partition_dirs and actual_parts:
+        if new_dirs and parts:
             self.recover_partitions(table)
+        gone = {_local_path(f) for f in removed_files}
+        kept = [f for f in live if _local_path(f) not in gone]
+        self._journal_snapshot(table, files=kept + added)
+        for p in gone:
+            if os.path.exists(p):
+                os.remove(p)
         self.spark.catalog.refreshTable(qtable)
-        self._journal_snapshot(table)
 
     def delete_rows(self, table: str, condition) -> int:
         """``DELETE FROM table WHERE condition`` (SQL semantics: only
@@ -3528,21 +3421,12 @@ class LakeEngine:
     def apply_deletion_vectors(self, table: str) -> int:
         """Fold the deletion vector into a physical rewrite (the
         compaction moment — when enough deletes accumulate that read
-        amplification outweighs one rewrite): stage `read_mor` through
-        scratch, overwrite, drop the vector. Returns the surviving
-        row count."""
+        amplification outweighs one rewrite): commit `read_mor` in
+        place of every live file, drop the vector. Returns the
+        surviving row count."""
         qtable = self.qualified(table)
         dv = self.qualified(f"{table}__dv")
-        parts = [
-            c.name for c in self.spark.catalog.listColumns(qtable) if c.isPartition
-        ]
-        scratch = os.path.join(
-            self.zones.root, "_mor", f"{table}_{uuid.uuid4().hex[:8]}"
-        )
-        self.read_mor(table).write.parquet(scratch)
-        staged = self.spark.read.parquet(scratch)
-        self.write_curated(table, staged, mode="overwrite", partition_cols=parts)
-        shutil.rmtree(scratch, ignore_errors=True)
+        self._commit(table, self.spark.table(qtable).inputFiles(), self.read_mor(table))
         self.spark.sql(f"DROP TABLE IF EXISTS {dv}")
         return self.spark.table(qtable).count()
 
@@ -3831,7 +3715,7 @@ class LakeEngine:
                     replacement = replacement.withColumn(g, F.expr(e))
             replacement = self._apply_generated_columns(table, replacement)
         self._enforce_constraints(table, replacement)
-        self._splice_replacement(table, qtable, matched_files, replacement)
+        self._commit(table, matched_files, replacement)
         return {"updated": n_updated, "deleted": n_deleted, "inserted": n_inserted}
 
     def apply_changes(

@@ -262,8 +262,9 @@ def binary_auc(
     # range exchanges — if the exchange were evaluated twice, the
     # sampled range boundaries (and hence __pid assignments) could
     # differ between branches and the AUC would be wrong (ADVICE r9).
-    # Round 14: the pin is ranks._pin_ranged (cache — same single-
-    # evaluation guarantee, no eager blocking action, reclaimable).
+    # The pin is ranks._pin_ranged: a lazy localCheckpoint (one
+    # evaluation, pinned on the first action). Its blocks outlive
+    # this call until the caller runs operators._util.sweep_pinned_rdds.
     from cbts_datalake_synnex_spark.operators.ranks import _pin_ranged
 
     ranged = _pin_ranged(

@@ -2120,8 +2120,8 @@ def lc_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m
     """,
     doc="K++ [EXT] — partition-scoped compaction (OPTIMIZE WHERE "
-    "parity): only the selected partition's files rewrite (dynamic "
-    "partition overwrite off a scratch stage), all other partitions' "
+    "parity): only the selected partition's files rewrite (one "
+    "engine._commit of that partition's files), all other partitions' "
     "file lists stay byte-identical, data-column predicates refused "
     "(engine.compact_partitions).",
 )
@@ -2329,7 +2329,7 @@ def lc_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="K++ [EXT] — RESTORE parity: snapshot v1 re-landed as a new "
     "journaled version after a destructive overwrite; append-only "
     "history keeps the bad version time-travelable and content "
-    "equality is certified row-for-row (engine.restore_table).",
+    "equality is certified row-for-row (engine.restore_snapshot).",
 )
 def lc_restore_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_table(spark, sf_dir, "orders").filter(
@@ -2339,7 +2339,7 @@ def lc_restore_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         eng.write_curated("rt", base, mode="overwrite", partition_cols=[])
         bad = base.filter(F.col("o_orderkey") % 2 == 0)
         eng.write_curated("rt", bad, mode="overwrite", partition_cols=[])
-        new_v = eng.restore_table("rt", 1)
+        new_v = eng.restore_snapshot("rt", 1)
         cur = spark.table(eng.qualified("rt"))
         n_v1 = eng.read_snapshot("rt", 1).count()
         n_v2 = eng.read_snapshot("rt", 2).count()

@@ -14,6 +14,9 @@
 - merge_rows' default broadcast decision comes from Catalyst's size
   estimate, so an arbitrarily large merge source cannot OOM the
   driver.
+- A crash at any file step of a commit (merge, compaction) leaves the
+  old or the new version; `vacuum_orphans` repairs the directory, and
+  a non-local table location fails loudly.
 """
 
 from __future__ import annotations
@@ -274,7 +277,7 @@ def test_compact_if_fragmented_policy(spark, eng):
     assert spark.table(qt).count() == 20
 
 
-def test_vacuum_orphans_repairs_crash_artifacts(spark, eng):
+def test_vacuum_orphans_repairs_crash_artifacts(spark, eng, monkeypatch):
     """A file left in the table directory by a crashed rewrite is
     silently READ by the Hive parquet scan (extra rows); vacuum_orphans
     restores the directory to the last journaled manifest and sweeps
@@ -308,3 +311,129 @@ def test_vacuum_orphans_repairs_crash_artifacts(spark, eng):
     assert not os.path.exists(os.path.join(eng.zones.root, "_dml", "t_deadbeef"))
     # time travel unaffected (retention links live elsewhere)
     assert eng.read_snapshot("t", 1).count() == 20
+
+    # a restore cut short after staging leaves its scratch copy behind
+    def _crash(*_a, **_kw):
+        raise RuntimeError("crash")
+
+    monkeypatch.setattr(eng, "write_curated", _crash)
+    with pytest.raises(RuntimeError):
+        eng.restore_snapshot("t", 1)
+    monkeypatch.undo()
+    leftovers = eng._scratch_leftovers("t_")
+    assert leftovers
+    n_staged = sum(len(fs) for d in leftovers for _, _, fs in os.walk(d))
+    assert eng.vacuum_orphans("t") == n_staged
+    assert not any(os.path.exists(d) for d in leftovers)
+    assert spark.table(qt).count() == 20
+
+
+# ------------------------------------------------------- crash-ordered commit
+class _Crash(RuntimeError):
+    pass
+
+
+def _arm_crash(monkeypatch, step: str, nth: int) -> None:
+    """Make the engine's ``nth`` call of ``os.<step>`` — or, for
+    ``step == "journal"``, its snapshot-journal append — raise, as if
+    the process died there."""
+    import os
+    import types
+
+    import cbts_datalake_synnex_spark.engine as engine_mod
+
+    if step == "journal":
+        real_append = engine_mod._append_jsonl
+
+        def append(path, entry):
+            if "_snapshot_log" in path:
+                raise _Crash("journal append")
+            real_append(path, entry)
+
+        monkeypatch.setattr(engine_mod, "_append_jsonl", append)
+        return
+    calls = []
+
+    def fault(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == nth:
+            raise _Crash(f"os.{step} #{nth}")
+        return getattr(os, step)(*args, **kwargs)
+
+    monkeypatch.setattr(engine_mod, "os", types.SimpleNamespace(**{**vars(os), step: fault}))
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select("k", "v", "p").collect())
+
+
+def _merge_op(spark, eng):
+    src = spark.createDataFrame(
+        [(0, "u0", 0), (1, "u1", 1), (100, "new", 0)], "k int, v string, p int"
+    )
+    eng.merge_rows("t", src, ["k"])
+
+
+def _compact_op(spark, eng):
+    eng.compact_table("t")
+
+
+# (step, nth call, version the crash must leave): moves and the journal
+# append come before the commit point, unlinks after it.
+_CRASH_POINTS = [
+    ("replace", 1, "old"),
+    ("replace", 2, "old"),
+    ("journal", 1, "old"),
+    ("remove", 1, "new"),
+    ("remove", 2, "new"),
+]
+
+
+@pytest.mark.parametrize("step,nth,lands", _CRASH_POINTS)
+@pytest.mark.parametrize("op", ["merge_rows", "compact_table"])
+def test_commit_crash_leaves_old_or_new_version(spark, eng, monkeypatch, op, step, nth, lands):
+    """A crash at any file step of `_commit` leaves `read_snapshot` on
+    the old or the new version, row for row; `vacuum_orphans` then
+    brings the live table to that same version, and the operation can
+    simply be run again."""
+    df = spark.createDataFrame(
+        [(i, f"n{i}", i % 2) for i in range(20)], "k int, v string, p int"
+    )
+    eng.write_curated("t", df.filter("k < 10"), mode="overwrite", partition_cols=["p"])
+    eng.write_curated("t", df.filter("k >= 10"), mode="append", partition_cols=["p"])
+    qt = eng.qualified("t")
+    old = _rows(spark.table(qt))
+    run = _merge_op if op == "merge_rows" else _compact_op
+    if op == "merge_rows":
+        changed = {0: (0, "u0", 0), 1: (1, "u1", 1), 100: (100, "new", 0)}
+        new = sorted({**{r[0]: r for r in old}, **changed}.values())
+    else:
+        new = old
+    expected = old if lands == "old" else new
+
+    _arm_crash(monkeypatch, step, nth)
+    with pytest.raises(_Crash):
+        run(spark, eng)
+    monkeypatch.undo()
+
+    assert _rows(eng.read_snapshot("t")) == expected
+    eng.vacuum_orphans("t")
+    assert _rows(spark.table(qt)) == expected
+    assert not eng._scratch_leftovers("t_")
+
+    run(spark, eng)
+    assert _rows(spark.table(qt)) == new
+    assert _rows(eng.read_snapshot("t")) == new
+
+
+def test_commit_refuses_non_local_location(spark, eng, monkeypatch):
+    """A table whose location is not on the local filesystem fails
+    loudly, before anything is staged — never a silent no-op that
+    orphans a staged copy."""
+    qt = _seed(spark, eng)
+    monkeypatch.setattr(eng, "_table_location", lambda _qt: "s3a://lake/guard/t")
+    with pytest.raises(ValueError, match="s3a://lake/guard/t"):
+        eng.compact_table("t")
+    assert not eng._scratch_leftovers()
+    monkeypatch.undo()
+    assert spark.table(qt).count() == 20

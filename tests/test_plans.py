@@ -465,7 +465,7 @@ def test_round8_operator_plan_shapes(spark, sf_dir):
     _mmr = _sim.mmr_rerank(_pool, _emb, id_col="vec_id", vec_col="embedding", k=5, lambda_=0.7)
     rr = explain_str(_mmr, "simple")
     assert "FlatMapCoGroupsInPandas" in rr    # kNN per-cell GEMM
-    assert "FlatMapGroupsInPandas" in rr      # MMR per-query greedy
+    assert "MapInPandas" in rr                # MMR per-query greedy, batched
     assert "CartesianProduct" not in rr
     # and the registry report itself stays cartesian-free
     rr_q = explain_str(REGISTRY["pipeline_retrieve_rerank"].fn(spark, sf_dir), "simple")
