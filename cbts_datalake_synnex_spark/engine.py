@@ -41,7 +41,8 @@ from datetime import datetime
 from typing import Any, Iterable, Sequence
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cbts_datalake_synnex_spark.functions.audit import with_audit_columns
@@ -56,6 +57,21 @@ DEFAULT_PARTITION_COLS = ["processed_year", "processed_month"]  # utils.py:223
 class ConstraintViolation(ValueError):
     """A write batch (or existing table, at ADD CONSTRAINT time)
     violates a CHECK constraint — the write was aborted untouched."""
+
+
+# Table-property prefixes of the engine's constraints and generated
+# columns (`ALTER TABLE ... SET TBLPROPERTIES`).
+_CHECK, _UNIQUE, _GENERATED = "constraint.check.", "constraint.unique.", "generated.col."
+_ENGINE_PROPS = (_CHECK, _UNIQUE, _GENERATED)
+
+
+def _prefixed(props: dict[str, str], prefix: str) -> dict[str, str]:
+    """``props`` entries under ``prefix``, keyed by the rest of the key."""
+    return {k[len(prefix):]: v for k, v in props.items() if k.startswith(prefix)}
+
+
+def _unique_specs(props: dict[str, str]) -> dict[str, list[str]]:
+    return {name: spec.split(",") for name, spec in _prefixed(props, _UNIQUE).items()}
 
 
 # Scratch root of every staged rewrite (`LakeEngine._scratch_dir`),
@@ -176,7 +192,20 @@ class LakeEngine:
         lines = [json.dumps(rec, default=str) for rec in data]
         if not lines:
             return self.spark.createDataFrame([], "dummy string").limit(0).drop("dummy")
-        return self.spark.read.json(self.spark.sparkContext.parallelize(lines, max(1, len(lines) // 5000 + 1)))
+        # The JVM reader parses the lines (`DataFrameReader.json` over a
+        # Dataset[String]), so no later job of the batch starts a Python
+        # worker. One partition per 5 000 records: that is one staged
+        # and one curated file per 5 000.
+        text = self._string_frame("value", lines).coalesce(len(lines) // 5000 + 1)
+        jtext = getattr(text._jdf, "as")(self.spark._jvm.org.apache.spark.sql.Encoders.STRING())
+        return DataFrame(self.spark._jsparkSession.read().json(jtext), self.spark)
+
+    def _string_frame(self, name: str, values: list[str]) -> DataFrame:
+        """One string column, shipped through Arrow into a JVM relation
+        (a list of tuples would become a Python RDD)."""
+        return self.spark.createDataFrame(
+            pd.DataFrame({name: pd.Series(values, dtype=object)}), f"`{name}` string"
+        )
 
     # ------------------------------------------------------------------
     # K4 — gzipped JSON raw archive (utils.py:210-220)
@@ -209,15 +238,16 @@ class LakeEngine:
         df = apply_ingest_policy(df, stringify=True)
         df = with_audit_columns(df, self._now())
         path = self.zones.staging(table)
-        df.write.mode("append").format("json").option("compression", "gzip").save(
-            os.path.join(path, uuid.uuid4().hex)
-        )
+        batch = os.path.join(path, uuid.uuid4().hex)
+        df.write.mode("append").format("json").option("compression", "gzip").save(batch)
         if incremental:
-            # `_incremental` twin receives the same append (utils.py:153)
-            inc = self.zones.staging(f"{table}_incremental")
-            df.write.mode("append").format("json").option("compression", "gzip").save(
-                os.path.join(inc, uuid.uuid4().hex)
-            )
+            # `_incremental` twin receives the same append (utils.py:153):
+            # hard links of the files just written, not a second write.
+            # Staging is local, like `prepare_staging`'s rmtree.
+            twin = os.path.join(self.zones.staging(f"{table}_incremental"), uuid.uuid4().hex)
+            os.makedirs(twin)
+            for name in os.listdir(batch):
+                os.link(os.path.join(batch, name), os.path.join(twin, name))
         return path
 
     # ------------------------------------------------------------------
@@ -275,19 +305,25 @@ class LakeEngine:
         """
         qtable = self.qualified(table)
         exists = self.spark.catalog.tableExists(qtable)
-        # Validation (generated-column verify + CHECK) and the write
-        # are separate Spark jobs over the same batch plan; pin the
-        # batch so a non-deterministic source (rand()/uuid()/a changing
-        # upstream) cannot pass validation yet persist different,
-        # violating rows. The first validation agg materializes the
-        # cache; the write then reuses the pinned partitions.
+        # The engine's properties (constraints, generated columns), read
+        # once for every check below. Validation and the write are
+        # separate Spark jobs over the same batch plan; pin the batch so
+        # a non-deterministic source (rand()/uuid()/a changing upstream)
+        # cannot pass validation yet persist different, violating rows.
+        # The first validation agg materializes the cache; the write
+        # then reuses the pinned partitions.
+        props = (
+            {k: v for k, v in self._table_props(table).items() if k.startswith(_ENGINE_PROPS)}
+            if exists
+            else {}
+        )
         pinned = None
-        if exists and (self.generated_columns(table) or self.table_constraints(table) or self.unique_constraints(table)):
+        if props:
             pinned = df.persist()
             df = pinned
         try:
             self._write_curated_inner(
-                table, qtable, exists, df, mode, partition_cols, schema_evolution
+                table, qtable, props, exists, df, mode, partition_cols, schema_evolution
             )
         finally:
             if pinned is not None:
@@ -297,6 +333,7 @@ class LakeEngine:
         self,
         table: str,
         qtable: str,
+        props: dict[str, str],
         exists: bool,
         df: DataFrame,
         mode: str,
@@ -306,18 +343,17 @@ class LakeEngine:
         # Generated columns materialize BEFORE partition resolution so
         # a generated partition key (the standard use) lands in parts.
         if exists:
-            df = self._apply_generated_columns(table, df)
+            df = self._apply_generated_columns(table, df, props)
         parts = list(partition_cols) if partition_cols is not None else [
             c for c in DEFAULT_PARTITION_COLS if c in df.columns
         ]
         df = sanitize_types_for_catalog(df)
         # CHECK constraints: validate the incoming batch before any
         # write; saveAsTable overwrite recreates the table (dropping
-        # its properties), so re-apply preserved properties afterwards.
+        # its properties), so re-apply them afterwards.
         if exists:
-            self._enforce_constraints(table, df)
-            self._enforce_unique(table, df, mode)
-        preserved = self._preserved_properties(table) if exists else {}
+            self._enforce_constraints(table, df, props)
+            self._enforce_unique(table, df, mode, props)
         writer = df.write.mode(mode).format(self.table_format)
         if self.table_format == "delta":
             if exists and mode == "append" and schema_evolution:
@@ -330,8 +366,8 @@ class LakeEngine:
         if parts:
             writer = writer.partitionBy(*parts)
         writer.saveAsTable(qtable)
-        if preserved and mode == "overwrite":
-            self._reapply_properties(table, preserved)
+        if props and mode == "overwrite":
+            self._reapply_properties(table, props)
         # Invalidate this session's cached file listing: a write issued
         # from another session sharing the catalog (e.g. the cloned
         # micro-batch session inside foreachBatch, T1) would otherwise
@@ -339,8 +375,9 @@ class LakeEngine:
         self.spark.catalog.refreshTable(qtable)
         self._journal_schema(table)
         self._journal_snapshot(table)
-        if exists and mode == "append" and self.unique_constraints(table):
-            self._refresh_unique_membership(table, df)
+        uniques = _unique_specs(props)
+        if mode == "append" and uniques:
+            self._refresh_unique_membership(table, df, uniques)
 
     # ------------------------------------------------------------------
     # Concurrent-job scheduling (round 13 — VERDICT "What's missing"
@@ -427,10 +464,16 @@ class LakeEngine:
     def _snapshot_retain_root(self, table: str, version: int) -> str:
         return os.path.join(self.zones.root, "_snapshot_log", table, f"v{version:05d}")
 
-    def _journal_snapshot(self, table: str, files: list[str] | None = None) -> None:
+    def _journal_snapshot(
+        self,
+        table: str,
+        files: list[str] | None = None,
+        layout: tuple[str, list[str]] | None = None,
+    ) -> None:
         """Append the table's next snapshot entry. ``files`` is the new
-        manifest when the caller already knows it (`_commit`); default
-        is a fresh listing of the live table."""
+        manifest and ``layout`` the table's `_table_layout` when the
+        caller already knows them (`_commit`); default is a fresh
+        listing and lookup."""
         qtable = self.qualified(table)
         if files is None:
             files = self.spark.table(qtable).inputFiles()
@@ -439,7 +482,8 @@ class LakeEngine:
         if history and history[-1]["files"] == files:
             return  # no data change, no new version
         version = len(history) + 1
-        loc = self._table_location(qtable).removeprefix("file:")
+        loc, pcols = layout or self._table_layout(qtable)
+        loc = loc.removeprefix("file:")
         retain_root = self._snapshot_retain_root(table, version)
         # A crash between linking and the append below leaves this
         # version's dir behind, unjournaled; start it afresh.
@@ -488,10 +532,9 @@ class LakeEngine:
                 n_copied,
                 len(files),
             )
-        # Partition layout travels with the snapshot so RESTORE can
-        # rebuild the table with ITS original partitioning (not the
-        # engine default).
-        pcols = [c.name for c in self.spark.catalog.listColumns(qtable) if c.isPartition]
+        # Partition layout (`pcols`) travels with the snapshot so
+        # RESTORE can rebuild the table with ITS original partitioning
+        # (not the engine default).
         now = self._now() or datetime.now()
         entry = {
             "version": version,
@@ -831,8 +874,11 @@ class LakeEngine:
         mode: str = "append",
         quarantine: bool = False,
     ) -> int:
-        """S1 grouped recursive JSON scan → A1 count gate → typed chain →
-        K2 schema-evolving partitioned write. Returns rows written.
+        """S1 grouped recursive JSON scan → A1 emptiness gate → typed
+        chain → K2 schema-evolving partitioned write. Returns the
+        table's row count after the write (0, and no write, when
+        staging is missing or holds no non-null value). The rows this
+        batch wrote are journaled as ``rows_in`` (`metrics_history`).
 
         The reference's DynamicFrame + groupFiles:'inPartition',
         groupSize:100MB (``staging_to_curated.py:85-95``) maps to
@@ -882,8 +928,10 @@ class LakeEngine:
             # must not become an all-null curated row).
             df = reader.option("mode", "DROPMALFORMED").json(path)
         df = apply_ingest_policy(df, stringify=False)
-        # cheap emptiness gate — limit(1) not full count (SURVEY §4.1)
-        if df.limit(1).count() == 0:
+        # Emptiness gate with no job of its own (SURVEY §4.1): the
+        # policy's NA-drop ("all") keeps only columns holding a non-null
+        # value, so an empty or all-null batch has no columns left.
+        if not df.columns:
             return 0
         # Observed batch metrics (the reference's CloudWatch alarms on
         # job executions, serverless.yml:133-139, re-expressed as
@@ -891,8 +939,6 @@ class LakeEngine:
         # zero extra passes — and the per-batch rows journal to the
         # lake so "did last night's batch shrink 90%" is answerable
         # without a metrics backend.
-        from pyspark.sql import Observation
-
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows_in"))
         self.write_curated(table, df, mode=mode, partition_cols=partition_cols)
@@ -935,7 +981,7 @@ class LakeEngine:
         """
         from cbts_datalake_synnex_spark.sources.api_source import fan_out_fetch
 
-        reqs = self.spark.createDataFrame([(po,) for po in po_numbers], "po_number string")
+        reqs = self._string_frame("po_number", list(po_numbers))
         fetched = fan_out_fetch(
             reqs, transport, concurrency=concurrency, user=user, password=password
         ).cache()  # one fan-out feeds both the raw archive and the ingest
@@ -2173,12 +2219,29 @@ class LakeEngine:
         self._save_mview_defs(defs)
         return "incremental"
 
+    def _table_layout(self, qtable: str) -> tuple[str, list[str]]:
+        """Location and partition columns of ``qtable``, read from one
+        ``DESCRIBE TABLE EXTENDED``, which runs no Spark job.
+        (``Catalog.listColumns`` iterates ``toLocalIterator``: one job
+        per partition of a local relation, on every call.)"""
+        section, loc, parts = "", None, []
+        for r in self.spark.sql(f"DESCRIBE TABLE EXTENDED {qtable}").collect():
+            name = r["col_name"]
+            if name.startswith("# "):
+                if name != "# col_name":  # the column header row of a block
+                    section = name
+            elif not name:
+                section = ""
+            elif section == "# Partition Information":
+                parts.append(name)
+            elif section == "# Detailed Table Information" and name == "Location":
+                loc = r["data_type"]
+        if loc is None:
+            raise ValueError(f"no location for {qtable}")
+        return loc, parts
+
     def _table_location(self, qtable: str) -> str:
-        rows = self.spark.sql(f"DESCRIBE TABLE EXTENDED {qtable}").collect()
-        for r in rows:
-            if r["col_name"] == "Location":
-                return r["data_type"]
-        raise ValueError(f"no location for {qtable}")
+        return self._table_layout(qtable)[0]
 
     def _mview_defs(self) -> dict[str, Any]:
         path = os.path.join(self.zones.root, "_mviews.json")
@@ -2298,9 +2361,7 @@ class LakeEngine:
 
         qtable = self.qualified(table)
         df_all = self.spark.table(qtable)
-        schema_parts = [
-            c.name for c in self.spark.catalog.listColumns(qtable) if c.isPartition
-        ]
+        schema_parts = self._table_layout(qtable)[1]
         if not schema_parts:
             raise ValueError(
                 f"{table} is unpartitioned — use compact_table for a full rewrite"
@@ -2407,12 +2468,7 @@ class LakeEngine:
         )
 
     def unique_constraints(self, table: str) -> dict[str, list[str]]:
-        return {
-            name: spec.split(",")
-            for name, spec in self._props_with_prefix(
-                table, "constraint.unique."
-            ).items()
-        }
+        return _unique_specs(self._table_props(table))
 
     # Bloom-filter freshness: the persisted position set is only folded
     # on write_curated APPENDS (`_refresh_unique_membership`); any other
@@ -2445,13 +2501,15 @@ class LakeEngine:
             stamped = json.load(f).get("version", -1)
         return int(stamped) == self._current_snapshot_version(table)
 
-    def _enforce_unique(self, table: str, df: DataFrame, mode: str) -> None:
-        """Reject the batch if any unique constraint would break.
-        Leaves ``self._last_unique_stats`` (diagnostic) describing the
-        path taken per constraint."""
+    def _enforce_unique(
+        self, table: str, df: DataFrame, mode: str, props: dict[str, str]
+    ) -> None:
+        """Reject the batch if any unique constraint (from the table's
+        ``props``) would break. Leaves ``self._last_unique_stats``
+        (diagnostic) describing the path taken per constraint."""
         stats: dict[str, dict] = {}
         self._last_unique_stats = stats
-        for name, cols in self.unique_constraints(table).items():
+        for name, cols in _unique_specs(props).items():
             batch_keys = df.dropna(subset=cols).select(*cols)
             n_dup = (
                 batch_keys.groupBy(*cols).count().filter(F.col("count") > 1).count()
@@ -2498,13 +2556,15 @@ class LakeEngine:
                     f"rows collide with existing keys on ({', '.join(cols)})"
                 )
 
-    def _refresh_unique_membership(self, table: str, df: DataFrame) -> None:
+    def _refresh_unique_membership(
+        self, table: str, df: DataFrame, uniques: dict[str, list[str]]
+    ) -> None:
         """After a successful append: fold the batch's key positions
         into any persisted membership filter so the zero-FN contract
         survives the append (Bloom OR = position-set union)."""
         from cbts_datalake_synnex_spark.operators import sketches
 
-        for _name, cols in self.unique_constraints(table).items():
+        for _name, cols in uniques.items():
             if len(cols) != 1:
                 continue
             fname = self.qualified(f"{table}_bloom_{cols[0]}")
@@ -2528,31 +2588,20 @@ class LakeEngine:
             # fast path stays live across append chains
             self._stamp_bloom_version(table, cols[0])
 
-    _PRESERVED_PROP_PREFIXES = ("constraint.check.", "constraint.unique.", "generated.col.")
-
-    def _props_with_prefix(self, table: str, prefix: str) -> dict[str, str]:
-        qtable = self.qualified(table)
-        return {
-            r["key"][len(prefix):]: r["value"]
-            for r in self.spark.sql(f"SHOW TBLPROPERTIES {qtable}").collect()
-            if r["key"].startswith(prefix)
-        }
-
-    def table_constraints(self, table: str) -> dict[str, str]:
-        return self._props_with_prefix(table, "constraint.check.")
-
-    def generated_columns(self, table: str) -> dict[str, str]:
-        return self._props_with_prefix(table, "generated.col.")
-
-    def _preserved_properties(self, table: str) -> dict[str, str]:
-        """Full-key map of every engine property that must survive an
-        overwrite (constraints + generated columns)."""
+    def _table_props(self, table: str) -> dict[str, str]:
+        """Every property of the table, from one ``SHOW TBLPROPERTIES``.
+        A write reads them once and hands the dict to each check."""
         qtable = self.qualified(table)
         return {
             r["key"]: r["value"]
             for r in self.spark.sql(f"SHOW TBLPROPERTIES {qtable}").collect()
-            if r["key"].startswith(self._PRESERVED_PROP_PREFIXES)
         }
+
+    def table_constraints(self, table: str) -> dict[str, str]:
+        return _prefixed(self._table_props(table), _CHECK)
+
+    def generated_columns(self, table: str) -> dict[str, str]:
+        return _prefixed(self._table_props(table), _GENERATED)
 
     def _reapply_properties(self, table: str, props: dict[str, str]) -> None:
         qtable = self.qualified(table)
@@ -2592,8 +2641,10 @@ class LakeEngine:
             f"ALTER TABLE {qtable} SET TBLPROPERTIES ('generated.col.{name}' = '{esc}')"
         )
 
-    def _apply_generated_columns(self, table: str, df: DataFrame) -> DataFrame:
-        gens = self.generated_columns(table)
+    def _apply_generated_columns(
+        self, table: str, df: DataFrame, props: dict[str, str]
+    ) -> DataFrame:
+        gens = _prefixed(props, _GENERATED)
         if not gens:
             return df
         provided = [n for n in gens if n in df.columns]
@@ -2618,10 +2669,13 @@ class LakeEngine:
                 df = df.withColumn(n, F.expr(e))
         return df
 
-    def _enforce_constraints(self, table: str, df: DataFrame) -> None:
-        """One-agg batch validation; raises ConstraintViolation with
+    def _enforce_constraints(
+        self, table: str, df: DataFrame, props: dict[str, str]
+    ) -> None:
+        """One-agg batch validation against the CHECK constraints in
+        the table's ``props``; raises ConstraintViolation with
         per-constraint counts."""
-        cons = self.table_constraints(table)
+        cons = _prefixed(props, _CHECK)
         if cons:
             aggs = [
                 F.sum(
@@ -2671,9 +2725,7 @@ class LakeEngine:
         qtable = self.qualified(table)
         if not self.spark.catalog.tableExists(qtable):
             raise ValueError(f"no such table: {qtable}")
-        parts = [
-            c.name for c in self.spark.catalog.listColumns(qtable) if c.isPartition
-        ]
+        loc, parts = self._table_layout(qtable)
         hist = self.snapshot_history(table)
         stat = (
             self.spark.table(qtable)
@@ -2693,7 +2745,7 @@ class LakeEngine:
                 (
                     qtable,
                     self.table_format,
-                    self._table_location(qtable),
+                    loc,
                     ",".join(parts),
                     int(stat["nf"]),
                     int(stat["sb"]),
@@ -2816,9 +2868,7 @@ class LakeEngine:
         if not self.spark.catalog.tableExists(qtable):
             raise ValueError(f"no such table: {qtable}")
         column = self._resolve_column(qtable, column)
-        parts = [
-            c.name for c in self.spark.catalog.listColumns(qtable) if c.isPartition
-        ]
+        parts = self._table_layout(qtable)[1]
         if column in parts:
             raise ValueError(
                 f"cannot drop partition column {column!r}; evolve the layout "
@@ -2849,9 +2899,7 @@ class LakeEngine:
         existing = {c.lower() for c in self.spark.table(qtable).columns}
         if new.lower() in existing:
             raise ValueError(f"column {new!r} already exists in {qtable}")
-        parts = [
-            c.name for c in self.spark.catalog.listColumns(qtable) if c.isPartition
-        ]
+        parts = self._table_layout(qtable)[1]
         if old in parts:
             raise ValueError(
                 f"cannot rename partition column {old!r}; evolve the layout "
@@ -3108,8 +3156,7 @@ class LakeEngine:
             return False
 
     def _file_pruned_rewrite(
-        self, table: str, condition, rewrite, count_matches: bool = True,
-        validate: bool = True,
+        self, table: str, condition, rewrite, validate: bool = True
     ) -> int:
         """Rewrite only the data files containing rows matching
         ``condition``. ``rewrite(subset, cond)`` maps the affected
@@ -3127,20 +3174,20 @@ class LakeEngine:
         cond = F.expr(condition) if isinstance(condition, str) else condition
         cond = F.coalesce(cond.cast("boolean"), F.lit(False))  # NULL ⇒ no match
         target = self.spark.table(qtable)
-        # Which files hold matching rows. The scan is predicate-pushed;
-        # the distinct file list is bounded by affected files, so the
-        # collect is driver-safe.
-        matched_files = [
-            r[0]
-            for r in target.filter(cond)
-            .select(F.col("_metadata.file_path").alias("f"))
-            .distinct()
+        # Which files hold matching rows, and how many each: the match
+        # count comes with the file list, no job of its own. The scan
+        # is predicate-pushed; the list is bounded by affected files,
+        # so the collect is driver-safe.
+        hits = (
+            target.filter(cond)
+            .groupBy(F.col("_metadata.file_path").alias("f"))
+            .count()
             .collect()
-        ]
-        if not matched_files:
+        )
+        if not hits:
             return 0
+        matched_files = [r["f"] for r in hits]
         subset = self._read_files_as_table_schema(qtable, matched_files)
-        n_matched = subset.filter(cond).count() if count_matches else -1
         replacement = rewrite(subset, cond).select(*target.columns)
         # Validation and the splice write are separate jobs over the
         # same replacement plan — pin it (the write_curated discipline)
@@ -3157,13 +3204,14 @@ class LakeEngine:
                 # verify-only: every table column is present, so this
                 # never adds columns — it raises on stale generated
                 # values.
-                replacement = self._apply_generated_columns(table, replacement)
-                self._enforce_constraints(table, replacement)
+                props = self._table_props(table)
+                replacement = self._apply_generated_columns(table, replacement, props)
+                self._enforce_constraints(table, replacement, props)
             self._commit(table, matched_files, replacement)
         finally:
             if pinned is not None:
                 pinned.unpersist()
-        return n_matched
+        return sum(r["count"] for r in hits)
 
     def _read_files_as_table_schema(self, qtable: str, files: list[str]) -> DataFrame:
         """Re-read ONLY the given data files of ``qtable``, aligned to
@@ -3194,11 +3242,14 @@ class LakeEngine:
 
     def _commit(
         self, table: str, removed_files: list[str], replacement: DataFrame
-    ) -> None:
+    ) -> int:
         """Replace ``removed_files`` of ``table`` with the rows of
         ``replacement`` — the one commit path of every same-schema
         rewrite (DELETE/UPDATE/MERGE, compaction, deletion-vector
-        folding). Steps, in crash order:
+        folding). Returns the number of rows written, observed on the
+        write itself. A commit that removes no file and writes no row
+        changes nothing and leaves no new version. Steps, in crash
+        order:
 
         1. stage the replacement under scratch (its plan may read the
            very files being replaced);
@@ -3217,20 +3268,25 @@ class LakeEngine:
         lose them). Only local (``file:``) locations: any other scheme
         raises before anything is staged."""
         qtable = self.qualified(table)
-        loc = self._table_location(qtable)
+        loc, parts = layout = self._table_layout(qtable)
         if urlparse(loc).scheme not in ("", "file"):
             raise ValueError(
                 f"cannot commit to {qtable} at {loc}: file commits need a "
                 "local (file:) table location"
             )
-        history = self.snapshot_history(table)
-        live = history[-1]["files"] if history else self.spark.table(qtable).inputFiles()
-        parts = [c.name for c in self.spark.catalog.listColumns(qtable) if c.isPartition]
         scratch = self._scratch_dir(table)
-        writer = replacement.write.option("compression", "snappy")
+        written = Observation()
+        writer = replacement.observe(written, F.count(F.lit(1)).alias("n")).write
+        writer = writer.option("compression", "snappy")
         if parts:
             writer = writer.partitionBy(*parts)
         writer.parquet(scratch)
+        n_written = written.get["n"]
+        if not removed_files and not n_written:
+            shutil.rmtree(scratch, ignore_errors=True)
+            return 0
+        history = self.snapshot_history(table)
+        live = history[-1]["files"] if history else self.spark.table(qtable).inputFiles()
         added, new_dirs = [], False
         for dirpath, _dirs, files in os.walk(scratch):
             dst_dir = os.path.normpath(
@@ -3252,11 +3308,12 @@ class LakeEngine:
             self.recover_partitions(table)
         gone = {_local_path(f) for f in removed_files}
         kept = [f for f in live if _local_path(f) not in gone]
-        self._journal_snapshot(table, files=kept + added)
+        self._journal_snapshot(table, files=kept + added, layout=layout)
         for p in gone:
             if os.path.exists(p):
                 os.remove(p)
         self.spark.catalog.refreshTable(qtable)
+        return n_written
 
     def delete_rows(self, table: str, condition) -> int:
         """``DELETE FROM table WHERE condition`` (SQL semantics: only
@@ -3426,9 +3483,9 @@ class LakeEngine:
         surviving row count."""
         qtable = self.qualified(table)
         dv = self.qualified(f"{table}__dv")
-        self._commit(table, self.spark.table(qtable).inputFiles(), self.read_mor(table))
+        n = self._commit(table, self.spark.table(qtable).inputFiles(), self.read_mor(table))
         self.spark.sql(f"DROP TABLE IF EXISTS {dv}")
-        return self.spark.table(qtable).count()
+        return n
 
     def update_rows(self, table: str, condition, set_exprs: dict[str, Any]) -> int:
         """``UPDATE table SET col = expr, ... WHERE condition``.
@@ -3575,6 +3632,7 @@ class LakeEngine:
 
         # CDC ordering: latest change per key wins; else keys must be
         # unique (SQL MERGE forbids multiple source matches per row).
+        dup_keys = None
         if sequence_col is not None:
             from pyspark.sql import Window
 
@@ -3584,13 +3642,16 @@ class LakeEngine:
                 .filter(F.col("__seq_rn") == 1)
                 .drop("__seq_rn")
             )
-        elif source.groupBy(*keys).count().filter("count > 1").limit(1).count():
-            raise ValueError(
-                "duplicate merge keys in source (pass sequence_col for "
-                "latest-change-wins CDC semantics)"
-            )
+        else:
+            dup_keys = source.groupBy(*keys).count().filter("count > 1").limit(1)
+        dup_msg = (
+            "duplicate merge keys in source (pass sequence_col for "
+            "latest-change-wins CDC semantics)"
+        )
 
         if self.table_format == "delta":
+            if dup_keys is not None and dup_keys.count():
+                raise ValueError(dup_msg)
             self._delta.merge(
                 qtable,
                 source,
@@ -3603,28 +3664,37 @@ class LakeEngine:
 
         exclude = [c for c in exclude_cols if c in source.columns]
         data_cols = [c for c in source.columns if c not in exclude]
-        # K8: genuinely-new source data columns widen the table first
-        # (condition-only columns never do).
-        self._evolve_schema(qtable, source.select(*data_cols))
-        target = self.spark.table(qtable)
-        tcols_lower = {c.lower() for c in target.columns}
-
         src_m = source.withColumn("__merge_m", F.lit(True))
         src_keys = source.select(*keys).distinct()
         if broadcast_source is None:
             broadcast_source = self._fits_broadcast(source)
         if broadcast_source:
             src_m, src_keys = F.broadcast(src_m), F.broadcast(src_keys)
-        # _metadata is resolvable only on the file-source relation —
-        # materialize file_path as a real column BEFORE the semi-join.
-        matched_files = [
-            r[0]
-            for r in target.select(F.col("_metadata.file_path").alias("f"), *keys)
+        # One collect answers both questions asked before anything is
+        # staged: which files hold matched keys, and (a null path)
+        # whether a source key repeats; AQE runs both exchanges in one
+        # round-trip. _metadata is resolvable only on the file-source
+        # relation — materialize file_path as a real column BEFORE the
+        # semi-join.
+        probe = (
+            self.spark.table(qtable)
+            .select(F.col("_metadata.file_path").alias("f"), *keys)
             .join(src_keys, on=keys, how="left_semi")
             .select("f")
             .distinct()
-            .collect()
-        ]
+        )
+        if dup_keys is not None:
+            probe = probe.unionByName(dup_keys.select(F.lit(None).cast("string").alias("f")))
+        matched_files = [r[0] for r in probe.collect()]
+        if None in matched_files:
+            raise ValueError(dup_msg)
+
+        # K8: genuinely-new source data columns widen the table first
+        # (condition-only columns never do) — after the probe, so a
+        # rejected batch leaves the schema as it was.
+        self._evolve_schema(qtable, source.select(*data_cols))
+        target = self.spark.table(qtable)
+        tcols_lower = {c.lower() for c in target.columns}
 
         matched = F.col("s.`__merge_m`").isNotNull()
         if isinstance(when_matched_delete, str):
@@ -3647,18 +3717,22 @@ class LakeEngine:
         elif upd_enabled:
             raise ValueError(f"when_matched_update: {when_matched_update!r}")
 
-        n_deleted = n_updated = 0
-        rewritten = None
+        # The counts ride the commit's write: every row of the matched
+        # files passes `merged`, every insert passes `inserted`.
+        merged, inserted = Observation(), Observation()
+        branches = []
         if matched_files:
             sub = self._read_files_as_table_schema(qtable, matched_files)
             on = [F.col(f"t.`{k}`") == F.col(f"s.`{k}`") for k in keys]
-            joined = sub.alias("t").join(src_m.alias("s"), on=_and_all(on), how="left")
-            stats = joined.agg(
-                F.sum(F.when(matched & del_f, 1).otherwise(0)).alias("d"),
-                F.sum(F.when(matched & ~del_f, 1).otherwise(0)).alias("u"),
-            ).collect()[0]
-            n_deleted = int(stats["d"] or 0)
-            n_updated = int(stats["u"] or 0) if upd_enabled else 0
+            joined = (
+                sub.alias("t")
+                .join(src_m.alias("s"), on=_and_all(on), how="left")
+                .observe(
+                    merged,
+                    F.count_if(matched & del_f).alias("d"),
+                    F.count_if(matched & ~del_f).alias("u"),
+                )
+            )
             out_cols = []
             for f in target.schema.fields:
                 t_c = F.col(f"t.`{f.name}`")
@@ -3666,10 +3740,8 @@ class LakeEngine:
                 out_cols.append(
                     F.when(matched, val.cast(f.dataType)).otherwise(t_c).alias(f.name)
                 )
-            rewritten = joined.filter(~(matched & del_f)).select(*out_cols)
+            branches.append(joined.filter(~(matched & del_f)).select(*out_cols))
 
-        inserts = None
-        n_inserted = 0
         if when_not_matched_insert:
             ins = source.join(target.select(*keys), on=keys, how="left_anti")
             if isinstance(when_not_matched_insert, str):
@@ -3689,34 +3761,37 @@ class LakeEngine:
                     for f in target.schema.fields
                 ]
             )
-            n_inserted = inserts.count()
-            if n_inserted == 0:
-                inserts = None
+            branches.append(inserts.observe(inserted, F.count(F.lit(1)).alias("n")))
 
-        if rewritten is None and inserts is None:
+        if not branches:
             return {"updated": 0, "deleted": 0, "inserted": 0}
-        if rewritten is None:
-            replacement = inserts
-        elif inserts is None:
-            replacement = rewritten
-        else:
-            replacement = rewritten.unionByName(inserts)
+        replacement = branches[0]
+        if len(branches) == 2:
+            replacement = replacement.unionByName(branches[1])
         # Delta parity: generated columns the merge did not explicitly
         # assign (neither an UPDATE SET target nor a source data
         # column) are recomputed — inserts would otherwise land NULL
         # and updates would go stale; columns the merge DID assign are
         # verified against their generation expression, and CHECK
         # constraints validate the replacement like any write.
-        gens = self.generated_columns(table)
+        props = self._table_props(table)
+        gens = _prefixed(props, _GENERATED)
         if gens:
             src_lower = {c.lower() for c in data_cols}
             for g, e in gens.items():
                 if g not in upd_sets and g.lower() not in src_lower:
                     replacement = replacement.withColumn(g, F.expr(e))
-            replacement = self._apply_generated_columns(table, replacement)
-        self._enforce_constraints(table, replacement)
+            replacement = self._apply_generated_columns(table, replacement, props)
+        self._enforce_constraints(table, replacement, props)
         self._commit(table, matched_files, replacement)
-        return {"updated": n_updated, "deleted": n_deleted, "inserted": n_inserted}
+        counts = {"updated": 0, "deleted": 0, "inserted": 0}
+        if matched_files:
+            counts["deleted"] = merged.get["d"]
+            if upd_enabled:
+                counts["updated"] = merged.get["u"]
+        if when_not_matched_insert:
+            counts["inserted"] = inserted.get["n"]
+        return counts
 
     def apply_changes(
         self,

@@ -961,7 +961,7 @@ def lc_repartition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         eng.write_curated("pevo_nat", seed, mode="overwrite", partition_cols=["processed_month"])
         eng.repartition_table("pevo_nat", ["n_regionkey"])
         qt = eng.qualified("pevo_nat")
-        parts = [c.name for c in spark.catalog.listColumns(qt) if c.isPartition]
+        parts = eng._table_layout(qt)[1]
         assert parts == ["n_regionkey"], parts
         out = spark.table(qt).select("n_nationkey", "n_name", "n_regionkey")
         return _materialize(spark, out)

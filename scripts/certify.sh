@@ -1,0 +1,17 @@
+#!/bin/sh
+# Certification run: the DuckDB-oracle `lc_*` lifecycle queries that
+# guard the table commit path first (about 2 minutes; a failure there
+# stops the run), then the whole `slow` tier that the default pytest
+# run skips (pytest.ini). Exits non-zero on any failure.
+#
+# Usage: scripts/certify.sh [extra pytest args, e.g. -x]
+# Cadence: before any change to the commit, merge or curate paths, and
+# at least once every 5 changes (README, "Tests").
+set -eu
+cd "$(dirname "$0")/.."
+LC="lc_merge_upsert or lc_partial_compact or lc_restore_table or lc_mor_delete or lc_predicate_dml or lc_cdc_apply or lc_zorder_compact or lc_time_travel or lc_column_evolution or lc_repartition_evolution or lc_snapshot_sync"
+echo "== certify: lc_* commit-path subset"
+python -m pytest tests/test_oracle_parity.py -m slow -q -p no:cacheprovider -k "$LC" "$@"
+echo "== certify: whole slow tier"
+python -m pytest tests/ -m slow -q -p no:cacheprovider "$@"
+echo "== certify: passed"

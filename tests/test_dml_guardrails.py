@@ -431,7 +431,7 @@ def test_commit_refuses_non_local_location(spark, eng, monkeypatch):
     loudly, before anything is staged — never a silent no-op that
     orphans a staged copy."""
     qt = _seed(spark, eng)
-    monkeypatch.setattr(eng, "_table_location", lambda _qt: "s3a://lake/guard/t")
+    monkeypatch.setattr(eng, "_table_layout", lambda _qt: ("s3a://lake/guard/t", []))
     with pytest.raises(ValueError, match="s3a://lake/guard/t"):
         eng.compact_table("t")
     assert not eng._scratch_leftovers()

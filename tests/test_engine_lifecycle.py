@@ -1026,3 +1026,103 @@ def test_histogram_selectivity_bounds_and_ops(spark, engine):
         engine.estimate_selectivity("hx", "nope", "<=", 1.0)
     with _pytest.raises(ValueError, match="op"):
         engine.estimate_selectivity("hx", "x", "==", 1.0)
+
+
+def test_write_paths_never_call_list_columns(engine, spark, monkeypatch):
+    """PySpark's Catalog.listColumns runs one Spark job per partition
+    of a local relation on every call; the engine reads partition
+    columns from DESCRIBE TABLE EXTENDED instead. The whole nightly
+    path, compaction and a layout change run with it disabled."""
+    from pyspark.sql.catalog import Catalog
+
+    def _refuse(*_a, **_k):
+        raise AssertionError("Catalog.listColumns called")
+
+    monkeypatch.setattr(Catalog, "listColumns", _refuse)
+    records = [{"po_number": f"PO{i}", "status": "OPEN", "qty": i} for i in range(6)]
+    engine.save_to_staging("po", records)
+    assert engine.curate("po") == 6
+    changes = spark.createDataFrame(
+        [("PO1", "SHIPPED", "3", "U"), ("PO2", None, None, "D")],
+        "po_number string, status string, qty string, op string",
+    )
+    res = engine.apply_changes("po", changes, ["po_number"])
+    assert res == {"updated": 1, "deleted": 1, "inserted": 0}
+    engine.compact_table("po")
+    engine.repartition_table("po", ["status"])
+    qt = engine.qualified("po")
+    assert engine._table_layout(qt)[1] == ["status"]
+    got = {r["po_number"]: r["status"] for r in spark.table(qt).collect()}
+    assert len(got) == 5 and got["PO1"] == "SHIPPED" and "PO2" not in got
+
+
+@pytest.mark.parametrize("parts", [[], ["a"], ["a", "b"]])
+def test_table_layout_reads_location_and_partition_columns(engine, spark, parts):
+    """`_table_layout` agrees with the catalog on 0, 1 and 2 partition
+    columns, and a data column named Location does not pass for the
+    table's location."""
+    df = spark.createDataFrame(
+        [(1, "x", "y", "somewhere")], "v int, a string, b string, Location string"
+    )
+    engine.write_curated("lay", df, mode="overwrite", partition_cols=parts)
+    qt = engine.qualified("lay")
+    loc, got = engine._table_layout(qt)
+    assert got == parts
+    assert got == [c.name for c in spark.catalog.listColumns(qt) if c.isPartition]
+    assert loc.startswith("file:") and loc.endswith("/lay")
+    assert os.path.isdir(loc.removeprefix("file:"))
+
+
+NESTED = [
+    {"po_number": "PO1", "status": {"code": "OK", "detail": {"msg": "shipped"}}, "lines": [1, 2]},
+    {"po_number": "PO2", "status": {"code": "HOLD"}, "qty": 5, "Qty": "five"},
+    {"po_number": "PO3", "when": "2024-05-01", "flag": True, "price": 1.5},
+]
+
+
+@pytest.mark.parametrize("records", [NESTED, RECORDS, []], ids=["nested", "records", "empty"])
+def test_records_to_df_matches_python_rdd_parse(engine, spark, records):
+    """The JVM parse of driver records equals the earlier
+    ``read.json(parallelize(lines))`` parse: same schema (including
+    case-duplicate keys, which stay separate columns) and same rows."""
+    import json
+
+    got = engine.records_to_df(records)
+    lines = [json.dumps(r, default=str) for r in records]
+    if not lines:
+        assert got.columns == [] and got.count() == 0
+        return
+    want = spark.read.json(spark.sparkContext.parallelize(lines, len(lines) // 5000 + 1))
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect()), key=str) == sorted(map(tuple, want.collect()), key=str)
+
+
+@pytest.mark.parametrize("n", [1000, 12001])
+def test_save_to_staging_links_one_file_per_5000_records(engine, n):
+    """One staged part file per 5 000 records (or fewer), written once;
+    the `_incremental` twin holds the same files as hard links."""
+    engine.save_to_staging("po_status", [{"po_number": f"PO{i}", "qty": i} for i in range(n)])
+
+    def parts(table):
+        root = engine.zones.staging(table)
+        (batch,) = os.listdir(root)
+        d = os.path.join(root, batch)
+        return {f: os.stat(os.path.join(d, f)) for f in os.listdir(d) if f.startswith("part-")}
+
+    main, twin = parts("po_status"), parts("po_status_incremental")
+    assert len(main) == n // 5000 + 1
+    assert set(twin) == set(main)
+    assert all(twin[f].st_ino == main[f].st_ino for f in main)
+
+
+def test_curate_all_null_staging_returns_zero(engine, spark):
+    """A staged batch with no non-null value has no columns left after
+    the policy's NA-drop: curate returns 0 and writes nothing."""
+    import gzip
+
+    d = os.path.join(engine.zones.staging("nulls"), "batch")
+    os.makedirs(d)
+    with gzip.open(os.path.join(d, "part-00000.json.gz"), "wt") as f:
+        f.write('{"a": null, "b": null}\n{"a": null}\n')
+    assert engine.curate("nulls") == 0
+    assert not spark.catalog.tableExists(engine.qualified("nulls"))

@@ -250,3 +250,21 @@ def test_merge_null_source_key_inserts_like_sql(spark, eng):
     assert res == {"updated": 0, "deleted": 0, "inserted": 1}
     assert spark.table(qt).filter("k IS NULL").count() == 1
     assert spark.table(qt).count() == 26
+
+
+def test_duplicate_key_merge_changes_nothing(spark, eng):
+    """The duplicate-key probe shares the matched-file collect and
+    raises before anything is staged: files, snapshot history and
+    schema stay as they were, even when the batch brings a new column."""
+    qt = _seed(spark, eng)
+    before = _inodes(eng, qt)
+    history = eng.snapshot_history("t")
+    cols = spark.table(qt).columns
+    dup = _batch(spark, [(4, "A", 1, "x"), (4, "B", 2, "y")],
+                 "k int, name string, g int, extra string")
+    with pytest.raises(ValueError, match="duplicate merge keys"):
+        eng.merge_rows("t", dup, keys=["k"])
+    assert _inodes(eng, qt) == before
+    assert eng.snapshot_history("t") == history
+    assert spark.table(qt).columns == cols
+    assert not eng._scratch_leftovers()
