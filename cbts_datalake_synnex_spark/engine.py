@@ -283,7 +283,6 @@ class LakeEngine:
         df: DataFrame,
         mode: str = "append",
         partition_cols: Sequence[str] | None = None,
-        schema_evolution: bool = True,
     ) -> None:
         """Partitioned snappy-Parquet write registered in the catalog.
 
@@ -292,92 +291,86 @@ class LakeEngine:
         ``utils.py:72-83`` and the schema-evolving variant at
         ``utils.py:241-252``; the Glue-job equivalents are the sink at
         ``src/glue/staging_to_curated.py:104-115`` plus create-if-absent
-        (122-134) and add-column diff (139-168). Here `saveAsTable` with
-        Hive partitioning covers K1/K3/K7; additive schema evolution
-        (K2/K8) is an explicit ALTER TABLE ADD COLUMNS diff + a
-        positionally-safe unionByName append. Partition discovery K9 is
-        implicit for catalog-managed writes (no MSCK needed; kept as
-        `recover_partitions` for external tables). With Delta jars on
-        the classpath the same call becomes `.format("delta")
-        .option("mergeSchema","true")` — the transaction log then
-        subsumes K7-K9 and catalog versioning; Parquet is the in-repo
-        fallback (no Delta in this image).
+        (122-134) and add-column diff (139-168). Every parquet write
+        commits through `_commit`:
+
+        * an append widens the table first (K2/K8: an explicit ALTER
+          TABLE ADD COLUMNS diff + a positionally-safe projection) and
+          commits the batch as new files;
+        * an overwrite that keeps the table's columns, types and
+          partition columns commits the batch in place of every live
+          file — the table and its properties stay;
+        * a create, or an overwrite that changes the columns or the
+          partitioning, (re)creates the catalog entry inside `_commit`
+          once the batch is staged (K1/K3/K7), carrying the engine's
+          constraint and generated-column properties.
+
+        Partition discovery K9 is part of the commit
+        (`recover_partitions` when a new partition directory appears).
+        With Delta jars on the classpath the same call becomes
+        `.format("delta").option("mergeSchema","true")` — the
+        transaction log then subsumes K7-K9 and catalog versioning;
+        Parquet is the in-repo fallback (no Delta in this image).
         """
         qtable = self.qualified(table)
         exists = self.spark.catalog.tableExists(qtable)
         # The engine's properties (constraints, generated columns), read
-        # once for every check below. Validation and the write are
-        # separate Spark jobs over the same batch plan; pin the batch so
-        # a non-deterministic source (rand()/uuid()/a changing upstream)
-        # cannot pass validation yet persist different, violating rows.
-        # The first validation agg materializes the cache; the write
-        # then reuses the pinned partitions.
+        # once for every check below.
         props = (
             {k: v for k, v in self._table_props(table).items() if k.startswith(_ENGINE_PROPS)}
             if exists
             else {}
         )
-        pinned = None
-        if props:
-            pinned = df.persist()
-            df = pinned
-        try:
-            self._write_curated_inner(
-                table, qtable, props, exists, df, mode, partition_cols, schema_evolution
-            )
-        finally:
-            if pinned is not None:
-                pinned.unpersist()
-
-    def _write_curated_inner(
-        self,
-        table: str,
-        qtable: str,
-        props: dict[str, str],
-        exists: bool,
-        df: DataFrame,
-        mode: str,
-        partition_cols: Sequence[str] | None,
-        schema_evolution: bool,
-    ) -> None:
-        # Generated columns materialize BEFORE partition resolution so
-        # a generated partition key (the standard use) lands in parts.
-        if exists:
-            df = self._apply_generated_columns(table, df, props)
+        # Generated columns the batch lacks materialize BEFORE partition
+        # resolution so a generated partition key (the standard use)
+        # lands in parts; supplied values are verified by `_checked`.
+        for n, e in _prefixed(props, _GENERATED).items():
+            if n not in df.columns:
+                df = df.withColumn(n, F.expr(e))
         parts = list(partition_cols) if partition_cols is not None else [
             c for c in DEFAULT_PARTITION_COLS if c in df.columns
         ]
         df = sanitize_types_for_catalog(df)
-        # CHECK constraints: validate the incoming batch before any
-        # write; saveAsTable overwrite recreates the table (dropping
-        # its properties), so re-apply them afterwards.
-        if exists:
-            self._enforce_constraints(table, df, props)
-            self._enforce_unique(table, df, mode, props)
-        writer = df.write.mode(mode).format(self.table_format)
-        if self.table_format == "delta":
-            if exists and mode == "append" and schema_evolution:
-                writer = writer.option("mergeSchema", "true")  # K2/K8 via txn log
-        else:
-            if exists and mode == "append" and schema_evolution:
-                df = self._evolve_schema(qtable, df)
-                writer = df.write.mode(mode).format(self.table_format)
-            writer = writer.option("compression", "snappy")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.saveAsTable(qtable)
-        if props and mode == "overwrite":
-            self._reapply_properties(table, props)
-        # Invalidate this session's cached file listing: a write issued
-        # from another session sharing the catalog (e.g. the cloned
-        # micro-batch session inside foreachBatch, T1) would otherwise
-        # leave our relation cache pointing at the pre-append file set.
-        self.spark.catalog.refreshTable(qtable)
-        self._journal_schema(table)
-        self._journal_snapshot(table)
-        uniques = _unique_specs(props)
-        if mode == "append" and uniques:
-            self._refresh_unique_membership(table, df, uniques)
+        with self._checked(table, df, props, mode) as df:
+            if self.table_format == "delta":
+                writer = df.write.mode(mode).format("delta")
+                if exists and mode == "append":
+                    writer = writer.option("mergeSchema", "true")  # K2/K8 via txn log
+                if parts:
+                    writer = writer.partitionBy(*parts)
+                writer.saveAsTable(qtable)
+                self.spark.catalog.refreshTable(qtable)
+                self._journal_snapshot(
+                    table, self.spark.table(qtable).inputFiles(), self._table_layout(qtable)
+                )
+            elif not exists:
+                # None: a stale manifest of a table dropped outside the
+                # engine (or mid-re-create) must not carry into the new one
+                self._commit(table, None, df, create=(parts, props))
+            elif mode == "append":
+                layout = self._table_layout(qtable)
+                if parts != layout[1]:
+                    raise ValueError(
+                        f"cannot append to {qtable} partitioned by {layout[1]} "
+                        f"with partition columns {parts}"
+                    )
+                self._commit(table, [], self._evolve_schema(qtable, df), layout=layout)
+            else:
+                # the table a saveAsTable overwrite would re-create:
+                # data columns, then partition columns in `parts` order
+                types = {f.name: f.dataType for f in df.schema.fields}
+                batch = [(c, t) for c, t in types.items() if c not in parts]
+                batch += [(c, types.get(c)) for c in parts]
+                current = [(f.name, f.dataType) for f in self.spark.table(qtable).schema.fields]
+                layout = self._table_layout(qtable)
+                if batch == current and parts == layout[1]:
+                    self._commit(table, None, df, layout=layout)
+                else:
+                    self._commit(table, None, df, create=(parts, props))
+            self._journal_schema(table)
+            uniques = _unique_specs(props)
+            if mode == "append" and uniques:
+                self._refresh_unique_membership(table, df, uniques)
 
     # ------------------------------------------------------------------
     # Concurrent-job scheduling (round 13 — VERDICT "What's missing"
@@ -465,24 +458,16 @@ class LakeEngine:
         return os.path.join(self.zones.root, "_snapshot_log", table, f"v{version:05d}")
 
     def _journal_snapshot(
-        self,
-        table: str,
-        files: list[str] | None = None,
-        layout: tuple[str, list[str]] | None = None,
+        self, table: str, files: list[str], layout: tuple[str, list[str]]
     ) -> None:
-        """Append the table's next snapshot entry. ``files`` is the new
-        manifest and ``layout`` the table's `_table_layout` when the
-        caller already knows them (`_commit`); default is a fresh
-        listing and lookup."""
-        qtable = self.qualified(table)
-        if files is None:
-            files = self.spark.table(qtable).inputFiles()
+        """Append the table's next snapshot entry: ``files`` is the new
+        manifest, ``layout`` the table's `_table_layout`."""
         files = sorted(files)
         history = self.snapshot_history(table)
         if history and history[-1]["files"] == files:
             return  # no data change, no new version
         version = len(history) + 1
-        loc, pcols = layout or self._table_layout(qtable)
+        loc, pcols = layout
         loc = loc.removeprefix("file:")
         retain_root = self._snapshot_retain_root(table, version)
         # A crash between linking and the append below leaves this
@@ -719,31 +704,13 @@ class LakeEngine:
         # snapshots journaled before partition_cols was recorded fall
         # back to the engine default (legacy entries only)
         source = recorded if recorded is not None else DEFAULT_PARTITION_COLS
-        self._overwrite_via_scratch(
-            table, snap, [c for c in source if c in snap.columns]
+        self.write_curated(
+            table, snap, mode="overwrite", partition_cols=[c for c in source if c in snap.columns]
         )
         return self.snapshot_history(table)[-1]["version"]
 
     def _scratch_dir(self, name: str) -> str:
         return os.path.join(self.zones.root, "_scratch", f"{name}_{uuid.uuid4().hex[:8]}")
-
-    def _overwrite_via_scratch(
-        self, table: str, df: DataFrame, partition_cols: Sequence[str]
-    ) -> None:
-        """Re-create ``table`` from ``df`` with a `write_curated`
-        overwrite — the path of rewrites that change the schema or the
-        partition layout, which a v1 parquet table can only take by
-        being re-created. ``df`` may read the very files the overwrite
-        truncates, so it is staged to scratch first."""
-        scratch = self._scratch_dir(table)
-        df.write.parquet(scratch)
-        self.write_curated(
-            table,
-            self.spark.read.parquet(scratch),
-            mode="overwrite",
-            partition_cols=list(partition_cols),
-        )
-        shutil.rmtree(scratch, ignore_errors=True)
 
     def clone_table(
         self, src_table: str, dst_table: str, version: int | None = None
@@ -787,6 +754,7 @@ class LakeEngine:
                 (f.removeprefix("file:"), os.path.relpath(f.removeprefix("file:"), base))
                 for f in entry["files"]
             ]
+        linked = []
         for sp, rel in pairs:
             dst = os.path.join(dst_loc, rel)
             os.makedirs(os.path.dirname(dst), exist_ok=True)
@@ -794,29 +762,49 @@ class LakeEngine:
                 os.link(sp, dst)
             except OSError:
                 shutil.copy2(sp, dst)  # cross-device fallback
+            linked.append(f"file://{dst}")
         pcols = entry.get("partition_cols") or []
-        data_ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in snap.schema.fields
-            if f.name not in pcols
-        )
         qdst = self.qualified(dst_table)
+        self._create_table(qdst, snap.schema, pcols, {}, location=dst_loc)
         if pcols:
-            part_ddl = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in snap.schema.fields
-                if f.name in pcols
-            )
-            self.spark.sql(
-                f"CREATE TABLE {qdst} ({data_ddl}) USING parquet "
-                f"PARTITIONED BY ({part_ddl}) LOCATION '{dst_loc}'"
-            )
             self.recover_partitions(dst_table)
-        else:
-            self.spark.sql(f"CREATE TABLE {qdst} ({data_ddl}) USING parquet LOCATION '{dst_loc}'")
         self._journal_schema(dst_table)
-        self._journal_snapshot(dst_table)
+        self._journal_snapshot(dst_table, linked, (dst_loc, pcols))
         return dst_loc
+
+    def _create_table(
+        self,
+        qtable: str,
+        schema,
+        partition_cols: Sequence[str],
+        props: dict[str, str],
+        location: str | None = None,
+    ) -> None:
+        """``CREATE TABLE`` with ``schema``'s columns (those in
+        ``partition_cols`` as partition columns, in that order), the
+        given table properties, and an external ``location`` if one is
+        given (else a managed table)."""
+
+        def cols(fields) -> str:
+            return ", ".join(
+                f"`{f.name.replace('`', '``')}` {f.dataType.simpleString()}" for f in fields
+            )
+
+        by_name = {f.name: f for f in schema.fields}
+        ddl = (
+            f"CREATE TABLE {qtable} "
+            f"({cols(f for f in schema.fields if f.name not in partition_cols)}) "
+            f"USING {'parquet' if self.table_format == 'delta' else self.table_format}"
+        )
+        if partition_cols:
+            ddl += f" PARTITIONED BY ({cols(by_name[c] for c in partition_cols)})"
+        if location:
+            ddl += f" LOCATION '{location}'"
+        if props:
+            ddl += " TBLPROPERTIES (" + ", ".join(
+                f"'{k}' = '{v.replace(chr(39), chr(39) * 2)}'" for k, v in props.items()
+            ) + ")"
+        self.spark.sql(ddl)
 
     # ------------------------------------------------------------------
     # Catalog versioning (utils.py:78,247 `catalog_versioning=True`):
@@ -2087,9 +2075,13 @@ class LakeEngine:
                 .agg(*self._iv_state_exprs(spec["aggs"], partial=False))
             )
             how = "incremental"
-        # the incremental branch reads the MV it overwrites
-        self._overwrite_via_scratch(
-            name, self._iv_finalize(state, spec["aggs"]), spec["partition_cols"]
+        # the incremental branch reads the MV it overwrites; `_commit`
+        # stages it before touching the MV's files
+        self.write_curated(
+            name,
+            self._iv_finalize(state, spec["aggs"]),
+            mode="overwrite",
+            partition_cols=spec["partition_cols"],
         )
         defs = self._mview_defs()
         defs[name]["files"] = current
@@ -2603,14 +2595,6 @@ class LakeEngine:
     def generated_columns(self, table: str) -> dict[str, str]:
         return _prefixed(self._table_props(table), _GENERATED)
 
-    def _reapply_properties(self, table: str, props: dict[str, str]) -> None:
-        qtable = self.qualified(table)
-        for k, v in props.items():
-            esc = v.replace("'", "''")
-            self.spark.sql(
-                f"ALTER TABLE {qtable} SET TBLPROPERTIES ('{k}' = '{esc}')"
-            )
-
     # ------------------------------------------------------------------
     # Generated columns (Delta `GENERATED ALWAYS AS (expr)` parity):
     # the expression lives in table properties; a write batch that
@@ -2641,55 +2625,51 @@ class LakeEngine:
             f"ALTER TABLE {qtable} SET TBLPROPERTIES ('generated.col.{name}' = '{esc}')"
         )
 
-    def _apply_generated_columns(
-        self, table: str, df: DataFrame, props: dict[str, str]
-    ) -> DataFrame:
-        gens = _prefixed(props, _GENERATED)
-        if not gens:
-            return df
-        provided = [n for n in gens if n in df.columns]
-        if provided:
-            aggs = [
-                F.sum(
-                    F.expr(f"CAST(NOT (`{n}` <=> ({gens[n]})) AS INT)")
-                ).alias(n)
-                for n in provided
-            ]
-            row = df.agg(*aggs).collect()[0]
-            bad = {n: row[n] for n in provided if row[n]}
-            if bad:
-                raise ConstraintViolation(
-                    f"write to {table!r} rejected, generated-column mismatches: "
-                    + ", ".join(
-                        f"{n} != ({gens[n]}): {c} rows" for n, c in bad.items()
-                    )
-                )
-        for n, e in gens.items():
-            if n not in df.columns:
-                df = df.withColumn(n, F.expr(e))
-        return df
-
-    def _enforce_constraints(
-        self, table: str, df: DataFrame, props: dict[str, str]
-    ) -> None:
-        """One-agg batch validation against the CHECK constraints in
-        the table's ``props``; raises ConstraintViolation with
-        per-constraint counts."""
+    @contextmanager
+    def _checked(
+        self, table: str, df: DataFrame, props: dict[str, str], mode: str | None = None
+    ):
+        """Yield ``df`` once it satisfies the table's ``props``:
+        generated-column values and CHECK constraints in one aggregate
+        (per-column / per-constraint counts in the ConstraintViolation),
+        then, for a `write_curated` ``mode``, the unique constraints.
+        Validation and the commit write are separate jobs over one
+        plan, so when there is anything to check the frame is pinned
+        first: a non-deterministic plan (rand()/uuid()/a changing
+        upstream) cannot pass validation yet persist different,
+        violating rows, nor be computed twice. The validation
+        aggregate materializes the cache; the write reuses it. A table
+        without such properties pays nothing."""
+        gens = {n: e for n, e in _prefixed(props, _GENERATED).items() if n in df.columns}
         cons = _prefixed(props, _CHECK)
-        if cons:
-            aggs = [
-                F.sum(
-                    (~F.coalesce(F.expr(e).cast("boolean"), F.lit(True))).cast("int")
-                ).alias(n)
-                for n, e in cons.items()
+        uniques = _unique_specs(props) if mode else {}
+        if not (gens or cons or uniques):
+            yield df
+            return
+        pinned = df.persist()
+        try:
+            checks = [f"NOT (`{n}` <=> ({e}))" for n, e in gens.items()] + [
+                f"NOT coalesce(CAST(({e}) AS BOOLEAN), true)" for e in cons.values()
             ]
-            row = df.agg(*aggs).collect()[0]
-            bad = {n: row[n] for n in cons if row[n]}
-            if bad:
-                raise ConstraintViolation(
-                    f"write to {table!r} rejected, CHECK violations: "
-                    + ", ".join(f"{n} ({cons[n]}): {c} rows" for n, c in bad.items())
-                )
+            if checks:
+                row = pinned.agg(*[F.sum(F.expr(c).cast("int")) for c in checks]).first()
+                bad_gens = {n: c for n, c in zip(gens, row[: len(gens)]) if c}
+                bad_cons = {n: c for n, c in zip(cons, row[len(gens):]) if c}
+                if bad_gens:
+                    raise ConstraintViolation(
+                        f"write to {table!r} rejected, generated-column mismatches: "
+                        + ", ".join(f"{n} != ({gens[n]}): {c} rows" for n, c in bad_gens.items())
+                    )
+                if bad_cons:
+                    raise ConstraintViolation(
+                        f"write to {table!r} rejected, CHECK violations: "
+                        + ", ".join(f"{n} ({cons[n]}): {c} rows" for n, c in bad_cons.items())
+                    )
+            if uniques:
+                self._enforce_unique(table, pinned, mode, props)
+            yield pinned
+        finally:
+            pinned.unpersist()
 
     def repartition_table(self, table: str, partition_cols: Sequence[str]) -> int:
         """Partition-scheme evolution: rewrite the table under a new
@@ -2711,7 +2691,7 @@ class LakeEngine:
         missing = [c for c in partition_cols if c not in df.columns]
         if missing:
             raise ValueError(f"partition columns not in table: {missing}")
-        self._overwrite_via_scratch(table, df, partition_cols)
+        self.write_curated(table, df, mode="overwrite", partition_cols=list(partition_cols))
         return len(self.spark.table(qtable).inputFiles())
 
     def describe_detail(self, table: str) -> DataFrame:
@@ -2884,7 +2864,7 @@ class LakeEngine:
             self.spark.sql(
                 f"ALTER TABLE {qtable} UNSET TBLPROPERTIES ('generated.col.{column}')"
             )
-        self._overwrite_via_scratch(table, df.drop(column), parts)
+        self.write_curated(table, df.drop(column), mode="overwrite", partition_cols=parts)
         return len(self.spark.table(qtable).inputFiles())
 
     def rename_column(self, table: str, old: str, new: str) -> int:
@@ -2918,7 +2898,7 @@ class LakeEngine:
             self.spark.sql(
                 f"ALTER TABLE {qtable} SET TBLPROPERTIES ('generated.col.{new}' = '{esc}')"
             )
-        self._overwrite_via_scratch(table, renamed, parts)
+        self.write_curated(table, renamed, mode="overwrite", partition_cols=parts)
         return len(self.spark.table(qtable).inputFiles())
 
     def table_layout_report(self, table: str, target_file_bytes: int = 128 * 1024 * 1024) -> DataFrame:
@@ -3189,28 +3169,9 @@ class LakeEngine:
         matched_files = [r["f"] for r in hits]
         subset = self._read_files_as_table_schema(qtable, matched_files)
         replacement = rewrite(subset, cond).select(*target.columns)
-        # Validation and the splice write are separate jobs over the
-        # same replacement plan — pin it (the write_curated discipline)
-        # so a non-deterministic rewrite expression (rand()/uuid()) that
-        # passes validation cannot re-evaluate to different, violating
-        # rows in the splice. The validation aggregate materializes the
-        # cache; the splice reuses the pinned partitions.
-        pinned = None
-        if validate:
-            pinned = replacement.persist()
-            replacement = pinned
-        try:
-            if validate:
-                # verify-only: every table column is present, so this
-                # never adds columns — it raises on stale generated
-                # values.
-                props = self._table_props(table)
-                replacement = self._apply_generated_columns(table, replacement, props)
-                self._enforce_constraints(table, replacement, props)
-            self._commit(table, matched_files, replacement)
-        finally:
-            if pinned is not None:
-                pinned.unpersist()
+        props = self._table_props(table) if validate else {}
+        with self._checked(table, replacement, props) as rows:
+            self._commit(table, matched_files, rows)
         return sum(r["count"] for r in hits)
 
     def _read_files_as_table_schema(self, qtable: str, files: list[str]) -> DataFrame:
@@ -3241,74 +3202,111 @@ class LakeEngine:
         )
 
     def _commit(
-        self, table: str, removed_files: list[str], replacement: DataFrame
+        self,
+        table: str,
+        removed_files: list[str] | None,
+        replacement: DataFrame,
+        create: tuple[list[str], dict[str, str]] | None = None,
+        layout: tuple[str, list[str]] | None = None,
     ) -> int:
-        """Replace ``removed_files`` of ``table`` with the rows of
-        ``replacement`` — the one commit path of every same-schema
-        rewrite (DELETE/UPDATE/MERGE, compaction, deletion-vector
-        folding). Returns the number of rows written, observed on the
-        write itself. A commit that removes no file and writes no row
-        changes nothing and leaves no new version. Steps, in crash
-        order:
+        """Replace ``removed_files`` of ``table`` (``None``: every live
+        file) with the rows of ``replacement`` — the one commit path of
+        every write to a parquet table: `write_curated` appends,
+        overwrites and creates (and through them RESTORE, re-partition,
+        DROP/RENAME COLUMN, view refreshes and write-audit-publish),
+        DELETE/UPDATE/MERGE, compaction and deletion-vector folding.
+        Returns the number of rows written, observed on the write
+        itself. A commit that removes no file (``removed_files == []``)
+        and writes no row changes nothing and leaves no new version.
+        ``layout`` is the table's `_table_layout` when the caller has
+        already read it. Steps, in crash order:
 
         1. stage the replacement under scratch (its plan may read the
            very files being replaced);
-        2. move the staged files into the table's partition dirs
+        2. with ``create`` — (partition columns, table properties) —
+           drop the table's catalog entry if it has one and create it
+           afresh from the staged schema (`_create_table`): the path of
+           a new table, or of a write that changes its columns or
+           partitioning, which a v1 table can only take by being
+           re-created;
+        3. move the staged files into the table's partition dirs
            (``recover_partitions`` if a new dir appeared);
-        3. append the snapshot entry: the previous manifest minus
+        4. append the snapshot entry: the previous manifest minus
            ``removed_files`` plus the moved-in files. This is the
            commit point;
-        4. unlink ``removed_files`` (retained snapshot links keep their
+        5. unlink ``removed_files`` (retained snapshot links keep their
            inodes for time travel).
 
-        A crash before step 3 leaves `read_snapshot` on the old
+        A crash before step 4 leaves `read_snapshot` on the old
         version, a crash after it on the new one; either way
         `vacuum_orphans` puts the directory back in line with that
         version (until then a directory scan may see rows twice, never
-        lose them). Only local (``file:``) locations: any other scheme
-        raises before anything is staged."""
+        lose them). Step 2 is the exception: dropping a managed table
+        deletes its files, so a crash between it and step 4 leaves the
+        live table empty and `restore_snapshot` brings the old version
+        back. Only local (``file:``) locations: any other scheme raises
+        before anything is staged."""
         qtable = self.qualified(table)
-        loc, parts = layout = self._table_layout(qtable)
+        if create is None:
+            loc, parts = layout = layout or self._table_layout(qtable)
+        else:
+            loc, parts = self.spark.catalog.getDatabase(self.database).locationUri, create[0]
         if urlparse(loc).scheme not in ("", "file"):
             raise ValueError(
                 f"cannot commit to {qtable} at {loc}: file commits need a "
                 "local (file:) table location"
             )
+        fmt = "parquet" if self.table_format == "delta" else self.table_format
         scratch = self._scratch_dir(table)
         written = Observation()
         writer = replacement.observe(written, F.count(F.lit(1)).alias("n")).write
-        writer = writer.option("compression", "snappy")
+        writer = writer.format(fmt).option("compression", "snappy")
         if parts:
             writer = writer.partitionBy(*parts)
-        writer.parquet(scratch)
+        writer.save(scratch)
         n_written = written.get["n"]
-        if not removed_files and not n_written:
+        if create is None and removed_files == [] and not n_written:
             shutil.rmtree(scratch, ignore_errors=True)
             return 0
         history = self.snapshot_history(table)
-        live = history[-1]["files"] if history else self.spark.table(qtable).inputFiles()
+        if history:
+            live = history[-1]["files"]
+        elif self.spark.catalog.tableExists(qtable):
+            live = self.spark.table(qtable).inputFiles()
+        else:
+            live = []
+        if removed_files is None:
+            removed_files = live
+        if create is not None:
+            schema = replacement.schema
+            self.spark.sql(f"DROP TABLE IF EXISTS {qtable}")
+            self._create_table(qtable, schema, parts, create[1])
+            loc, parts = layout = self._table_layout(qtable)
         added, new_dirs = [], False
         for dirpath, _dirs, files in os.walk(scratch):
             dst_dir = os.path.normpath(
                 os.path.join(_local_path(loc), os.path.relpath(dirpath, scratch))
             )
             for fname in files:
-                if not fname.endswith(".parquet"):
-                    continue
+                if fname.startswith(("_", ".")):
+                    continue  # _SUCCESS, checksums
                 if not os.path.isdir(dst_dir):
-                    # a rewrite moved rows to a partition value the
-                    # catalog has never seen — repaired below (K9)
+                    # a partition value the catalog has never seen —
+                    # registered below (K9)
                     new_dirs = True
                     os.makedirs(dst_dir, exist_ok=True)
                 dst = os.path.join(dst_dir, f"dml-{uuid.uuid4().hex[:8]}-{fname}")
-                os.replace(os.path.join(dirpath, fname), dst)
+                try:
+                    os.replace(os.path.join(dirpath, fname), dst)
+                except OSError:  # scratch on another filesystem than the table
+                    shutil.move(os.path.join(dirpath, fname), dst)
                 added.append(f"file://{dst}")
         shutil.rmtree(scratch, ignore_errors=True)
         if new_dirs and parts:
             self.recover_partitions(table)
         gone = {_local_path(f) for f in removed_files}
         kept = [f for f in live if _local_path(f) not in gone]
-        self._journal_snapshot(table, files=kept + added, layout=layout)
+        self._journal_snapshot(table, kept + added, layout)
         for p in gone:
             if os.path.exists(p):
                 os.remove(p)
@@ -3337,15 +3335,19 @@ class LakeEngine:
         """Write-audit-publish (round 12 — the Iceberg/Netflix WAP
         discipline): the batch lands in an invisible ``{table}__wap``
         staging table, the expectations suite runs over the STAGED
-        data, and only a fully-passing audit swaps it into the live
-        name (rename-aside — crash-safe, `_swap_staged_table`). A
-        failing audit leaves the live table BYTE-UNTOUCHED and keeps
-        the staged copy for inspection — bad data is never visible to
-        readers, which is the entire point of the pattern. ``rules``
-        maps rule name → predicate (Column or SQL string), True = row
-        passes (`operators.dq.expectations_report` semantics: NULL
-        predicates are violations). Returns {"published",
-        "report" (rule rows), "staged_table"}."""
+        data, and only a fully-passing audit publishes it: a
+        `write_curated` overwrite of the live table (keeping its
+        partition columns; a new table is unpartitioned), so the
+        table's CHECK, generated-column and unique constraints apply
+        and its properties stay, then the staged table is dropped. A
+        failing audit, or a batch the constraints reject
+        (ConstraintViolation), leaves the live table BYTE-UNTOUCHED and
+        keeps the staged copy for inspection — bad data is never
+        visible to readers, which is the entire point of the pattern.
+        ``rules`` maps rule name → predicate (Column or SQL string),
+        True = row passes (`operators.dq.expectations_report`
+        semantics: NULL predicates are violations). Returns
+        {"published", "report" (rule rows), "staged_table"}."""
         from cbts_datalake_synnex_spark.operators.dq import expectations_report
 
         live = self.qualified(table)
@@ -3358,11 +3360,11 @@ class LakeEngine:
         report = expectations_report(self.spark.table(staged), conds).collect()
         published = all(r["passed"] for r in report)
         if published:
-            if self.spark.catalog.tableExists(live):
-                _swap_staged_table(self, staged, live)
-            else:
-                self.spark.sql(f"ALTER TABLE {staged} RENAME TO {live}")
-            self._journal_snapshot(table)
+            parts = self._table_layout(live)[1] if self.spark.catalog.tableExists(live) else []
+            self.write_curated(
+                table, self.spark.table(staged), mode="overwrite", partition_cols=parts
+            )
+            self.spark.sql(f"DROP TABLE {staged}")
         return {
             "published": published,
             "report": report,
@@ -3481,9 +3483,8 @@ class LakeEngine:
         amplification outweighs one rewrite): commit `read_mor` in
         place of every live file, drop the vector. Returns the
         surviving row count."""
-        qtable = self.qualified(table)
         dv = self.qualified(f"{table}__dv")
-        n = self._commit(table, self.spark.table(qtable).inputFiles(), self.read_mor(table))
+        n = self._commit(table, None, self.read_mor(table))
         self.spark.sql(f"DROP TABLE IF EXISTS {dv}")
         return n
 
@@ -3775,15 +3776,12 @@ class LakeEngine:
         # verified against their generation expression, and CHECK
         # constraints validate the replacement like any write.
         props = self._table_props(table)
-        gens = _prefixed(props, _GENERATED)
-        if gens:
-            src_lower = {c.lower() for c in data_cols}
-            for g, e in gens.items():
-                if g not in upd_sets and g.lower() not in src_lower:
-                    replacement = replacement.withColumn(g, F.expr(e))
-            replacement = self._apply_generated_columns(table, replacement, props)
-        self._enforce_constraints(table, replacement, props)
-        self._commit(table, matched_files, replacement)
+        src_lower = {c.lower() for c in data_cols}
+        for g, e in _prefixed(props, _GENERATED).items():
+            if g not in upd_sets and g.lower() not in src_lower:
+                replacement = replacement.withColumn(g, F.expr(e))
+        with self._checked(table, replacement, props) as rows:
+            self._commit(table, matched_files, rows)
         counts = {"updated": 0, "deleted": 0, "inserted": 0}
         if matched_files:
             counts["deleted"] = merged.get["d"]

@@ -989,7 +989,7 @@ def lc_repartition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="[EXT] CHECK constraints: n_regionkey BETWEEN 0 AND 4 registered on the "
     "curated table; a violating append (regionkey 99) aborts with the table "
     "untouched, a clean append lands (engine.add_check_constraint / "
-    "_enforce_constraints — one agg pass per batch, never a table scan).",
+    "_checked — one agg pass per batch, never a table scan).",
 )
 def lc_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cbts_datalake_synnex_spark.engine import ConstraintViolation
@@ -2673,8 +2673,8 @@ def lc_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="K++ [EXT] — write-audit-publish: staged batch audited by the "
     "expectations suite BEFORE becoming reader-visible; a failing "
     "audit leaves the live table byte-untouched (file list asserted) "
-    "with the staged copy kept for inspection; a passing audit swaps "
-    "atomically (engine.write_audit_publish).",
+    "with the staged copy kept for inspection; a passing audit commits "
+    "as one overwrite of the live table (engine.write_audit_publish).",
 )
 def lc_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")

@@ -313,11 +313,8 @@ def test_vacuum_orphans_repairs_crash_artifacts(spark, eng, monkeypatch):
     assert eng.read_snapshot("t", 1).count() == 20
 
     # a restore cut short after staging leaves its scratch copy behind
-    def _crash(*_a, **_kw):
-        raise RuntimeError("crash")
-
-    monkeypatch.setattr(eng, "write_curated", _crash)
-    with pytest.raises(RuntimeError):
+    _arm_crash(monkeypatch, "replace", 1)
+    with pytest.raises(_Crash):
         eng.restore_snapshot("t", 1)
     monkeypatch.undo()
     leftovers = eng._scratch_leftovers("t_")
@@ -378,8 +375,32 @@ def _compact_op(spark, eng):
     eng.compact_table("t")
 
 
+def _append_op(spark, eng):
+    src = spark.createDataFrame([(100, "new", 0), (101, "new", 1)], "k int, v string, p int")
+    eng.write_curated("t", src, mode="append", partition_cols=["p"])
+
+
+def _overwrite_op(spark, eng):
+    src = spark.createDataFrame([(k, f"o{k}", k % 2) for k in (0, 1, 5)], "k int, v string, p int")
+    eng.write_curated("t", src, mode="overwrite", partition_cols=["p"])
+
+
+# op -> (run, rows it leaves, given the old rows)
+_OPS = {
+    "merge_rows": (
+        _merge_op,
+        lambda old: sorted(
+            {**{r[0]: r for r in old}, 0: (0, "u0", 0), 1: (1, "u1", 1), 100: (100, "new", 0)}.values()
+        ),
+    ),
+    "compact_table": (_compact_op, lambda old: old),
+    "append": (_append_op, lambda old: sorted(old + [(100, "new", 0), (101, "new", 1)])),
+    "overwrite": (_overwrite_op, lambda old: [(0, "o0", 0), (1, "o1", 1), (5, "o5", 1)]),
+}
+
 # (step, nth call, version the crash must leave): moves and the journal
-# append come before the commit point, unlinks after it.
+# append come before the commit point, unlinks after it. An append
+# removes no file, so it has no unlink step.
 _CRASH_POINTS = [
     ("replace", 1, "old"),
     ("replace", 2, "old"),
@@ -389,8 +410,10 @@ _CRASH_POINTS = [
 ]
 
 
-@pytest.mark.parametrize("step,nth,lands", _CRASH_POINTS)
-@pytest.mark.parametrize("op", ["merge_rows", "compact_table"])
+@pytest.mark.parametrize(
+    "op,step,nth,lands",
+    [(op, *point) for op in _OPS for point in _CRASH_POINTS if (op, point[0]) != ("append", "remove")],
+)
 def test_commit_crash_leaves_old_or_new_version(spark, eng, monkeypatch, op, step, nth, lands):
     """A crash at any file step of `_commit` leaves `read_snapshot` on
     the old or the new version, row for row; `vacuum_orphans` then
@@ -403,12 +426,8 @@ def test_commit_crash_leaves_old_or_new_version(spark, eng, monkeypatch, op, ste
     eng.write_curated("t", df.filter("k >= 10"), mode="append", partition_cols=["p"])
     qt = eng.qualified("t")
     old = _rows(spark.table(qt))
-    run = _merge_op if op == "merge_rows" else _compact_op
-    if op == "merge_rows":
-        changed = {0: (0, "u0", 0), 1: (1, "u1", 1), 100: (100, "new", 0)}
-        new = sorted({**{r[0]: r for r in old}, **changed}.values())
-    else:
-        new = old
+    run, result = _OPS[op]
+    new = result(old)
     expected = old if lands == "old" else new
 
     _arm_crash(monkeypatch, step, nth)
@@ -437,3 +456,69 @@ def test_commit_refuses_non_local_location(spark, eng, monkeypatch):
     assert not eng._scratch_leftovers()
     monkeypatch.undo()
     assert spark.table(qt).count() == 20
+
+
+def test_write_audit_publish_keeps_layout_and_constraints(spark, eng):
+    """Publishing a write-audit-publish batch replaces the live rows but
+    keeps the table's partition columns and CHECK constraint; a batch
+    that passes the audit yet violates the constraint is rejected with
+    the live table untouched and the staged copy kept."""
+    schema = "k int, v int, processed_year string"
+    eng.write_curated(
+        "w",
+        spark.createDataFrame([(1, 1, "2024"), (2, 2, "2025")], schema),
+        mode="overwrite",
+        partition_cols=["processed_year"],
+    )
+    eng.add_check_constraint("w", "v_pos", "v > 0")
+    qt, staged = eng.qualified("w"), eng.qualified("w__wap")
+    rules = {"k_present": "k IS NOT NULL"}
+
+    batch = spark.createDataFrame([(3, 3, "2024"), (4, 4, "2026")], schema)
+    assert eng.write_audit_publish("w", batch, rules)["published"]
+    assert not spark.catalog.tableExists(staged)
+    assert eng._table_layout(qt)[1] == ["processed_year"]
+    assert eng.table_constraints("w") == {"v_pos": "v > 0"}
+    assert sorted(tuple(r) for r in spark.table(qt).collect()) == [(3, 3, "2024"), (4, 4, "2026")]
+
+    files = sorted(spark.table(qt).inputFiles())
+    versions = len(eng.snapshot_history("w"))
+    with pytest.raises(ConstraintViolation, match="v_pos"):
+        eng.write_audit_publish("w", spark.createDataFrame([(5, -5, "2024")], schema), rules)
+    assert sorted(spark.table(qt).inputFiles()) == files
+    assert len(eng.snapshot_history("w")) == versions
+    assert spark.catalog.tableExists(staged)
+
+    # an ordinary append still fits the table's layout
+    eng.write_curated("w", spark.createDataFrame([(6, 6, "2024")], schema), mode="append")
+    assert spark.table(qt).filter("processed_year = '2024'").count() == 2
+
+
+@pytest.mark.parametrize("op", ["update_rows", "merge_rows"])
+def test_checked_rewrite_evaluates_set_expression_once(spark, eng, op):
+    """With a CHECK constraint the rows a rewrite validates are the rows
+    it writes: a non-deterministic SET expression runs once per row of
+    the rewritten file (3), not once for the check and again for the
+    write (6)."""
+    from pyspark.sql.types import IntegerType
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def bump(v):
+        calls.add(1)
+        return v + 100
+
+    bumped = F.udf(bump, IntegerType()).asNondeterministic()
+    rows = [(1, 1), (2, 2), (3, 3)]
+    eng.write_curated(
+        "t", spark.createDataFrame(rows, "k int, v int").coalesce(1), mode="overwrite", partition_cols=[]
+    )
+    eng.add_check_constraint("t", "v_pos", "v > 0")
+    if op == "update_rows":
+        assert eng.update_rows("t", "k <= 3", {"v": bumped(F.col("v"))}) == 3
+    else:
+        src = spark.createDataFrame(rows, "k int, v int")
+        res = eng.merge_rows("t", src, ["k"], when_matched_update={"v": bumped(F.col("s.v"))})
+        assert res["updated"] == 3
+    assert calls.value == 3
+    assert sorted(r["v"] for r in spark.table(eng.qualified("t")).collect()) == [101, 102, 103]

@@ -1031,14 +1031,22 @@ def test_histogram_selectivity_bounds_and_ops(spark, engine):
 def test_write_paths_never_call_list_columns(engine, spark, monkeypatch):
     """PySpark's Catalog.listColumns runs one Spark job per partition
     of a local relation on every call; the engine reads partition
-    columns from DESCRIBE TABLE EXTENDED instead. The whole nightly
-    path, compaction and a layout change run with it disabled."""
+    columns from DESCRIBE TABLE EXTENDED instead. And every parquet
+    table write commits through `_commit`, never `saveAsTable`. The
+    whole nightly path, compaction, an overwrite and the layout and
+    column changes run with both disabled. An append or a same-layout
+    overwrite reads the table's layout (one DESCRIBE) once."""
     from pyspark.sql.catalog import Catalog
+    from pyspark.sql.readwriter import DataFrameWriter
 
-    def _refuse(*_a, **_k):
-        raise AssertionError("Catalog.listColumns called")
+    def _refuse(what):
+        def refuse(*_a, **_k):
+            raise AssertionError(f"{what} called")
 
-    monkeypatch.setattr(Catalog, "listColumns", _refuse)
+        return refuse
+
+    monkeypatch.setattr(Catalog, "listColumns", _refuse("Catalog.listColumns"))
+    monkeypatch.setattr(DataFrameWriter, "saveAsTable", _refuse("DataFrameWriter.saveAsTable"))
     records = [{"po_number": f"PO{i}", "status": "OPEN", "qty": i} for i in range(6)]
     engine.save_to_staging("po", records)
     assert engine.curate("po") == 6
@@ -1054,6 +1062,100 @@ def test_write_paths_never_call_list_columns(engine, spark, monkeypatch):
     assert engine._table_layout(qt)[1] == ["status"]
     got = {r["po_number"]: r["status"] for r in spark.table(qt).collect()}
     assert len(got) == 5 and got["PO1"] == "SHIPPED" and "PO2" not in got
+    engine.drop_column("po", "qty")
+    assert "qty" not in spark.table(qt).columns
+    engine.prepare_staging("po")
+    engine.save_to_staging("po", [{"po_number": "PO9", "status": "OPEN"}])
+    layouts = []
+    table_layout = engine._table_layout
+    monkeypatch.setattr(engine, "_table_layout", lambda q: layouts.append(q) or table_layout(q))
+    assert engine.curate("po", partition_cols=["status"]) == 6
+    assert layouts == [qt]
+    engine.write_curated(
+        "po", spark.table(qt).filter("po_number != 'PO3'"), mode="overwrite", partition_cols=["status"]
+    )
+    assert spark.table(qt).count() == 5
+    assert layouts == [qt, qt]
+
+
+@pytest.mark.parametrize("create_mode", ["overwrite", "append"])
+def test_write_curated_create_and_append_rules(engine, spark, create_mode):
+    """A create journals version 1 even for an empty batch; an append
+    whose partition columns differ from the table's (none given
+    included) raises and changes nothing."""
+    empty = spark.createDataFrame([], "k int, p string")
+    engine.write_curated("r", empty, mode=create_mode, partition_cols=["p"])
+    assert [h["version"] for h in engine.snapshot_history("r")] == [1]
+    batch = spark.createDataFrame([(1, "a"), (2, "b")], "k int, p string")
+    for wrong in (["k"], []):
+        with pytest.raises(Exception, match="partition"):
+            engine.write_curated("r", batch, mode="append", partition_cols=wrong)
+    assert len(engine.snapshot_history("r")) == 1
+    engine.write_curated("r", batch, mode="append", partition_cols=["p"])
+    qt = engine.qualified("r")
+    assert engine._table_layout(qt)[1] == ["p"]
+    assert sorted(tuple(r) for r in spark.table(qt).collect()) == [(1, "a"), (2, "b")]
+    assert len(engine.snapshot_history("r")) == 2
+
+
+def test_same_layout_overwrite_keeps_table_properties(engine, spark):
+    """An overwrite that keeps the columns and partitioning replaces the
+    rows in place: the table is not re-created, so user properties
+    stay; a schema-changing overwrite re-creates it with the engine's
+    properties only."""
+    df = spark.createDataFrame([(1, 5)], "k int, qty int")
+    engine.write_curated("p", df, mode="overwrite", partition_cols=[])
+    engine.add_check_constraint("p", "qty_pos", "qty > 0")
+    qt = engine.qualified("p")
+    spark.sql(f"ALTER TABLE {qt} SET TBLPROPERTIES ('owner.team' = 'po')")
+    engine.write_curated("p", spark.createDataFrame([(2, 6)], "k int, qty int"), mode="overwrite", partition_cols=[])
+    props = engine._table_props("p")
+    assert props["owner.team"] == "po" and props["constraint.check.qty_pos"] == "qty > 0"
+    assert [tuple(r) for r in spark.table(qt).collect()] == [(2, 6)]
+    engine.write_curated("p", spark.createDataFrame([(3, 7, "x")], "k int, qty int, s string"), mode="overwrite", partition_cols=[])
+    props = engine._table_props("p")
+    assert "owner.team" not in props and props["constraint.check.qty_pos"] == "qty > 0"
+    assert spark.table(qt).columns == ["k", "qty", "s"]
+    assert [h["version"] for h in engine.snapshot_history("p")] == [1, 2, 3]
+
+
+def _empty_overwrite(engine, spark):
+    empty = spark.createDataFrame([], "k int, p string")
+    engine.write_curated("r", empty, mode="overwrite", partition_cols=["p"])
+    return []
+
+
+def _fold_delete_all(engine, spark):
+    assert engine.delete_rows_mor("r", "k > 0", ["k"]) == 2
+    assert engine.apply_deletion_vectors("r") == 0
+    return []
+
+
+def _recreate_after_sql_drop(engine, spark):
+    spark.sql(f"DROP TABLE {engine.qualified('r')}")
+    batch = spark.createDataFrame([(7, "c")], "k int, p string")
+    engine.write_curated("r", batch, mode="append", partition_cols=["p"])
+    return [(7, "c")]
+
+
+@pytest.mark.parametrize(
+    "op", [_empty_overwrite, _fold_delete_all, _recreate_after_sql_drop],
+    ids=["empty_overwrite", "fold_delete_all", "recreate_after_sql_drop"],
+)
+def test_commit_replacing_every_file_journals_only_new_rows(engine, spark, op):
+    """A write that replaces every live file — an empty overwrite, a
+    deletion vector covering every row, a re-create of a table dropped
+    outside the engine — journals a new version holding exactly the
+    new rows: none of the old files stay live or carry into the
+    manifest."""
+    batch = spark.createDataFrame([(1, "a"), (2, "b")], "k int, p string")
+    engine.write_curated("r", batch, mode="overwrite", partition_cols=["p"])
+    want = op(engine, spark)
+    assert [h["version"] for h in engine.snapshot_history("r")] == [1, 2]
+    assert sorted(tuple(r) for r in spark.table(engine.qualified("r")).collect()) == want
+    assert len(engine.snapshot_history("r")[-1]["files"]) == len(want)
+    if want:  # a version with no files has no parquet to read back
+        assert sorted(tuple(r) for r in engine.read_snapshot("r").collect()) == want
 
 
 @pytest.mark.parametrize("parts", [[], ["a"], ["a", "b"]])
