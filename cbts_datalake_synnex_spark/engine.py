@@ -44,6 +44,7 @@ from urllib.parse import urlparse
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cbts_datalake_synnex_spark.functions.audit import with_audit_columns
 from cbts_datalake_synnex_spark.functions.ingest_policy import (
@@ -108,8 +109,8 @@ def _delta_available(spark: SparkSession) -> bool:
     evolution, time travel) is written to the published Delta API but
     has only ever executed its parquet fallback here. The parquet path
     is the *certified* one: explicit ALTER TABLE evolution (K8), the
-    schema journal (``schema_history``) standing in for the
-    transaction log (reference ``utils.py:78`` catalog_versioning),
+    snapshot log (``snapshot_history``, ``schema_history``) standing in
+    for the transaction log (reference ``utils.py:78`` catalog_versioning),
     and partition-scoped dynamic overwrite standing in for MERGE. On a
     cluster with Delta present this probe flips the engine to the
     native branch; treat that branch as untested until run there.
@@ -166,6 +167,8 @@ class LakeEngine:
         # log (mergeSchema); under Parquet we do the explicit ALTER
         # TABLE diff (K8) ourselves.
         self.table_format = table_format or ("delta" if _delta_available(spark) else "parquet")
+        # the format of the files the engine writes and reads itself
+        self._file_format = "parquet" if self.table_format == "delta" else self.table_format
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
 
     @property
@@ -341,12 +344,17 @@ class LakeEngine:
                 writer.saveAsTable(qtable)
                 self.spark.catalog.refreshTable(qtable)
                 self._journal_snapshot(
-                    table, self.spark.table(qtable).inputFiles(), self._table_layout(qtable)
+                    table,
+                    self.spark.table(qtable).inputFiles(),
+                    self._table_layout(qtable),
+                    mode,
+                    None,
+                    self.snapshot_history(table),
                 )
             elif not exists:
                 # None: a stale manifest of a table dropped outside the
                 # engine (or mid-re-create) must not carry into the new one
-                self._commit(table, None, df, create=(parts, props))
+                self._commit(table, None, df, mode, create=(parts, props))
             elif mode == "append":
                 layout = self._table_layout(qtable)
                 if parts != layout[1]:
@@ -354,7 +362,7 @@ class LakeEngine:
                         f"cannot append to {qtable} partitioned by {layout[1]} "
                         f"with partition columns {parts}"
                     )
-                self._commit(table, [], self._evolve_schema(qtable, df), layout=layout)
+                self._commit(table, [], self._evolve_schema(qtable, df), mode, layout=layout)
             else:
                 # the table a saveAsTable overwrite would re-create:
                 # data columns, then partition columns in `parts` order
@@ -364,10 +372,9 @@ class LakeEngine:
                 current = [(f.name, f.dataType) for f in self.spark.table(qtable).schema.fields]
                 layout = self._table_layout(qtable)
                 if batch == current and parts == layout[1]:
-                    self._commit(table, None, df, layout=layout)
+                    self._commit(table, None, df, mode, layout=layout)
                 else:
-                    self._commit(table, None, df, create=(parts, props))
-            self._journal_schema(table)
+                    self._commit(table, None, df, mode, create=(parts, props))
             uniques = _unique_specs(props)
             if mode == "append" and uniques:
                 self._refresh_unique_membership(table, df, uniques)
@@ -451,6 +458,11 @@ class LakeEngine:
     # Delta gives via the log + VACUUM. Object stores have no hard
     # links; there this degrades to copy (shutil fallback) or, in a
     # real deployment, manifest-only retention over immutable objects.
+    # The same log carries each commit's operation and rows written
+    # (the reference's CloudWatch job metrics, serverless.yml:133-139)
+    # and, on a schema change, the schema — the catalog versioning of
+    # utils.py:78,247 (`catalog_versioning=True`), as Delta's log
+    # carries `metaData` and `commitInfo` in its commits.
     def _snapshot_log_path(self, table: str) -> str:
         return os.path.join(self.zones.root, "_snapshot_log", f"{table}.jsonl")
 
@@ -458,14 +470,26 @@ class LakeEngine:
         return os.path.join(self.zones.root, "_snapshot_log", table, f"v{version:05d}")
 
     def _journal_snapshot(
-        self, table: str, files: list[str], layout: tuple[str, list[str]]
+        self,
+        table: str,
+        files: list[str],
+        layout: tuple[str, list[str]],
+        operation: str,
+        rows_written: int | None,
+        history: list[dict[str, Any]],
     ) -> None:
-        """Append the table's next snapshot entry: ``files`` is the new
-        manifest, ``layout`` the table's `_table_layout`."""
+        """Append the table's next entry to its one log: ``files`` is
+        the new manifest, ``layout`` the table's `_table_layout`,
+        ``history`` its `snapshot_history` so far. The entry records
+        the caller's ``operation`` and the ``rows_written`` it observed,
+        and the catalog schema when it differs from the last one
+        recorded (the `schema_history` versions). Neither the manifest
+        nor the schema changed: no new version."""
         files = sorted(files)
-        history = self.snapshot_history(table)
-        if history and history[-1]["files"] == files:
-            return  # no data change, no new version
+        schema = self.spark.table(self.qualified(table)).schema.jsonValue()
+        last_schema = next((h["schema"] for h in reversed(history) if "schema" in h), None)
+        if history and history[-1]["files"] == files and schema == last_schema:
+            return
         version = len(history) + 1
         loc, pcols = layout
         loc = loc.removeprefix("file:")
@@ -528,30 +552,50 @@ class LakeEngine:
             "base": loc,
             "retain_root": retain_root,
             "partition_cols": pcols,
+            "operation": operation,
+            "rows_written": rows_written,
         }
+        if schema != last_schema:
+            entry["schema"] = schema
         _append_jsonl(self._snapshot_log_path(table), entry)
 
     def snapshot_history(self, table: str) -> list[dict[str, Any]]:
         """All recorded data snapshots, oldest first."""
         return _read_jsonl(self._snapshot_log_path(table))
 
+    def schema_history(self, table: str) -> list[dict[str, Any]]:
+        """All recorded schema versions, oldest first: one per schema
+        CHANGE (Glue semantics), numbered from 1."""
+        changes = [h for h in self.snapshot_history(table) if "schema" in h]
+        return [
+            {"version": i, "at": h["at"], "schema": h["schema"]}
+            for i, h in enumerate(changes, 1)
+        ]
+
     def read_snapshot(self, table: str, version: int | None = None) -> DataFrame:
         """Read the table as it was at snapshot ``version`` (1-based;
-        default latest). Every journaled version is readable until
+        default latest), with the schema recorded at or before that
+        version. Every journaled version is readable until
         `vacuum_snapshots` reclaims it; vacuumed versions raise."""
         history = self.snapshot_history(table)
         if not history:
             raise ValueError(f"no snapshots recorded for table '{table}'")
         if version is None:
             version = history[-1]["version"]
-        matches = [h for h in history if h["version"] == version]
-        if not matches:
+        schema = None
+        for entry in history:
+            schema = entry.get("schema", schema)
+            if entry["version"] == version:
+                break
+        else:
             raise ValueError(f"table '{table}' has no snapshot version {version}")
-        entry = matches[0]
-        fmt = "parquet" if self.table_format == "delta" else self.table_format
+        schema = StructType.fromJson(schema)
+        if not entry["files"]:
+            return self.spark.createDataFrame([], schema)
+        reader = self.spark.read.format(self._file_format).schema(schema)
         retain_root = entry.get("retain_root")
         if retain_root and os.path.isdir(retain_root):
-            return self.spark.read.format(fmt).load(retain_root)
+            return reader.load(retain_root)
         # retention gone (vacuumed) — fall back to the original manifest
         # if those files still exist (append-only history keeps them)
         files = entry["files"]
@@ -561,10 +605,7 @@ class LakeEngine:
                 f"snapshot {version} of '{table}' is no longer materialized "
                 f"({len(missing)}/{len(files)} files rewritten and retention vacuumed)"
             )
-        reader = self.spark.read.format(fmt)
-        if entry.get("base"):
-            reader = reader.option("basePath", entry["base"])
-        return reader.load(files)
+        return reader.option("basePath", entry["base"]).load(files)
 
     def version_at(self, table: str, timestamp) -> int:
         """Resolve Delta ``TIMESTAMP AS OF`` semantics: the newest
@@ -768,8 +809,9 @@ class LakeEngine:
         self._create_table(qdst, snap.schema, pcols, {}, location=dst_loc)
         if pcols:
             self.recover_partitions(dst_table)
-        self._journal_schema(dst_table)
-        self._journal_snapshot(dst_table, linked, (dst_loc, pcols))
+        self._journal_snapshot(
+            dst_table, linked, (dst_loc, pcols), "clone", None, self.snapshot_history(dst_table)
+        )
         return dst_loc
 
     def _create_table(
@@ -794,7 +836,7 @@ class LakeEngine:
         ddl = (
             f"CREATE TABLE {qtable} "
             f"({cols(f for f in schema.fields if f.name not in partition_cols)}) "
-            f"USING {'parquet' if self.table_format == 'delta' else self.table_format}"
+            f"USING {self._file_format}"
         )
         if partition_cols:
             ddl += f" PARTITIONED BY ({cols(by_name[c] for c in partition_cols)})"
@@ -805,32 +847,6 @@ class LakeEngine:
                 f"'{k}' = '{v.replace(chr(39), chr(39) * 2)}'" for k, v in props.items()
             ) + ")"
         self.spark.sql(ddl)
-
-    # ------------------------------------------------------------------
-    # Catalog versioning (utils.py:78,247 `catalog_versioning=True`):
-    # the Glue catalog keeps a version per table-schema change; Delta's
-    # transaction log subsumes it. The Parquet fallback journals schema
-    # versions explicitly so "what did this table look like when batch
-    # N landed" stays answerable.
-    def _journal_path(self, table: str) -> str:
-        return os.path.join(self.zones.root, "_schema_log", f"{table}.jsonl")
-
-    def _journal_schema(self, table: str) -> None:
-        schema = self.spark.table(self.qualified(table)).schema.jsonValue()
-        history = self.schema_history(table)
-        if history and history[-1]["schema"] == schema:
-            return  # only schema CHANGES create a version (Glue semantics)
-        now = self._now() or datetime.now()
-        entry = {
-            "version": len(history) + 1,
-            "at": now.strftime("%Y-%m-%d %H:%M:%S"),
-            "schema": schema,
-        }
-        _append_jsonl(self._journal_path(table), entry)
-
-    def schema_history(self, table: str) -> list[dict[str, Any]]:
-        """All recorded schema versions, oldest first."""
-        return _read_jsonl(self._journal_path(table))
 
     def _evolve_schema(self, qtable: str, df: DataFrame) -> DataFrame:
         """K8 add-column evolution: new df columns → ALTER TABLE ADD
@@ -866,7 +882,8 @@ class LakeEngine:
         chain → K2 schema-evolving partitioned write. Returns the
         table's row count after the write (0, and no write, when
         staging is missing or holds no non-null value). The rows this
-        batch wrote are journaled as ``rows_in`` (`metrics_history`).
+        batch wrote are the ``rows_written`` of its `snapshot_history`
+        entry.
 
         The reference's DynamicFrame + groupFiles:'inPartition',
         groupSize:100MB (``staging_to_curated.py:85-95``) maps to
@@ -921,33 +938,8 @@ class LakeEngine:
         # value, so an empty or all-null batch has no columns left.
         if not df.columns:
             return 0
-        # Observed batch metrics (the reference's CloudWatch alarms on
-        # job executions, serverless.yml:133-139, re-expressed as
-        # engine-side telemetry): `observe` rides the write action —
-        # zero extra passes — and the per-batch rows journal to the
-        # lake so "did last night's batch shrink 90%" is answerable
-        # without a metrics backend.
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows_in"))
         self.write_curated(table, df, mode=mode, partition_cols=partition_cols)
-        self._journal_metrics(table, {"rows_in": obs.get["rows_in"], "mode": mode})
         return self.spark.table(self.qualified(table)).count()
-
-    # ------------------------------------------------------------------
-    # Batch-metrics journal (observability parity: the reference alarms
-    # on timed-out / failed / throttled executions and retains logs
-    # 365 days — serverless.yml:28,133-139,315).
-    def _metrics_log_path(self, table: str) -> str:
-        return os.path.join(self.zones.root, "_metrics_log", f"{table}.jsonl")
-
-    def _journal_metrics(self, table: str, metrics: dict[str, Any]) -> None:
-        now = self._now() or datetime.now()
-        entry = {"at": now.strftime("%Y-%m-%d %H:%M:%S"), **metrics}
-        _append_jsonl(self._metrics_log_path(table), entry)
-
-    def metrics_history(self, table: str) -> list[dict[str, Any]]:
-        """Per-batch observed metrics, oldest first."""
-        return _read_jsonl(self._metrics_log_path(table))
 
     # ------------------------------------------------------------------
     # §3.2 end-to-end — API fetch → raw archive → ingest to curated
@@ -1063,11 +1055,20 @@ class LakeEngine:
         if m:
             table = self._dml_table(m.group(1))
             hist = [
-                (h["version"], h["at"], len(h["files"]), ",".join(h.get("partition_cols") or []))
+                (
+                    h["version"],
+                    h["at"],
+                    len(h["files"]),
+                    ",".join(h.get("partition_cols") or []),
+                    h["operation"],
+                    h["rows_written"],
+                )
                 for h in self.snapshot_history(table)
             ]
             return self.spark.createDataFrame(
-                hist or [], "version int, at string, n_files int, partition_cols string"
+                hist,
+                "version int, at string, n_files int, partition_cols string, "
+                "operation string, rows_written bigint",
             )
         if re.match(r"(?is)^MERGE\s+INTO\b", q):
             return self._dispatch_sql_merge(q)
@@ -1431,12 +1432,7 @@ class LakeEngine:
         new = [f for f in current if f not in set(spec["files"])]
         if not new:
             return "noop"
-        delta = self.spark.read.option(
-            "basePath", self._table_location(qsrc)
-        ).parquet(*new)
-        delta = delta.select(
-            *[F.col(f.name).cast(f.dataType) for f in src_tab.schema.fields]
-        )
+        delta = self._read_files_as_table_schema(qsrc, new)
         items = delta.filter(F.col(column).isNotNull()).select(
             F.col(column).cast("string").alias("__item")
         )
@@ -2055,16 +2051,7 @@ class LakeEngine:
         elif not new:
             return "noop"
         else:
-            # Read ONLY the new files; basePath recovers hive partition
-            # columns, and the select+cast pins the exact table schema
-            # (partition-column types are inferred otherwise).
-            delta = (
-                self.spark.read.option("basePath", self._table_location(qsrc))
-                .parquet(*new)
-            )
-            delta = delta.select(
-                *[F.col(f.name).cast(f.dataType) for f in src.schema.fields]
-            )
+            delta = self._read_files_as_table_schema(qsrc, new)
             partial = delta.groupBy(*group).agg(
                 *self._iv_state_exprs(spec["aggs"], partial=True)
             )
@@ -2328,7 +2315,7 @@ class LakeEngine:
         with _conf_override(
             self.spark, "spark.sql.execution.rangeExchange.sampleSizePerPartition", "1000"
         ):
-            self._commit(table, removed, staged.select(*df.columns))
+            self._commit(table, removed, staged.select(*df.columns), "compact")
         return len(self.spark.table(qtable).inputFiles())
 
     def compact_partitions(
@@ -2373,7 +2360,7 @@ class LakeEngine:
 
         total = estimate_scan_bytes(sel)
         n_files = max(1, -(-total // target_file_bytes))
-        self._commit(table, sel.inputFiles(), sel.repartition(int(n_files)))
+        self._commit(table, sel.inputFiles(), sel.repartition(int(n_files)), "compact")
         return len(self.spark.table(qtable).filter(where).inputFiles())
 
     # ------------------------------------------------------------------
@@ -2774,7 +2761,7 @@ class LakeEngine:
         for dirpath, _dirs, files in os.walk(loc):
             for fname in files:
                 p = os.path.join(dirpath, fname)
-                if fname.endswith(".parquet") and p not in manifest:
+                if not fname.startswith(("_", ".")) and p not in manifest:
                     removed += 1
                     if not dry_run:
                         os.remove(p)
@@ -3135,19 +3122,18 @@ class LakeEngine:
         except Exception:
             return False
 
-    def _file_pruned_rewrite(
-        self, table: str, condition, rewrite, validate: bool = True
-    ) -> int:
+    def _file_pruned_rewrite(self, table: str, condition, rewrite, operation: str) -> int:
         """Rewrite only the data files containing rows matching
         ``condition``. ``rewrite(subset, cond)`` maps the affected
-        files' rows to their replacement rows. Returns the number of
-        matching rows (0 ⇒ no file touched).
+        files' rows to their replacement rows; ``operation`` (``delete``
+        or ``update``) names the commit. Returns the number of matching
+        rows (0 ⇒ no file touched).
 
-        ``validate`` runs the same CHECK-constraint and generated-
-        column verification as ``write_curated`` on the replacement
-        rows before splicing (Delta enforces CHECK on UPDATE/MERGE,
-        not just INSERT); DELETE passes ``False`` — removing rows
-        cannot introduce a violation, so it skips the extra agg."""
+        An update runs the same CHECK-constraint and generated-column
+        verification as ``write_curated`` on the replacement rows
+        before splicing (Delta enforces CHECK on UPDATE/MERGE, not just
+        INSERT); a delete skips it — removing rows cannot introduce a
+        violation."""
         qtable = self.qualified(table)
         if not self.spark.catalog.tableExists(qtable):
             raise ValueError(f"no such table: {qtable}")
@@ -3169,9 +3155,9 @@ class LakeEngine:
         matched_files = [r["f"] for r in hits]
         subset = self._read_files_as_table_schema(qtable, matched_files)
         replacement = rewrite(subset, cond).select(*target.columns)
-        props = self._table_props(table) if validate else {}
+        props = self._table_props(table) if operation == "update" else {}
         with self._checked(table, replacement, props) as rows:
-            self._commit(table, matched_files, rows)
+            self._commit(table, matched_files, rows, operation)
         return sum(r["count"] for r in hits)
 
     def _read_files_as_table_schema(self, qtable: str, files: list[str]) -> DataFrame:
@@ -3183,13 +3169,15 @@ class LakeEngine:
         and a rewrite would emit a new `processed_month=1` directory
         (silent row loss — the catalog never registers that partition
         value). Files written before a K8 ADD COLUMNS lack the newer
-        columns — align to the table schema (null + cast)."""
+        columns — align to the table schema (null + cast). The one
+        reader of a chosen subset of a table's files: DML, MERGE,
+        incremental views and incremental ANALYZE."""
         loc = self._table_location(qtable)
         target = self.spark.table(qtable)
         with _conf_override(
             self.spark, "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
         ):
-            subset = self.spark.read.option("basePath", loc).parquet(*files)
+            subset = self.spark.read.format(self._file_format).option("basePath", loc).load(files)
         return subset.select(
             *[
                 (
@@ -3206,6 +3194,7 @@ class LakeEngine:
         table: str,
         removed_files: list[str] | None,
         replacement: DataFrame,
+        operation: str,
         create: tuple[list[str], dict[str, str]] | None = None,
         layout: tuple[str, list[str]] | None = None,
     ) -> int:
@@ -3216,10 +3205,11 @@ class LakeEngine:
         DROP/RENAME COLUMN, view refreshes and write-audit-publish),
         DELETE/UPDATE/MERGE, compaction and deletion-vector folding.
         Returns the number of rows written, observed on the write
-        itself. A commit that removes no file (``removed_files == []``)
-        and writes no row changes nothing and leaves no new version.
-        ``layout`` is the table's `_table_layout` when the caller has
-        already read it. Steps, in crash order:
+        itself; it and ``operation`` (the caller's name for the commit)
+        go into the snapshot entry. A commit that changes neither the
+        manifest nor the schema leaves no new version. ``layout`` is
+        the table's `_table_layout` when the caller has already read
+        it. Steps, in crash order:
 
         1. stage the replacement under scratch (its plan may read the
            very files being replaced);
@@ -3256,18 +3246,16 @@ class LakeEngine:
                 f"cannot commit to {qtable} at {loc}: file commits need a "
                 "local (file:) table location"
             )
-        fmt = "parquet" if self.table_format == "delta" else self.table_format
         scratch = self._scratch_dir(table)
         written = Observation()
         writer = replacement.observe(written, F.count(F.lit(1)).alias("n")).write
-        writer = writer.format(fmt).option("compression", "snappy")
+        writer = writer.format(self._file_format).option("compression", "snappy")
         if parts:
             writer = writer.partitionBy(*parts)
         writer.save(scratch)
         n_written = written.get["n"]
-        if create is None and removed_files == [] and not n_written:
+        if not n_written:  # an empty write stages only empty part files: none move in
             shutil.rmtree(scratch, ignore_errors=True)
-            return 0
         history = self.snapshot_history(table)
         if history:
             live = history[-1]["files"]
@@ -3306,7 +3294,7 @@ class LakeEngine:
             self.recover_partitions(table)
         gone = {_local_path(f) for f in removed_files}
         kept = [f for f in live if _local_path(f) not in gone]
-        self._journal_snapshot(table, kept + added, layout)
+        self._journal_snapshot(table, kept + added, layout, operation, n_written, history)
         for p in gone:
             if os.path.exists(p):
                 os.remove(p)
@@ -3325,9 +3313,7 @@ class LakeEngine:
         def _drop_matches(subset: DataFrame, cond) -> DataFrame:
             return subset.filter(~cond)
 
-        return self._file_pruned_rewrite(
-            table, condition, _drop_matches, validate=False
-        )
+        return self._file_pruned_rewrite(table, condition, _drop_matches, "delete")
 
     def write_audit_publish(
         self, table: str, df: DataFrame, rules: dict[str, Any]
@@ -3484,7 +3470,7 @@ class LakeEngine:
         place of every live file, drop the vector. Returns the
         surviving row count."""
         dv = self.qualified(f"{table}__dv")
-        n = self._commit(table, None, self.read_mor(table))
+        n = self._commit(table, None, self.read_mor(table), "apply_deletion_vectors")
         self.spark.sql(f"DROP TABLE IF EXISTS {dv}")
         return n
 
@@ -3533,7 +3519,7 @@ class LakeEngine:
                 )
             return out
 
-        return self._file_pruned_rewrite(table, condition, _apply_sets)
+        return self._file_pruned_rewrite(table, condition, _apply_sets, "update")
 
     def sync_to_snapshot(
         self, table: str, snapshot: DataFrame, keys: Sequence[str]
@@ -3781,7 +3767,7 @@ class LakeEngine:
             if g not in upd_sets and g.lower() not in src_lower:
                 replacement = replacement.withColumn(g, F.expr(e))
         with self._checked(table, replacement, props) as rows:
-            self._commit(table, matched_files, rows)
+            self._commit(table, matched_files, rows, "merge")
         counts = {"updated": 0, "deleted": 0, "inserted": 0}
         if matched_files:
             counts["deleted"] = merged.get["d"]

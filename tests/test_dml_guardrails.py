@@ -324,6 +324,37 @@ def test_vacuum_orphans_repairs_crash_artifacts(spark, eng, monkeypatch):
     assert not any(os.path.exists(d) for d in leftovers)
     assert spark.table(qt).count() == 20
 
+    # an ORC table: an orphaned .orc part is removed like a parquet one
+    orc = _orc_engine(spark, eng)
+    qo = _seed(spark, orc, "o")
+    loc = urlparse(orc._table_location(qo)).path
+    parts = [f for f in os.listdir(loc) if f.endswith(".orc")]
+    for f in parts:
+        shutil.copy(os.path.join(loc, f), os.path.join(loc, f"crash-{f}"))
+    spark.catalog.refreshTable(qo)
+    assert spark.table(qo).count() == 40
+    assert orc.vacuum_orphans("o") == len(parts)
+    assert spark.table(qo).count() == 20
+
+
+def _orc_engine(spark, eng):
+    """An ORC-format engine over ``eng``'s lake root and database."""
+    return LakeEngine(spark, eng.zones.root, database=eng.database, table_format="orc")
+
+
+def test_delete_rows_on_orc_table(spark, eng):
+    """DELETE on an ORC table reads the matched files as ORC and
+    leaves ORC files behind."""
+    import os
+    from urllib.parse import urlparse
+
+    orc = _orc_engine(spark, eng)
+    qt = _seed(spark, orc)
+    assert orc.delete_rows("t", "k < 5") == 5
+    assert spark.table(qt).count() == 15
+    loc = urlparse(orc._table_location(qt)).path
+    assert all(f.endswith(".orc") for f in os.listdir(loc) if not f.startswith((".", "_")))
+
 
 # ------------------------------------------------------- crash-ordered commit
 class _Crash(RuntimeError):

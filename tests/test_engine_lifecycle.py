@@ -662,18 +662,111 @@ def test_snapshot_survives_compaction_until_vacuum(engine):
 
 
 def test_curate_journals_observed_batch_metrics(engine):
-    """Each curate batch journals its observed input-row count (rides
-    the write action via df.observe — no extra pass); history answers
-    'did last night's batch shrink' without a metrics backend."""
+    """Each curate batch's snapshot entry carries the rows its commit
+    wrote (observed on the write action — no extra pass) and its
+    operation; history answers 'did last night's batch shrink' without
+    a metrics backend."""
     engine.save_to_staging("po_status", RECORDS)
     engine.curate("po_status")
     engine.prepare_staging("po_status")
     engine.save_to_staging("po_status", RECORDS[:1])
     engine.curate("po_status")
-    hist = engine.metrics_history("po_status")
-    assert [h["rows_in"] for h in hist] == [2, 1]
+    hist = engine.snapshot_history("po_status")
+    assert [h["rows_written"] for h in hist] == [2, 1]
     assert all(h["at"] == "2024-05-17 12:00:00" for h in hist)  # pinned clock
-    assert all(h["mode"] == "append" for h in hist)
+    assert all(h["operation"] == "append" for h in hist)
+
+
+def test_one_log_per_table(engine, spark):
+    """The snapshot log is the only per-table log: curate, DELETE,
+    compaction and clone leave no schema or metrics log beside it."""
+    engine.save_to_staging("po_status", RECORDS)
+    engine.curate("po_status")
+    engine.prepare_staging("po_status")
+    engine.save_to_staging("po_status", RECORDS[:1])
+    engine.curate("po_status")
+    engine.delete_rows("po_status", "po_number = 'PO1'")
+    engine.compact_table("po_status")
+    engine.clone_table("po_status", "po_clone")
+    logs = {d for d in os.listdir(engine.zones.root) if d.endswith("_log")}
+    assert logs == {"_snapshot_log"}
+    ops = [h["operation"] for h in engine.snapshot_history("po_status")]
+    assert ops == ["append", "append", "delete", "compact"]
+    assert [h["version"] for h in engine.schema_history("po_status")] == [1]
+    assert [h["operation"] for h in engine.snapshot_history("po_clone")] == ["clone"]
+    assert [h["version"] for h in engine.schema_history("po_clone")] == [1]
+
+
+def test_empty_version_reads_as_zero_rows(engine, spark):
+    """A version with no files reads as zero rows with the table's
+    columns (its schema is in the log; there is no file to infer it
+    from)."""
+    batch = spark.createDataFrame([(1, "a"), (2, "b")], "k int, p string")
+    engine.write_curated("e", batch, mode="overwrite", partition_cols=["p"])
+    engine.write_curated("e", batch.limit(0), mode="overwrite", partition_cols=["p"])
+    assert engine.snapshot_history("e")[-1]["files"] == []
+    empty = engine.read_snapshot("e")
+    assert empty.count() == 0
+    assert empty.schema == spark.table(engine.qualified("e")).schema
+    assert engine.read_snapshot("e", 1).count() == 2
+
+
+def test_read_snapshot_partition_types_match_table(engine, spark):
+    """A snapshot read types its partition columns as the table does:
+    the string partition values '2024'/'05' stay strings, and so do
+    the clone and the RESTORE built from that read."""
+    engine.save_to_staging("po_status", RECORDS)
+    engine.curate("po_status")
+    qt = engine.qualified("po_status")
+    cols = ["processed_year", "processed_month"]
+    want = spark.table(qt).select(*cols).schema
+    snap = engine.read_snapshot("po_status", 1)
+    assert snap.select(*cols).schema == want
+    assert {tuple(r) for r in snap.select(*cols).collect()} == {("2024", "05")}
+    engine.clone_table("po_status", "po_clone")
+    engine.restore_snapshot("po_status", 1)
+    for t in ("po_clone", "po_status"):
+        got = spark.table(engine.qualified(t)).select(*cols)
+        assert got.schema == want
+        assert {tuple(r) for r in got.collect()} == {("2024", "05")}
+
+
+def test_schema_history_records_generated_column(engine, spark):
+    """The column `add_generated_column` adds (committed through its
+    backfill UPDATE) is a schema version of its own, and so is an empty
+    append that only widens the table (a version with the same files)."""
+    seed = spark.createDataFrame([(1, "2024-03-15")], "k int, event_date string")
+    engine.write_curated("gen_h", seed, mode="overwrite", partition_cols=[])
+    assert len(engine.schema_history("gen_h")) == 1
+    engine.add_generated_column("gen_h", "event_month", "substring(event_date, 1, 7)", dtype="string")
+    h = engine.schema_history("gen_h")
+    assert [v["version"] for v in h] == [1, 2]
+    assert "event_month" in {f["name"] for f in h[-1]["schema"]["fields"]}
+    assert engine.snapshot_history("gen_h")[-1]["operation"] == "update"
+    wider = spark.createDataFrame([], "k int, event_date string, note string")
+    engine.write_curated("gen_h", wider, mode="append", partition_cols=[])
+    assert [v["version"] for v in engine.schema_history("gen_h")] == [1, 2, 3]
+    last, prev = engine.snapshot_history("gen_h")[-2:][::-1]
+    assert last["files"] == prev["files"] and last["rows_written"] == 0
+
+
+def test_incremental_view_refresh_keeps_partition_value_strings(engine, spark):
+    """An incremental refresh reads the appended files with the table's
+    partition types: the string month '05' folds into its group, never
+    into a second group '5'."""
+    from pyspark.sql import functions as F
+
+    def batch(amt):
+        return spark.createDataFrame([("PO", amt)], "po string, amt double").withColumn(
+            "processed_month", F.lit("05")
+        )
+
+    engine.write_curated("iv_src", batch(3.0), mode="overwrite", partition_cols=["processed_month"])
+    engine.create_incremental_view("iv_m", "iv_src", ["processed_month"], [("sum", "amt", "total")])
+    engine.write_curated("iv_src", batch(5.0), mode="append", partition_cols=["processed_month"])
+    assert engine.refresh_materialized_view("iv_m") == "incremental"
+    got = sorted(tuple(r) for r in spark.table(engine.qualified("iv_m")).collect())
+    assert got == [("05", 8.0)]
 
 
 def test_incremental_view_approx_distinct_hll_merge(engine, spark):
@@ -855,6 +948,7 @@ def test_sql_utility_statement_dispatch(engine, spark):
 
     hist = engine.sql("DESCRIBE HISTORY util").collect()
     assert [r["version"] for r in hist] == [1, 2]
+    assert [(r["operation"], r["rows_written"]) for r in hist] == [("overwrite", 200), ("append", 1)]
 
     out = engine.sql("OPTIMIZE util ZORDER BY (x, y)").collect()[0]
     assert out["n_files"] >= 1
