@@ -42,13 +42,15 @@ from typing import Any, Iterable, Sequence
 from urllib.parse import urlparse
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from cbts_datalake_synnex_spark.functions.audit import with_audit_columns
 from cbts_datalake_synnex_spark.functions.ingest_policy import (
     apply_ingest_policy,
+    ddl_type,
+    quote,
     sanitize_types_for_catalog,
 )
 
@@ -207,7 +209,7 @@ class LakeEngine:
         """One string column, shipped through Arrow into a JVM relation
         (a list of tuples would become a Python RDD)."""
         return self.spark.createDataFrame(
-            pd.DataFrame({name: pd.Series(values, dtype=object)}), f"`{name}` string"
+            pd.DataFrame({name: pd.Series(values, dtype=object)}), f"{quote(name)} string"
         )
 
     # ------------------------------------------------------------------
@@ -286,8 +288,10 @@ class LakeEngine:
         df: DataFrame,
         mode: str = "append",
         partition_cols: Sequence[str] | None = None,
-    ) -> None:
+    ) -> int:
         """Partitioned snappy-Parquet write registered in the catalog.
+        Returns the rows written, as `_commit` observed them (-1 on the
+        Delta branch, as `merge_rows` reports).
 
         Reference: ``wr.s3.to_parquet(dataset=True, mode=..., database,
         table, partition_cols, catalog_versioning=True)`` at
@@ -342,6 +346,7 @@ class LakeEngine:
                 if parts:
                     writer = writer.partitionBy(*parts)
                 writer.saveAsTable(qtable)
+                n_written = -1
                 self.spark.catalog.refreshTable(qtable)
                 self._journal_snapshot(
                     table,
@@ -354,7 +359,7 @@ class LakeEngine:
             elif not exists:
                 # None: a stale manifest of a table dropped outside the
                 # engine (or mid-re-create) must not carry into the new one
-                self._commit(table, None, df, mode, create=(parts, props))
+                n_written = self._commit(table, None, df, mode, create=(parts, props))
             elif mode == "append":
                 layout = self._table_layout(qtable)
                 if parts != layout[1]:
@@ -362,7 +367,9 @@ class LakeEngine:
                         f"cannot append to {qtable} partitioned by {layout[1]} "
                         f"with partition columns {parts}"
                     )
-                self._commit(table, [], self._evolve_schema(qtable, df), mode, layout=layout)
+                n_written = self._commit(
+                    table, [], self._evolve_schema(qtable, df), mode, layout=layout
+                )
             else:
                 # the table a saveAsTable overwrite would re-create:
                 # data columns, then partition columns in `parts` order
@@ -372,12 +379,13 @@ class LakeEngine:
                 current = [(f.name, f.dataType) for f in self.spark.table(qtable).schema.fields]
                 layout = self._table_layout(qtable)
                 if batch == current and parts == layout[1]:
-                    self._commit(table, None, df, mode, layout=layout)
+                    n_written = self._commit(table, None, df, mode, layout=layout)
                 else:
-                    self._commit(table, None, df, mode, create=(parts, props))
+                    n_written = self._commit(table, None, df, mode, create=(parts, props))
             uniques = _unique_specs(props)
             if mode == "append" and uniques:
                 self._refresh_unique_membership(table, df, uniques)
+        return n_written
 
     # ------------------------------------------------------------------
     # Concurrent-job scheduling (round 13 — VERDICT "What's missing"
@@ -828,9 +836,7 @@ class LakeEngine:
         given (else a managed table)."""
 
         def cols(fields) -> str:
-            return ", ".join(
-                f"`{f.name.replace('`', '``')}` {f.dataType.simpleString()}" for f in fields
-            )
+            return ", ".join(f"{quote(f.name)} {ddl_type(f.dataType)}" for f in fields)
 
         by_name = {f.name: f for f in schema.fields}
         ddl = (
@@ -851,23 +857,19 @@ class LakeEngine:
     def _evolve_schema(self, qtable: str, df: DataFrame) -> DataFrame:
         """K8 add-column evolution: new df columns → ALTER TABLE ADD
         COLUMNS; missing df columns → filled null, so the append is
-        positionally safe (the unionByName discipline of SURVEY §2.6 U1)."""
-        existing = self.spark.table(qtable)
-        existing_cols = {c.lower() for c in existing.columns}
-        new_fields = [f for f in df.schema.fields if f.name.lower() not in existing_cols]
-        if new_fields:
-            col_defs = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in new_fields)
-            self.spark.sql(f"ALTER TABLE {qtable} ADD COLUMNS ({col_defs})")
+        positionally safe (the unionByName discipline of SURVEY §2.6 U1).
+        One projection, aligned to the table schema read once (again
+        only after an ADD COLUMNS, which lands before the partition
+        columns)."""
         target = self.spark.table(qtable).schema
-        out = []
-        df_cols = {c.lower(): c for c in df.columns}
-        for f in target.fields:
-            src = df_cols.get(f.name.lower())
-            if src is not None:
-                out.append(F.col(f"`{src}`").cast(f.dataType).alias(f.name))
-            else:
-                out.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return df.select(*out)
+        existing = {f.name.lower() for f in target.fields}
+        fields = df.schema.fields
+        new_fields = [f for f in fields if f.name.lower() not in existing]
+        if new_fields:
+            col_defs = ", ".join(f"{quote(f.name)} {ddl_type(f.dataType)}" for f in new_fields)
+            self.spark.sql(f"ALTER TABLE {qtable} ADD COLUMNS ({col_defs})")
+            target = self.spark.table(qtable).schema
+        return _aligned(df, [f.name for f in fields], target.fields)
 
     # ------------------------------------------------------------------
     # §3.3 — staging → curated job (src/glue/staging_to_curated.py)
@@ -1278,7 +1280,7 @@ class LakeEngine:
         selection); table stats alone fix size estimates."""
         qtable = self.qualified(table)
         if columns:
-            cols = ", ".join(f"`{c}`" for c in columns)
+            cols = ", ".join(quote(c) for c in columns)
             self.spark.sql(f"ANALYZE TABLE {qtable} COMPUTE STATISTICS FOR COLUMNS {cols}")
         else:
             self.spark.sql(f"ANALYZE TABLE {qtable} COMPUTE STATISTICS")
@@ -2601,12 +2603,12 @@ class LakeEngine:
                 raise ValueError(
                     f"column {name!r} does not exist — pass dtype to add it"
                 )
-            self.spark.sql(f"ALTER TABLE {qtable} ADD COLUMNS (`{name}` {dtype})")
+            self.spark.sql(f"ALTER TABLE {qtable} ADD COLUMNS ({quote(name)} {dtype})")
             # Backfill existing rows so every row satisfies the
             # generation expression from day one (Delta sidesteps this
             # by only allowing generated columns at CREATE time; here
             # the one-off file-pruned UPDATE pays the rewrite instead).
-            self.update_rows(table, f"`{name}` IS NULL", {name: expr})
+            self.update_rows(table, f"{quote(name)} IS NULL", {name: expr})
         esc = expr.replace("'", "''")
         self.spark.sql(
             f"ALTER TABLE {qtable} SET TBLPROPERTIES ('generated.col.{name}' = '{esc}')"
@@ -2635,7 +2637,7 @@ class LakeEngine:
             return
         pinned = df.persist()
         try:
-            checks = [f"NOT (`{n}` <=> ({e}))" for n, e in gens.items()] + [
+            checks = [f"NOT ({quote(n)} <=> ({e}))" for n, e in gens.items()] + [
                 f"NOT coalesce(CAST(({e}) AS BOOLEAN), true)" for e in cons.values()
             ]
             if checks:
@@ -3080,9 +3082,7 @@ class LakeEngine:
             table,
             aligned,
             keys,
-            when_matched_update={
-                c: F.col(f"s.`{c}`") for c in aligned.columns if c not in keys
-            },
+            when_matched_update={c: f"s.{quote(c)}" for c in aligned.columns if c not in keys},
         )
 
     # ------------------------------------------------------------------
@@ -3161,33 +3161,20 @@ class LakeEngine:
         return sum(r["count"] for r in hits)
 
     def _read_files_as_table_schema(self, qtable: str, files: list[str]) -> DataFrame:
-        """Re-read ONLY the given data files of ``qtable``, aligned to
-        the table schema. basePath keeps the Hive partition columns
-        parsed from the directory structure. Partition TYPE inference
-        must be off for this read: the catalog knows `processed_month`
-        is the string "01", but inference would read it back as int 1
-        and a rewrite would emit a new `processed_month=1` directory
-        (silent row loss — the catalog never registers that partition
-        value). Files written before a K8 ADD COLUMNS lack the newer
-        columns — align to the table schema (null + cast). The one
-        reader of a chosen subset of a table's files: DML, MERGE,
-        incremental views and incremental ANALYZE."""
-        loc = self._table_location(qtable)
-        target = self.spark.table(qtable)
-        with _conf_override(
-            self.spark, "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-        ):
-            subset = self.spark.read.format(self._file_format).option("basePath", loc).load(files)
-        return subset.select(
-            *[
-                (
-                    F.col(f.name).cast(f.dataType)
-                    if f.name in subset.columns
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in target.schema.fields
-            ]
-        )
+        """Re-read ONLY the given data files of ``qtable`` with the
+        table schema. basePath keeps the Hive partition columns parsed
+        from the directory structure; given the schema, Spark neither
+        runs a footer-inference job nor infers partition types — the
+        catalog knows `processed_month` is the string "01", and an
+        inferred int 1 would make a rewrite emit a new
+        `processed_month=1` directory the catalog never registers.
+        Files written before a K8 ADD COLUMNS read the newer columns as
+        null. The one reader of a chosen subset of a table's files:
+        DML, MERGE, incremental views and incremental ANALYZE."""
+        target = self.spark.table(qtable).schema
+        reader = self.spark.read.format(self._file_format).schema(target)
+        subset = reader.option("basePath", self._table_location(qtable)).load(files)
+        return subset.selectExpr(*[quote(f.name) for f in target.fields])
 
     def _commit(
         self,
@@ -3600,14 +3587,17 @@ class LakeEngine:
         (op codes, sequence numbers) — never written to the table and
         excluded from K8 schema evolution.
 
-        Scale: the source's distinct key set semi-joins the target to
-        find the files holding matched keys; ONLY those files rewrite,
-        inserts land as new files in their partitions, untouched files
-        keep their inodes. ``broadcast_source=None`` (default) decides
-        from Catalyst's size estimate of the source plan: small CDC
-        batches broadcast, anything above the threshold (or with an
-        unknown/huge estimate) falls through to AQE so a large merge
-        source cannot OOM the driver; ``True``/``False`` force it.
+        Scale: the source's keys semi-join the target to find the files
+        holding matched keys; ONLY those files rewrite, untouched files
+        keep their inodes. Inserts are the source rows whose key those
+        files do not hold — every source key the table holds lies in
+        them — and land as new files in their partitions; the insert
+        side never reads the rest of the table.
+        ``broadcast_source=None`` (default) decides from Catalyst's size
+        estimate of the source plan: small CDC batches broadcast,
+        anything above the threshold (or with an unknown/huge estimate)
+        falls through to AQE so a large merge source cannot OOM the
+        driver; ``True``/``False`` force it.
         """
         qtable = self.qualified(table)
         if not self.spark.catalog.tableExists(qtable):
@@ -3621,14 +3611,7 @@ class LakeEngine:
         # unique (SQL MERGE forbids multiple source matches per row).
         dup_keys = None
         if sequence_col is not None:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*keys).orderBy(F.col(sequence_col).desc())
-            source = (
-                source.withColumn("__seq_rn", F.row_number().over(w))
-                .filter(F.col("__seq_rn") == 1)
-                .drop("__seq_rn")
-            )
+            source = _latest_per_key(source, keys, sequence_col)
         else:
             dup_keys = source.groupBy(*keys).count().filter("count > 1").limit(1)
         dup_msg = (
@@ -3652,7 +3635,7 @@ class LakeEngine:
         exclude = [c for c in exclude_cols if c in source.columns]
         data_cols = [c for c in source.columns if c not in exclude]
         src_m = source.withColumn("__merge_m", F.lit(True))
-        src_keys = source.select(*keys).distinct()
+        src_keys = source.select(*keys)  # a semi-join needs no unique build keys
         if broadcast_source is None:
             broadcast_source = self._fits_broadcast(source)
         if broadcast_source:
@@ -3679,28 +3662,22 @@ class LakeEngine:
         # K8: genuinely-new source data columns widen the table first
         # (condition-only columns never do) — after the probe, so a
         # rejected batch leaves the schema as it was.
-        self._evolve_schema(qtable, source.select(*data_cols))
-        target = self.spark.table(qtable)
-        tcols_lower = {c.lower() for c in target.columns}
+        fields = self._evolve_schema(qtable, source.select(*data_cols)).schema.fields
 
-        matched = F.col("s.`__merge_m`").isNotNull()
+        matched = "s.`__merge_m` IS NOT NULL"
         if isinstance(when_matched_delete, str):
-            del_f = F.coalesce(F.expr(when_matched_delete).cast("boolean"), F.lit(False))
+            del_f = f"coalesce(CAST(({when_matched_delete}) AS BOOLEAN), false)"
         else:
-            del_f = F.lit(bool(when_matched_delete))
+            del_f = str(bool(when_matched_delete))
         upd_enabled = when_matched_update is not None
         upd_sets: dict[str, Any] = {}
         if when_matched_update == "all":
+            tcols = {f.name.lower() for f in fields}
             upd_sets = {
-                c: F.col(f"s.`{c}`")
-                for c in data_cols
-                if c not in keys and c.lower() in tcols_lower
+                c: f"s.{quote(c)}" for c in data_cols if c not in keys and c.lower() in tcols
             }
         elif isinstance(when_matched_update, dict):
-            upd_sets = {
-                k: (F.expr(v) if isinstance(v, str) else v)
-                for k, v in when_matched_update.items()
-            }
+            upd_sets = dict(when_matched_update)
         elif upd_enabled:
             raise ValueError(f"when_matched_update: {when_matched_update!r}")
 
@@ -3710,44 +3687,37 @@ class LakeEngine:
         branches = []
         if matched_files:
             sub = self._read_files_as_table_schema(qtable, matched_files)
-            on = [F.col(f"t.`{k}`") == F.col(f"s.`{k}`") for k in keys]
+            on = " AND ".join(f"t.{quote(k)} = s.{quote(k)}" for k in keys)
             joined = (
                 sub.alias("t")
-                .join(src_m.alias("s"), on=_and_all(on), how="left")
+                .join(src_m.alias("s"), on=F.expr(on), how="left")
                 .observe(
                     merged,
-                    F.count_if(matched & del_f).alias("d"),
-                    F.count_if(matched & ~del_f).alias("u"),
+                    F.expr(f"count_if({matched} AND {del_f})").alias("d"),
+                    F.expr(f"count_if({matched} AND NOT {del_f})").alias("u"),
                 )
             )
-            out_cols = []
-            for f in target.schema.fields:
-                t_c = F.col(f"t.`{f.name}`")
-                val = upd_sets.get(f.name, t_c) if upd_enabled else t_c
-                out_cols.append(
-                    F.when(matched, val.cast(f.dataType)).otherwise(t_c).alias(f.name)
-                )
-            branches.append(joined.filter(~(matched & del_f)).select(*out_cols))
+            out: list[Any] = []
+            for f in fields:
+                c, v = f"t.{quote(f.name)}", upd_sets.get(f.name) if upd_enabled else None
+                if isinstance(v, str):
+                    c = f"IF({matched}, CAST(({v}) AS {ddl_type(f.dataType)}), {c})"
+                elif v is not None:  # a caller's Column keeps the Column API
+                    c = F.when(F.expr(matched), v.cast(f.dataType)).otherwise(F.col(c))
+                out.append(f"{c} AS {quote(f.name)}" if isinstance(c, str) else c.alias(f.name))
+            branches.append(_select(joined.filter(f"NOT ({matched} AND {del_f})"), out))
 
         if when_not_matched_insert:
-            ins = source.join(target.select(*keys), on=keys, how="left_anti")
+            # Every source key the table holds lies in `matched_files`
+            # (the probe found them all), so anti-joining the source
+            # against those files' rows is exact — no scan of the
+            # rest of the table, and no join at all when none matched.
+            ins = source
+            if matched_files:
+                ins = ins.join(sub.select(*keys), on=keys, how="left_anti")
             if isinstance(when_not_matched_insert, str):
-                ins = ins.filter(
-                    F.coalesce(
-                        F.expr(when_not_matched_insert).cast("boolean"), F.lit(False)
-                    )
-                )
-            src_lower = {c.lower(): c for c in data_cols}
-            inserts = ins.select(
-                *[
-                    (
-                        F.col(f"`{src_lower[f.name.lower()]}`").cast(f.dataType)
-                        if f.name.lower() in src_lower
-                        else F.lit(None).cast(f.dataType)
-                    ).alias(f.name)
-                    for f in target.schema.fields
-                ]
-            )
+                ins = ins.filter(f"coalesce(CAST(({when_not_matched_insert}) AS BOOLEAN), false)")
+            inserts = _aligned(ins, data_cols, fields)
             branches.append(inserts.observe(inserted, F.count(F.lit(1)).alias("n")))
 
         if not branches:
@@ -3800,19 +3770,9 @@ class LakeEngine:
         ``partition_cols`` applies only to that bootstrap write."""
         exclude = [op_col] + ([sequence_col] if sequence_col else [])
         if not self.spark.catalog.tableExists(self.qualified(table)):
-            base = changes
-            if sequence_col is not None:
-                from pyspark.sql import Window
-
-                w = Window.partitionBy(*keys).orderBy(F.col(sequence_col).desc())
-                base = (
-                    base.withColumn("__seq_rn", F.row_number().over(w))
-                    .filter(F.col("__seq_rn") == 1)
-                    .drop("__seq_rn")
-                )
+            base = changes if sequence_col is None else _latest_per_key(changes, keys, sequence_col)
             dropped = base.filter(F.col(op_col) != delete_op).drop(*exclude)
-            n_ins = dropped.count()
-            self.write_curated(
+            n_ins = self.write_curated(
                 table, dropped, mode="overwrite", partition_cols=partition_cols
             )
             # deletes of never-seen keys match nothing: deleted = 0,
@@ -3870,6 +3830,33 @@ class LakeEngine:
         return query_ann_index(self, index_name, queries, id_col, vec_col,
                                k=k, n_probe=n_probe, round_dp=round_dp,
                                exclude_self=exclude_self)
+
+
+def _latest_per_key(df: DataFrame, keys: Sequence[str], sequence_col: str) -> DataFrame:
+    """CDC ordering: the latest change (max ``sequence_col``) per key."""
+    w = Window.partitionBy(*keys).orderBy(F.col(sequence_col).desc())
+    return df.withColumn("__seq_rn", F.row_number().over(w)).filter("__seq_rn = 1").drop("__seq_rn")
+
+
+def _aligned(df: DataFrame, names: Sequence[str], fields) -> DataFrame:
+    """``df`` in one projection onto the table ``fields``: each from
+    the column of ``names`` that matches it case-insensitively (NULL
+    where none does), cast to the field's type."""
+    src = {n.lower(): quote(n) for n in names}
+    return df.selectExpr(
+        *[
+            f"CAST({src.get(f.name.lower(), 'NULL')} AS {ddl_type(f.dataType)}) AS {quote(f.name)}"
+            for f in fields
+        ]
+    )
+
+
+def _select(df: DataFrame, cols: list) -> DataFrame:
+    """``selectExpr`` over SQL strings; a ``Column`` among them keeps
+    the Column API (every string then becomes an ``F.expr``)."""
+    if all(isinstance(c, str) for c in cols):
+        return df.selectExpr(*cols)
+    return df.select(*[F.expr(c) if isinstance(c, str) else c for c in cols])
 
 
 def _and_all(conds):
@@ -4298,8 +4285,6 @@ def write_sorted(
     )
     if not verify_disjoint:
         return
-    from pyspark.sql import Window
-
     back = spark.table(table)
     # _metadata resolves only on the file-source relation: bind it
     # into a real column immediately (engine discipline)

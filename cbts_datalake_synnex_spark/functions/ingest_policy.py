@@ -17,13 +17,17 @@ landing it (``utils.py:40-89`` for the datalake write, ``utils.py:
 5. drop duplicated column names, keep-first
    (``wr.catalog.drop_duplicated_columns``, ``utils.py:69,206``) → P7
 
-Here each step is a declarative projection so the whole chain fuses
-into ONE Catalyst ``Project`` (plus one aggregate pass for the NA-drop)
-and runs inside whole-stage codegen — no Python in the per-row path.
-Distribution note (SURVEY §7 "what's hard"): the all-NA drop is a
-*global* aggregate in Spark, where pandas saw only its batch; we define
-batch-global (one aggregate over the whole ingest batch) as the
-engine's semantics.
+Here the whole chain is built from ``df.schema`` in one Python walk
+(`_walk`) and issued as ONE projection of SQL expression strings that
+runs inside whole-stage codegen — no Python in the per-row path and no
+per-column driver round trip. The NA-drop needs the data: its non-null
+counts come from one Spark job with no exchange (an ``Observation`` on
+a ``noop`` write). Distribution note (SURVEY §7 "what's hard"): the
+all-NA drop is a *global* count in Spark, where pandas saw only its
+batch; we define batch-global (one count over the whole ingest batch)
+as the engine's semantics. The single-step functions below
+(`flatten_structs`, `drop_all_null_columns`, ...) are views of the
+same walk.
 
 The Glue-side type whitelist (``src/glue/staging_to_curated.py:
 158-161``) is ``sanitize_types_for_catalog`` — non-whitelisted Catalyst
@@ -34,7 +38,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -63,45 +67,72 @@ CATALOG_TYPE_WHITELIST = frozenset(
 )
 
 
-def _positional(df: DataFrame) -> tuple[DataFrame, list[str]]:
-    """Rename to unique positional temp names so no step resolves a
-    column by its user-supplied name. Spark resolution is
-    case-INsensitive by default, so records like ``{'A':…,'a':…}``
-    (legal JSON, distinct pandas columns) make ``F.col('A')``
-    ambiguous; ``toDF`` renames positionally and sidesteps that."""
-    orig = df.columns
-    return df.toDF(*[f"__c{i}" for i in range(len(orig))]), orig
+def quote(name: str) -> str:
+    """``name`` as a SQL identifier: the engine's one quoting of an
+    identifier in DDL or an expression string."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def flatten_structs(df: DataFrame, sep: str = "_") -> DataFrame:
-    """P4 — recursively flatten StructType columns to ``parent_child``.
-
-    Mirrors ``pd.json_normalize`` (``utils.py:49``): nested objects
-    flatten, arrays do NOT explode (json_normalize leaves lists as
-    object values; the string-first cast later stringifies them).
-    Pure projection — zero shuffle, survives any scale.
-    """
-    while True:
-        if not any(isinstance(f.dataType, T.StructType) for f in df.schema.fields):
-            return df
-        renamed, orig = _positional(df)
-        sel: list[str] = []
-        out_names: list[str] = []
-        for f, name in zip(renamed.schema.fields, orig):
-            if isinstance(f.dataType, T.StructType):
-                # star-expand (positional) rather than field-by-name:
-                # struct fields can themselves be case-duplicates
-                # ({'A':…,'a':…}), where `.getField('A')` is ambiguous.
-                sel.append(f"{f.name}.*")
-                out_names.extend(f"{name}{sep}{sub.name}" for sub in f.dataType.fields)
-            else:
-                sel.append(f.name)
-                out_names.append(name)
-        df = renamed.select(*sel).toDF(*out_names)
+def ddl_type(dt: T.DataType, positional: bool = False) -> str:
+    """``dt`` as DDL, struct field names quoted (``simpleString``
+    leaves ``a b`` bare); ``positional`` names the fields of nested
+    structs ``__f{j}`` (arrays and maps keep their names)."""
+    if isinstance(dt, T.StructType):
+        names = [f"`__f{j}`" if positional else quote(f.name) for j, f in enumerate(dt.fields)]
+        return "STRUCT<" + ", ".join(
+            f"{n}: {ddl_type(f.dataType, positional)}" for n, f in zip(names, dt.fields)
+        ) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"ARRAY<{ddl_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{ddl_type(dt.keyType)}, {ddl_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
-def drop_all_null_columns(df: DataFrame, na_drop: str = "all") -> DataFrame:
-    """P8 — drop NA columns in one aggregate pass (``utils.py:57-62``).
+def _walk(
+    df: DataFrame, flatten: bool = False, sep: str = "_"
+) -> tuple[DataFrame, list[tuple[str, str, T.DataType]]]:
+    """One walk of ``df.schema``: a positional frame and its leaves as
+    (SQL path, output name, type). With ``flatten`` (P4) struct fields
+    become ``parent{sep}child`` leaves; arrays stay whole, as
+    ``json_normalize`` leaves lists.
+
+    No path names a user-supplied field: Spark resolves names
+    case-INsensitively, so records like ``{'A':…,'a':…}`` (legal JSON,
+    distinct pandas columns) make ``A`` ambiguous at any level. The
+    frame renames the top-level columns ``__c{i}`` (one ``toDF``) and
+    casts struct columns to field names ``__f{j}`` (by position)."""
+    fields = df.schema.fields
+    base = df.toDF(*[f"__c{i}" for i in range(len(fields))])
+    leaves: list[tuple[str, str, T.DataType]] = []
+    structs = [flatten and isinstance(f.dataType, T.StructType) for f in fields]
+
+    def visit(path: str, name: str, dt: T.DataType) -> None:
+        if flatten and isinstance(dt, T.StructType):
+            for j, f in enumerate(dt.fields):
+                visit(f"{path}.`__f{j}`", f"{name}{sep}{f.name}", f.dataType)
+        else:
+            leaves.append((path, name, dt))
+
+    for i, f in enumerate(fields):
+        visit(f"`__c{i}`", f.name, f.dataType)
+    if any(structs):
+        base = base.selectExpr(
+            *[
+                f"CAST(`__c{i}` AS {ddl_type(f.dataType, True)}) AS `__c{i}`" if s else f"`__c{i}`"
+                for i, (f, s) in enumerate(zip(fields, structs))
+            ]
+        )
+    return base, leaves
+
+
+def _project(base: DataFrame, cols: list[tuple[str, str]]) -> DataFrame:
+    """The one projection: ``(SQL expression, output name)`` pairs."""
+    return base.selectExpr(*[f"{e} AS {quote(n)}" for e, n in cols])
+
+
+def _non_null(base: DataFrame, leaves: list, na_drop: str) -> list:
+    """P8 — the ``leaves`` that survive the NA-drop (``utils.py:57-62``).
 
     ``na_drop`` pins which semantics (INTENT DECISION, SURVEY §0.1):
 
@@ -112,53 +143,53 @@ def drop_all_null_columns(df: DataFrame, na_drop: str = "all") -> DataFrame:
       (``df.isna().any()``, ``utils.py:57-62``): drop columns with AT
       LEAST ONE null. Provided for bug-compatible parity runs.
 
-    One aggregate pass (partial counts map-side, tiny final reduce) —
-    the only action in the chain; at 100 TB it is a single
-    column-pruned scan producing one row.
-    """
+    The counts come from ONE Spark job with no exchange: an
+    ``Observation`` on a ``noop`` write (``agg().collect()`` costs two
+    AQE jobs) — at 100 TB a single column-pruned scan."""
     if na_drop not in ("all", "any"):
         raise ValueError(f"na_drop must be 'all' or 'any', got {na_drop!r}")
-    if not df.columns:
-        return df
-    renamed, orig = _positional(df)
-    tmp = renamed.columns
-    counts = renamed.agg(
-        F.count(F.lit(1)).alias("__n"),
-        *[F.count(F.col(t)).alias(str(i)) for i, t in enumerate(tmp)],
-    ).collect()[0]
-    if na_drop == "all":
-        survives = lambda i: counts[str(i)] > 0
-    else:  # "any": keep only columns with no nulls at all
-        survives = lambda i: counts[str(i)] == counts["__n"]
-    keep = [
-        F.col(t).alias(o)
-        for i, (t, o) in enumerate(zip(tmp, orig))
-        if survives(i)
-    ]
-    if len(keep) == len(orig):
-        return df
-    return renamed.select(*keep)
+    if not leaves:
+        return leaves
+    counts = Observation()
+    agg = ", ".join(["count(1)"] + [f"count({p})" for p, _, _ in leaves])
+    observed = base.observe(counts, F.expr(f"array({agg})").alias("c"))
+    observed.write.format("noop").mode("overwrite").save()
+    n, *non_null = counts.get["c"]
+    return [leaf for leaf, k in zip(leaves, non_null) if (k > 0 if na_drop == "all" else k == n)]
+
+
+def _as_string(path: str, dt: T.DataType) -> str:
+    """Non-atomic types (arrays/maps left by P4) stringify via
+    ``to_json`` so the value survives round-trips; the rest cast."""
+    nested = isinstance(dt, (T.ArrayType, T.MapType, T.StructType))
+    return f"to_json({path})" if nested else f"CAST({path} AS STRING)"
+
+
+def _stringify(path: str, dt: T.DataType, max_len: int) -> str:
+    """P5 — string-first coercion (``utils.py:192-201``): cast→string,
+    nulls and literal 'nan'/'None' → '', truncate to ``max_len``."""
+    s = _as_string(path, dt)
+    return f"substring(if({s} IN ('nan', 'None', 'NaN'), '', coalesce({s}, '')), 1, {max_len})"
+
+
+def flatten_structs(df: DataFrame, sep: str = "_") -> DataFrame:
+    """P4 — flatten nested structs to ``parent_child`` columns
+    (``pd.json_normalize``, ``utils.py:49``) in one projection."""
+    base, leaves = _walk(df, flatten=True, sep=sep)
+    return _project(base, [(p, n) for p, n, _ in leaves])
+
+
+def drop_all_null_columns(df: DataFrame, na_drop: str = "all") -> DataFrame:
+    """P8 — drop NA columns (see `_non_null` for ``na_drop``)."""
+    base, leaves = _walk(df)
+    kept = _non_null(base, leaves, na_drop)
+    return df if len(kept) == len(leaves) else _project(base, [(p, n) for p, n, _ in kept])
 
 
 def stringify_columns(df: DataFrame, max_len: int = MAX_STRING_LEN) -> DataFrame:
-    """P5 — string-first coercion (``utils.py:192-201``).
-
-    cast→string, nulls and literal 'nan'/'None' → '', truncate to
-    ``max_len``. Non-atomic types (arrays/maps left by P4) stringify
-    via ``to_json`` so the value survives round-trips.
-    """
-    renamed, orig = _positional(df)
-    cols = []
-    for f, name in zip(renamed.schema.fields, orig):
-        c = F.col(f.name)
-        if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
-            s = F.to_json(c)
-        else:
-            s = c.cast("string")
-        s = F.coalesce(s, F.lit(""))
-        s = F.when(s.isin("nan", "None", "NaN"), F.lit("")).otherwise(s)
-        cols.append(F.substring(s, 1, max_len).alias(name))
-    return renamed.select(*cols)
+    """P5 — string-first coercion of every column (see `_stringify`)."""
+    base, leaves = _walk(df)
+    return _project(base, [(_stringify(p, t, max_len), n) for p, n, t in leaves])
 
 
 def sanitize_column_names(df: DataFrame) -> DataFrame:
@@ -175,42 +206,26 @@ def _sanitize_name(name: str) -> str:
 
 
 def drop_duplicate_columns(df: DataFrame) -> DataFrame:
-    """P7 — keep-first on duplicated names (``utils.py:69,206``).
-
-    Positional rename to unique temp names sidesteps the ambiguity of
-    selecting a duplicated name, then keep-first restores originals.
-    """
-    cols = df.columns
-    if len(set(cols)) == len(cols):
+    """P7 — keep-first on duplicated names (``utils.py:69,206``)."""
+    if len(set(df.columns)) == len(df.columns):
         return df
-    tmp = [f"__c{i}" for i in range(len(cols))]
-    renamed = df.toDF(*tmp)
-    seen: set[str] = set()
-    keep = []
-    for i, c in enumerate(cols):
-        if c not in seen:
-            seen.add(c)
-            keep.append(F.col(tmp[i]).alias(c))
-    return renamed.select(*keep)
+    base, leaves = _walk(df)
+    first: dict[str, str] = {}
+    for p, n, _ in leaves:
+        first.setdefault(n, p)
+    return _project(base, [(p, n) for n, p in first.items()])
 
 
 def sanitize_types_for_catalog(df: DataFrame) -> DataFrame:
     """K8's whitelist (``src/glue/staging_to_curated.py:158-161``) —
     degrade non-whitelisted top-level types to string before a table
-    write. Decimal keeps its precision (whitelisted as a family)."""
-    renamed, orig = _positional(df)
-    cols = []
-    for f, name in zip(renamed.schema.fields, orig):
-        tname = f.dataType.typeName()
-        if tname.startswith("decimal"):
-            tname = "decimal"
-        if tname in CATALOG_TYPE_WHITELIST or tname in {"long", "short", "byte"}:
-            cols.append(F.col(f.name).alias(name))
-        elif isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
-            cols.append(F.to_json(F.col(f.name)).alias(name))
-        else:
-            cols.append(F.col(f.name).cast("string").alias(name))
-    return renamed.select(*cols)
+    write. Decimal keeps its precision (whitelisted as a family). A
+    frame whose types are all whitelisted comes back unchanged."""
+    base, leaves = _walk(df)
+    ok = [t.typeName() in CATALOG_TYPE_WHITELIST | {"long", "short", "byte"} for _, _, t in leaves]
+    if all(ok):
+        return df
+    return _project(base, [(p if k else _as_string(p, t), n) for (p, n, t), k in zip(leaves, ok)])
 
 
 def apply_ingest_policy(
@@ -222,22 +237,21 @@ def apply_ingest_policy(
 ) -> DataFrame:
     """The full P4→P8→P5→P6→P7 chain in the reference's order
     (``utils.py:40-89``: normalize 49, NA-drop 58-62, astype(str)
-    64-66, sanitize 68, dedup-columns 69).
+    64-66, sanitize 68, dedup-columns 69), as one walk of the schema,
+    one Spark job (the NA-drop's counts) and one projection.
 
     With ``stringify=False`` the chain keeps inferred types (the Glue
     job's mode, ``src/glue/staging_to_curated.py:61-70``) and only
     flattens/sanitizes — the curated path then applies the catalog
-    type whitelist instead. ``na_drop`` selects the NA-column-drop
-    semantics (see ``drop_all_null_columns``; "all" is the engine
-    default, "any" is reference-literal).
+    type whitelist instead. ``na_drop``: see `_non_null`. All-null
+    leaves drop before keep-first, so a duplicate name whose first
+    column is all null keeps the second.
     """
-    df = flatten_structs(df)
-    df = drop_all_null_columns(df, na_drop=na_drop)
-    if stringify:
-        df = stringify_columns(df, max_len=max_len)
-    df = sanitize_column_names(df)
-    df = drop_duplicate_columns(df)
-    return df
+    base, leaves = _walk(df, flatten=True)
+    cols: dict[str, str] = {}
+    for p, n, t in _non_null(base, leaves, na_drop):
+        cols.setdefault(_sanitize_name(n), _stringify(p, t, max_len) if stringify else p)
+    return _project(base, [(e, n) for n, e in cols.items()])
 
 
 def variant_fields(

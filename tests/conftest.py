@@ -32,3 +32,23 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` → ``(fn(), Spark jobs fn ran)``, counted by a
+    job group of its own (AQE stage jobs inherit it)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"pin_{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

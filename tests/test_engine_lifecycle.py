@@ -1322,3 +1322,25 @@ def test_curate_all_null_staging_returns_zero(engine, spark):
         f.write('{"a": null, "b": null}\n{"a": null}\n')
     assert engine.curate("nulls") == 0
     assert not spark.catalog.tableExists(engine.qualified("nulls"))
+
+
+def test_identifiers_are_quoted_in_ddl_and_projections(engine, spark):
+    """Column names reach SQL only through one quoting: an append that
+    adds a column named b`c widens the table (ALTER TABLE ADD COLUMNS)
+    and lands its values; nested records with dots and spaces in field
+    names ingest under their sanitized flat names. `write_curated`
+    returns the rows its commit wrote."""
+    recs = [{"po": "PO1", "ship.to": {"zip code": "02134", "line.1": {"a b": "x"}}}]
+    out = engine.ingest_records("q", recs, partition_cols=[])
+    assert {"po", "ship_to_zip_code", "ship_to_line_1_a_b"} <= set(out.columns)
+    assert out.select("ship_to_zip_code", "ship_to_line_1_a_b").first() == ("02134", "x")
+    seed = spark.createDataFrame([(0,)], "k int")
+    n_seed = engine.write_curated("w", seed, mode="overwrite", partition_cols=[])
+    batch = spark.createDataFrame([(1, "v"), (2, None)], "k int, `b``c` string")
+    n_batch = engine.write_curated("w", batch, mode="append", partition_cols=[])
+    qt = engine.qualified("w")
+    assert spark.table(qt).columns == ["k", "b`c"]
+    assert sorted(tuple(r) for r in spark.table(qt).collect()) == [
+        (0, None), (1, "v"), (2, None)
+    ]
+    assert (n_seed, n_batch) == (1, 2)

@@ -238,3 +238,52 @@ def test_na_drop_any_matches_reference_literal(spark):
 
     with pytest.raises(ValueError, match="na_drop"):
         drop_all_null_columns(df, na_drop="some")
+
+
+def test_policy_runs_one_job(spark, spark_jobs):
+    """The policy's one action is the NA-drop's non-null count: a single
+    Spark job (an Observation on a noop write), however wide or nested
+    the batch; the rest is one projection built from the schema."""
+    df = spark.createDataFrame(
+        [(("x", None), None, [1]), (("y", None), None, [])],
+        "s struct<b string, c string>, gone string, arr array<int>",
+    )
+    out, jobs = spark_jobs(lambda: apply_ingest_policy(df))
+    assert jobs == 1
+    assert out.columns == ["s_b", "arr"]
+    assert [tuple(r) for r in out.collect()] == [("x", "[1]"), ("y", "[]")]
+
+
+def test_case_duplicates_two_levels_deep_and_in_arrays(spark):
+    """Case-duplicate field names two struct levels down flatten by
+    position; an array of such structs stays whole and stringifies by
+    ``to_json`` with both keys. All-null leaves drop before keep-first,
+    so ``s.A.B`` (all null) yields ``s_a_b`` to ``s.A.b``."""
+    df = spark.createDataFrame(
+        [(((None, "y"), ("z",)), [("p", "q")]), (((None, "w"), (None,)), [])],
+        "s struct<A struct<B string, b string>, a struct<C string>>, "
+        "arr array<struct<A string, a string>>",
+    )
+    out = apply_ingest_policy(df)
+    assert out.columns == ["s_a_b", "s_a_c", "arr"]
+    assert [tuple(r) for r in out.collect()] == [
+        ("y", "z", '[{"A":"p","a":"q"}]'),
+        ("w", "", "[]"),
+    ]
+    typed = apply_ingest_policy(df, stringify=False)
+    assert typed.dtypes[:2] == [("s_a_b", "string"), ("s_a_c", "string")]
+    assert typed.collect()[0]["arr"][0].asDict() == {"A": "p", "a": "q"}
+
+
+def test_nested_names_with_dots_spaces_and_backticks(spark):
+    """Field names are never parsed: dots, spaces and backticks at any
+    level pass through the walk, and the flat names sanitize."""
+    df = spark.createDataFrame(
+        [(("x", ("y",)), [("v",)])],
+        "`a.b` struct<`c d`: string, `e.f`: struct<`g``h`: string>>, "
+        "`t s` array<struct<`k.l m`: string>>",
+    )
+    out = apply_ingest_policy(df)
+    assert out.columns == ["a_b_c_d", "a_b_e_f_g_h", "t_s"]
+    assert tuple(out.collect()[0]) == ("x", "y", '[{"k.l m":"v"}]')
+    assert flatten_structs(df).columns == ["a.b_c d", "a.b_e.f_g`h", "t s"]
