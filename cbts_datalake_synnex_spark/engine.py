@@ -55,6 +55,15 @@ from cbts_datalake_synnex_spark.functions.ingest_policy import (
 )
 
 DEFAULT_PARTITION_COLS = ["processed_year", "processed_month"]  # utils.py:223
+# On-disk file size a rewrite aims at. A file below it is small:
+# compaction packs a partition's small files, and a DML rewrite takes
+# along the small files of the partitions it touches while the
+# partition's rewrite stays within it.
+_TARGET_FILE_BYTES = 128 * 1024 * 1024
+# The hidden column a file rewrite carries from each row's source file
+# to the write: the file's bin within its partition (`_first_fit`).
+# `_commit` writes one file per partition and bin, and drops it.
+_BIN = "__file_bin"
 
 
 class ConstraintViolation(ValueError):
@@ -87,6 +96,56 @@ def _local_path(uri: str) -> str:
     """Filesystem path of a ``file:`` URI (either ``file:/p`` or
     ``file:///p`` form) or of a bare path."""
     return urlparse(uri).path or uri
+
+
+def _require_local(qtable: str, loc: str) -> None:
+    """Refuse a table location a file commit cannot write."""
+    if urlparse(loc).scheme not in ("", "file"):
+        raise ValueError(
+            f"cannot commit to {qtable} at {loc}: file commits need a "
+            "local (file:) table location"
+        )
+
+
+def _sizes_by_dir(files: Iterable[str]) -> dict[str, dict[str, int]]:
+    """The on-disk size of each of ``files``, by partition directory."""
+    sizes: dict[str, dict[str, int]] = {}
+    for f in files:
+        p = _local_path(f)
+        sizes.setdefault(os.path.dirname(p), {})[f] = os.path.getsize(p)
+    return sizes
+
+
+def _first_fit(sizes: dict[str, int], target: int) -> list[list[str]]:
+    """Pack the files of ``sizes`` into bins of at most ``target``
+    on-disk bytes, first fit decreasing; a file above the target is a
+    bin of its own. Any two bins together exceed the target, so files
+    written one per bin do not pack together again."""
+    bins: list[list[str]] = []
+    room: list[int] = []
+    for f in sorted(sizes, key=sizes.__getitem__, reverse=True):
+        i = next((i for i, r in enumerate(room) if sizes[f] <= r), len(bins))
+        if i == len(bins):
+            bins.append([])
+            room.append(target)
+        bins[i].append(f)
+        room[i] -= sizes[f]
+    return bins
+
+
+def _bin_numbers(bins_by_dir: Iterable[list[list[str]]]) -> dict[str, int]:
+    """Each file's bin within its directory, by file name, for the
+    files outside bin 0 (`_read_files_as_table_schema` reads the rest
+    as bin 0). The engine's file names are unique within a table:
+    `_commit` gives every file it moves in a fresh ``dml-<uuid>-``
+    prefix."""
+    return {
+        os.path.basename(_local_path(f)): i
+        for bins in bins_by_dir
+        for i, b in enumerate(bins)
+        if i
+        for f in b
+    }
 
 
 def _append_jsonl(path: str, entry: dict[str, Any]) -> None:
@@ -2245,23 +2304,32 @@ class LakeEngine:
     def compact_table(
         self,
         table: str,
-        target_file_bytes: int = 128 * 1024 * 1024,
+        target_file_bytes: int = _TARGET_FILE_BYTES,
         cluster_by: Sequence[str] | None = None,
         zorder: bool = False,
         zorder_bits: int = 8,
     ) -> int:
-        """Bin-pack a curated table's files to ~target size. Returns the
-        resulting file count. Commits through `_commit` (stage, move
-        in, journal, unlink — a crash leaves the old or the new
-        version; single-writer assumption, as in the reference's
-        one-state-machine-per-table design).
+        """Bin-pack a curated table's small files. Returns the table's
+        file count afterwards. Idempotent, like Delta's OPTIMIZE
+        (`_bin_pack`): per partition, the files below
+        ``target_file_bytes`` on disk pack into bins of at most that
+        size, and only bins of two or more files are rewritten, each as
+        one file; they are picked from the snapshot manifest and the
+        local file sizes, with no Spark job. A table with no such bin
+        commits nothing and leaves no new version.
+        Commits through `_commit` (stage, move in, journal, unlink — a
+        crash leaves the old or the new version; single-writer
+        assumption, as in the reference's one-state-machine-per-table
+        design).
 
-        ``cluster_by`` additionally range-partitions + sorts the rewrite
-        on those columns (OPTIMIZE ... ZORDER's single-dimension
-        analogue): each output file then covers a narrow min/max band,
-        so later filtered scans skip whole files/row-groups on parquet
-        statistics instead of reading everything. The highest-leverage
-        layout knob for a 100 TB table queried by a selective key.
+        ``cluster_by`` asks for a layout change, so it rewrites every
+        file: it range-partitions + sorts the rewrite on those columns
+        into ~``target_file_bytes`` files (OPTIMIZE ... ZORDER's
+        single-dimension analogue): each output file then covers a
+        narrow min/max band, so later filtered scans skip whole
+        files/row-groups on parquet statistics instead of reading
+        everything. The highest-leverage layout knob for a 100 TB table
+        queried by a selective key.
 
         ``zorder=True`` (with >=2 ``cluster_by`` columns) interleaves
         the columns on a Z-curve instead of lexicographic order: each
@@ -2276,8 +2344,10 @@ class LakeEngine:
         per-file band narrow, so selective filters on any of them skip
         files (Delta ``OPTIMIZE ... ZORDER BY`` parity).
         """
-        qtable = self.qualified(table)
-        df = self.spark.table(qtable)
+        if not cluster_by:
+            self._bin_pack(table, target_file_bytes)
+            return len(self._live_files(table))
+        df = self.spark.table(self.qualified(table))
         # estimate_scan_bytes handles non-local URIs (s3a/hdfs) via the
         # Hadoop FileSystem API; a local-only getsize would see total=0
         # there and collapse the table into a single file.
@@ -2289,11 +2359,8 @@ class LakeEngine:
         # committed by `_commit`, which keeps the table's own partition
         # layout (OPTIMIZE never changes partitioning) and its
         # properties (constraints, generated columns) — the table is
-        # never re-created. Staging finishes before any live file is
-        # touched; the new files are moved in and journaled before the
-        # old ones are unlinked, so a crash at any step leaves the old
-        # or the new version, and `vacuum_orphans` tidies the rest.
-        if cluster_by and zorder and len(cluster_by) >= 2:
+        # never re-created.
+        if zorder and len(cluster_by) >= 2:
             zcol = self._zvalue(df, list(cluster_by), zorder_bits)
             staged = (
                 df.withColumn("__zval", zcol)
@@ -2301,12 +2368,9 @@ class LakeEngine:
                 .sortWithinPartitions("__zval")
                 .drop("__zval")
             )
-        elif cluster_by:
+        else:
             cols = [F.col(c) for c in cluster_by]
             staged = df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
-        else:
-            staged = df.repartition(n_files)
-        removed = list(df.inputFiles())
         # Tighter range-boundary sampling for the clustered write: the
         # default 100 samples/partition estimates n_files boundaries
         # from a few hundred points, so file z-spans (and their min/max
@@ -2317,39 +2381,37 @@ class LakeEngine:
         with _conf_override(
             self.spark, "spark.sql.execution.rangeExchange.sampleSizePerPartition", "1000"
         ):
-            self._commit(table, removed, staged.select(*df.columns), "compact")
-        return len(self.spark.table(qtable).inputFiles())
+            self._commit(table, None, staged.select(*df.columns), "compact")
+        return len(self._live_files(table))
 
     def compact_partitions(
         self,
         table: str,
         where: str,
-        target_file_bytes: int = 128 * 1024 * 1024,
+        target_file_bytes: int = _TARGET_FILE_BYTES,
     ) -> int:
         """Partition-scoped compaction — Delta ``OPTIMIZE t WHERE
-        <partition predicate>`` parity (round 12): rewrite ONLY the
-        partitions the predicate selects; every other partition's
-        files stay byte-identical on disk. At 100 TB this is the only
-        compaction a nightly pipeline can afford — you bin-pack
-        yesterday's partition, not the decade.
+        <partition predicate>`` parity: `compact_table`'s bin-pack
+        restricted to the partitions the predicate selects; every other
+        partition's files stay byte-identical on disk. At 100 TB this
+        is the only compaction a nightly pipeline can afford — you
+        bin-pack yesterday's partition, not the decade.
 
         ``where`` must reference partition columns ONLY (enforced, as
-        Delta does): the rewrite replaces every file of the selected
-        partitions, so a data-column predicate would silently DROP the
-        partitions' non-matching rows. Commits through `_commit`.
-        Returns the file count of the rewritten selection."""
+        Delta does): a data-column predicate cannot select whole files,
+        and rewriting the files it touches with only its rows would
+        DROP the rest. Returns the file count of the selection
+        afterwards."""
         import re as _re
 
         qtable = self.qualified(table)
-        df_all = self.spark.table(qtable)
+        columns = self.spark.table(qtable).columns
         schema_parts = self._table_layout(qtable)[1]
         if not schema_parts:
             raise ValueError(
                 f"{table} is unpartitioned — use compact_table for a full rewrite"
             )
-        referenced = set(
-            _re.findall(r"[A-Za-z_][A-Za-z0-9_]*", where)
-        ) & set(df_all.columns)
+        referenced = set(_re.findall(r"[A-Za-z_][A-Za-z0-9_]*", where)) & set(columns)
         bad = referenced - set(schema_parts)
         if bad:
             raise ValueError(
@@ -2357,13 +2419,39 @@ class LakeEngine:
                 f"only; {sorted(bad)} are data columns (a data predicate would "
                 f"drop rows)"
             )
-        sel = df_all.filter(where)
-        from cbts_datalake_synnex_spark.plans.budget import estimate_scan_bytes
-
-        total = estimate_scan_bytes(sel)
-        n_files = max(1, -(-total // target_file_bytes))
-        self._commit(table, sel.inputFiles(), sel.repartition(int(n_files)), "compact")
+        self._bin_pack(table, target_file_bytes, where)
         return len(self.spark.table(qtable).filter(where).inputFiles())
+
+    def _bin_pack(self, table: str, target_file_bytes: int, where: str | None = None) -> None:
+        """The one bin-pack of compaction, Delta OPTIMIZE's rule: per
+        partition — with ``where``, per partition that partition
+        predicate selects — pack the small files (below
+        ``target_file_bytes`` on disk) into bins of at most the target
+        (`_first_fit`) and rewrite each bin of two or more files as one
+        file (`_binned_commit`). Files at or above the target and
+        single-file bins are not read; since any two bins together
+        exceed the target, the files a pack writes form single-file
+        bins next time, and a compacted table stays as it is. The
+        choice comes from the live manifest and local file sizes;
+        nothing is committed when no bin qualifies."""
+        qtable = self.qualified(table)
+        layout = self._table_layout(qtable)
+        _require_local(qtable, layout[0])
+        sizes = _sizes_by_dir(self._live_files(table))
+        if where is not None:
+            chosen = self.spark.table(qtable).filter(where).inputFiles()
+            dirs = {os.path.dirname(_local_path(f)) for f in chosen}
+            sizes = {d: fs for d, fs in sizes.items() if d in dirs}
+        bins = [
+            [b for b in _first_fit(small, target_file_bytes) if len(b) >= 2]
+            for small in (
+                {f: n for f, n in fs.items() if n < target_file_bytes} for fs in sizes.values()
+            )
+        ]
+        picked = [f for dir_bins in bins for b in dir_bins for f in b]
+        if picked:
+            rows = self._read_files_as_table_schema(qtable, picked, _bin_numbers(bins))
+            self._binned_commit(table, picked, rows, "compact", {}, layout)
 
     # ------------------------------------------------------------------
     # Write-side CHECK constraints (Delta `ALTER TABLE ... ADD
@@ -2779,7 +2867,7 @@ class LakeEngine:
         self,
         table: str,
         small_file_ratio: float = 0.5,
-        target_file_bytes: int = 128 * 1024 * 1024,
+        target_file_bytes: int = _TARGET_FILE_BYTES,
         **compact_kwargs,
     ) -> int:
         """Auto-compaction policy — the nightly maintenance loop in one
@@ -2890,7 +2978,7 @@ class LakeEngine:
         self.write_curated(table, renamed, mode="overwrite", partition_cols=parts)
         return len(self.spark.table(qtable).inputFiles())
 
-    def table_layout_report(self, table: str, target_file_bytes: int = 128 * 1024 * 1024) -> DataFrame:
+    def table_layout_report(self, table: str, target_file_bytes: int = _TARGET_FILE_BYTES) -> DataFrame:
         """One-row layout-health summary computed FROM THE SCAN ITSELF
         (`_metadata.file_path`/`file_size` — distributed, no driver
         directory listing, so it works identically over 100 TB of
@@ -3124,10 +3212,16 @@ class LakeEngine:
 
     def _file_pruned_rewrite(self, table: str, condition, rewrite, operation: str) -> int:
         """Rewrite only the data files containing rows matching
-        ``condition``. ``rewrite(subset, cond)`` maps the affected
-        files' rows to their replacement rows; ``operation`` (``delete``
-        or ``update``) names the commit. Returns the number of matching
-        rows (0 ⇒ no file touched).
+        ``condition``, plus small files of the partitions those files
+        sit in while each partition's rewrite stays within the target
+        size (`_rewrite_set`); every other file keeps its inode.
+        ``rewrite(subset, cond, props)`` maps the read files' rows to
+        their replacement rows, given the table properties, and keeps
+        their `_BIN`; ``operation`` (``delete`` or ``update``) names
+        the commit. The replacement is written one file per bin
+        (`_binned_commit`), so a touched partition whose files fit the
+        target ends as one file. Returns the number of matching rows
+        (0 ⇒ no file touched).
 
         An update runs the same CHECK-constraint and generated-column
         verification as ``write_curated`` on the replacement rows
@@ -3152,15 +3246,16 @@ class LakeEngine:
         )
         if not hits:
             return 0
-        matched_files = [r["f"] for r in hits]
-        subset = self._read_files_as_table_schema(qtable, matched_files)
-        replacement = rewrite(subset, cond).select(*target.columns)
+        files, bins = self._rewrite_set(table, [r["f"] for r in hits])
+        subset = self._read_files_as_table_schema(qtable, files, bins)
         props = self._table_props(table) if operation == "update" else {}
-        with self._checked(table, replacement, props) as rows:
-            self._commit(table, matched_files, rows, operation)
+        replacement = rewrite(subset, cond, props).select(*target.columns, _BIN)
+        self._binned_commit(table, files, replacement, operation, props)
         return sum(r["count"] for r in hits)
 
-    def _read_files_as_table_schema(self, qtable: str, files: list[str]) -> DataFrame:
+    def _read_files_as_table_schema(
+        self, qtable: str, files: list[str], bins: dict[str, int] | None = None
+    ) -> DataFrame:
         """Re-read ONLY the given data files of ``qtable`` with the
         table schema. basePath keeps the Hive partition columns parsed
         from the directory structure; given the schema, Spark neither
@@ -3170,11 +3265,20 @@ class LakeEngine:
         `processed_month=1` directory the catalog never registers.
         Files written before a K8 ADD COLUMNS read the newer columns as
         null. The one reader of a chosen subset of a table's files:
-        DML, MERGE, incremental views and incremental ANALYZE."""
+        DML, MERGE, compaction, incremental views and incremental
+        ANALYZE. With ``bins`` (`_bin_numbers`), each row also carries
+        its file's bin as `_BIN`, for `_binned_commit`."""
         target = self.spark.table(qtable).schema
         reader = self.spark.read.format(self._file_format).schema(target)
         subset = reader.option("basePath", self._table_location(qtable)).load(files)
-        return subset.selectExpr(*[quote(f.name) for f in target.fields])
+        cols = [F.col(quote(f.name)) for f in target.fields]
+        if bins is None:
+            return subset.select(*cols)
+        b = F.lit(0)
+        if bins:
+            numbers = F.create_map(*[F.lit(x) for kv in bins.items() for x in kv])
+            b = F.coalesce(F.try_element_at(numbers, F.col("_metadata.file_name")), b)
+        return subset.select(*cols, b.alias(_BIN))
 
     def _commit(
         self,
@@ -3228,28 +3332,23 @@ class LakeEngine:
             loc, parts = layout = layout or self._table_layout(qtable)
         else:
             loc, parts = self.spark.catalog.getDatabase(self.database).locationUri, create[0]
-        if urlparse(loc).scheme not in ("", "file"):
-            raise ValueError(
-                f"cannot commit to {qtable} at {loc}: file commits need a "
-                "local (file:) table location"
-            )
+        _require_local(qtable, loc)
         scratch = self._scratch_dir(table)
         written = Observation()
         writer = replacement.observe(written, F.count(F.lit(1)).alias("n")).write
         writer = writer.format(self._file_format).option("compression", "snappy")
-        if parts:
-            writer = writer.partitionBy(*parts)
+        # A binned rewrite (`_binned_commit`) stages one file per
+        # partition and bin, under a hidden `_BIN` directory level that
+        # the move below drops.
+        binned = _BIN in replacement.columns
+        if parts or binned:
+            writer = writer.partitionBy(*parts, *([_BIN] if binned else []))
         writer.save(scratch)
         n_written = written.get["n"]
         if not n_written:  # an empty write stages only empty part files: none move in
             shutil.rmtree(scratch, ignore_errors=True)
         history = self.snapshot_history(table)
-        if history:
-            live = history[-1]["files"]
-        elif self.spark.catalog.tableExists(qtable):
-            live = self.spark.table(qtable).inputFiles()
-        else:
-            live = []
+        live = self._live_files(table, history)
         if removed_files is None:
             removed_files = live
         if create is not None:
@@ -3259,9 +3358,10 @@ class LakeEngine:
             loc, parts = layout = self._table_layout(qtable)
         added, new_dirs = [], False
         for dirpath, _dirs, files in os.walk(scratch):
-            dst_dir = os.path.normpath(
-                os.path.join(_local_path(loc), os.path.relpath(dirpath, scratch))
-            )
+            rel = os.path.relpath(dirpath, scratch)
+            if binned:
+                rel = os.path.dirname(rel)
+            dst_dir = os.path.normpath(os.path.join(_local_path(loc), rel))
             for fname in files:
                 if fname.startswith(("_", ".")):
                     continue  # _SUCCESS, checksums
@@ -3288,6 +3388,73 @@ class LakeEngine:
         self.spark.catalog.refreshTable(qtable)
         return n_written
 
+    def _live_files(self, table: str, history: list[dict[str, Any]] | None = None) -> list[str]:
+        """The table's live data files: its last snapshot manifest (of
+        ``history``, when the caller has read it), or a listing for a
+        table the engine never journaled."""
+        history = self.snapshot_history(table) if history is None else history
+        if history:
+            return history[-1]["files"]
+        qtable = self.qualified(table)
+        if self.spark.catalog.tableExists(qtable):
+            return self.spark.table(qtable).inputFiles()
+        return []
+
+    def _rewrite_set(self, table: str, matched: list[str]) -> tuple[list[str], dict[str, int]]:
+        """The files a DML rewrite reads, and their bins
+        (`_bin_numbers`): the ``matched`` files plus, in each partition
+        directory they sit in, the live small files of that directory,
+        smallest first, while the directory's rewrite stays within the
+        target size — Hudi's small-file handling: a partition a DML
+        touches ends compact, and the next compaction has nothing to do
+        there. The added files hold no matched row, so their rows pass
+        the DML unchanged; files of untouched partitions, and those
+        beyond the target, keep their inodes. A directory whose matched
+        files alone exceed the target takes no neighbour, and its
+        matched files pack into bins of at most the target
+        (`_first_fit`), one written file each."""
+        have = {_local_path(f) for f in matched}
+        sizes = _sizes_by_dir(matched)
+        rest = (
+            f
+            for f in self._live_files(table)
+            if os.path.dirname(_local_path(f)) in sizes and _local_path(f) not in have
+        )
+        for d, neighbours in _sizes_by_dir(rest).items():
+            room = _TARGET_FILE_BYTES - sum(sizes[d].values())
+            for f in sorted(neighbours, key=neighbours.__getitem__):
+                if neighbours[f] > room:
+                    break
+                sizes[d][f] = neighbours[f]
+                room -= neighbours[f]
+        files = [f for fs in sizes.values() for f in fs]
+        return files, _bin_numbers(_first_fit(fs, _TARGET_FILE_BYTES) for fs in sizes.values())
+
+    def _binned_commit(
+        self,
+        table: str,
+        removed_files: list[str],
+        replacement: DataFrame,
+        operation: str,
+        props: dict[str, str],
+        layout: tuple[str, list[str]] | None = None,
+    ) -> int:
+        """`_commit` a rewrite of existing files — DELETE/UPDATE, MERGE,
+        compaction — once ``replacement`` passes the table's ``props``
+        checks (`_checked`). ``replacement`` carries each row's bin
+        (`_BIN`, from `_read_files_as_table_schema`; a MERGE insert is
+        bin 0 of its partition). The rows are shuffled by partition and
+        bin, and `_commit` writes one file per partition and bin, so
+        the output is sized by the on-disk bytes of the files it
+        replaces: a bin of small files becomes one file of at most
+        about the target, however AQE coalesces the shuffle. ``layout``
+        is the table's `_table_layout` when the caller has read it.
+        Returns the rows written."""
+        layout = layout or self._table_layout(self.qualified(table))
+        binned = replacement.repartition(*[F.col(quote(c)) for c in layout[1]], F.col(_BIN))
+        with self._checked(table, binned, props) as rows:
+            return self._commit(table, removed_files, rows, operation, layout=layout)
+
     def delete_rows(self, table: str, condition) -> int:
         """``DELETE FROM table WHERE condition`` (SQL semantics: only
         rows where the predicate is TRUE are deleted; NULL keeps the
@@ -3297,7 +3464,7 @@ class LakeEngine:
             self._delta.delete(self.qualified(table), condition)
             return -1  # Delta does not report the count pre-4.0
 
-        def _drop_matches(subset: DataFrame, cond) -> DataFrame:
+        def _drop_matches(subset: DataFrame, cond, _props) -> DataFrame:
             return subset.filter(~cond)
 
         return self._file_pruned_rewrite(table, condition, _drop_matches, "delete")
@@ -3473,7 +3640,7 @@ class LakeEngine:
             self._delta.update(self.qualified(table), condition, sets)
             return -1
 
-        def _apply_sets(subset: DataFrame, cond) -> DataFrame:
+        def _apply_sets(subset: DataFrame, cond, props: dict[str, str]) -> DataFrame:
             unknown = [c for c in sets if c not in subset.columns]
             if unknown:
                 raise ValueError(f"UPDATE of unknown columns: {unknown}")
@@ -3482,14 +3649,19 @@ class LakeEngine:
             # values (Delta UPDATE semantics — without this, updating a
             # base column would leave the derived column stale and the
             # pre-splice verification would reject the rewrite).
-            gens = self.generated_columns(table)
+            gens = _prefixed(props, _GENERATED)
             stale = [g for g in gens if g in subset.columns and g not in sets]
+            # A SET value takes its column's type, as MERGE's does: an
+            # `int` column set to `g * 1.5` stays `int`, and the staged
+            # file keeps the table's types.
             out = subset.select(
                 *[
-                    F.when(cond, sets[c]).otherwise(F.col(c)).alias(c)
-                    if c in sets
-                    else F.col(c)
-                    for c in subset.columns
+                    F.when(cond, sets[f.name].cast(f.dataType))
+                    .otherwise(F.col(f.name))
+                    .alias(f.name)
+                    if f.name in sets
+                    else F.col(f.name)
+                    for f in subset.schema.fields
                 ],
                 *([cond.alias("__upd")] if stale else []),
             )
@@ -3588,11 +3760,17 @@ class LakeEngine:
         excluded from K8 schema evolution.
 
         Scale: the source's keys semi-join the target to find the files
-        holding matched keys; ONLY those files rewrite, untouched files
-        keep their inodes. Inserts are the source rows whose key those
-        files do not hold — every source key the table holds lies in
-        them — and land as new files in their partitions; the insert
-        side never reads the rest of the table.
+        holding matched keys; ONLY those files rewrite, with small
+        files of their partitions while each partition's rewrite stays
+        within the target size (`_rewrite_set`; their rows pass the
+        join unmatched); every other file keeps its inode. Inserts are
+        the source rows whose key the matched files do not hold —
+        every source key the table holds lies in them — so the insert
+        side never reads the rest of the table. The replacement is
+        written one file per bin (`_binned_commit`): a partition
+        holding a matched file ends as one file when its rewrite fits
+        the target, its inserts included; a partition that only gets
+        inserts keeps its files and gains one.
         ``broadcast_source=None`` (default) decides from Catalyst's size
         estimate of the source plan: small CDC batches broadcast,
         anything above the threshold (or with an unknown/huge estimate)
@@ -3613,7 +3791,7 @@ class LakeEngine:
         if sequence_col is not None:
             source = _latest_per_key(source, keys, sequence_col)
         else:
-            dup_keys = source.groupBy(*keys).count().filter("count > 1").limit(1)
+            dup_keys = source.groupBy(*keys).count().filter("count > 1")
         dup_msg = (
             "duplicate merge keys in source (pass sequence_col for "
             "latest-change-wins CDC semantics)"
@@ -3642,22 +3820,25 @@ class LakeEngine:
             src_m, src_keys = F.broadcast(src_m), F.broadcast(src_keys)
         # One collect answers both questions asked before anything is
         # staged: which files hold matched keys, and (a null path)
-        # whether a source key repeats; AQE runs both exchanges in one
-        # round-trip. _metadata is resolvable only on the file-source
-        # relation — materialize file_path as a real column BEFORE the
-        # semi-join.
+        # whether a source key repeats. Both branches feed one
+        # `distinct`, which folds every repeated key into a single null
+        # row — no `limit` and its single-partition exchange.
+        # _metadata is resolvable only on the file-source relation —
+        # materialize file_path as a real column BEFORE the semi-join.
         probe = (
             self.spark.table(qtable)
             .select(F.col("_metadata.file_path").alias("f"), *keys)
             .join(src_keys, on=keys, how="left_semi")
             .select("f")
-            .distinct()
         )
         if dup_keys is not None:
             probe = probe.unionByName(dup_keys.select(F.lit(None).cast("string").alias("f")))
-        matched_files = [r[0] for r in probe.collect()]
+        matched_files = [r[0] for r in probe.distinct().collect()]
         if None in matched_files:
             raise ValueError(dup_msg)
+        bins: dict[str, int] = {}
+        if matched_files:
+            matched_files, bins = self._rewrite_set(table, matched_files)
 
         # K8: genuinely-new source data columns widen the table first
         # (condition-only columns never do) — after the probe, so a
@@ -3686,7 +3867,7 @@ class LakeEngine:
         merged, inserted = Observation(), Observation()
         branches = []
         if matched_files:
-            sub = self._read_files_as_table_schema(qtable, matched_files)
+            sub = self._read_files_as_table_schema(qtable, matched_files, bins)
             on = " AND ".join(f"t.{quote(k)} = s.{quote(k)}" for k in keys)
             joined = (
                 sub.alias("t")
@@ -3705,6 +3886,7 @@ class LakeEngine:
                 elif v is not None:  # a caller's Column keeps the Column API
                     c = F.when(F.expr(matched), v.cast(f.dataType)).otherwise(F.col(c))
                 out.append(f"{c} AS {quote(f.name)}" if isinstance(c, str) else c.alias(f.name))
+            out.append(f"t.{_BIN}")
             branches.append(_select(joined.filter(f"NOT ({matched} AND {del_f})"), out))
 
         if when_not_matched_insert:
@@ -3717,7 +3899,7 @@ class LakeEngine:
                 ins = ins.join(sub.select(*keys), on=keys, how="left_anti")
             if isinstance(when_not_matched_insert, str):
                 ins = ins.filter(f"coalesce(CAST(({when_not_matched_insert}) AS BOOLEAN), false)")
-            inserts = _aligned(ins, data_cols, fields)
+            inserts = _aligned(ins, data_cols, fields).withColumn(_BIN, F.lit(0))
             branches.append(inserts.observe(inserted, F.count(F.lit(1)).alias("n")))
 
         if not branches:
@@ -3736,8 +3918,7 @@ class LakeEngine:
         for g, e in _prefixed(props, _GENERATED).items():
             if g not in upd_sets and g.lower() not in src_lower:
                 replacement = replacement.withColumn(g, F.expr(e))
-        with self._checked(table, replacement, props) as rows:
-            self._commit(table, matched_files, rows, "merge")
+        self._binned_commit(table, matched_files, replacement, "merge", props)
         counts = {"updated": 0, "deleted": 0, "inserted": 0}
         if matched_files:
             counts["deleted"] = merged.get["d"]

@@ -4,7 +4,11 @@ parity; reference has no row-level DML — Athena can't — so this is
 [EXT] lakehouse surface, same family as merge_upsert/time travel).
 
 The scale contract under test: only files containing >=1 matching row
-are rewritten; every untouched file survives byte-identical (same
+are rewritten, together with small files of the partitions those
+files sit in while each partition's rewrite stays within the 128 MB
+target, so a touched partition that fits the target ends as one file.
+Files of untouched partitions, and files beyond that budget (those at
+or above the target size among them), survive byte-identical (same
 inode), and time travel across a DELETE still reads the pre-DML rows
 via the snapshot journal's hard-link retention.
 """
@@ -162,3 +166,64 @@ def test_sql_delete_and_update_dispatch(spark, eng):
 
     # SELECT still passes through
     assert eng.sql("SELECT 1 AS one").collect()[0]["one"] == 1
+
+
+def test_update_casts_set_value_to_column_type(spark, eng):
+    """A SET value takes its column's type, as a MERGE SET does: an
+    `int` column set to a decimal expression stays `int`, and the table
+    reads back afterwards (a decimal file under an `int` column fails
+    every later read)."""
+    qt = _seed(spark, eng)
+    assert eng.update_rows("nat", "n_nationkey = 4", {"n_regionkey": "n_regionkey * 1.5"}) == 1
+    assert dict(spark.table(qt).dtypes)["n_regionkey"] == "int"
+    assert spark.table(qt).filter("n_nationkey = 4").collect()[0]["n_regionkey"] == 6
+    assert spark.table(qt).count() == 25
+
+
+def _fragmented(spark, eng):
+    """Partition p=0 in three small files, p=1 in one."""
+    rows = spark.createDataFrame([(k, f"v{k}", k % 2) for k in range(10)], "k int, v string, p int")
+    eng.write_curated("frag", rows.coalesce(1), mode="overwrite", partition_cols=["p"])
+    for ks in ((10, 12), (14, 16)):
+        more = spark.createDataFrame([(k, f"v{k}", 0) for k in ks], "k int, v string, p int")
+        eng.write_curated("frag", more.coalesce(1), mode="append", partition_cols=["p"])
+    return eng.qualified("frag")
+
+
+def _by_partition(eng, qtable):
+    out: dict[str, dict[str, int]] = {}
+    for path, ino in _inodes(eng, qtable).items():
+        out.setdefault(os.path.basename(os.path.dirname(path)), {})[path] = ino
+    return out
+
+
+def _merge_k0(spark, eng):
+    src = spark.createDataFrame([(0, "u0", 0)], "k int, v string, p int")
+    return eng.merge_rows("frag", src, ["k"], when_not_matched_insert=False)
+
+
+# op on key 0 -> (run, its return value, key 0's value afterwards)
+_DML_ON_K0 = {
+    "merge_rows": (_merge_k0, {"updated": 1, "deleted": 0, "inserted": 0}, "u0"),
+    "update_rows": (lambda spark, eng: eng.update_rows("frag", "k = 0", {"v": "'u0'"}), 1, "u0"),
+    "delete_rows": (lambda spark, eng: eng.delete_rows("frag", "k = 0"), 1, None),
+}
+
+
+@pytest.mark.parametrize("op", list(_DML_ON_K0))
+def test_dml_leaves_touched_partition_compact(spark, eng, op):
+    """A DML that matches one of a partition's several small files
+    rewrites them all into one file, returns the same counts, and
+    leaves the other partition's file alone."""
+    run, counts, v0 = _DML_ON_K0[op]
+    qt = _fragmented(spark, eng)
+    before = _by_partition(eng, qt)
+    assert len(before["p=0"]) == 3
+    assert run(spark, eng) == counts
+    after = _by_partition(eng, qt)
+    assert len(after["p=0"]) == 1 and not set(after["p=0"]) & set(before["p=0"])
+    assert after["p=1"] == before["p=1"]
+    want = {k: f"v{k}" for k in (*range(10), 10, 12, 14, 16)}
+    want[0] = v0
+    got = {r["k"]: r["v"] for r in spark.table(qt).collect()}
+    assert got == {k: v for k, v in want.items() if v is not None}

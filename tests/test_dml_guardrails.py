@@ -6,7 +6,8 @@
 - ``VERSION/TIMESTAMP AS OF`` text inside a string literal is data,
   not time-travel syntax — the query runs verbatim.
 - OPTIMIZE / compact_table preserves an EVOLVED partition scheme
-  (Delta's OPTIMIZE never changes partitioning).
+  (Delta's OPTIMIZE never changes partitioning), and is idempotent:
+  only partitions holding several small files are rewritten.
 - CHECK constraints and generated columns are enforced on
   UPDATE/MERGE splices, not just write_curated; generated columns the
   statement does not assign are recomputed from post-update values
@@ -14,7 +15,7 @@
 - merge_rows' default broadcast decision comes from Catalyst's size
   estimate, so an arbitrarily large merge source cannot OOM the
   driver.
-- A crash at any file step of a commit (merge, compaction) leaves the
+- A crash at any file step of a commit (merge, delete, compaction) leaves the
   old or the new version; `vacuum_orphans` repairs the directory, and
   a non-local table location fails loudly.
 """
@@ -259,6 +260,161 @@ def test_restore_across_column_drop_recovers_schema(spark, eng):
     assert restored.filter("qty IS NULL").count() == 0
 
 
+def _files_by_partition(eng, qtable):
+    import glob
+    import os
+    from urllib.parse import urlparse
+
+    loc = urlparse(eng._table_location(qtable)).path
+    out: dict[str, dict[str, int]] = {}
+    for p in glob.glob(loc + "/**/*.parquet", recursive=True):
+        out.setdefault(os.path.basename(os.path.dirname(p)), {})[p] = os.stat(p).st_ino
+    return out
+
+
+def _three_partitions(spark, eng):
+    """p=0 and p=1 in three small files each, p=2 in one."""
+    rows = spark.createDataFrame([(k, f"n{k}", k % 3) for k in range(9)], "k int, v string, p int")
+    eng.write_curated("t", rows.coalesce(1), mode="overwrite", partition_cols=["p"])
+    for base in (10, 20):
+        more = spark.createDataFrame([(base + p, "m", p) for p in (0, 1)], "k int, v string, p int")
+        eng.write_curated("t", more.coalesce(1), mode="append", partition_cols=["p"])
+    return eng.qualified("t")
+
+
+def test_compact_rewrites_only_fragmented_partitions(spark, eng):
+    """Compaction packs the partitions holding at least two small
+    files into one file each; a partition with one file keeps it."""
+    qt = _three_partitions(spark, eng)
+    before = _files_by_partition(eng, qt)
+    rows = sorted(map(tuple, spark.table(qt).collect()))
+    assert eng.compact_table("t") == 3
+    after = _files_by_partition(eng, qt)
+    assert after["p=2"] == before["p=2"]
+    for p in ("p=0", "p=1"):
+        assert len(before[p]) == 3 and len(after[p]) == 1
+        assert not set(after[p]) & set(before[p])
+    assert sorted(map(tuple, spark.table(qt).collect())) == rows
+    assert eng.snapshot_history("t")[-1]["operation"] == "compact"
+
+
+def test_second_compaction_commits_nothing(spark, eng):
+    """Compaction is idempotent: on a compacted table it journals no
+    version, keeps every inode and returns the same file count."""
+    qt = _three_partitions(spark, eng)
+    n = eng.compact_table("t")
+    files = _files_by_partition(eng, qt)
+    history = eng.snapshot_history("t")
+    assert eng.compact_table("t") == n
+    assert _files_by_partition(eng, qt) == files
+    assert eng.snapshot_history("t") == history
+
+
+def test_cluster_by_rewrites_every_file(spark, eng):
+    """``cluster_by`` asks for a layout change, so it rewrites every
+    file, compact or not."""
+    qt = _three_partitions(spark, eng)
+    eng.compact_table("t")
+    before = _files_by_partition(eng, qt)
+    eng.compact_table("t", cluster_by=["k"])
+    after = _files_by_partition(eng, qt)
+    assert set(after) == set(before)
+    for p in before:
+        assert not set(after[p]) & set(before[p])
+
+
+def test_compact_partitions_packs_only_selected_fragmented(spark, eng):
+    """`compact_partitions` is the same bin-pack restricted to the
+    partitions its predicate selects: a selected partition with one
+    file keeps it, an unselected fragmented one stays fragmented."""
+    qt = _three_partitions(spark, eng)
+    before = _files_by_partition(eng, qt)
+    assert eng.compact_partitions("t", "p IN (0, 2)") == 2
+    after = _files_by_partition(eng, qt)
+    assert len(after["p=0"]) == 1 and not set(after["p=0"]) & set(before["p=0"])
+    assert after["p=1"] == before["p=1"] and after["p=2"] == before["p=2"]
+    with pytest.raises(ValueError, match="data columns"):
+        eng.compact_partitions("t", "k > 0")
+
+
+@pytest.fixture()
+def tiny_advisory(spark):
+    """AQE's advisory shuffle partition size at 4 KB, far below every
+    rewrite below: a write sized by AQE would split into many files."""
+    from cbts_datalake_synnex_spark.engine import _conf_override
+
+    with _conf_override(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", "4096"):
+        yield
+
+
+def _four_wide_files(spark, eng):
+    """Partition p=0 in four files of ~20 KB each (hex digests barely
+    compress, so a file's size is about its rows'), p=1 in one. Returns
+    the table and a target of 2.5 times the largest p=0 file."""
+    import os
+
+    def rows(lo, p=0):
+        ids = spark.range(lo, lo + 300).withColumn("p", F.lit(p))
+        return ids.select(F.col("id").alias("k"), F.sha2(F.col("id").cast("string"), 256).alias("v"), "p")
+
+    eng.write_curated("w", rows(0).coalesce(1), mode="overwrite", partition_cols=["p"])
+    for lo in (1000, 2000, 3000):
+        eng.write_curated("w", rows(lo).coalesce(1), mode="append", partition_cols=["p"])
+    eng.write_curated("w", rows(9000, p=1).coalesce(1), mode="append", partition_cols=["p"])
+    qt = eng.qualified("w")
+    sizes = [os.path.getsize(f) for f in _files_by_partition(eng, qt)["p=0"]]
+    assert len(sizes) == 4 and min(sizes) > max(sizes) / 2
+    return qt, int(2.5 * max(sizes))
+
+
+def test_compaction_output_sized_by_disk_bytes(spark, eng, tiny_advisory):
+    """Compaction sizes its output from the on-disk bytes it replaces,
+    not from AQE's shuffle sizes: with the default target the four
+    files become one even at a 4 KB advisory size; with a target of
+    2.5 files they pack two by two. Either way a second compaction
+    commits nothing and keeps every inode."""
+    qt, target = _four_wide_files(spark, eng)
+    rows = sorted(map(tuple, spark.table(qt).collect()))
+    assert eng.compact_table("w", target_file_bytes=target) == 3
+    packed = _files_by_partition(eng, qt)
+    assert len(packed["p=0"]) == 2
+    history = eng.snapshot_history("w")
+    assert eng.compact_table("w", target_file_bytes=target) == 3
+    assert _files_by_partition(eng, qt) == packed
+    assert eng.snapshot_history("w") == history
+    assert eng.compact_table("w") == 2
+    once = _files_by_partition(eng, qt)
+    history = eng.snapshot_history("w")
+    assert eng.compact_table("w") == 2
+    assert _files_by_partition(eng, qt) == once
+    assert eng.snapshot_history("w") == history
+    assert sorted(map(tuple, spark.table(qt).collect())) == rows
+
+
+def test_dml_takes_neighbours_only_within_target(spark, eng, tiny_advisory, monkeypatch):
+    """A DML rewrite takes small files of the partition it touches only
+    while the partition's rewrite stays within the target: with room
+    for one more file, it packs the matched file and one neighbour into
+    one file and leaves the other two alone; a second DML on the packed
+    file has no room left and rewrites that file only."""
+    import cbts_datalake_synnex_spark.engine as engine_mod
+
+    qt, target = _four_wide_files(spark, eng)
+    monkeypatch.setattr(engine_mod, "_TARGET_FILE_BYTES", target)
+    before = _files_by_partition(eng, qt)
+    assert eng.update_rows("w", "k = 0", {"v": "'u0'"}) == 1
+    after = _files_by_partition(eng, qt)
+    kept = set(after["p=0"]) & set(before["p=0"])
+    assert len(kept) == 2 and len(after["p=0"]) == 3
+    assert after["p=1"] == before["p=1"]
+    assert eng.delete_rows("w", "k = 0") == 1
+    again = _files_by_partition(eng, qt)
+    assert {f: again["p=0"].get(f) for f in kept} == {f: after["p=0"][f] for f in kept}
+    assert len(again["p=0"]) == 3
+    assert spark.table(qt).count() == 5 * 300 - 1
+    assert spark.table(qt).filter("v = 'u0'").count() == 0
+
+
 def test_compact_if_fragmented_policy(spark, eng):
     qt = _seed(spark, eng)
     # fragment: 20 rows across many tiny files
@@ -406,6 +562,10 @@ def _compact_op(spark, eng):
     eng.compact_table("t")
 
 
+def _delete_op(spark, eng):
+    eng.delete_rows("t", "k IN (0, 1)")
+
+
 def _append_op(spark, eng):
     src = spark.createDataFrame([(100, "new", 0), (101, "new", 1)], "k int, v string, p int")
     eng.write_curated("t", src, mode="append", partition_cols=["p"])
@@ -425,6 +585,7 @@ _OPS = {
         ),
     ),
     "compact_table": (_compact_op, lambda old: old),
+    "delete_rows": (_delete_op, lambda old: [r for r in old if r[0] not in (0, 1)]),
     "append": (_append_op, lambda old: sorted(old + [(100, "new", 0), (101, "new", 1)])),
     "overwrite": (_overwrite_op, lambda old: [(0, "o0", 0), (1, "o1", 1), (5, "o5", 1)]),
 }

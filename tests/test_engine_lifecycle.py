@@ -644,7 +644,11 @@ def test_snapshot_survives_compaction_until_vacuum(engine):
     pre-compaction snapshot stays readable (links pin the immutable
     parquet parts) until vacuum_snapshots reclaims it — then the error
     is explicit, never silent partial data."""
-    engine.save_to_staging("po_status", RECORDS)
+    # two batches: two small files in one partition, which compaction packs
+    engine.save_to_staging("po_status", RECORDS[:1])
+    engine.curate("po_status")
+    engine.prepare_staging("po_status")
+    engine.save_to_staging("po_status", RECORDS[1:])
     engine.curate("po_status")
     v1 = engine.snapshot_history("po_status")[-1]["version"]
     engine.compact_table("po_status")
@@ -686,12 +690,16 @@ def test_one_log_per_table(engine, spark):
     engine.save_to_staging("po_status", RECORDS[:1])
     engine.curate("po_status")
     engine.delete_rows("po_status", "po_number = 'PO1'")
+    # the DELETE left its partition in one file: fragment it again
+    engine.prepare_staging("po_status")
+    engine.save_to_staging("po_status", RECORDS[:1])
+    engine.curate("po_status")
     engine.compact_table("po_status")
     engine.clone_table("po_status", "po_clone")
     logs = {d for d in os.listdir(engine.zones.root) if d.endswith("_log")}
     assert logs == {"_snapshot_log"}
     ops = [h["operation"] for h in engine.snapshot_history("po_status")]
-    assert ops == ["append", "append", "delete", "compact"]
+    assert ops == ["append", "append", "delete", "append", "compact"]
     assert [h["version"] for h in engine.schema_history("po_status")] == [1]
     assert [h["operation"] for h in engine.snapshot_history("po_clone")] == ["clone"]
     assert [h["version"] for h in engine.schema_history("po_clone")] == [1]
