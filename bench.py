@@ -98,8 +98,8 @@ def _run_table_ops_pass(spark, sf_dir: str) -> dict:
     comparable to the rounds-1-5 baseline (same query set).
 
     Each op runs in a throwaway lake; timings include the engine's
-    full bill (file-pruned rewrite, snapshot journaling, hard-link
-    retention) — the number a user would see.
+    full bill (file-pruned rewrite, snapshot journaling, retiring the
+    replaced files) — the number a user would see.
     """
     import shutil
     import tempfile

@@ -31,6 +31,7 @@ Delta upgrade path noted where it applies.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -39,7 +40,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 from datetime import datetime
 from typing import Any, Iterable, Sequence
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -96,6 +97,15 @@ def _local_path(uri: str) -> str:
     """Filesystem path of a ``file:`` URI (either ``file:/p`` or
     ``file:///p`` form) or of a bare path."""
     return urlparse(uri).path or uri
+
+
+def _spark_file(uri: str) -> str:
+    """A data file as Spark names it (``_metadata.file_path``,
+    ``inputFiles()``: percent-encoded) in the manifests' form, the raw
+    path on disk: a file under ``p=a%3Ab``, the directory Hive writes
+    for ``p = 'a:b'``, comes back from Spark as ``p=a%253Ab``."""
+    u = urlparse(uri)
+    return f"{u.scheme}://{u.netloc}{unquote(u.path)}"
 
 
 def _require_local(qtable: str, loc: str) -> None:
@@ -409,7 +419,7 @@ class LakeEngine:
                 self.spark.catalog.refreshTable(qtable)
                 self._journal_snapshot(
                     table,
-                    self.spark.table(qtable).inputFiles(),
+                    [_spark_file(f) for f in self.spark.table(qtable).inputFiles()],
                     self._table_layout(qtable),
                     mode,
                     None,
@@ -514,27 +524,52 @@ class LakeEngine:
         return results
 
     # ------------------------------------------------------------------
-    # Data time travel on plain parquet: every curated write journals
-    # the table's file manifest as a numbered snapshot AND hard-links
-    # the data files into a per-version retention dir (the poor man's
-    # Delta transaction log — parquet files are immutable once written,
-    # so a link costs an inode, not a copy, and survives the
-    # delete-then-write of overwrite/compaction). `read_snapshot(v)`
-    # therefore works for EVERY journaled version until
-    # `vacuum_snapshots` reclaims it — the exact retention semantics
-    # Delta gives via the log + VACUUM. Object stores have no hard
-    # links; there this degrades to copy (shutil fallback) or, in a
-    # real deployment, manifest-only retention over immutable objects.
-    # The same log carries each commit's operation and rows written
-    # (the reference's CloudWatch job metrics, serverless.yml:133-139)
-    # and, on a schema change, the schema — the catalog versioning of
-    # utils.py:78,247 (`catalog_versioning=True`), as Delta's log
-    # carries `metaData` and `commitInfo` in its commits.
+    # Data time travel on plain parquet: every commit journals the
+    # table's file manifest as a numbered snapshot, and a commit that
+    # replaces files moves them into the table's retention directory,
+    # `_snapshot_log/<table>/retired/`, at their path relative to the
+    # table location (`_retire`) instead of deleting them — Delta's
+    # remove action, whose file stays until VACUUM. Parquet files are
+    # immutable and uniquely named, so each replaced file is kept once
+    # however many versions name it, and retention grows with what a
+    # commit removes, not with the table. `read_snapshot(v)` finds each
+    # of v's files live or retired (`_locate`), so every journaled
+    # version is readable until `vacuum_snapshots` deletes the retired
+    # files it needs. On an object store, retiring is a copy and a
+    # delete. The same log carries each commit's operation and rows
+    # written (the reference's CloudWatch job metrics,
+    # serverless.yml:133-139) and, on a schema change, the schema — the
+    # catalog versioning of utils.py:78,247 (`catalog_versioning=True`),
+    # as Delta's log carries `metaData` and `commitInfo` in its commits.
     def _snapshot_log_path(self, table: str) -> str:
         return os.path.join(self.zones.root, "_snapshot_log", f"{table}.jsonl")
 
-    def _snapshot_retain_root(self, table: str, version: int) -> str:
-        return os.path.join(self.zones.root, "_snapshot_log", table, f"v{version:05d}")
+    def _retired_root(self, table: str) -> str:
+        return os.path.join(self.zones.root, "_snapshot_log", table, "retired")
+
+    def _retire(self, table: str, base: str, path: str) -> None:
+        """Move the data file at ``path`` out of the table into its
+        retention directory, at its path relative to ``base``, the
+        location recorded by the entries that name it."""
+        dst = os.path.join(self._retired_root(table), os.path.relpath(path, base))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        try:
+            os.rename(path, dst)
+        except OSError:  # retention on another filesystem than the table
+            shutil.move(path, dst)
+
+    def _locate(self, table: str, entry: dict[str, Any]) -> dict[str | None, list[str]]:
+        """The files of snapshot ``entry``, as paths relative to the
+        root they are found under: the entry's base while a file is
+        live, the table's retention directory once a later commit
+        retired it, ``None`` once `vacuum_snapshots` deleted it."""
+        roots = (entry["base"], self._retired_root(table))
+        found: dict[str | None, list[str]] = {}
+        for f in entry["files"]:
+            rel = os.path.relpath(_local_path(f), entry["base"])
+            root = next((r for r in roots if os.path.exists(os.path.join(r, rel))), None)
+            found.setdefault(root, []).append(rel)
+        return found
 
     def _journal_snapshot(
         self,
@@ -557,67 +592,16 @@ class LakeEngine:
         last_schema = next((h["schema"] for h in reversed(history) if "schema" in h), None)
         if history and history[-1]["files"] == files and schema == last_schema:
             return
-        version = len(history) + 1
         loc, pcols = layout
-        loc = loc.removeprefix("file:")
-        retain_root = self._snapshot_retain_root(table, version)
-        # A crash between linking and the append below leaves this
-        # version's dir behind, unjournaled; start it afresh.
-        shutil.rmtree(retain_root, ignore_errors=True)
-        # Incremental retention: a file already retained by the previous
-        # version links from THAT copy (same filesystem by construction,
-        # so this is inode-only even when the table itself lives on a
-        # different device) — per-version cost is proportional to the
-        # CHANGED file set, and the cross-device copy fallback only ever
-        # engages for files new in this version. Parquet part files are
-        # immutable and uniquely named, so same relative path ⇒ same
-        # content.
-        prev_root = history[-1].get("retain_root") if history else None
-        n_copied = 0
-        for f in files:
-            src = f.removeprefix("file:")
-            rel = os.path.relpath(src, loc)
-            # mirror the partition-dir structure so the retained copy
-            # reads back WITH its Hive partition columns
-            dst = os.path.join(retain_root, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            linked = False
-            prev = os.path.join(prev_root, rel) if prev_root else None
-            if prev and os.path.exists(prev):
-                try:
-                    os.link(prev, dst)  # retained → retained: same fs, inode share
-                    linked = True
-                except OSError:
-                    pass
-            if not linked:
-                try:
-                    os.link(src, dst)  # immutable data file: inode share, no copy
-                except OSError:
-                    shutil.copy2(src, dst)  # cross-device fallback
-                    n_copied += 1
-        if n_copied:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "snapshot retention for %s v%d fell back to FULL COPY for %d/%d "
-                "files (cross-device lake root?) — retention is costing bytes, "
-                "not inodes; consider co-locating _snapshot_log with the table "
-                "or manifest-only retention",
-                table,
-                version,
-                n_copied,
-                len(files),
-            )
         # Partition layout (`pcols`) travels with the snapshot so
         # RESTORE can rebuild the table with ITS original partitioning
         # (not the engine default).
         now = self._now() or datetime.now()
         entry = {
-            "version": version,
+            "version": len(history) + 1,
             "at": now.strftime("%Y-%m-%d %H:%M:%S"),
             "files": files,
-            "base": loc,
-            "retain_root": retain_root,
+            "base": _local_path(loc),
             "partition_cols": pcols,
             "operation": operation,
             "rows_written": rows_written,
@@ -643,7 +627,11 @@ class LakeEngine:
         """Read the table as it was at snapshot ``version`` (1-based;
         default latest), with the schema recorded at or before that
         version. Every journaled version is readable until
-        `vacuum_snapshots` reclaims it; vacuumed versions raise."""
+        `vacuum_snapshots` reclaims it; vacuumed versions raise. The
+        frame names the version's files where they are now: a file
+        still live is read from the table's directory, where the next
+        commit to that table may retire it. A write of the frame to the
+        same table stages it before retiring anything."""
         history = self.snapshot_history(table)
         if not history:
             raise ValueError(f"no snapshots recorded for table '{table}'")
@@ -657,22 +645,24 @@ class LakeEngine:
         else:
             raise ValueError(f"table '{table}' has no snapshot version {version}")
         schema = StructType.fromJson(schema)
-        if not entry["files"]:
-            return self.spark.createDataFrame([], schema)
-        reader = self.spark.read.format(self._file_format).schema(schema)
-        retain_root = entry.get("retain_root")
-        if retain_root and os.path.isdir(retain_root):
-            return reader.load(retain_root)
-        # retention gone (vacuumed) — fall back to the original manifest
-        # if those files still exist (append-only history keeps them)
-        files = entry["files"]
-        missing = [f for f in files if not os.path.exists(f.removeprefix("file:"))]
-        if missing:
+        found = self._locate(table, entry)
+        if None in found:
             raise ValueError(
                 f"snapshot {version} of '{table}' is no longer materialized "
-                f"({len(missing)}/{len(files)} files rewritten and retention vacuumed)"
+                f"({len(found[None])}/{len(entry['files'])} files retired and vacuumed)"
             )
-        return reader.option("basePath", entry["base"]).load(files)
+        if not found:
+            return self.spark.createDataFrame([], schema)
+        # one read per root: Spark parses the Hive partition dirs of a
+        # file list below a single basePath
+        reads = [
+            self.spark.read.format(self._file_format)
+            .schema(schema)
+            .option("basePath", root)
+            .load([os.path.join(root, rel) for rel in rels])
+            for root, rels in found.items()
+        ]
+        return functools.reduce(DataFrame.union, reads)
 
     def version_at(self, table: str, timestamp) -> int:
         """Resolve Delta ``TIMESTAMP AS OF`` semantics: the newest
@@ -761,18 +751,25 @@ class LakeEngine:
         )
 
     def vacuum_snapshots(self, table: str, keep_last: int = 2) -> int:
-        """Reclaim retention storage for all but the newest
-        ``keep_last`` snapshots (Delta VACUUM semantics: history older
-        than the horizon stops being readable; the journal keeps the
-        metadata). Returns the number of versions reclaimed."""
+        """Delete the retired files that none of the newest
+        ``keep_last`` snapshots names (Delta VACUUM semantics: history
+        older than the horizon stops being readable; the journal keeps
+        the metadata). Returns the number of older versions that stopped
+        being readable."""
         history = self.snapshot_history(table)
-        reclaimed = 0
-        for entry in history[:-keep_last] if keep_last > 0 else history:
-            root = entry.get("retain_root")
-            if root and os.path.isdir(root):
-                shutil.rmtree(root, ignore_errors=True)
-                reclaimed += 1
-        return reclaimed
+        horizon = max(len(history) - keep_last, 0) if keep_last > 0 else len(history)
+        readable = [e for e in history[:horizon] if None not in self._locate(table, e)]
+        retired = self._retired_root(table)
+        kept = {
+            os.path.join(retired, rel)
+            for e in history[horizon:]
+            for rel in self._locate(table, e).get(retired, [])
+        }
+        for dirpath, _, files in os.walk(retired):
+            for name in files:
+                if os.path.join(dirpath, name) not in kept:
+                    os.remove(os.path.join(dirpath, name))
+        return sum(None in self._locate(table, e) for e in readable)
 
     def snapshot_changes(
         self,
@@ -831,9 +828,10 @@ class LakeEngine:
 
         Divergence is free and safe in both directions because parquet
         parts are immutable: appends to the clone land new files in its
-        own location; an overwrite of the clone unlinks only the
-        clone's directory entries (the source keeps its own links), and
-        vice versa. The clone starts its own snapshot/schema journal at
+        own location; an overwrite of the clone retires only the
+        clone's own links (the source keeps its own), and vice versa.
+        The clone links each file from where it is now, live or
+        retired. The clone starts its own snapshot/schema journal at
         v1. Returns the clone's location.
         """
         history = self.snapshot_history(src_table)
@@ -849,28 +847,16 @@ class LakeEngine:
         dst_loc = self.zones.curated(dst_table)
         if os.path.exists(dst_loc) and os.listdir(dst_loc):
             raise ValueError(f"clone destination not empty: {dst_loc}")
-        retain_root = entry.get("retain_root")
-        if retain_root and os.path.isdir(retain_root):
-            pairs = []
-            for dirpath, _, files in os.walk(retain_root):
-                for fn in files:
-                    sp = os.path.join(dirpath, fn)
-                    pairs.append((sp, os.path.relpath(sp, retain_root)))
-        else:
-            base = entry["base"]
-            pairs = [
-                (f.removeprefix("file:"), os.path.relpath(f.removeprefix("file:"), base))
-                for f in entry["files"]
-            ]
         linked = []
-        for sp, rel in pairs:
-            dst = os.path.join(dst_loc, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            try:
-                os.link(sp, dst)
-            except OSError:
-                shutil.copy2(sp, dst)  # cross-device fallback
-            linked.append(f"file://{dst}")
+        for root, rels in self._locate(src_table, entry).items():
+            for rel in rels:
+                dst = os.path.join(dst_loc, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                try:
+                    os.link(os.path.join(root, rel), dst)
+                except OSError:
+                    shutil.copy2(os.path.join(root, rel), dst)  # cross-device fallback
+                linked.append(f"file://{dst}")
         pcols = entry.get("partition_cols") or []
         qdst = self.qualified(dst_table)
         self._create_table(qdst, snap.schema, pcols, {}, location=dst_loc)
@@ -2224,9 +2210,10 @@ class LakeEngine:
     def refresh_join_view(self, name: str) -> str:
         """Refresh a `create_join_view` MV from the fact change feed;
         returns ``noop`` (fact unchanged) or ``incremental``. The MV's
-        previous content reads from its RETAINED snapshot copy (hard
-        links keep the inodes alive), so the read-modify-overwrite is
-        safe against the live-directory rewrite."""
+        previous content is its latest snapshot, read from its live
+        files; the overwrite stages the new content before its commit
+        retires those files, so the read-modify-overwrite never reads
+        a file it has moved."""
         spec = self._mview_defs()[name]
         if spec.get("kind") != "join":
             raise ValueError(f"{name!r} is not a join view")
@@ -2317,7 +2304,7 @@ class LakeEngine:
         one file; they are picked from the snapshot manifest and the
         local file sizes, with no Spark job. A table with no such bin
         commits nothing and leaves no new version.
-        Commits through `_commit` (stage, move in, journal, unlink — a
+        Commits through `_commit` (stage, move in, journal, retire — a
         crash leaves the old or the new version; single-writer
         assumption, as in the reference's one-state-machine-per-table
         design).
@@ -2345,8 +2332,7 @@ class LakeEngine:
         files (Delta ``OPTIMIZE ... ZORDER BY`` parity).
         """
         if not cluster_by:
-            self._bin_pack(table, target_file_bytes)
-            return len(self._live_files(table))
+            return self._bin_pack(table, target_file_bytes)
         df = self.spark.table(self.qualified(table))
         # estimate_scan_bytes handles non-local URIs (s3a/hdfs) via the
         # Hadoop FileSystem API; a local-only getsize would see total=0
@@ -2400,8 +2386,8 @@ class LakeEngine:
         ``where`` must reference partition columns ONLY (enforced, as
         Delta does): a data-column predicate cannot select whole files,
         and rewriting the files it touches with only its rows would
-        DROP the rest. Returns the file count of the selection
-        afterwards."""
+        DROP the rest. Returns the file count of the selected
+        partitions afterwards."""
         import re as _re
 
         qtable = self.qualified(table)
@@ -2419,10 +2405,9 @@ class LakeEngine:
                 f"only; {sorted(bad)} are data columns (a data predicate would "
                 f"drop rows)"
             )
-        self._bin_pack(table, target_file_bytes, where)
-        return len(self.spark.table(qtable).filter(where).inputFiles())
+        return self._bin_pack(table, target_file_bytes, where)
 
-    def _bin_pack(self, table: str, target_file_bytes: int, where: str | None = None) -> None:
+    def _bin_pack(self, table: str, target_file_bytes: int, where: str | None = None) -> int:
         """The one bin-pack of compaction, Delta OPTIMIZE's rule: per
         partition — with ``where``, per partition that partition
         predicate selects — pack the small files (below
@@ -2433,14 +2418,15 @@ class LakeEngine:
         exceed the target, the files a pack writes form single-file
         bins next time, and a compacted table stays as it is. The
         choice comes from the live manifest and local file sizes;
-        nothing is committed when no bin qualifies."""
+        nothing is committed when no bin qualifies. Returns the live
+        file count of those partitions afterwards."""
         qtable = self.qualified(table)
         layout = self._table_layout(qtable)
         _require_local(qtable, layout[0])
         sizes = _sizes_by_dir(self._live_files(table))
         if where is not None:
             chosen = self.spark.table(qtable).filter(where).inputFiles()
-            dirs = {os.path.dirname(_local_path(f)) for f in chosen}
+            dirs = {os.path.dirname(_local_path(_spark_file(f))) for f in chosen}
             sizes = {d: fs for d, fs in sizes.items() if d in dirs}
         bins = [
             [b for b in _first_fit(small, target_file_bytes) if len(b) >= 2]
@@ -2452,6 +2438,7 @@ class LakeEngine:
         if picked:
             rows = self._read_files_as_table_schema(qtable, picked, _bin_numbers(bins))
             self._binned_commit(table, picked, rows, "compact", {}, layout)
+        return sum(os.path.dirname(_local_path(f)) in sizes for f in self._live_files(table))
 
     # ------------------------------------------------------------------
     # Write-side CHECK constraints (Delta `ALTER TABLE ... ADD
@@ -2769,34 +2756,22 @@ class LakeEngine:
         if missing:
             raise ValueError(f"partition columns not in table: {missing}")
         self.write_curated(table, df, mode="overwrite", partition_cols=list(partition_cols))
-        return len(self.spark.table(qtable).inputFiles())
+        return len(self._live_files(table))
 
     def describe_detail(self, table: str) -> DataFrame:
         """One-row table metadata summary (Delta ``DESCRIBE DETAIL``
         parity; SQL form dispatches here): format, qualified name,
-        location, partition columns, file count + total bytes
-        (computed from `_metadata` in the scan — distributed, no
-        driver directory listing), snapshot-journal version count and
-        latest commit time. The one-row collect is metadata-class,
-        like DESCRIBE HISTORY."""
+        location, partition columns, file count + total bytes (the
+        live manifest and its files' on-disk sizes, as compaction
+        reads them — no Spark job), snapshot-journal version count and
+        latest commit time."""
         qtable = self.qualified(table)
         if not self.spark.catalog.tableExists(qtable):
             raise ValueError(f"no such table: {qtable}")
         loc, parts = self._table_layout(qtable)
         hist = self.snapshot_history(table)
-        stat = (
-            self.spark.table(qtable)
-            .select(
-                F.col("_metadata.file_path").alias("f"),
-                F.col("_metadata.file_size").alias("s"),
-            )
-            .dropDuplicates(["f"])
-            .agg(
-                F.count(F.lit(1)).alias("nf"),
-                F.coalesce(F.sum("s"), F.lit(0)).alias("sb"),
-            )
-            .collect()[0]
-        )
+        files = self._live_files(table, hist)
+        size = sum(n for fs in _sizes_by_dir(files).values() for n in fs.values())
         return self.spark.createDataFrame(
             [
                 (
@@ -2804,8 +2779,8 @@ class LakeEngine:
                     self.table_format,
                     loc,
                     ",".join(parts),
-                    int(stat["nf"]),
-                    int(stat["sb"]),
+                    len(files),
+                    size,
                     len(hist),
                     hist[-1]["at"] if hist else None,
                 )
@@ -2822,12 +2797,14 @@ class LakeEngine:
         reads whatever sits in the directory, so a crash artifact
         isn't invisible — it silently ADDS rows; this restores the
         directory to the last committed state — the recovery step of
-        a `_commit` cut short at any point. Also sweeps the table's
-        stale scratch dirs (under ``_scratch`` in the lake root) left
-        by crashed jobs. Single-writer assumption: don't
-        run concurrently with a live rewrite (whose scratch this would
-        reap). Returns the number of files removed (counted only, when
-        ``dry_run``).
+        a `_commit` cut short at any point. A stray file an earlier
+        version names (a commit cut short while retiring) is retired,
+        so time travel still reads it; any other is deleted. Also
+        sweeps the table's stale scratch dirs (under ``_scratch`` in
+        the lake root) left by crashed jobs. Single-writer assumption:
+        don't run concurrently with a live rewrite (whose scratch this
+        would reap). Returns the number of files removed from the
+        table's directory and scratch (counted only, when ``dry_run``).
 
         Scale caveat — the one maintenance op here that LISTS on the
         driver: ``os.walk`` over the table directory is fine for a
@@ -2838,7 +2815,7 @@ class LakeEngine:
         ``table_layout_report`` does, or the store's inventory
         manifest) anti-joined against the journaled manifest; the
         delete fan-out batches through the store's bulk-delete API.
-        The journal side is already bounded (one manifest read)."""
+        The journal side reads each manifest once."""
         qtable = self.qualified(table)
         if not self.spark.catalog.tableExists(qtable):
             raise ValueError(f"no such table: {qtable}")
@@ -2846,14 +2823,19 @@ class LakeEngine:
         if not history:
             raise ValueError(f"{qtable} has no journaled snapshot to repair to")
         manifest = {_local_path(f) for f in history[-1]["files"]}
+        earlier = {_local_path(f): e["base"] for e in history[:-1] for f in e["files"]}
         loc = _local_path(self._table_location(qtable))
         removed = 0
         for dirpath, _dirs, files in os.walk(loc):
             for fname in files:
                 p = os.path.join(dirpath, fname)
-                if not fname.startswith(("_", ".")) and p not in manifest:
-                    removed += 1
-                    if not dry_run:
+                if fname.startswith(("_", ".")) or p in manifest:
+                    continue
+                removed += 1
+                if not dry_run:
+                    if p in earlier:
+                        self._retire(table, earlier[p], p)
+                    else:
                         os.remove(p)
         for d in self._scratch_leftovers(f"{table}_"):
             removed += sum(len(fs) for _, _, fs in os.walk(d))
@@ -2862,26 +2844,6 @@ class LakeEngine:
         if removed and not dry_run:
             self.spark.catalog.refreshTable(qtable)
         return removed
-
-    def compact_if_fragmented(
-        self,
-        table: str,
-        small_file_ratio: float = 0.5,
-        target_file_bytes: int = _TARGET_FILE_BYTES,
-        **compact_kwargs,
-    ) -> int:
-        """Auto-compaction policy — the nightly maintenance loop in one
-        call: consult `table_layout_report`'s small-file ratio (one
-        `_metadata` scan, no directory listing) and rewrite ONLY when
-        fragmentation exceeds the threshold (Delta's auto-compaction
-        idea, explicit). Returns the resulting file count, or -1 when
-        the layout is healthy and nothing was touched."""
-        row = self.table_layout_report(table, target_file_bytes).collect()[0]
-        if (row["small_file_ratio"] or 0.0) <= small_file_ratio:
-            return -1
-        return self.compact_table(
-            table, target_file_bytes=target_file_bytes, **compact_kwargs
-        )
 
     # ------------------------------------------------------------------
     # Column-level schema evolution beyond K8's ADD: DROP and RENAME.
@@ -2942,7 +2904,7 @@ class LakeEngine:
                 f"ALTER TABLE {qtable} UNSET TBLPROPERTIES ('generated.col.{column}')"
             )
         self.write_curated(table, df.drop(column), mode="overwrite", partition_cols=parts)
-        return len(self.spark.table(qtable).inputFiles())
+        return len(self._live_files(table))
 
     def rename_column(self, table: str, old: str, new: str) -> int:
         """``ALTER TABLE t RENAME COLUMN a TO b`` on plain parquet.
@@ -2976,7 +2938,7 @@ class LakeEngine:
                 f"ALTER TABLE {qtable} SET TBLPROPERTIES ('generated.col.{new}' = '{esc}')"
             )
         self.write_curated(table, renamed, mode="overwrite", partition_cols=parts)
-        return len(self.spark.table(qtable).inputFiles())
+        return len(self._live_files(table))
 
     def table_layout_report(self, table: str, target_file_bytes: int = _TARGET_FILE_BYTES) -> DataFrame:
         """One-row layout-health summary computed FROM THE SCAN ITSELF
@@ -3183,9 +3145,9 @@ class LakeEngine:
     # the files that contain >=1 matching row. Untouched files are
     # neither read twice nor rewritten — verified byte-identical in
     # tests. Delta does the same dance via the transaction log; here
-    # the file manifest + snapshot journal stand in (every pre-DML
-    # file is already hard-link-retained by its writing snapshot, so
-    # time travel across a DELETE keeps working).
+    # the file manifest + snapshot journal stand in (the commit
+    # retires the files it replaces instead of deleting them, so time
+    # travel across a DELETE keeps working).
     def _fits_broadcast(
         self, df: DataFrame, cap_bytes: int = 64 << 20, cap_rows: int = 200_000
     ) -> bool:
@@ -3246,7 +3208,7 @@ class LakeEngine:
         )
         if not hits:
             return 0
-        files, bins = self._rewrite_set(table, [r["f"] for r in hits])
+        files, bins = self._rewrite_set(table, [_spark_file(r["f"]) for r in hits])
         subset = self._read_files_as_table_schema(qtable, files, bins)
         props = self._table_props(table) if operation == "update" else {}
         replacement = rewrite(subset, cond, props).select(*target.columns, _BIN)
@@ -3315,17 +3277,19 @@ class LakeEngine:
         4. append the snapshot entry: the previous manifest minus
            ``removed_files`` plus the moved-in files. This is the
            commit point;
-        5. unlink ``removed_files`` (retained snapshot links keep their
-           inodes for time travel).
+        5. retire ``removed_files`` into the table's retention
+           directory (`_retire`), where time travel still reads them;
+           a table with no journaled version deletes them.
 
         A crash before step 4 leaves `read_snapshot` on the old
         version, a crash after it on the new one; either way
         `vacuum_orphans` puts the directory back in line with that
         version (until then a directory scan may see rows twice, never
         lose them). Step 2 is the exception: dropping a managed table
-        deletes its files, so a crash between it and step 4 leaves the
-        live table empty and `restore_snapshot` brings the old version
-        back. Only local (``file:``) locations: any other scheme raises
+        deletes its directory, so step 5 runs before it, and a crash
+        between it and step 4 leaves the live table empty;
+        `restore_snapshot` brings the old version back from retention.
+        Only local (``file:``) locations: any other scheme raises
         before anything is staged."""
         qtable = self.qualified(table)
         if create is None:
@@ -3351,7 +3315,18 @@ class LakeEngine:
         live = self._live_files(table, history)
         if removed_files is None:
             removed_files = live
+        gone = {_local_path(f) for f in removed_files}
+
+        def retire() -> None:
+            for p in gone:
+                if os.path.exists(p):
+                    if history:
+                        self._retire(table, history[-1]["base"], p)
+                    else:
+                        os.remove(p)
+
         if create is not None:
+            retire()  # the DROP deletes a managed table's directory
             schema = replacement.schema
             self.spark.sql(f"DROP TABLE IF EXISTS {qtable}")
             self._create_table(qtable, schema, parts, create[1])
@@ -3379,12 +3354,9 @@ class LakeEngine:
         shutil.rmtree(scratch, ignore_errors=True)
         if new_dirs and parts:
             self.recover_partitions(table)
-        gone = {_local_path(f) for f in removed_files}
         kept = [f for f in live if _local_path(f) not in gone]
         self._journal_snapshot(table, kept + added, layout, operation, n_written, history)
-        for p in gone:
-            if os.path.exists(p):
-                os.remove(p)
+        retire()
         self.spark.catalog.refreshTable(qtable)
         return n_written
 
@@ -3397,7 +3369,7 @@ class LakeEngine:
             return history[-1]["files"]
         qtable = self.qualified(table)
         if self.spark.catalog.tableExists(qtable):
-            return self.spark.table(qtable).inputFiles()
+            return [_spark_file(f) for f in self.spark.table(qtable).inputFiles()]
         return []
 
     def _rewrite_set(self, table: str, matched: list[str]) -> tuple[list[str], dict[str, int]]:
@@ -3836,6 +3808,7 @@ class LakeEngine:
         matched_files = [r[0] for r in probe.distinct().collect()]
         if None in matched_files:
             raise ValueError(dup_msg)
+        matched_files = [_spark_file(f) for f in matched_files]
         bins: dict[str, int] = {}
         if matched_files:
             matched_files, bins = self._rewrite_set(table, matched_files)

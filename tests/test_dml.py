@@ -10,7 +10,7 @@ target, so a touched partition that fits the target ends as one file.
 Files of untouched partitions, and files beyond that budget (those at
 or above the target size among them), survive byte-identical (same
 inode), and time travel across a DELETE still reads the pre-DML rows
-via the snapshot journal's hard-link retention.
+from the files the DELETE retired.
 """
 
 from __future__ import annotations

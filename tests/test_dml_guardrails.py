@@ -415,24 +415,6 @@ def test_dml_takes_neighbours_only_within_target(spark, eng, tiny_advisory, monk
     assert spark.table(qt).filter("v = 'u0'").count() == 0
 
 
-def test_compact_if_fragmented_policy(spark, eng):
-    qt = _seed(spark, eng)
-    # fragment: 20 rows across many tiny files
-    df = spark.createDataFrame(
-        [(i, f"n{i}", (i % 5) + 1) for i in range(20)], "k int, name string, qty int"
-    )
-    eng.write_curated("t", df.repartition(16), mode="overwrite", partition_cols=[])
-    n_before = len(spark.table(qt).inputFiles())
-    assert n_before >= 8
-    # healthy threshold high enough → no-op
-    assert eng.compact_if_fragmented("t", small_file_ratio=1.1) == -1
-    assert len(spark.table(qt).inputFiles()) == n_before
-    # tiny files are all below target → compacts
-    n_after = eng.compact_if_fragmented("t", small_file_ratio=0.5)
-    assert 0 < n_after < n_before
-    assert spark.table(qt).count() == 20
-
-
 def test_vacuum_orphans_repairs_crash_artifacts(spark, eng, monkeypatch):
     """A file left in the table directory by a crashed rewrite is
     silently READ by the Hive parquet scan (extra rows); vacuum_orphans
@@ -512,15 +494,43 @@ def test_delete_rows_on_orc_table(spark, eng):
     assert all(f.endswith(".orc") for f in os.listdir(loc) if not f.startswith((".", "_")))
 
 
+def test_dml_on_escaped_partition_value(spark, eng):
+    """Hive escapes ':' in a partition directory (``p=a%3Ab``), and
+    Spark names such a file percent-encoded once more; partition
+    compaction, DELETE, UPDATE and MERGE find and rewrite it all the
+    same."""
+    import os
+
+    schema = "k int, v string, p string"
+    rows = [(k, f"v{k}", "a:b" if k % 2 else "c") for k in range(6)]
+    eng.write_curated("e", spark.createDataFrame(rows[:3], schema), mode="overwrite", partition_cols=["p"])
+    eng.write_curated("e", spark.createDataFrame(rows[3:], schema), mode="append", partition_cols=["p"])
+    qt = eng.qualified("e")
+    assert eng.compact_partitions("e", "p = 'a:b'") == 1
+    assert eng.snapshot_history("e")[-1]["operation"] == "compact"
+    assert eng.delete_rows("e", "k = 1") == 1
+    assert eng.update_rows("e", "k = 3", {"v": "'u3'"}) == 1
+    src = spark.createDataFrame([(5, "m5", "a:b"), (7, "n7", "a:b")], schema)
+    assert eng.merge_rows("e", src, ["k"]) == {"updated": 1, "deleted": 0, "inserted": 1}
+    assert sorted(tuple(r) for r in spark.table(qt).collect()) == [
+        (0, "v0", "c"), (2, "v2", "c"), (3, "u3", "a:b"), (4, "v4", "c"), (5, "m5", "a:b"), (7, "n7", "a:b")
+    ]
+    live = [f.removeprefix("file://") for f in eng.snapshot_history("e")[-1]["files"]]
+    assert all(os.path.exists(f) for f in live)
+    assert any("p=a%3Ab" in f for f in live)
+
+
 # ------------------------------------------------------- crash-ordered commit
 class _Crash(RuntimeError):
     pass
 
 
 def _arm_crash(monkeypatch, step: str, nth: int) -> None:
-    """Make the engine's ``nth`` call of ``os.<step>`` — or, for
-    ``step == "journal"``, its snapshot-journal append — raise, as if
-    the process died there."""
+    """Make the engine's ``nth`` call of ``os.<step>`` raise, as if the
+    process died there. Two steps name a commit step instead:
+    ``"journal"`` is the snapshot-journal append, and ``"remove"`` the
+    removal of a replaced file from the table, which retires it with
+    ``os.rename``."""
     import os
     import types
 
@@ -536,15 +546,16 @@ def _arm_crash(monkeypatch, step: str, nth: int) -> None:
 
         monkeypatch.setattr(engine_mod, "_append_jsonl", append)
         return
+    name = "rename" if step == "remove" else step
     calls = []
 
     def fault(*args, **kwargs):
         calls.append(args)
         if len(calls) == nth:
-            raise _Crash(f"os.{step} #{nth}")
-        return getattr(os, step)(*args, **kwargs)
+            raise _Crash(f"os.{name} #{nth}")
+        return getattr(os, name)(*args, **kwargs)
 
-    monkeypatch.setattr(engine_mod, "os", types.SimpleNamespace(**{**vars(os), step: fault}))
+    monkeypatch.setattr(engine_mod, "os", types.SimpleNamespace(**{**vars(os), name: fault}))
 
 
 def _rows(df):
@@ -591,8 +602,8 @@ _OPS = {
 }
 
 # (step, nth call, version the crash must leave): moves and the journal
-# append come before the commit point, unlinks after it. An append
-# removes no file, so it has no unlink step.
+# append come before the commit point, retiring the replaced files
+# after it. An append removes no file, so it has no removal step.
 _CRASH_POINTS = [
     ("replace", 1, "old"),
     ("replace", 2, "old"),
@@ -609,8 +620,9 @@ _CRASH_POINTS = [
 def test_commit_crash_leaves_old_or_new_version(spark, eng, monkeypatch, op, step, nth, lands):
     """A crash at any file step of `_commit` leaves `read_snapshot` on
     the old or the new version, row for row; `vacuum_orphans` then
-    brings the live table to that same version, and the operation can
-    simply be run again."""
+    brings the live table to that same version, the version before the
+    operation stays readable, and the operation can simply be run
+    again."""
     df = spark.createDataFrame(
         [(i, f"n{i}", i % 2) for i in range(20)], "k int, v string, p int"
     )
@@ -618,6 +630,7 @@ def test_commit_crash_leaves_old_or_new_version(spark, eng, monkeypatch, op, ste
     eng.write_curated("t", df.filter("k >= 10"), mode="append", partition_cols=["p"])
     qt = eng.qualified("t")
     old = _rows(spark.table(qt))
+    v_old = eng.snapshot_history("t")[-1]["version"]
     run, result = _OPS[op]
     new = result(old)
     expected = old if lands == "old" else new
@@ -631,6 +644,7 @@ def test_commit_crash_leaves_old_or_new_version(spark, eng, monkeypatch, op, ste
     eng.vacuum_orphans("t")
     assert _rows(spark.table(qt)) == expected
     assert not eng._scratch_leftovers("t_")
+    assert _rows(eng.read_snapshot("t", v_old)) == old
 
     run(spark, eng)
     assert _rows(spark.table(qt)) == new

@@ -309,6 +309,87 @@ def test_vacuum_reclaims_pre_horizon_versions_only(engine, spark):
     assert [h["version"] for h in engine.snapshot_history("t")] == [1, 2, 3]
 
 
+def _rows(df):
+    return sorted(tuple(r) for r in df.select("id", "v", "p").collect())
+
+
+def test_retention_keeps_each_removed_file_once(engine, spark):
+    """A commit retires only the files it removes: after appends, MERGEs,
+    a DELETE and a compaction, the table's retention directory holds
+    each removed file exactly once, at its path under the table, and
+    no per-version tree; no file has a second link; every version
+    still reads its own rows."""
+    import os
+
+    schema = "id int, v string, p string"
+    batch = lambda ids, v: spark.createDataFrame(  # noqa: E731
+        [(i, f"{v}{i}", "ab"[i % 2]) for i in ids], schema
+    )
+    qt = engine.qualified("r")
+    commits = [
+        lambda: engine.write_curated("r", batch(range(6), "a"), mode="overwrite", partition_cols=["p"]),
+        lambda: engine.write_curated("r", batch(range(6, 10), "b"), mode="append", partition_cols=["p"]),
+        lambda: engine.merge_rows("r", batch([1, 10], "m"), ["id"]),
+        lambda: engine.write_curated("r", batch(range(11, 14), "c"), mode="append", partition_cols=["p"]),
+        lambda: engine.delete_rows("r", "id = 2"),
+        lambda: engine.compact_table("r"),
+        lambda: engine.merge_rows("r", batch([3, 14], "n"), ["id"]),
+    ]
+    states = []  # the live rows after each commit
+    for commit in commits:
+        commit()
+        states.append(_rows(spark.table(qt)))
+    hist = engine.snapshot_history("r")
+    assert [h["operation"] for h in hist] == [
+        "overwrite", "append", "merge", "append", "delete", "compact", "merge"
+    ]
+
+    retention = os.path.join(engine.zones.root, "_snapshot_log", "r")
+    assert os.listdir(retention) == ["retired"]
+    retired = sorted(
+        os.path.relpath(os.path.join(d, f), os.path.join(retention, "retired"))
+        for d, _, fs in os.walk(retention)
+        for f in fs
+    )
+    removed = {f for prev, cur in zip(hist, hist[1:]) for f in prev["files"] if f not in cur["files"]}
+    base = hist[-1]["base"]
+    assert retired == sorted(os.path.relpath(f.removeprefix("file://"), base) for f in removed)
+    live = [f.removeprefix("file://") for f in hist[-1]["files"]]
+    kept = [os.path.join(retention, "retired", f) for f in retired]
+    assert all(os.stat(f).st_nlink == 1 for f in live + kept)
+    for h, state in zip(hist, states):
+        assert _rows(engine.read_snapshot("r", h["version"])) == state
+
+
+def test_version_before_recreate_stays_readable(engine, spark):
+    """A re-partition re-creates the catalog entry, and dropping a
+    managed table deletes its directory: the live files are retired
+    before the drop, so the version before the re-create stays
+    readable, clonable and restorable with its own layout. File counts
+    come from the manifest."""
+    schema = "id int, v string, p string, q int"
+    rows = [(i, f"v{i}", "ab"[i % 2], i % 3) for i in range(9)]
+    engine.write_curated("rc", spark.createDataFrame(rows, schema), mode="overwrite", partition_cols=["p"])
+    v1 = engine.snapshot_history("rc")[-1]["version"]
+    qt = engine.qualified("rc")
+    n_files = engine.repartition_table("rc", ["q"])
+    assert n_files == len(spark.table(qt).inputFiles())
+    assert engine._table_layout(qt)[1] == ["q"]
+
+    assert sorted(tuple(r) for r in engine.read_snapshot("rc", v1).select("id", "v", "p", "q").collect()) == rows
+    engine.clone_table("rc", "rc_v1", version=v1)
+    clone = engine.qualified("rc_v1")
+    assert engine._table_layout(clone)[1] == ["p"]
+    assert sorted(tuple(r) for r in spark.table(clone).select("id", "v", "p", "q").collect()) == rows
+
+    engine.restore_snapshot("rc", v1)
+    assert engine._table_layout(qt)[1] == ["p"]
+    assert sorted(tuple(r) for r in spark.table(qt).select("id", "v", "p", "q").collect()) == rows
+    # the re-partitioned version, replaced by the restore, reads too
+    v2 = v1 + 1
+    assert engine.read_snapshot("rc", v2).count() == len(rows)
+
+
 def test_dpp_join_raises_when_pruning_disabled(spark):
     from cbts_datalake_synnex_spark.workload.lifecycle import lc_dpp_join
 
