@@ -34,6 +34,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+import re
 import shutil
 import uuid
 from contextlib import contextmanager
@@ -1023,29 +1024,34 @@ class LakeEngine:
         """spark.sql with the engine database as default — the whole of
         Athena (src/purchase_orders.py:23-24) collapses to this.
 
-        DELETE/UPDATE statements are additionally dispatched to the
-        engine's row-level DML (`delete_rows`/`update_rows`) on the
-        parquet path, where Spark SQL itself would refuse them (v2
-        table DML needs Delta/Iceberg) — so the Delta SQL surface
-        (``DELETE FROM t WHERE ...``, ``UPDATE t SET ... WHERE ...``)
-        keeps working verbatim. DML returns a one-row metrics
-        DataFrame (``affected_rows``), like Delta's command output."""
-        dml = self._dispatch_sql_dml(query)
-        if dml is not None:
-            return dml
+        Statements Spark SQL refuses on plain parquet keep their Delta
+        form: the Delta utility statements match a pattern each, and a
+        statement that starts with DELETE, UPDATE, MERGE or ALTER, or
+        holds ``AS OF``, dispatches on its parsed plan. Every other
+        statement goes to spark.sql untouched. DML returns a one-row
+        metrics DataFrame (``affected_rows``), like Delta's output."""
+        q = query.strip().rstrip(";")
+        out = self._dispatch_sql_utility(q)
+        if out is None and _PARSED_SQL.search(q):
+            out = self._dispatch_sql_plan(q, self._parse_sql(q))
+        if out is not None:
+            return out
         self.spark.catalog.setCurrentDatabase(self.database)
         return self.spark.sql(query)
 
-    def _dml_table(self, ref: str) -> str:
-        """Resolve a possibly db-qualified DML table reference to a bare
-        table name in the engine database. A statement naming any OTHER
-        database is refused instead of being silently rerouted to the
-        engine database's same-named table (which would be a
-        wrong-table destructive operation — plain Spark SQL would at
-        least have targeted the named database)."""
-        parts = ref.split(".")
+    def _parse_sql(self, q: str):
+        """Spark's unresolved logical plan of ``q`` (a JVM object)."""
+        return self.spark._jsparkSession.sessionState().sqlParser().parsePlan(q)
+
+    def _dml_table(self, ref: str | Sequence[str]) -> str:
+        """Resolve a possibly db-qualified DML table reference (dotted
+        text or name parts) to a bare table name in the engine
+        database. A statement naming any OTHER database is refused
+        instead of being silently rerouted to the engine database's
+        same-named table (a wrong-table destructive operation)."""
+        parts = ref.split(".") if isinstance(ref, str) else list(ref)
         if len(parts) > 2:
-            raise ValueError(f"unsupported table reference in DML: {ref!r}")
+            raise ValueError(f"unsupported table reference in DML: {'.'.join(parts)!r}")
         if len(parts) == 2 and parts[0].lower() != self.database.lower():
             raise ValueError(
                 f"DML dispatch targets database {parts[0]!r} but this engine "
@@ -1054,71 +1060,46 @@ class LakeEngine:
             )
         return parts[-1]
 
-    def _dispatch_sql_dml(self, query: str) -> DataFrame | None:
-        import re
+    def _plan_table(self, node) -> str:
+        """The engine table a parsed relation names (no alias allowed)."""
+        if _jclass(node) not in ("UnresolvedRelation", "UnresolvedTable"):
+            raise ValueError(f"unsupported DML target: {node.toString()}")
+        return self._dml_table(_scala_list(node.multipartIdentifier()))
 
-        q = query.strip().rstrip(";")
-        m = re.match(r"(?is)^DELETE\s+FROM\s+([A-Za-z0-9_.]+)(?:\s+WHERE\s+(.+))?$", q)
-        if m:
-            table = self._dml_table(m.group(1))
-            cond = m.group(2) or "true"
-            n = self.delete_rows(table, cond)
-            return self.spark.createDataFrame([(n,)], "affected_rows bigint")
-        m = re.match(
-            r"(?is)^UPDATE\s+([A-Za-z0-9_.]+)\s+SET\s+(.+?)(?:\s+WHERE\s+(.+))?$", q
-        )
-        if m:
-            table = self._dml_table(m.group(1))
-            sets = _split_assignments(m.group(2))
-            cond = m.group(3) or "true"
-            n = self.update_rows(table, cond, sets)
-            return self.spark.createDataFrame([(n,)], "affected_rows bigint")
-        # Delta utility statements (Spark SQL has no parquet equivalents)
+    def _dispatch_sql_utility(self, q: str) -> DataFrame | None:
+        """Delta utility statements: Spark's grammar has none of them
+        (OPTIMIZE does not parse; ``DESCRIBE HISTORY t`` parses as a
+        DESCRIBE of a column), so each keeps its one-line pattern."""
         m = re.match(
             r"(?is)^OPTIMIZE\s+([A-Za-z0-9_.]+)"
             r"(?:\s+ZORDER\s+BY\s*\(\s*([A-Za-z0-9_,\s`]+?)\s*\))?$",
             q,
         )
         if m:
-            table = self._dml_table(m.group(1))
-            cols = (
-                [c.strip().strip("`") for c in m.group(2).split(",")]
-                if m.group(2)
-                else None
-            )
+            cols = [c.strip().strip("`") for c in m.group(2).split(",")] if m.group(2) else None
             n = self.compact_table(
-                table, cluster_by=cols, zorder=bool(cols and len(cols) >= 2)
+                self._dml_table(m.group(1)), cluster_by=cols, zorder=bool(cols and len(cols) >= 2)
             )
             return self.spark.createDataFrame([(n,)], "n_files bigint")
         m = re.match(
             r"(?is)^VACUUM\s+([A-Za-z0-9_.]+)(?:\s+RETAIN\s+(\d+)\s+VERSIONS)?$", q
         )
         if m:
-            table = self._dml_table(m.group(1))
             keep = int(m.group(2)) if m.group(2) else 2
-            n = self.vacuum_snapshots(table, keep_last=keep)
+            n = self.vacuum_snapshots(self._dml_table(m.group(1)), keep_last=keep)
             return self.spark.createDataFrame([(n,)], "versions_reclaimed bigint")
         m = re.match(r"(?is)^DESCRIBE\s+HISTORY\s+([A-Za-z0-9_.]+)$", q)
         if m:
-            table = self._dml_table(m.group(1))
             hist = [
-                (
-                    h["version"],
-                    h["at"],
-                    len(h["files"]),
-                    ",".join(h.get("partition_cols") or []),
-                    h["operation"],
-                    h["rows_written"],
-                )
-                for h in self.snapshot_history(table)
+                (h["version"], h["at"], len(h["files"]), ",".join(h.get("partition_cols") or []),
+                 h["operation"], h["rows_written"])
+                for h in self.snapshot_history(self._dml_table(m.group(1)))
             ]
             return self.spark.createDataFrame(
                 hist,
                 "version int, at string, n_files int, partition_cols string, "
                 "operation string, rows_written bigint",
             )
-        if re.match(r"(?is)^MERGE\s+INTO\b", q):
-            return self._dispatch_sql_merge(q)
         m = re.match(
             r"(?is)^RESTORE\s+TABLE\s+([A-Za-z0-9_.]+)\s+TO\s+"
             r"(VERSION|TIMESTAMP)\s+AS\s+OF\s+('[^']*'|\d+)$",
@@ -1127,31 +1108,12 @@ class LakeEngine:
         if m:
             table = self._dml_table(m.group(1))
             kind, spec = m.group(2).upper(), m.group(3).strip("'")
-            version = (
-                int(spec) if kind == "VERSION" else self.version_at(table, spec)
-            )
+            version = int(spec) if kind == "VERSION" else self.version_at(table, spec)
             n = self.restore_snapshot(table, version)
             return self.spark.createDataFrame([(n,)], "new_version bigint")
         m = re.match(r"(?is)^DESCRIBE\s+DETAIL\s+([A-Za-z0-9_.]+)$", q)
         if m:
             return self.describe_detail(self._dml_table(m.group(1)))
-        # DROP/RENAME COLUMN (Spark SQL refuses both on v1 parquet
-        # tables; other ALTER forms — ADD COLUMNS, SET TBLPROPERTIES —
-        # fall through to spark.sql, which handles them natively)
-        m = re.match(
-            r"(?is)^ALTER\s+TABLE\s+([A-Za-z0-9_.]+)\s+DROP\s+COLUMN\s+`?(\w+)`?$", q
-        )
-        if m:
-            n = self.drop_column(self._dml_table(m.group(1)), m.group(2))
-            return self.spark.createDataFrame([(n,)], "n_files bigint")
-        m = re.match(
-            r"(?is)^ALTER\s+TABLE\s+([A-Za-z0-9_.]+)\s+RENAME\s+COLUMN\s+"
-            r"`?(\w+)`?\s+TO\s+`?(\w+)`?$",
-            q,
-        )
-        if m:
-            n = self.rename_column(self._dml_table(m.group(1)), m.group(2), m.group(3))
-            return self.spark.createDataFrame([(n,)], "n_files bigint")
         m = re.match(
             r"(?is)^CREATE\s+TABLE\s+([A-Za-z0-9_.]+)\s+SHALLOW\s+CLONE\s+"
             r"([A-Za-z0-9_.]+)(?:\s+VERSION\s+AS\s+OF\s+(\d+))?$",
@@ -1163,132 +1125,121 @@ class LakeEngine:
             self.clone_table(src, dst, version=version)
             n = self.spark.table(self.qualified(dst)).count()
             return self.spark.createDataFrame([(n,)], "cloned_rows bigint")
-        if re.search(r"(?i)\b(VERSION|TIMESTAMP)\s+AS\s+OF\b", q):
-            return self._dispatch_sql_time_travel(q)  # None if literal-only
         return None
 
-    def _dispatch_sql_time_travel(self, q: str) -> DataFrame | None:
+    def _dispatch_sql_plan(self, q: str, plan) -> DataFrame | None:
+        """Dispatch on the class of ``q``'s parsed ``plan``; conditions
+        and SET values are their exact text in ``q`` (`_origin_text`).
+        None leaves the statement to spark.sql (ALTER TABLE ADD
+        COLUMNS, a query whose ``AS OF`` text is data)."""
+        kind = _jclass(plan)
+        if kind == "DeleteFromTable":
+            n = self.delete_rows(self._plan_table(plan.table()), _origin_text(q, plan.condition()))
+            return self.spark.createDataFrame([(n,)], "affected_rows bigint")
+        if kind == "UpdateTable":
+            where = _option_text(q, plan.condition()) or "true"
+            n = self.update_rows(self._plan_table(plan.table()), where, _assignments(q, plan))
+            return self.spark.createDataFrame([(n,)], "affected_rows bigint")
+        if kind == "MergeIntoTable":
+            return self._dispatch_sql_merge(q, plan)
+        # DROP/RENAME COLUMN: Spark SQL refuses both on v1 parquet
+        # tables; other ALTER forms (ADD COLUMNS, SET TBLPROPERTIES)
+        # fall through to spark.sql, which handles them natively
+        if kind == "DropColumns":
+            cols = [".".join(_scala_list(f.name())) for f in _scala_list(plan.columnsToDrop())]
+            if len(cols) != 1:
+                raise ValueError("ALTER TABLE DROP COLUMN takes one column")
+            n = self.drop_column(self._plan_table(plan.table()), cols[0])
+            return self.spark.createDataFrame([(n,)], "n_files bigint")
+        if kind == "RenameColumn":
+            col = ".".join(_scala_list(plan.column().name()))
+            n = self.rename_column(self._plan_table(plan.table()), col, plan.newName())
+            return self.spark.createDataFrame([(n,)], "n_files bigint")
+        return self._dispatch_sql_time_travel(q, plan)
+
+    def _dispatch_sql_time_travel(self, q: str, plan) -> DataFrame | None:
         """``SELECT ... FROM t VERSION AS OF 3`` / ``FROM t TIMESTAMP
         AS OF '2024-05-17 12:00:00'`` (Delta time-travel SQL): each
-        travel clause is materialized as a temp view over the snapshot
-        journal read, the query then runs with the view substituted —
-        so joins between different versions of the same table work.
-
-        Only clauses following a FROM/JOIN table reference OUTSIDE any
-        string literal are treated as time travel; a query whose only
-        ``VERSION AS OF`` text lives inside a literal returns None and
-        runs verbatim through spark.sql (the substitution would
-        otherwise corrupt the literal's surrounding text)."""
-        import re
-
-        # Single-quote literal spans (with '' escapes) — matches whose
-        # clause starts inside one are plain data, not syntax.
+        parsed travel relation, in CTEs and subqueries too, becomes a
+        temp view over the snapshot read, whose name replaces its span
+        of ``q`` (table name through the ``AS OF`` clause); so versions
+        of one table can join. None when ``plan`` has no travel."""
         spans = []
-        for lm in re.finditer(r"'(?:[^']|'')*'", q):
-            spans.append((lm.start(), lm.end()))
-
-        def _in_literal(pos: int) -> bool:
-            return any(s <= pos < e for s, e in spans)
-
-        views = {}
-
-        def _sub(m) -> str:
-            # group(3) is the travel spec and MAY itself be a quoted
-            # timestamp literal; the literal test applies to the clause
-            # START (the table reference), never the spec.
-            if _in_literal(m.start(2)):
-                return m.group(0)
-            table = self._dml_table(m.group(2))
-            kind, spec = m.group(3).upper(), m.group(4).strip().strip("'\"")
-            if kind == "VERSION":
-                snap = self.read_snapshot(table, int(spec))
-                tag = f"__tt_{table}_v{spec}"
+        for node in _plan_nodes(plan):
+            if _jclass(node) != "RelationTimeTravel":
+                continue
+            rel = node.relation()
+            table = self._plan_table(rel)
+            if node.version().isDefined():
+                version = int(node.version().get())
             else:
-                snap = self.read_snapshot_at(table, spec)
-                tag = f"__tt_{table}_t{abs(hash(spec)) % 10**8}"
-            views[tag] = snap
-            return f"{m.group(1)} {tag}"
-
-        rewritten = re.sub(
-            r"(?is)\b(FROM|JOIN)\s+([A-Za-z0-9_.]+)\s+"
-            r"(VERSION|TIMESTAMP)\s+AS\s+OF\s+('[^']*'|\S+)",
-            _sub,
-            q,
-        )
-        if not views:
+                expr = _origin_text(q, node.timestamp().get())
+                ts = self.spark.sql(f"SELECT CAST(({expr}) AS STRING)").first()[0]
+                version = self.version_at(table, ts)
+            tag = f"__tt_{table}_v{version}"
+            self.read_snapshot(table, version).createOrReplaceTempView(tag)
+            spans.append((_span(rel)[0], _span(node)[1], tag))
+        if not spans:
             return None
-        for tag, snap in views.items():
-            snap.createOrReplaceTempView(tag)
+        for start, stop, tag in sorted(spans, reverse=True):
+            q = f"{q[:start]}{tag}{q[stop:]}"
         self.spark.catalog.setCurrentDatabase(self.database)
-        return self.spark.sql(rewritten)
+        return self.spark.sql(q)
 
-    def _dispatch_sql_merge(self, q: str) -> DataFrame:
+    def _dispatch_sql_merge(self, q: str, plan) -> DataFrame:
         """Delta-form ``MERGE INTO t [AS t] USING src|(subquery) [AS s]
-        ON t.k = s.k [AND ...] WHEN ... THEN ...`` → `merge_rows`.
-        Supported clauses: WHEN MATCHED [AND cond] THEN DELETE / THEN
-        UPDATE SET * | SET assignments, WHEN NOT MATCHED [AND cond]
-        THEN INSERT *. The ON condition must be an equi-key
-        conjunction (what `merge_rows` supports — the common and
-        file-prunable MERGE shape)."""
-        import re
-
-        head = re.match(
-            r"(?is)^MERGE\s+INTO\s+([A-Za-z0-9_.]+)(?:\s+AS\s+t|\s+t)?\s+USING\s+"
-            r"(\((?:[^()]|\([^()]*\))*\)|[A-Za-z0-9_.]+)(?:\s+AS\s+s|\s+s)?\s+ON\s+(.+?)\s+(WHEN\s+.+)$",
-            q,
-        )
-        if not head:
-            raise ValueError(f"unsupported MERGE syntax: {q[:120]}...")
-        table = self._dml_table(head.group(1))
-        src_sql, on_sql, clauses_sql = head.group(2), head.group(3), head.group(4)
-        if src_sql.startswith("("):
-            self.spark.catalog.setCurrentDatabase(self.database)
-            source = self.spark.sql(src_sql[1:-1])
-        else:
-            source = self.spark.table(self.qualified(self._dml_table(src_sql)))
-        keys = []
-        for part in re.split(r"(?i)\s+AND\s+", on_sql.strip()):
-            km = re.match(
-                r"(?is)^\s*t\.`?(\w+)`?\s*=\s*s\.`?(\w+)`?\s*$", part
-            ) or re.match(r"(?is)^\s*s\.`?(\w+)`?\s*=\s*t\.`?(\w+)`?\s*$", part)
-            if not km or km.group(1) != km.group(2):
-                raise ValueError(
-                    f"MERGE ON must be an equi-key conjunction (t.k = s.k): {part!r}"
-                )
-            keys.append(km.group(1))
+        ON t.k = s.k [AND ...]`` → `merge_rows`, with WHEN MATCHED [AND
+        cond] THEN DELETE, WHEN MATCHED THEN UPDATE SET * | SET
+        assignments, WHEN NOT MATCHED [AND cond] THEN INSERT *. ON must
+        be an equi-key conjunction (the file-prunable MERGE shape).
+        Anything else, WHEN NOT MATCHED BY SOURCE included, raises
+        ValueError."""
+        target, source = plan.targetTable(), plan.sourceTable()
+        if _jclass(target) == "SubqueryAlias":
+            if target.alias().lower() != "t":
+                raise ValueError(f"MERGE target alias must be t: {target.alias()!r}")
+            target = target.child()
+        table = self._plan_table(target)
+        if _jclass(source) == "SubqueryAlias":
+            if source.alias().lower() != "s":
+                raise ValueError(f"MERGE source alias must be s: {source.alias()!r}")
+            source = source.child()
+        keys = _merge_keys(q, plan.mergeCondition())
+        if _scala_list(plan.notMatchedBySourceActions()):
+            raise ValueError("WHEN NOT MATCHED BY SOURCE is not supported")
         upd: Any = None
         dele: Any = None
         ins: Any = False
-        for cm in re.finditer(
-            r"(?is)WHEN\s+(NOT\s+)?MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+"
-            r"(DELETE|UPDATE\s+SET\s+\*|UPDATE\s+SET\s+.+?|INSERT\s+\*)"
-            r"(?=\s+WHEN\s|$)",
-            clauses_sql,
-        ):
-            not_matched, cond, action = cm.group(1), cm.group(2), cm.group(3).strip()
-            if not_matched:
-                if not re.match(r"(?is)^INSERT\s+\*$", action):
-                    raise ValueError("WHEN NOT MATCHED supports only INSERT *")
-                # merge_rows' insert condition sees bare SOURCE columns
-                ins = re.sub(r"(?i)\bs\.", "", cond) if cond else True
-            elif re.match(r"(?is)^DELETE$", action):
-                dele = cond if cond else True
-            elif re.match(r"(?is)^UPDATE\s+SET\s+\*$", action):
-                if cond:
-                    raise ValueError("UPDATE SET * with a condition is not supported")
+        for action in _scala_list(plan.matchedActions()):
+            kind, cond = _jclass(action), _option_text(q, action.condition())
+            if kind == "DeleteAction" and dele is None:
+                dele = cond or True
+            elif kind == "UpdateStarAction" and upd is None and cond is None:
                 upd = "all"
+            elif kind == "UpdateAction" and upd is None and cond is None:
+                upd = _assignments(q, action, "t")
             else:
-                if cond:
-                    raise ValueError("conditional UPDATE SET is not supported")
-                upd = _split_assignments(re.sub(r"(?is)^UPDATE\s+SET\s+", "", action))
+                raise ValueError(
+                    "WHEN MATCHED supports one [AND cond] DELETE and one "
+                    f"unconditional UPDATE: {action.toString()}"
+                )
+        for action in _scala_list(plan.notMatchedActions()):
+            if _jclass(action) != "InsertStarAction" or ins is not False:
+                raise ValueError("WHEN NOT MATCHED supports only one INSERT *")
+            ins = _option_text(q, action.condition()) or True
+        # a relation reads as in a query: temp views first, then this
+        # database; a subquery runs through `sql`, time travel included
+        start, stop = _span(source)
+        text = q[start:stop]
+        src = self.sql(f"SELECT * FROM {text}" if _jclass(source) == "UnresolvedRelation" else text)
         # Delta MERGE default: NO schema auto-merge — source columns
         # absent from the target (op codes, condition helpers) are
         # condition-only and never widen the table.
         tcols = {c.lower() for c in self.spark.table(self.qualified(table)).columns}
-        exclude = [c for c in source.columns if c.lower() not in tcols]
+        exclude = [c for c in src.columns if c.lower() not in tcols]
         res = self.merge_rows(
             table,
-            source,
+            src,
             keys,
             when_matched_update=upd,
             when_matched_delete=dele,
@@ -2388,8 +2339,6 @@ class LakeEngine:
         and rewriting the files it touches with only its rows would
         DROP the rest. Returns the file count of the selected
         partitions afterwards."""
-        import re as _re
-
         qtable = self.qualified(table)
         columns = self.spark.table(qtable).columns
         schema_parts = self._table_layout(qtable)[1]
@@ -2397,7 +2346,7 @@ class LakeEngine:
             raise ValueError(
                 f"{table} is unpartitioned — use compact_table for a full rewrite"
             )
-        referenced = set(_re.findall(r"[A-Za-z_][A-Za-z0-9_]*", where)) & set(columns)
+        referenced = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", where)) & set(columns)
         bad = referenced - set(schema_parts)
         if bad:
             raise ValueError(
@@ -2862,9 +2811,7 @@ class LakeEngine:
         raise ValueError(f"no such column {column!r} in {qtable} (has {cols})")
 
     def _refuse_referenced(self, table: str, column: str, *, skip_generated_self: bool) -> None:
-        import re as _re
-
-        pat = _re.compile(rf"\b{_re.escape(column)}\b", _re.IGNORECASE)
+        pat = re.compile(rf"\b{re.escape(column)}\b", re.IGNORECASE)
         for name, expr in self.table_constraints(table).items():
             if pat.search(expr):
                 raise ValueError(
@@ -3660,14 +3607,14 @@ class LakeEngine:
         DELETE`` role (mirror an upstream system's nightly snapshot),
         executed as CHANGE-SIZED work instead of the naive overwrite:
         `table_diff` classifies keys once (one full-outer key join on
-        hashes — the unavoidable compare), then inserted/changed keys
-        upsert via `merge_rows` (file-pruned rewrite) and vanished
-        keys delete via `merge_rows(when_matched_delete=True)` with
-        the keys-only frame as source. Files holding no affected keys
-        keep their inodes — the property a full overwrite loses, and
-        at 100 TB the difference between a nightly sync that rewrites
-        0.1% of files and one that rewrites all of them. Returns the
-        change counts {"inserted", "changed", "deleted"}."""
+        hashes — the unavoidable compare), then ONE `merge_rows` commit
+        applies them: the snapshot rows of inserted/changed keys upsert
+        and the vanished keys, flagged ``__gone``, delete. Files holding
+        no affected keys keep their inodes — the property a full
+        overwrite loses, and at 100 TB the difference between a nightly
+        sync that rewrites 0.1% of files and one that rewrites all of
+        them. Returns the change counts {"inserted", "changed",
+        "deleted"}."""
         from cbts_datalake_synnex_spark.operators.cdc import table_diff
 
         qtable = self.qualified(table)
@@ -3678,22 +3625,23 @@ class LakeEngine:
         counts = {"inserted": 0, "changed": 0, "deleted": 0}
         for r in delta.groupBy("change_type").count().collect():
             counts[r["change_type"]] = int(r["count"])
-        if counts["inserted"] or counts["changed"]:
-            ups_keys = delta.filter(
-                F.col("change_type").isin("inserted", "changed")
-            ).select(*keys)
-            self.merge_rows(
-                table, snapshot.join(ups_keys, keys, "left_semi"), keys
+        if any(counts.values()):
+            gone = F.col("change_type") == "deleted"
+            source = (
+                snapshot.join(delta.filter(~gone).select(*keys), keys, "left_semi")
+                .withColumn("__gone", F.lit(False))
+                .unionByName(
+                    delta.filter(gone).select(*keys, F.lit(True).alias("__gone")),
+                    allowMissingColumns=True,
+                )
             )
-        if counts["deleted"]:
-            gone = delta.filter(F.col("change_type") == "deleted").select(*keys)
             self.merge_rows(
                 table,
-                gone,
+                source,
                 keys,
-                when_matched_update=None,
-                when_matched_delete=True,
-                when_not_matched_insert=False,
+                when_matched_delete="s.__gone",
+                when_not_matched_insert="NOT s.__gone",
+                exclude_cols=["__gone"],
             )
         return counts
 
@@ -3721,8 +3669,9 @@ class LakeEngine:
           a ``{target_col: expr}`` dict (exprs may reference ``t.``/
           ``s.``), or ``None`` (matched rows left untouched).
         - ``when_not_matched_insert``: ``True`` or a SQL condition over
-          bare SOURCE columns; unmatched source rows satisfying it are
-          inserted (columns absent from the source become NULL).
+          SOURCE columns, bare or ``s.``-qualified; unmatched source
+          rows satisfying it are inserted (columns absent from the
+          source become NULL).
 
         ``sequence_col``: CDC ordering — keep only the latest change per
         key (max sequence) before merging. Without it, duplicate source
@@ -3867,11 +3816,11 @@ class LakeEngine:
             # (the probe found them all), so anti-joining the source
             # against those files' rows is exact — no scan of the
             # rest of the table, and no join at all when none matched.
-            ins = source
-            if matched_files:
-                ins = ins.join(sub.select(*keys), on=keys, how="left_anti")
+            ins = source.alias("s")
             if isinstance(when_not_matched_insert, str):
                 ins = ins.filter(f"coalesce(CAST(({when_not_matched_insert}) AS BOOLEAN), false)")
+            if matched_files:
+                ins = ins.join(sub.select(*keys), on=keys, how="left_anti")
             inserts = _aligned(ins, data_cols, fields).withColumn(_BIN, F.lit(0))
             branches.append(inserts.observe(inserted, F.count(F.lit(1)).alias("n")))
 
@@ -4027,48 +3976,91 @@ def _null_safe_key_cond(left: DataFrame, right: DataFrame, cols) -> "F.Column":
     return _and_all([left[c].eqNullSafe(right[c]) for c in cols])
 
 
-def _split_assignments(sets_sql: str) -> dict[str, str]:
-    """Split an UPDATE's ``SET col = expr, col2 = expr2`` clause into a
-    column→expression map. Comma splitting is parenthesis- and
-    string-literal-aware so ``SET v = concat(a, ',', b), n = n + 1``
-    parses correctly; each piece splits on its FIRST top-level ``=``."""
-    parts, depth, in_str, buf = [], 0, False, []
-    i = 0
-    while i < len(sets_sql):
-        ch = sets_sql[i]
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                if i + 1 < len(sets_sql) and sets_sql[i + 1] == "'":
-                    buf.append("'")
-                    i += 1  # escaped quote
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-            buf.append(ch)
-        elif ch in "([":
-            depth += 1
-            buf.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    if "".join(buf).strip():
-        parts.append("".join(buf))
-    out: dict[str, str] = {}
-    for p in parts:
-        col, _, expr = p.partition("=")
-        col, expr = col.strip().strip("`"), expr.strip()
-        if not col or not expr:
-            raise ValueError(f"malformed SET assignment: {p!r}")
-        out[col] = expr
+# Statements `LakeEngine.sql` hands to Spark's parser: DML and ALTER by
+# their first keyword, time travel by its clause.
+_PARSED_SQL = re.compile(r"(?is)^(?:DELETE|UPDATE|MERGE|ALTER)\b|\bAS\s+OF\b")
+
+
+def _jclass(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _scala_list(seq) -> list:
+    it, out = seq.iterator(), []
+    while it.hasNext():
+        out.append(it.next())
     return out
+
+
+def _plan_nodes(plan):
+    """``plan`` and every plan below it: children, CTE bodies and
+    subquery expressions (`innerChildren`)."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        yield node
+        stack += _scala_list(node.children()) + _scala_list(node.innerChildren())
+
+
+def _span(node) -> tuple[int, int]:
+    """``[start, stop)`` of the statement text a parsed node was built from."""
+    origin = node.origin()
+    if not (origin.startIndex().isDefined() and origin.stopIndex().isDefined()):
+        raise ValueError(f"no source text for {node.toString()!r}")
+    return origin.startIndex().get(), origin.stopIndex().get() + 1
+
+
+def _origin_text(q: str, expr) -> str:
+    """The exact text of ``q`` a parsed expression was built from: the
+    union of its nodes' spans, since a predicate node such as
+    ``k IN (1, 2)`` spans only ``IN (1, 2)``. The parser hands out one
+    shared TRUE and FALSE literal whose span is stale; they are skipped,
+    and a bare one reads as its value."""
+    spans, stack = [], [expr]
+    while stack:
+        node = stack.pop()
+        stack += _scala_list(node.children())
+        if not (_jclass(node) == "Literal" and node.dataType().simpleString() == "boolean"):
+            spans.append(_span(node))
+    if not spans:
+        return expr.toString()
+    return q[min(s for s, _ in spans) : max(e for _, e in spans)]
+
+
+def _option_text(q: str, opt) -> str | None:
+    return _origin_text(q, opt.get()) if opt.isDefined() else None
+
+
+def _assignments(q: str, node, qualifier: str | None = None) -> dict[str, str]:
+    """The ``SET col = expr, ...`` of a parsed UPDATE or MERGE clause as
+    {column: expression text}; ``qualifier`` may prefix a column."""
+    sets = {}
+    for a in _scala_list(node.assignments()):
+        parts = _scala_list(a.key().nameParts())
+        if qualifier and len(parts) == 2 and parts[0].lower() == qualifier:
+            parts = parts[1:]
+        if len(parts) != 1:
+            raise ValueError(f"unsupported SET target: {'.'.join(parts)!r}")
+        sets[parts[0]] = _origin_text(q, a.value())
+    return sets
+
+
+def _merge_keys(q: str, cond) -> list[str]:
+    """The columns ``k`` of a MERGE ON conjunction of ``t.k = s.k``
+    terms (either order, any parentheses)."""
+    if _jclass(cond) == "And":
+        return _merge_keys(q, cond.left()) + _merge_keys(q, cond.right())
+    sides = {}
+    if _jclass(cond) == "EqualTo":
+        for side in (cond.left(), cond.right()):
+            parts = _scala_list(side.nameParts()) if _jclass(side) == "UnresolvedAttribute" else []
+            if len(parts) == 2:
+                sides[parts[0].lower()] = parts[1]
+    if set(sides) != {"t", "s"} or sides["t"] != sides["s"]:
+        raise ValueError(
+            f"MERGE ON must be an equi-key conjunction (t.k = s.k): {_origin_text(q, cond)!r}"
+        )
+    return [sides["t"]]
 
 
 @contextmanager

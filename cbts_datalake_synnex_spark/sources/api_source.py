@@ -9,8 +9,8 @@ records (``src/purchase_orders.py:41-75``). The reference performs an
 HTTP ``GET`` with an XML body (§0.1-4 — a bug); the intent is a POST
 document exchange, which is what we implement.
 
-Spark-first mapping: the request list is a DataFrame; ``coalesce(n)``
-bounds concurrency exactly like ``MaxConcurrency``; the exchange runs
+Spark-first mapping: the request list is a DataFrame; hash-partitioning
+it into ``n`` tasks bounds concurrency exactly like ``MaxConcurrency``; the exchange runs
 inside ``mapInPandas`` so fetches fan out on executors (never a
 driver-side loop over ``collect()``); retry/backoff lives inside the
 UDF. The transport is injected — tests use a deterministic fake; real
@@ -174,9 +174,13 @@ def fan_out_fetch(
     _sleep = sleep if sleep is not None else time.sleep
 
     def fetch_partition(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        seen: set[str] = set()
         for pdf in batches:
             rows: list[dict[str, str]] = []
             for po in pdf[po_col].astype(str):
+                if po in seen:
+                    continue
+                seen.add(po)
                 payload = build_order_status_request(po, user, password)
                 delay = backoff_s
                 last_err = ""
@@ -199,5 +203,9 @@ def fan_out_fetch(
                     )
             yield pd.DataFrame(rows, columns=[f.name for f in STATUS_SCHEMA.fields])
 
-    bounded = requests_df.select(po_col).distinct().coalesce(concurrency)
+    # Equal POs hash to one partition, so each is fetched once (`seen`)
+    # and all its retries run in one task; an explicit partition count
+    # is never coalesced by AQE.
+    n = min(concurrency, requests_df.sparkSession.sparkContext.defaultParallelism)
+    bounded = requests_df.select(po_col).repartition(n, po_col)
     return bounded.mapInPandas(fetch_partition, STATUS_SCHEMA)

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from xml.etree import ElementTree as ET
 
+from pyspark.sql import functions as F
+
 from cbts_datalake_synnex_spark.sources.api_source import (
     build_order_status_request,
     fan_out_fetch,
@@ -63,3 +65,15 @@ def test_fan_out_fetch_records_errors_after_retries(spark):
     bad = [r for r in out if r["po_number"] == "PO_BAD"]
     assert len(ok) == 2 and all(r["error"] == "" for r in ok)
     assert len(bad) == 1 and "ConnectionError" in bad[0]["error"]
+
+
+def test_fan_out_fetch_runs_concurrency_tasks(spark):
+    """An uncached request frame still fans out over ``concurrency``
+    tasks (AQE never coalesces an explicit partition count), and a
+    repeated PO is fetched once."""
+    pos = [(f"PO{i}",) for i in range(100)] + [("PO7",)]
+    reqs = spark.createDataFrame(pos, "po_number string")
+    out = fan_out_fetch(reqs, _fake_transport, concurrency=4)
+    parts = out.select(F.spark_partition_id().alias("p")).distinct().count()
+    assert parts == min(4, spark.sparkContext.defaultParallelism)
+    assert out.count() == 200  # 100 distinct POs × 2 status lines

@@ -125,6 +125,22 @@ def test_sync_to_snapshot_idempotent_and_pure_delete(spark, eng):
     assert spark.table(eng.qualified("s")).count() == 0
 
 
+def test_sync_to_snapshot_commits_once(spark, eng):
+    """Upserts and deletes of one sync land in one version: no reader
+    sees the upserts without the deletes."""
+    eng.write_curated("s", _df(spark, [(1, "a"), (2, "b"), (3, "c")]),
+                      mode="overwrite", partition_cols=[])
+    before = len(eng.snapshot_history("s"))
+    snap = _df(spark, [(1, "a"), (2, "B"), (4, "d")])
+    assert eng.sync_to_snapshot("s", snap, keys=["k"]) == {
+        "inserted": 1, "changed": 1, "deleted": 1,
+    }
+    history = eng.snapshot_history("s")
+    assert len(history) == before + 1 and history[-1]["operation"] == "merge"
+    got = {(r["k"], r["v"]) for r in spark.table(eng.qualified("s")).collect()}
+    assert got == {(1, "a"), (2, "B"), (4, "d")}
+
+
 def test_stale_bloom_disabled_after_overwrite(spark, eng):
     """ADVICE r12 (high): a non-append mutation used to leave the
     persisted filter with FALSE NEGATIVES — the bloom said non-member,
