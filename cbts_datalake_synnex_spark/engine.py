@@ -25,8 +25,9 @@ API surface (one method per reference entry point, SURVEY §3):
 Scale posture: every write is ``partitionBy`` Hive layout so partition
 pruning is free; curated reads register as catalog tables so Catalyst
 sees statistics; schema evolution is additive-column (Parquet
-``mergeSchema`` on read + explicit ALTER on the catalog entry), the
-Delta upgrade path noted where it applies.
+``mergeSchema`` on read + explicit ALTER on the catalog entry). The
+engine's snapshot log (``_snapshot_log``, appended by ``_commit``) is
+its Delta-style table log over plain parquet or ORC files.
 """
 
 from __future__ import annotations
@@ -172,28 +173,6 @@ def _read_jsonl(path: str) -> list[dict[str, Any]]:
         return [json.loads(line) for line in f if line.strip()]
 
 
-def _delta_available(spark: SparkSession) -> bool:
-    """True when the Delta Lake jars are on the session classpath.
-
-    BEST-EFFORT branch, by declaration: this build container has no
-    delta-spark package, no Delta jars, and no network to fetch them,
-    so every Delta code path (``merge_upsert`` MERGE, ``mergeSchema``
-    evolution, time travel) is written to the published Delta API but
-    has only ever executed its parquet fallback here. The parquet path
-    is the *certified* one: explicit ALTER TABLE evolution (K8), the
-    snapshot log (``snapshot_history``, ``schema_history``) standing in
-    for the transaction log (reference ``utils.py:78`` catalog_versioning),
-    and partition-scoped dynamic overwrite standing in for MERGE. On a
-    cluster with Delta present this probe flips the engine to the
-    native branch; treat that branch as untested until run there.
-    """
-    try:
-        spark._jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")  # type: ignore[union-attr]
-        return True
-    except Exception:
-        return False
-
-
 @dataclass(frozen=True)
 class ZonePaths:
     """Path layout — one lake root, reference key-value zone encoding."""
@@ -227,31 +206,22 @@ class LakeEngine:
         lake_root: str,
         database: str = "datalake",  # DATABASE env, utils.py:25
         clock: Any | None = None,
-        table_format: str | None = None,
+        table_format: str = "parquet",
     ) -> None:
+        # The format of every data file the engine writes and reads.
+        # `_commit` moves plain files and journals them in the
+        # engine's own snapshot log, which a Delta (or any other
+        # log-based format's) reader would never see.
+        if table_format not in ("parquet", "orc"):
+            raise ValueError(
+                f"table_format must be 'parquet' or 'orc', not {table_format!r}"
+            )
         self.spark = spark
         self.zones = ZonePaths(lake_root)
         self.database = database
         self._clock = clock  # () -> datetime, injectable for tests
-        # Delta when the jars are on the classpath, else plain Parquet
-        # (BASELINE: "DataFrame read/write over Delta/Parquet"). Under
-        # Delta, schema evolution/time travel come from the transaction
-        # log (mergeSchema); under Parquet we do the explicit ALTER
-        # TABLE diff (K8) ourselves.
-        self.table_format = table_format or ("delta" if _delta_available(spark) else "parquet")
-        # the format of the files the engine writes and reads itself
-        self._file_format = "parquet" if self.table_format == "delta" else self.table_format
+        self.table_format = table_format
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-
-    @property
-    def _delta(self):
-        """Every DeltaTable interaction, behind one contract-tested
-        adapter (SURVEY §8.1 — no Delta jars in this image; the
-        adapter's call chains are pinned against a fake in
-        tests/test_delta_adapter.py)."""
-        from cbts_datalake_synnex_spark.delta_adapter import DeltaAdapter
-
-        return DeltaAdapter(self.spark)
 
     # ------------------------------------------------------------------
     # clock
@@ -360,16 +330,16 @@ class LakeEngine:
         partition_cols: Sequence[str] | None = None,
     ) -> int:
         """Partitioned snappy-Parquet write registered in the catalog.
-        Returns the rows written, as `_commit` observed them (-1 on the
-        Delta branch, as `merge_rows` reports).
+        Returns the rows written, as `_commit` observed them.
 
         Reference: ``wr.s3.to_parquet(dataset=True, mode=..., database,
         table, partition_cols, catalog_versioning=True)`` at
         ``utils.py:72-83`` and the schema-evolving variant at
         ``utils.py:241-252``; the Glue-job equivalents are the sink at
         ``src/glue/staging_to_curated.py:104-115`` plus create-if-absent
-        (122-134) and add-column diff (139-168). Every parquet write
-        commits through `_commit`:
+        (122-134) and add-column diff (139-168). Every write commits
+        through `_commit`, whose snapshot-log entry is the table's
+        Delta-style log record:
 
         * an append widens the table first (K2/K8: an explicit ALTER
           TABLE ADD COLUMNS diff + a positionally-safe projection) and
@@ -384,10 +354,6 @@ class LakeEngine:
 
         Partition discovery K9 is part of the commit
         (`recover_partitions` when a new partition directory appears).
-        With Delta jars on the classpath the same call becomes
-        `.format("delta").option("mergeSchema","true")` — the
-        transaction log then subsumes K7-K9 and catalog versioning;
-        Parquet is the in-repo fallback (no Delta in this image).
         """
         qtable = self.qualified(table)
         exists = self.spark.catalog.tableExists(qtable)
@@ -409,24 +375,7 @@ class LakeEngine:
         ]
         df = sanitize_types_for_catalog(df)
         with self._checked(table, df, props, mode) as df:
-            if self.table_format == "delta":
-                writer = df.write.mode(mode).format("delta")
-                if exists and mode == "append":
-                    writer = writer.option("mergeSchema", "true")  # K2/K8 via txn log
-                if parts:
-                    writer = writer.partitionBy(*parts)
-                writer.saveAsTable(qtable)
-                n_written = -1
-                self.spark.catalog.refreshTable(qtable)
-                self._journal_snapshot(
-                    table,
-                    [_spark_file(f) for f in self.spark.table(qtable).inputFiles()],
-                    self._table_layout(qtable),
-                    mode,
-                    None,
-                    self.snapshot_history(table),
-                )
-            elif not exists:
+            if not exists:
                 # None: a stale manifest of a table dropped outside the
                 # engine (or mid-re-create) must not carry into the new one
                 n_written = self._commit(table, None, df, mode, create=(parts, props))
@@ -657,7 +606,7 @@ class LakeEngine:
         # one read per root: Spark parses the Hive partition dirs of a
         # file list below a single basePath
         reads = [
-            self.spark.read.format(self._file_format)
+            self.spark.read.format(self.table_format)
             .schema(schema)
             .option("basePath", root)
             .load([os.path.join(root, rel) for rel in rels])
@@ -888,7 +837,7 @@ class LakeEngine:
         ddl = (
             f"CREATE TABLE {qtable} "
             f"({cols(f for f in schema.fields if f.name not in partition_cols)}) "
-            f"USING {self._file_format}"
+            f"USING {self.table_format}"
         )
         if partition_cols:
             ddl += f" PARTITIONED BY ({cols(by_name[c] for c in partition_cols)})"
@@ -1370,7 +1319,8 @@ class LakeEngine:
         meta = self._colstats_meta()
         meta[f"{table}.{column}"] = {
             "files": sorted(
-                self.spark.table(self.qualified(table)).inputFiles()
+                _spark_file(f)
+                for f in self.spark.table(self.qualified(table)).inputFiles()
             ),
             "spec": [int(depth), int(width), salt],
         }
@@ -1415,7 +1365,7 @@ class LakeEngine:
         qsrc = self.qualified(table)
         self.spark.catalog.refreshTable(qsrc)
         src_tab = self.spark.table(qsrc)
-        current = sorted(src_tab.inputFiles())
+        current = sorted(_spark_file(f) for f in src_tab.inputFiles())
         spec = meta.get(key)
         spec_now = [int(depth), int(width), salt]
         if (
@@ -2035,7 +1985,7 @@ class LakeEngine:
         qsrc = self.qualified(spec["source_table"])
         self.spark.catalog.refreshTable(qsrc)
         src = self.spark.table(qsrc)
-        current = sorted(src.inputFiles())
+        current = sorted(_spark_file(f) for f in src.inputFiles())
         seen = set(spec["files"])
         new = [f for f in current if f not in seen]
         removed = seen - set(current)
@@ -3056,21 +3006,16 @@ class LakeEngine:
         """Key-based upsert into a curated table: a matched key's row is
         replaced whole by the batch row, a new key is inserted.
 
-        Delta path: a single transactional ``MERGE`` (file-pruned by the
-        key predicate — touches only files containing matched keys).
-        Parquet path: `merge_rows`, which rewrites only the files
-        holding matched keys (wherever the key lives, so a re-dated key
-        leaves no stale row behind) and adds the inserts as new files;
-        every other file keeps its inode. Duplicate batch keys raise,
-        as on the Delta path. ``partition_cols`` applies only when the
+        Runs as `merge_rows`, which rewrites only the files holding
+        matched keys (wherever the key lives, so a re-dated key leaves
+        no stale row behind) and adds the inserts as new files; every
+        other file keeps its inode. Duplicate batch keys raise, as
+        Delta's MERGE does. ``partition_cols`` applies only when the
         call creates the table.
         """
         qtable = self.qualified(table)
         if not self.spark.catalog.tableExists(qtable):
             self.write_curated(table, df, mode="overwrite", partition_cols=partition_cols)
-            return
-        if self.table_format == "delta":
-            self._delta.upsert_all(qtable, df, keys)
             return
         # Align to the table schema (K8 widening; NULL for columns the
         # batch lacks) so the SET map covers every non-key column.
@@ -3178,7 +3123,7 @@ class LakeEngine:
         ANALYZE. With ``bins`` (`_bin_numbers`), each row also carries
         its file's bin as `_BIN`, for `_binned_commit`."""
         target = self.spark.table(qtable).schema
-        reader = self.spark.read.format(self._file_format).schema(target)
+        reader = self.spark.read.format(self.table_format).schema(target)
         subset = reader.option("basePath", self._table_location(qtable)).load(files)
         cols = [F.col(quote(f.name)) for f in target.fields]
         if bins is None:
@@ -3247,7 +3192,7 @@ class LakeEngine:
         scratch = self._scratch_dir(table)
         written = Observation()
         writer = replacement.observe(written, F.count(F.lit(1)).alias("n")).write
-        writer = writer.format(self._file_format).option("compression", "snappy")
+        writer = writer.format(self.table_format).option("compression", "snappy")
         # A binned rewrite (`_binned_commit`) stages one file per
         # partition and bin, under a hidden `_BIN` directory level that
         # the move below drops.
@@ -3377,11 +3322,8 @@ class LakeEngine:
     def delete_rows(self, table: str, condition) -> int:
         """``DELETE FROM table WHERE condition`` (SQL semantics: only
         rows where the predicate is TRUE are deleted; NULL keeps the
-        row). Returns the deleted row count. Delta path: transactional
-        file-pruned DELETE; parquet path: `_file_pruned_rewrite`."""
-        if self.table_format == "delta":
-            self._delta.delete(self.qualified(table), condition)
-            return -1  # Delta does not report the count pre-4.0
+        row), as a `_file_pruned_rewrite`. Returns the deleted row
+        count."""
 
         def _drop_matches(subset: DataFrame, cond, _props) -> DataFrame:
             return subset.filter(~cond)
@@ -3555,9 +3497,6 @@ class LakeEngine:
         sets = {
             k: (F.expr(v) if isinstance(v, str) else v) for k, v in set_exprs.items()
         }
-        if self.table_format == "delta":
-            self._delta.update(self.qualified(table), condition, sets)
-            return -1
 
         def _apply_sets(subset: DataFrame, cond, props: dict[str, str]) -> DataFrame:
             unknown = [c for c in sets if c not in subset.columns]
@@ -3609,7 +3548,10 @@ class LakeEngine:
         `table_diff` classifies keys once (one full-outer key join on
         hashes — the unavoidable compare), then ONE `merge_rows` commit
         applies them: the snapshot rows of inserted/changed keys upsert
-        and the vanished keys, flagged ``__gone``, delete. Files holding
+        and the vanished keys delete. That change-sized merge source is
+        pinned with one eager `localCheckpoint`, so the counts, the
+        merge's file probe and its commit write read it instead of each
+        re-running the join. Files holding
         no affected keys keep their inodes — the property a full
         overwrite loses, and at 100 TB the difference between a nightly
         sync that rewrites 0.1% of files and one that rewrites all of
@@ -3621,28 +3563,33 @@ class LakeEngine:
         if not self.spark.catalog.tableExists(qtable):
             raise ValueError(f"no such table: {qtable}")
         keys = list(keys)
-        delta = table_diff(self.spark.table(qtable), snapshot, keys=keys)
-        counts = {"inserted": 0, "changed": 0, "deleted": 0}
-        for r in delta.groupBy("change_type").count().collect():
-            counts[r["change_type"]] = int(r["count"])
-        if any(counts.values()):
-            gone = F.col("change_type") == "deleted"
-            source = (
-                snapshot.join(delta.filter(~gone).select(*keys), keys, "left_semi")
-                .withColumn("__gone", F.lit(False))
-                .unionByName(
-                    delta.filter(gone).select(*keys, F.lit(True).alias("__gone")),
-                    allowMissingColumns=True,
+        # A checkpoint, not a cache: nothing the merge does to the
+        # table (an ALTER, a refresh) can re-run the diff mid-commit.
+        diff = table_diff(self.spark.table(qtable), snapshot, keys=keys).withColumnRenamed(
+            "change_type", "__change"
+        )
+        gone = F.col("__change") == "deleted"
+        source = (
+            snapshot.join(diff.filter(~gone), keys)
+            .unionByName(diff.filter(gone), allowMissingColumns=True)
+            .localCheckpoint(eager=True)
+        )
+        try:
+            counts = {"inserted": 0, "changed": 0, "deleted": 0}
+            for r in source.groupBy("__change").count().collect():
+                counts[r["__change"]] = int(r["count"])
+            if any(counts.values()):
+                self.merge_rows(
+                    table,
+                    source,
+                    keys,
+                    when_matched_delete="s.__change = 'deleted'",
+                    when_not_matched_insert="s.__change <> 'deleted'",
+                    exclude_cols=["__change"],
                 )
-            )
-            self.merge_rows(
-                table,
-                source,
-                keys,
-                when_matched_delete="s.__gone",
-                when_not_matched_insert="NOT s.__gone",
-                exclude_cols=["__gone"],
-            )
+        finally:
+            # a local checkpoint's blocks outlive the frame: free them
+            source._jdf.queryExecution().analyzed().rdd().unpersist(False)
         return counts
 
     def merge_rows(
@@ -3717,19 +3664,6 @@ class LakeEngine:
             "duplicate merge keys in source (pass sequence_col for "
             "latest-change-wins CDC semantics)"
         )
-
-        if self.table_format == "delta":
-            if dup_keys is not None and dup_keys.count():
-                raise ValueError(dup_msg)
-            self._delta.merge(
-                qtable,
-                source,
-                keys,
-                when_matched_update,
-                when_matched_delete,
-                when_not_matched_insert,
-            )
-            return {"updated": -1, "deleted": -1, "inserted": -1}
 
         exclude = [c for c in exclude_cols if c in source.columns]
         data_cols = [c for c in source.columns if c not in exclude]

@@ -43,7 +43,8 @@ _CSV_DIALECT = {
 # Known lossy value (inherent to Spark's reader, which applies
 # nullValue AFTER unquoting): a payload exactly equal to the null
 # token '\N' reads back as NULL — quoting it does not help
-# (verified; pinned by a golden in tests/test_file_formats.py).
+# (verified; pinned by
+# `test_csv_null_token_payload_is_the_documented_lossy_value`).
 _CSV_WRITE = {
     **_CSV_DIALECT,
     "emptyValue": '""',

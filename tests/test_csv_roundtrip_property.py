@@ -2,7 +2,7 @@
 (VERDICT r7 #7): random unicode strings with quotes / newlines /
 carriage returns / tabs / ``\\N`` / empty-vs-null through
 write_csv → read_csv_all_string, asserting byte fidelity. The hostile-
-value goldens in test_file_formats.py cover the known cases; this
+value goldens (`test_csv_roundtrip_hostile_values`) cover the known cases; this
 covers the unknown ones.
 """
 

@@ -520,6 +520,29 @@ def test_dml_on_escaped_partition_value(spark, eng):
     assert any("p=a%3Ab" in f for f in live)
 
 
+def test_incremental_ledgers_on_escaped_partition_value(spark, eng):
+    """An incremental view and the column-stats fold keep the source's
+    files in their ledgers as the raw paths on disk, so an append
+    under ``p=a%3Ab`` folds in instead of failing to load."""
+    schema = "k int, v int, p string"
+    eng.write_curated(
+        "e", spark.createDataFrame([(0, 1, "a:b"), (1, 2, "c")], schema),
+        mode="overwrite", partition_cols=["p"],
+    )
+    eng.create_incremental_view("e_mv", "e", ["p"], [("sum", "v", "total"), ("count", "*", "n")])
+    assert eng.fold_join_column_stats("e", "k", depth=2, width=32) == "full"
+    eng.write_curated(
+        "e", spark.createDataFrame([(2, 10, "a:b"), (3, 20, "c")], schema),
+        mode="append", partition_cols=["p"],
+    )
+    assert eng.refresh_materialized_view("e_mv") == "incremental"
+    assert eng.fold_join_column_stats("e", "k", depth=2, width=32) == "incremental"
+    mv = spark.table(eng.qualified("e_mv")).collect()
+    assert {r["p"]: (r["total"], r["n"]) for r in mv} == {"a:b": (11, 2), "c": (22, 2)}
+    mass = spark.table(eng.qualified("e_cms_k")).groupBy("d").sum("cnt").collect()
+    assert [r["sum(cnt)"] for r in mass] == [4, 4]
+
+
 # ------------------------------------------------------- crash-ordered commit
 class _Crash(RuntimeError):
     pass

@@ -100,10 +100,21 @@ def test_ingest_from_api_end_to_end(engine):
 
 
 def test_table_format_falls_back_to_parquet(engine):
-    # no Delta jars in this image → parquet fallback must be selected
-    # and the whole lifecycle must run on it (the suite itself proves
-    # the latter). With jars present the same engine flips to delta.
+    # parquet is the default format and the whole lifecycle runs on it
+    # (the suite itself proves the latter); nothing on the session
+    # switches it.
     assert engine.table_format == "parquet"
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_table_format_refuses_a_format_the_commit_cannot_serve(spark, tmp_path, fmt):
+    # `_commit` moves plain files and journals them in the engine's own
+    # snapshot log: a Delta table's log would never see them. The
+    # engine refuses before it touches the catalog.
+    db = f"t_fmt_{abs(hash(str(tmp_path))) % 10**9}"
+    with pytest.raises(ValueError, match="table_format"):
+        LakeEngine(spark, str(tmp_path / "lake"), database=db, table_format=fmt)
+    assert not spark.catalog.databaseExists(db)
 
 
 def test_compact_table_bin_packs_files(engine):

@@ -125,16 +125,18 @@ def test_sync_to_snapshot_idempotent_and_pure_delete(spark, eng):
     assert spark.table(eng.qualified("s")).count() == 0
 
 
-def test_sync_to_snapshot_commits_once(spark, eng):
+def test_sync_to_snapshot_commits_once(spark, eng, spark_jobs):
     """Upserts and deletes of one sync land in one version: no reader
-    sees the upserts without the deletes."""
+    sees the upserts without the deletes. The diff runs once: the
+    counts, the merge's file probe and the commit read it pinned."""
     eng.write_curated("s", _df(spark, [(1, "a"), (2, "b"), (3, "c")]),
                       mode="overwrite", partition_cols=[])
     before = len(eng.snapshot_history("s"))
     snap = _df(spark, [(1, "a"), (2, "B"), (4, "d")])
-    assert eng.sync_to_snapshot("s", snap, keys=["k"]) == {
-        "inserted": 1, "changed": 1, "deleted": 1,
-    }
+    counts, jobs = spark_jobs(lambda: eng.sync_to_snapshot("s", snap, keys=["k"]))
+    assert counts == {"inserted": 1, "changed": 1, "deleted": 1}
+    # 17 jobs on local[4]; 26 when each of the three re-ran the diff
+    assert jobs <= 18
     history = eng.snapshot_history("s")
     assert len(history) == before + 1 and history[-1]["operation"] == "merge"
     got = {(r["k"], r["v"]) for r in spark.table(eng.qualified("s")).collect()}
