@@ -7,8 +7,15 @@ partitions under one S3 bucket —
 ``etl_process=staging/table=T/*.json.gz`` (``utils.py:112-114,141``),
 ``etl_process=processed/table=T/...`` (``utils.py:243``; the reversed
 key order at ``utils.py:74`` is normalized to the majority order per
-SURVEY §1.1). We keep exactly that layout over a local/posix or
-object-store root.
+SURVEY §1.1). The raw, staging and quarantine zones keep that layout
+under the lake root (`ZonePaths`). Curated tables do not: `_commit`
+creates each as a managed catalog table, so its files live under the
+database's location in ``spark.sql.warehouse.dir``
+(``<warehouse>/<database>.db/<table>/processed_year=Y/processed_month=M/``,
+partitioned like the reference's processed zone); only `clone_table`
+writes under ``etl_process=processed/table=T``. The engine's own state
+(snapshot log and retention, scratch, JSON sidecars) lives under the
+lake root.
 
 API surface (one method per reference entry point, SURVEY §3):
 
@@ -89,10 +96,20 @@ def _unique_specs(props: dict[str, str]) -> dict[str, list[str]]:
     return {name: spec.split(",") for name, spec in _prefixed(props, _UNIQUE).items()}
 
 
-# Scratch root of every staged rewrite (`LakeEngine._scratch_dir`),
-# followed by the per-operation roots older versions staged under, so
-# the vacuums still reap their crash leftovers.
-_SCRATCH_DIRS = ("_scratch", "_dml", "_compact", "_merge", "_restore", "_mor")
+# The JSON sidecars under the lake root (`LakeEngine._sidecar`): the
+# column-statistics ledgers (fold ledgers and Bloom freshness stamps),
+# and the materialized-view definitions with their refresh ledgers.
+_COLUMN_STATS, _MVIEWS = "_column_stats.json", "_mviews.json"
+
+# Persisted statistic kind (`{table}_{kind}_{column}`) → what it is and
+# the call that builds it (`LakeEngine._stat_table`).
+_STAT_KINDS = {
+    "cms": ("join-column sketch", "analyze_join_column"),
+    "hll": ("HLL sketch", "analyze_join_column"),
+    "kmv": ("KMV sketch", "analyze_join_column"),
+    "bloom": ("membership filter", "analyze_membership"),
+    "hist": ("histogram", "analyze_column_histogram"),
+}
 
 
 def _local_path(uri: str) -> str:
@@ -240,8 +257,13 @@ class LakeEngine:
         # The JVM reader parses the lines (`DataFrameReader.json` over a
         # Dataset[String]), so no later job of the batch starts a Python
         # worker. One partition per 5 000 records: that is one staged
-        # and one curated file per 5 000.
-        text = self._string_frame("value", lines).coalesce(len(lines) // 5000 + 1)
+        # and one curated file per 5 000. The Arrow-built frame has
+        # `defaultParallelism` partitions; a coalesce narrows it with no
+        # shuffle, and only a host with fewer cores than that needs a
+        # repartition.
+        text = self._string_frame("value", lines)
+        n = len(lines) // 5000 + 1
+        text = text.coalesce(n) if text.rdd.getNumPartitions() >= n else text.repartition(n)
         jtext = getattr(text._jdf, "as")(self.spark._jvm.org.apache.spark.sql.Encoders.STRING())
         return DataFrame(self.spark._jsparkSession.read().json(jtext), self.spark)
 
@@ -435,12 +457,10 @@ class LakeEngine:
         self,
         jobs: dict[str, Any],
         max_concurrent: int = 10,
-        pool_prefix: str = "curate",
     ) -> dict[str, Any]:
         """Run ``{name: zero-arg callable}`` jobs on driver threads with
         at most ``max_concurrent`` in flight (the MaxConcurrentRuns
-        role), each under its own scheduler pool
-        ``{pool_prefix}_{name}``. Returns {name: result}; a failing job
+        role), each under its own scheduler pool ``curate_{name}``. Returns {name: result}; a failing job
         records its exception as the result (one bad curate must not
         kill the batch — the Map-state error-isolation discipline).
         Catalog mutations in this engine are per-table, so concurrent
@@ -456,7 +476,7 @@ class LakeEngine:
         def _run(name: str, fn) -> None:
             with sem:
                 try:
-                    with self.scheduler_pool(f"{pool_prefix}_{name}"):
+                    with self.scheduler_pool(f"curate_{name}"):
                         out = fn()
                 except Exception as exc:  # noqa: BLE001 — isolate per job
                     out = exc
@@ -752,15 +772,12 @@ class LakeEngine:
         a restore never falsifies what past versions contained).
         Returns the new current version number."""
         snap = self.read_snapshot(table, version)
-        entry = next(
-            (h for h in self.snapshot_history(table) if h["version"] == version), {}
-        )
-        recorded = entry.get("partition_cols")
-        # snapshots journaled before partition_cols was recorded fall
-        # back to the engine default (legacy entries only)
-        source = recorded if recorded is not None else DEFAULT_PARTITION_COLS
+        entry = next(h for h in self.snapshot_history(table) if h["version"] == version)
         self.write_curated(
-            table, snap, mode="overwrite", partition_cols=[c for c in source if c in snap.columns]
+            table,
+            snap,
+            mode="overwrite",
+            partition_cols=[c for c in entry["partition_cols"] if c in snap.columns],
         )
         return self.snapshot_history(table)[-1]["version"]
 
@@ -1252,79 +1269,18 @@ class LakeEngine:
         width: int = 1024,
         salt: str = "cms",
     ) -> None:
-        """Build (or rebuild) the persisted count-min sketch for
-        ``table.column`` — the `analyze_table` discipline applied to
-        join-size estimation: run after each curate batch; ONE scan of
-        the column, a depth×width (KB-sized) result table
-        ``{table}_cms_{column}``. Values hash as strings (the md5
-        bucket idiom), so cross-type joins estimate correctly iff both
-        sides store the same string forms. Every sketch row carries
-        its (depth, width, salt) so :func:`estimate_join_size` can
-        refuse incompatible pairs."""
-        from cbts_datalake_synnex_spark.operators import sketches
-
-        # NULL keys never match in an equi-join — excluding them keeps
-        # the (still one-sided) estimate tight
-        src = (
-            self.spark.table(self.qualified(table))
-            .filter(F.col(column).isNotNull())
-            .select(F.col(column).cast("string").alias("__item"))
-        )
-        sk = sketches.count_min_build(
-            src, "__item", depth=int(depth), width=int(width), salt=salt
-        ).select(
-            "d",
-            "bucket",
-            "cnt",
-            F.lit(int(depth)).alias("depth"),
-            F.lit(int(width)).alias("width"),
-            F.lit(salt).alias("salt"),
-        )
-        sk.write.format("parquet").mode("overwrite").saveAsTable(
-            self.qualified(f"{table}_cms_{column}")
-        )
-        # the distinct-key companion: one DataSketches HLL per column
-        # (KB-sized binary; the hll_sketch_agg the incremental-MV tier
-        # already certifies) — answers "how many keys overlap", the
-        # question CMS's Σ fA·fB inner product does NOT separate from
-        # per-key frequency
-        src.agg(
-            F.hll_sketch_agg("__item").alias("hll"),
-            F.count_distinct("__item").cast("bigint").alias("n_exact"),
-        ).write.format("parquet").mode("overwrite").saveAsTable(
-            self.qualified(f"{table}_hll_{column}")
-        )
-        # the KMV/theta companion (round 13): ≤ k 60-bit hash rows.
-        # HLL answers |A∪B| losslessly but |A∩B| only by
-        # inclusion-exclusion, whose absolute error is that of the
-        # UNION estimate — useless when the overlap is a small
-        # fraction of it; the theta rule estimates the intersection
-        # DIRECTLY from the hashes below min(θ_a, θ_b), with error
-        # proportional to the intersection itself (Dasgupta et al.
-        # 2016). Same build scan, k int64s of state per group.
-        from cbts_datalake_synnex_spark.operators.sketches import kmv_build
-
-        kmv_build(src, "__item", k=256, salt="kmv").select(
-            "rank",
-            "h",
-            F.lit(256).alias("k"),
-            F.lit("kmv").alias("salt"),
-        ).write.format("parquet").mode("overwrite").saveAsTable(
-            self.qualified(f"{table}_kmv_{column}")
-        )
-        # stamp the incremental-fold ledger: a DIRECT analyze rebuilds
-        # over ALL current files, so the fold baseline must advance too
-        # — a stale ledger would double-count the already-included
-        # files on the next fold_join_column_stats call
-        meta = self._colstats_meta()
-        meta[f"{table}.{column}"] = {
-            "files": sorted(
-                _spark_file(f)
-                for f in self.spark.table(self.qualified(table)).inputFiles()
-            ),
-            "spec": [int(depth), int(width), salt],
-        }
-        self._save_colstats_meta(meta)
+        """Build (or rebuild) the persisted join-column sketches of
+        ``table.column`` over the whole table — the `analyze_table`
+        discipline applied to join-size estimation: run after each
+        curate batch. It forgets the column's fold ledger and folds, so
+        this is `fold_join_column_stats`' full build: ONE scan of the
+        column into three KB-sized tables, a depth×width count-min
+        sketch ``{table}_cms_{column}`` (how often a key occurs), an HLL
+        ``{table}_hll_{column}`` (how many distinct keys) and a KMV
+        ``{table}_kmv_{column}`` (how many keys two columns share).
+        Later folds merge appended files into this build."""
+        self._set_sidecar(_COLUMN_STATS, f"{table}.{column}", None)
+        self.fold_join_column_stats(table, column, depth, width, salt)
 
     def fold_join_column_stats(
         self,
@@ -1334,120 +1290,140 @@ class LakeEngine:
         width: int = 1024,
         salt: str = "cms",
     ) -> str:
-        """Incremental ANALYZE (round 13): fold the persisted CMS /
-        HLL / KMV column sketches forward over the files APPENDED
-        since the last analyze — the `_refresh_incremental` /
-        bloom-append discipline applied to the pre-flight statistics
-        tier, so a nightly curate pays sketch maintenance proportional
-        to the DELTA, not the table. All three sketches are mergeable
-        by construction: CMS is linear (counter-wise add), HLL unions
-        losslessly (`hll_union_agg`), KMV union is keep-k-smallest
-        over the hash-set union. Returns ``full`` (first analyze, or
-        files VANISHED — overwrite/compaction voids mergeability and
-        the full rebuild runs, fail-safe), ``incremental`` (delta
-        folded), or ``noop`` (no new files).
+        """Bring the persisted sketches of ``table.column`` up to the
+        table's live files; the only writer of the ``{table}_cms_``,
+        ``_hll_`` and ``_kmv_{column}`` tables. The column's ledger in
+        ``_column_stats.json`` records the files and (depth, width,
+        salt) of the last fold, and the appended-files rule
+        (`_appended_files`) decides what runs:
 
-        The HLL table's exact-count companion (``n_exact``) is a
-        full-analyze artifact — a folded sketch cannot maintain it
-        without rescanning, so incremental folds set it NULL (readers
-        of the exact column must run `analyze_join_column`; the
-        estimate path never reads it). Sketch frames are KB-sized, so
-        the merge materializes driver-side before the overwrite (no
-        read-then-overwrite conflict on the sketch tables)."""
+        * ``full`` — no ledger entry, a different (depth, width, salt),
+          or a recorded file is gone (an overwrite, DML or compaction
+          voids mergeability): the three sketches are built over the
+          whole table;
+        * ``incremental`` — files were only appended: the sketches are
+          built over the appended files and merged into the stored
+          ones by each sketch's rule — CMS adds counters, HLL takes the
+          union (`hll_union_agg`), KMV keeps the k smallest hashes — so
+          a nightly curate pays in proportion to the delta, not the
+          table;
+        * ``noop`` — nothing was appended.
+
+        Values hash as strings (the md5 bucket idiom), so a cross-type
+        join estimates correctly iff both sides store the same string
+        forms; NULL keys are left out, as they never match in an
+        equi-join. Every CMS row carries its (depth, width, salt) and
+        every KMV row its (k, salt), so the estimators refuse
+        incompatible pairs. HLL answers |A ∪ B| losslessly but |A ∩ B|
+        only by inclusion-exclusion, whose error is that of the union;
+        KMV's theta rule estimates the intersection directly from the
+        hashes below min(θ_a, θ_b) (Dasgupta et al. 2016). The frames
+        are KB-sized: each is collected before it overwrites its
+        table, which the merge reads."""
         from cbts_datalake_synnex_spark.operators import sketches
-        from cbts_datalake_synnex_spark.operators.sketches import (
-            kmv_build,
-            kmv_merge,
-        )
 
-        meta = self._colstats_meta()
-        key = f"{table}.{column}"
-        qsrc = self.qualified(table)
-        self.spark.catalog.refreshTable(qsrc)
-        src_tab = self.spark.table(qsrc)
-        current = sorted(_spark_file(f) for f in src_tab.inputFiles())
-        spec = meta.get(key)
-        spec_now = [int(depth), int(width), salt]
-        if (
-            spec is None
-            or set(spec["files"]) - set(current)
-            or spec["spec"] != spec_now
-        ):
-            self.analyze_join_column(table, column, depth, width, salt)
-            meta[key] = {"files": current, "spec": spec_now}
-            self._save_colstats_meta(meta)
-            return "full"
-        new = [f for f in current if f not in set(spec["files"])]
-        if not new:
-            return "noop"
-        delta = self._read_files_as_table_schema(qsrc, new)
-        items = delta.filter(F.col(column).isNotNull()).select(
+        key, spec = f"{table}.{column}", [int(depth), int(width), salt]
+        ledger = self._sidecar(_COLUMN_STATS).get(key)
+        how, appended, live = self._appended_files(
+            table, ledger["files"] if ledger and ledger["spec"] == spec else None
+        )
+        if how == "noop":
+            return how
+        qtable = self.qualified(table)
+        rows = (
+            self.spark.table(qtable)
+            if how == "full"
+            else self._read_files_as_table_schema(qtable, appended)
+        )
+        items = rows.filter(F.col(column).isNotNull()).select(
             F.col(column).cast("string").alias("__item")
         )
-        # CMS: counter-wise add of the delta sketch into the stored one
-        cms_name = self.qualified(f"{table}_cms_{column}")
-        stored_cms = self.spark.table(cms_name).select("d", "bucket", "cnt")
-        d_cms = sketches.count_min_build(
+        cms = sketches.count_min_build(
             items, "__item", depth=int(depth), width=int(width), salt=salt
         )
-        merged_cms = (
-            stored_cms.unionByName(d_cms)
-            .groupBy("d", "bucket")
-            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            .select(
+        hll = items.agg(F.hll_sketch_agg("__item").alias("hll"))
+        kmv = sketches.kmv_build(items, "__item", k=256, salt="kmv")
+        if how == "incremental":
+
+            def stored(kind: str, *cols: str) -> DataFrame:
+                return self.spark.table(self.qualified(f"{table}_{kind}_{column}")).select(*cols)
+
+            cms = (
+                stored("cms", "d", "bucket", "cnt")
+                .unionByName(cms)
+                .groupBy("d", "bucket")
+                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+            )
+            hll = stored("hll", "hll").unionByName(hll).agg(F.hll_union_agg("hll").alias("hll"))
+            kmv = sketches.kmv_merge(stored("kmv", "rank", "h"), kmv, k=256)
+        for kind, frame in (
+            ("cms", cms.select(
                 "d", "bucket", "cnt",
                 F.lit(int(depth)).alias("depth"),
                 F.lit(int(width)).alias("width"),
                 F.lit(salt).alias("salt"),
+            )),
+            ("hll", hll),
+            ("kmv", kmv.select("rank", "h", F.lit(256).alias("k"), F.lit("kmv").alias("salt"))),
+        ):
+            frame = self.spark.createDataFrame(frame.collect(), frame.schema)
+            frame.write.format("parquet").mode("overwrite").saveAsTable(
+                self.qualified(f"{table}_{kind}_{column}")
             )
-        )
-        merged_cms = self.spark.createDataFrame(
-            merged_cms.collect(), merged_cms.schema
-        )
-        merged_cms.write.format("parquet").mode("overwrite").saveAsTable(cms_name)
-        # HLL: lossless union of the stored sketch with the delta's
-        hll_name = self.qualified(f"{table}_hll_{column}")
-        stored_hll = self.spark.table(hll_name).select("hll")
-        d_hll = items.agg(F.hll_sketch_agg("__item").alias("hll"))
-        merged_hll = (
-            stored_hll.unionByName(d_hll)
-            .agg(F.hll_union_agg("hll").alias("hll"))
-            .select("hll", F.lit(None).cast("bigint").alias("n_exact"))
-        )
-        merged_hll = self.spark.createDataFrame(
-            merged_hll.collect(), merged_hll.schema
-        )
-        merged_hll.write.format("parquet").mode("overwrite").saveAsTable(hll_name)
-        # KMV: keep-k-smallest over the hash-set union
-        kmv_name = self.qualified(f"{table}_kmv_{column}")
-        stored_kmv = self.spark.table(kmv_name).select("rank", "h")
-        d_kmv = kmv_build(items, "__item", k=256, salt="kmv")
-        merged_kmv = kmv_merge(stored_kmv, d_kmv, k=256).select(
-            "rank", "h", F.lit(256).alias("k"), F.lit("kmv").alias("salt")
-        )
-        merged_kmv = self.spark.createDataFrame(
-            merged_kmv.collect(), merged_kmv.schema
-        )
-        merged_kmv.write.format("parquet").mode("overwrite").saveAsTable(kmv_name)
-        meta[key] = {"files": current, "spec": spec_now}
-        self._save_colstats_meta(meta)
-        return "incremental"
+        self._set_sidecar(_COLUMN_STATS, key, {"files": live, "spec": spec})
+        return how
 
-    def _colstats_meta(self) -> dict[str, Any]:
-        path = os.path.join(self.zones.root, "_column_stats.json")
+    def _appended_files(
+        self, table: str, recorded: list[str] | None
+    ) -> tuple[str, list[str], list[str]]:
+        """The appended-files rule of the incremental tier
+        (`fold_join_column_stats`, `create_incremental_view`): compare
+        ``table``'s live files (`_live_files`: the snapshot manifest,
+        or a listing for a table the engine never journaled) with the
+        files ``recorded`` at the last build (``None``: no usable
+        build). Returns (how, appended files, live files): ``full``
+        when nothing is recorded or a recorded file is gone — the
+        stored state then holds rows the table no longer has —,
+        ``incremental`` when files were appended, else ``noop``."""
+        live = sorted(self._live_files(table))
+        seen = set(recorded or ())
+        if recorded is None or not seen <= set(live):
+            return "full", live, live
+        appended = [f for f in live if f not in seen]
+        return ("incremental" if appended else "noop"), appended, live
+
+    def _sidecar(self, name: str) -> dict[str, Any]:
+        """The JSON sidecar ``name`` under the lake root (``{}`` before
+        its first write): `_COLUMN_STATS` or `_MVIEWS`."""
+        path = os.path.join(self.zones.root, name)
         if not os.path.exists(path):
             return {}
         with open(path) as f:
             return json.load(f)
 
-    def _save_colstats_meta(self, meta: dict[str, Any]) -> None:
-        # analyze on a catalog-only lake may run before any zone write
-        # created the root (inherited r13 fix: the stats journal must
-        # not assume a prior curated write)
+    def _set_sidecar(self, name: str, key: str, value: Any) -> None:
+        """Set one entry of the sidecar ``name`` (``None`` removes it).
+        A catalog-only lake may get here before any zone write created
+        the root."""
+        data = self._sidecar(name)
+        if value is None:
+            data.pop(key, None)
+        else:
+            data[key] = value
         os.makedirs(self.zones.root, exist_ok=True)
-        path = os.path.join(self.zones.root, "_column_stats.json")
-        with open(path, "w") as f:
-            json.dump(meta, f, indent=2)
+        with open(os.path.join(self.zones.root, name), "w") as f:
+            json.dump(data, f, indent=2)
+
+    def _stat_table(self, table: str, kind: str, column: str) -> DataFrame:
+        """The persisted statistic ``{table}_{kind}_{column}``; raises,
+        naming the analyze call that builds it, when it is missing."""
+        name = self.qualified(f"{table}_{kind}_{column}")
+        if not self.spark.catalog.tableExists(name):
+            what, analyze = _STAT_KINDS[kind]
+            raise ValueError(
+                f"no {what} for {table}.{column}; run {analyze}({table!r}, {column!r}) first"
+            )
+        return self.spark.table(name)
 
     def estimate_join_keys(self, t1: str, c1: str, t2: str, c2: str) -> dict:
         """Pre-flight distinct-key overlap: from the two persisted HLL
@@ -1458,17 +1434,8 @@ class LakeEngine:
         estimates; pair with :func:`estimate_join_size` (CMS) to
         separate "many keys overlap a little" from "few keys with
         huge frequencies". Raises if a sketch is missing."""
-        frames = []
-        for table, column in ((t1, c1), (t2, c2)):
-            name = self.qualified(f"{table}_hll_{column}")
-            if not self.spark.catalog.tableExists(name):
-                raise ValueError(
-                    f"no HLL sketch for {table}.{column}; run "
-                    f"analyze_join_column({table!r}, {column!r}) first"
-                )
-            frames.append(self.spark.table(name).select("hll"))
-        a = frames[0].select(F.col("hll").alias("ha"))
-        b = frames[1].select(F.col("hll").alias("hb"))
+        a = self._stat_table(t1, "hll", c1).select(F.col("hll").alias("ha"))
+        b = self._stat_table(t2, "hll", c2).select(F.col("hll").alias("hb"))
         row = (
             a.crossJoin(b)
             .select(
@@ -1510,13 +1477,7 @@ class LakeEngine:
 
         frames, metas = [], []
         for table, column in ((t1, c1), (t2, c2)):
-            name = self.qualified(f"{table}_kmv_{column}")
-            if not self.spark.catalog.tableExists(name):
-                raise ValueError(
-                    f"no KMV sketch for {table}.{column}; run "
-                    f"analyze_join_column({table!r}, {column!r}) first"
-                )
-            sk = self.spark.table(name)
+            sk = self._stat_table(table, "kmv", column)
             meta = sk.select("k", "salt").first()
             metas.append((int(meta["k"]), meta["salt"]) if meta else None)
             frames.append(sk.select("rank", "h"))
@@ -1566,13 +1527,7 @@ class LakeEngine:
 
         frames, metas = [], []
         for table, column in ((t1, c1), (t2, c2)):
-            name = self.qualified(f"{table}_cms_{column}")
-            if not self.spark.catalog.tableExists(name):
-                raise ValueError(
-                    f"no join-column sketch for {table}.{column}; run "
-                    f"analyze_join_column({table!r}, {column!r}) first"
-                )
-            sk = self.spark.table(name)
+            sk = self._stat_table(table, "cms", column)
             meta = sk.select("depth", "width", "salt").first()
             if meta is None:  # empty source column -> empty sketch
                 return 0
@@ -1609,8 +1564,8 @@ class LakeEngine:
         `analyze_join_column` cross-type discipline applies); every
         row carries (n_bits, k, salt) so :func:`probe_membership`
         probes on the exact grid the filter was built on. The filter
-        is stamped with the table's current snapshot version
-        (``_stamp_bloom_version``): `_enforce_unique` trusts the
+        is stamped with the table's current snapshot version (its
+        entry in ``_column_stats.json``): `_enforce_unique` trusts the
         zero-false-negative contract ONLY while the stamp matches, so
         a non-append mutation (overwrite, merge, restore, sync) that
         changes the key set without folding into the filter degrades
@@ -1634,7 +1589,9 @@ class LakeEngine:
         bits.write.format("parquet").mode("overwrite").saveAsTable(
             self.qualified(f"{table}_bloom_{column}")
         )
-        self._stamp_bloom_version(table, column)
+        self._set_sidecar(
+            _COLUMN_STATS, f"{table}_bloom_{column}", self._current_snapshot_version(table)
+        )
 
     def probe_membership(
         self, table: str, column: str, probe: DataFrame, probe_col: str
@@ -1650,13 +1607,7 @@ class LakeEngine:
         everywhere. Returns (probe_col, bloom_member)."""
         from cbts_datalake_synnex_spark.operators import sketches
 
-        name = self.qualified(f"{table}_bloom_{column}")
-        if not self.spark.catalog.tableExists(name):
-            raise ValueError(
-                f"no membership filter for {table}.{column}; run "
-                f"analyze_membership({table!r}, {column!r}) first"
-            )
-        bits = self.spark.table(name)
+        bits = self._stat_table(table, "bloom", column)
         meta = bits.select("n_bits", "k", "salt").first()
         if meta is None:  # empty source column -> nothing is a member
             return (
@@ -1718,15 +1669,10 @@ class LakeEngine:
         one bucket (1/n) plus intra-bucket non-uniformity; heavy
         duplicate spikes widen it — pair with `skew_profile` when a
         column is spike-dominated. Neither data table is touched."""
-        name = self.qualified(f"{table}_hist_{column}")
-        if not self.spark.catalog.tableExists(name):
-            raise ValueError(
-                f"no histogram for {table}.{column}; run "
-                f"analyze_column_histogram({table!r}, {column!r}) first"
-            )
+        hist = self._stat_table(table, "hist", column)
         if op not in ("<=", "<", ">=", ">"):
             raise ValueError(f"op: {op!r}")
-        row = self.spark.table(name).first()
+        row = hist.first()
         bounds, n = list(row["bounds"]), int(row["n_buckets"])
         if not bounds or row["n_vals"] == 0:
             return 0.0
@@ -1781,14 +1727,8 @@ class LakeEngine:
         report: dict = {}
         sides: dict = {}
         for side, (t, c) in (("a", (t1, c1)), ("b", (t2, c2))):
-            name = self.qualified(f"{t}_cms_{c}")
-            if not self.spark.catalog.tableExists(name):
-                raise ValueError(
-                    f"no join-column sketch for {t}.{c}; run "
-                    f"analyze_join_column({t!r}, {c!r}) first"
-                )
             stats = (
-                self.spark.table(name)
+                self._stat_table(t, "cms", c)
                 .groupBy("d")
                 .agg(F.sum("cnt").alias("tot"), F.max("cnt").alias("mx"))
                 .agg(
@@ -1847,9 +1787,9 @@ class LakeEngine:
         recomputes the full query each time. For single-table algebraic
         aggregates prefer ``create_incremental_view``, which merges only
         new source files per refresh."""
-        defs = self._mview_defs()
-        defs[name] = {"query": query, "partition_cols": list(partition_cols or [])}
-        self._save_mview_defs(defs)
+        self._set_sidecar(
+            _MVIEWS, name, {"query": query, "partition_cols": list(partition_cols or [])}
+        )
         self.refresh_materialized_view(name)
 
     # Incremental MV maintenance — algebraic + sketch aggregates. The
@@ -1879,15 +1819,18 @@ class LakeEngine:
         sum/count/min/max/avg/approx_distinct (count accepts col="*";
         approx_distinct maintains a mergeable DataSketches HLL sketch
         per group — the sketch answer to count-distinct, which has no
-        mergeable exact state). Refresh tracks the
-        source table's data files (``DataFrame.inputFiles``): new files
-        since the last refresh are partially aggregated and MERGED into
-        the stored per-group state — the refresh cost scales with the
-        delta, not the table. If files disappeared (overwrite, compaction)
-        the state is unmergeable and the refresh falls back to a full
-        recompute. This is the Delta/streaming upgrade path of
-        ``create_materialized_view`` implemented directly on the parquet
-        lake; the reference's Athena tier has no analogue (plain views
+        mergeable exact state). The view's definition in
+        ``_mviews.json`` records the source table's live files at each
+        refresh, and a refresh follows the appended-files rule of
+        `fold_join_column_stats` (`_appended_files`): the first refresh,
+        or one after a recorded file is gone (an overwrite, DML or
+        compaction leaves the stored state unmergeable), recomputes from
+        the whole table (``full``); files only appended are partially
+        aggregated and MERGED into the stored per-group state
+        (``incremental``), so the refresh cost scales with the delta,
+        not the table; no appended file is a ``noop``. This is the
+        Delta/streaming upgrade path of ``create_materialized_view``
+        implemented directly on the parquet lake; the reference's Athena tier has no analogue (plain views
         only, src/purchase_orders.py:22).
         """
         for func, _col, _alias in aggs:
@@ -1897,22 +1840,19 @@ class LakeEngine:
                     "undefined (use create_materialized_view for full refresh, "
                     "or approx_distinct for the mergeable HLL sketch)"
                 )
-        defs = self._mview_defs()
-        defs[name] = {
+        self._set_sidecar(_MVIEWS, name, {
             "kind": "incremental",
             "source_table": source_table,
             "group_cols": list(group_cols),
             "aggs": [list(a) for a in aggs],
             "partition_cols": list(partition_cols or []),
-            "files": [],
-        }
-        self._save_mview_defs(defs)
+        })
         self.refresh_materialized_view(name)
 
     def refresh_materialized_view(self, name: str) -> str:
         """Refresh ``name``; returns how: ``full`` | ``incremental`` |
         ``noop`` (incremental views with no new source files)."""
-        spec = self._mview_defs()[name]
+        spec = self._sidecar(_MVIEWS)[name]
         if spec.get("kind") == "incremental":
             return self._refresh_incremental(name, spec)
         if spec.get("kind") == "join":
@@ -1982,24 +1922,17 @@ class LakeEngine:
         return cols
 
     def _refresh_incremental(self, name: str, spec: dict[str, Any]) -> str:
+        how, appended, live = self._appended_files(spec["source_table"], spec.get("files"))
+        if how == "noop":
+            return how
         qsrc = self.qualified(spec["source_table"])
-        self.spark.catalog.refreshTable(qsrc)
-        src = self.spark.table(qsrc)
-        current = sorted(_spark_file(f) for f in src.inputFiles())
-        seen = set(spec["files"])
-        new = [f for f in current if f not in seen]
-        removed = seen - set(current)
         group = spec["group_cols"]
-        if removed or not seen:
-            # files vanished (overwrite/compact) or first build: the
-            # stored state can't be merged forward — recompute from the
-            # whole table.
-            state = src.groupBy(*group).agg(*self._iv_state_exprs(spec["aggs"], partial=True))
-            how = "full"
-        elif not new:
-            return "noop"
+        if how == "full":
+            state = self.spark.table(qsrc).groupBy(*group).agg(
+                *self._iv_state_exprs(spec["aggs"], partial=True)
+            )
         else:
-            delta = self._read_files_as_table_schema(qsrc, new)
+            delta = self._read_files_as_table_schema(qsrc, appended)
             partial = delta.groupBy(*group).agg(
                 *self._iv_state_exprs(spec["aggs"], partial=True)
             )
@@ -2009,7 +1942,6 @@ class LakeEngine:
                 .groupBy(*group)
                 .agg(*self._iv_state_exprs(spec["aggs"], partial=False))
             )
-            how = "incremental"
         # the incremental branch reads the MV it overwrites; `_commit`
         # stages it before touching the MV's files
         self.write_curated(
@@ -2018,9 +1950,7 @@ class LakeEngine:
             mode="overwrite",
             partition_cols=spec["partition_cols"],
         )
-        defs = self._mview_defs()
-        defs[name]["files"] = current
-        self._save_mview_defs(defs)
+        self._set_sidecar(_MVIEWS, name, {**spec, "files": live})
         return how
 
     # -- incrementally-maintained JOIN view (round 12) -----------------
@@ -2079,8 +2009,7 @@ class LakeEngine:
             dim_cols,
         )
         self.write_curated(name, mv, mode="overwrite", partition_cols=[])
-        defs = self._mview_defs()
-        defs[name] = {
+        self._set_sidecar(_MVIEWS, name, {
             "kind": "join",
             "fact_table": fact_table,
             "dim_table": dim_table,
@@ -2090,8 +2019,7 @@ class LakeEngine:
             "fact_cols": fact_cols,
             "dim_cols": dim_cols,
             "fact_version": history[-1]["version"],
-        }
-        self._save_mview_defs(defs)
+        })
 
     def _join_view_join(
         self,
@@ -2115,7 +2043,7 @@ class LakeEngine:
         files; the overwrite stages the new content before its commit
         retires those files, so the read-modify-overwrite never reads
         a file it has moved."""
-        spec = self._mview_defs()[name]
+        spec = self._sidecar(_MVIEWS)[name]
         if spec.get("kind") != "join":
             raise ValueError(f"{name!r} is not a join view")
         cur = self.snapshot_history(spec["fact_table"])[-1]["version"]
@@ -2142,9 +2070,7 @@ class LakeEngine:
         mv = self.read_snapshot(name)
         new_mv = mv.join(removes, key, "left_anti").unionByName(adds)
         self.write_curated(name, new_mv, mode="overwrite", partition_cols=[])
-        defs = self._mview_defs()
-        defs[name]["fact_version"] = cur
-        self._save_mview_defs(defs)
+        self._set_sidecar(_MVIEWS, name, {**spec, "fact_version": cur})
         return "incremental"
 
     def _table_layout(self, qtable: str) -> tuple[str, list[str]]:
@@ -2171,18 +2097,6 @@ class LakeEngine:
     def _table_location(self, qtable: str) -> str:
         return self._table_layout(qtable)[0]
 
-    def _mview_defs(self) -> dict[str, Any]:
-        path = os.path.join(self.zones.root, "_mviews.json")
-        if not os.path.exists(path):
-            return {}
-        with open(path) as f:
-            return json.load(f)
-
-    def _save_mview_defs(self, defs: dict[str, Any]) -> None:
-        path = os.path.join(self.zones.root, "_mviews.json")
-        with open(path, "w") as f:
-            json.dump(defs, f, indent=2)
-
     # ------------------------------------------------------------------
     # OPTIMIZE-style compaction (SURVEY §7 phase 5): the write-side twin
     # of the reference's read-side small-file grouping (groupSize 100 MB,
@@ -2195,7 +2109,6 @@ class LakeEngine:
         target_file_bytes: int = _TARGET_FILE_BYTES,
         cluster_by: Sequence[str] | None = None,
         zorder: bool = False,
-        zorder_bits: int = 8,
     ) -> int:
         """Bin-pack a curated table's small files. Returns the table's
         file count afterwards. Idempotent, like Delta's OPTIMIZE
@@ -2221,7 +2134,7 @@ class LakeEngine:
 
         ``zorder=True`` (with >=2 ``cluster_by`` columns) interleaves
         the columns on a Z-curve instead of lexicographic order: each
-        column is bucketed into ``2**zorder_bits`` quantile ranks
+        column is bucketed into ``2**_ZORDER_BITS`` (256) quantile ranks
         (boundaries from ``approxQuantile`` — sample-based, driver-
         bounded; non-numeric columns rank by ``xxhash64`` bucket, which
         clusters equality predicates, not ranges), the per-column ranks
@@ -2248,7 +2161,7 @@ class LakeEngine:
         # properties (constraints, generated columns) — the table is
         # never re-created.
         if zorder and len(cluster_by) >= 2:
-            zcol = self._zvalue(df, list(cluster_by), zorder_bits)
+            zcol = self._zvalue(df, list(cluster_by))
             staged = (
                 df.withColumn("__zval", zcol)
                 .repartitionByRange(n_files, F.col("__zval"))
@@ -2430,31 +2343,13 @@ class LakeEngine:
     # key-set mutation (overwrite, merge/delete/update, restore, sync)
     # would leave it with FALSE NEGATIVES and let `_enforce_unique`
     # admit a duplicate. Every mutation path journals a data snapshot,
-    # so the sidecar stamp below records the snapshot version the
-    # filter reflects; a mismatch (or missing stamp) disables the fast
-    # path — fail-safe to the exact semi-join scan (ADVICE r12).
-    def _bloom_stamp_path(self, table: str, column: str) -> str:
-        return os.path.join(
-            self.zones.root, "_snapshot_log", f"{table}_bloom_{column}.version.json"
-        )
-
+    # so the filter's entry in `_COLUMN_STATS`, keyed by the filter
+    # table's name, stamps the snapshot version the filter reflects; a
+    # mismatch (or missing stamp) disables the fast path — fail-safe to
+    # the exact semi-join scan (ADVICE r12).
     def _current_snapshot_version(self, table: str) -> int:
         history = self.snapshot_history(table)
         return int(history[-1]["version"]) if history else 0
-
-    def _stamp_bloom_version(self, table: str, column: str) -> None:
-        path = self._bloom_stamp_path(table, column)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
-            json.dump({"version": self._current_snapshot_version(table)}, f)
-
-    def _bloom_is_current(self, table: str, column: str) -> bool:
-        path = self._bloom_stamp_path(table, column)
-        if not os.path.exists(path):
-            return False
-        with open(path) as f:
-            stamped = json.load(f).get("version", -1)
-        return int(stamped) == self._current_snapshot_version(table)
 
     def _enforce_unique(
         self, table: str, df: DataFrame, mode: str, props: dict[str, str]
@@ -2485,7 +2380,8 @@ class LakeEngine:
             if len(cols) == 1 and self.spark.catalog.tableExists(
                 self.qualified(f"{table}_bloom_{cols[0]}")
             ):
-                if not self._bloom_is_current(table, cols[0]):
+                stamp = self._sidecar(_COLUMN_STATS).get(f"{table}_bloom_{cols[0]}")
+                if stamp != self._current_snapshot_version(table):
                     # filter predates a non-append mutation: its
                     # zero-FN contract is void — exact scan instead
                     st["bloom_stale"] = True
@@ -2541,7 +2437,9 @@ class LakeEngine:
             # the filter now reflects the post-append snapshot
             # (journaled just before this call) — re-stamp so the
             # fast path stays live across append chains
-            self._stamp_bloom_version(table, cols[0])
+            self._set_sidecar(
+                _COLUMN_STATS, f"{table}_bloom_{cols[0]}", self._current_snapshot_version(table)
+            )
 
     def _table_props(self, table: str) -> dict[str, str]:
         """Every property of the table, from one ``SHOW TBLPROPERTIES``.
@@ -2869,11 +2767,12 @@ class LakeEngine:
         )
 
     _ZVALUE_TRAIN_ROWS = 200_000
+    _ZORDER_BITS = 8
 
-    def _zvalue(self, df: DataFrame, cols: list[str], bits: int) -> F.Column:
-        """Z-curve key: per-column quantile rank (``2**bits`` buckets),
-        bit-interleaved. All JVM-side: the only driver work is ONE
-        ``approxQuantile`` call covering every numeric column at once
+    def _zvalue(self, df: DataFrame, cols: list[str]) -> F.Column:
+        """Z-curve key: per-column quantile rank (``2**_ZORDER_BITS``
+        buckets), bit-interleaved. All JVM-side: the only driver work
+        is ONE ``approxQuantile`` call covering every numeric column at once
         (one pass, not one scan per column), trained on a deterministic
         xxhash64-mod row sample capped near ``_ZVALUE_TRAIN_ROWS`` (the
         ANN md5-sample discipline — boundary estimation doesn't need
@@ -2885,6 +2784,7 @@ class LakeEngine:
         assignment is a single higher-order ``aggregate`` over a
         literal boundary array (one array per column — plan size
         O(cols * 2**bits) constants, no per-row Python)."""
+        bits = self._ZORDER_BITS
         n_buckets = 1 << bits
         numeric = {
             f.name
@@ -2974,12 +2874,10 @@ class LakeEngine:
     # 100 TB orphaned rewrite attempts are real storage money — this is
     # the engine's (trivial) VACUUM.
     def _scratch_leftovers(self, prefix: str = "") -> list[str]:
-        out = []
-        for sub in _SCRATCH_DIRS:
-            base = os.path.join(self.zones.root, sub)
-            if os.path.isdir(base):
-                out += [os.path.join(base, d) for d in os.listdir(base) if d.startswith(prefix)]
-        return out
+        base = os.path.join(self.zones.root, "_scratch")
+        if not os.path.isdir(base):
+            return []
+        return [os.path.join(base, d) for d in os.listdir(base) if d.startswith(prefix)]
 
     def vacuum_scratch(self) -> int:
         """Delete every leftover scratch dir (single-writer assumption —
@@ -3602,7 +3500,6 @@ class LakeEngine:
         when_not_matched_insert: str | bool = True,
         sequence_col: str | None = None,
         exclude_cols: Sequence[str] = (),
-        broadcast_source: bool | None = None,
     ) -> dict[str, int]:
         """Row-level ``MERGE INTO table t USING source s ON t.k = s.k``
         (Delta MERGE parity on plain parquet). Clause semantics, in
@@ -3639,11 +3536,11 @@ class LakeEngine:
         holding a matched file ends as one file when its rewrite fits
         the target, its inserts included; a partition that only gets
         inserts keeps its files and gains one.
-        ``broadcast_source=None`` (default) decides from Catalyst's size
-        estimate of the source plan: small CDC batches broadcast,
-        anything above the threshold (or with an unknown/huge estimate)
-        falls through to AQE so a large merge source cannot OOM the
-        driver; ``True``/``False`` force it.
+        Whether the source broadcasts is `_fits_broadcast`'s answer from
+        Catalyst's size estimate of the source plan: small CDC batches
+        broadcast, anything above the threshold (or with an
+        unknown/huge estimate) falls through to AQE so a large merge
+        source cannot OOM the driver.
         """
         qtable = self.qualified(table)
         if not self.spark.catalog.tableExists(qtable):
@@ -3669,9 +3566,7 @@ class LakeEngine:
         data_cols = [c for c in source.columns if c not in exclude]
         src_m = source.withColumn("__merge_m", F.lit(True))
         src_keys = source.select(*keys)  # a semi-join needs no unique build keys
-        if broadcast_source is None:
-            broadcast_source = self._fits_broadcast(source)
-        if broadcast_source:
+        if self._fits_broadcast(source):
             src_m, src_keys = F.broadcast(src_m), F.broadcast(src_keys)
         # One collect answers both questions asked before anything is
         # staged: which files hold matched keys, and (a null path)
@@ -4338,7 +4233,6 @@ def write_sorted(
     table: str,
     sort_col: str,
     n_ranges: int = 32,
-    verify_disjoint: bool = True,
 ) -> None:
     """Range-partitioned SORTED table export (round 10) — the layout
     contract downstream range readers prune on: global sort order
@@ -4349,7 +4243,7 @@ def write_sorted(
     into an O(files-touched) scan — the single-column cousin of the
     Z-order compaction the engine already certifies (`lc_zorder`).
 
-    ``verify_disjoint=True`` reads back ONLY per-file (min, max)
+    The export then reads back ONLY per-file (min, max)
     via the ``_metadata`` column (footer-cheap at any scale: the scan
     aggregates to |files| rows) and RAISES if any two files overlap —
     the physical outcome, not the plan, is the pin (sampling-based
@@ -4363,8 +4257,6 @@ def write_sorted(
         .mode("overwrite")
         .saveAsTable(table)
     )
-    if not verify_disjoint:
-        return
     back = spark.table(table)
     # _metadata resolves only on the file-source relation: bind it
     # into a real column immediately (engine discipline)
@@ -4616,7 +4508,7 @@ def update_ann_index(
         similarity._cmat_frame(spark, cents),
         min(int(meta["n_assign"]), len(cents)),
     )
-    storage = _index_storage(meta)
+    storage = meta["storage"]
     if storage == "pq":
         # encode with the FROZEN persisted codebook — same posture as
         # the frozen centroid set: appends never retrain
@@ -4635,15 +4527,6 @@ def update_ann_index(
     ).bucketBy(int(meta["n_buckets"]), "cell").sortBy("cell").saveAsTable(
         engine.qualified(f"{index_name}_postings")
     )
-
-
-def _index_storage(meta) -> str:
-    """Storage form from a meta row — 'float' for indexes built before
-    the column existed."""
-    try:
-        return meta["storage"] or "float"
-    except (KeyError, ValueError):
-        return "float"
 
 
 def query_ann_index(
@@ -4670,7 +4553,7 @@ def query_ann_index(
     )
     cents = [list(r["centroid"]) for r in cent_rows]
     meta = spark.table(engine.qualified(f"{index_name}_meta")).first()
-    storage = _index_storage(meta)
+    storage = meta["storage"]
     book_df = None
     if storage == "pq":
         books, _sd = _pq_books_from_table(

@@ -179,14 +179,16 @@ def test_fits_broadcast_small_batch_and_unknown_plan(spark, eng):
     assert eng._fits_broadcast(spark.range(10 ** 9).crossJoin(spark.range(100))) is False
 
 
-def test_merge_without_broadcast_matches_broadcast(spark, eng):
+def test_merge_without_broadcast_matches_broadcast(spark, eng, monkeypatch):
     _seed(spark, eng, table="a")
     _seed(spark, eng, table="b")
     src = spark.createDataFrame(
         [(5, "x", 50), (200, "y", 60)], "k int, name string, qty int"
     )
-    ra = eng.merge_rows("a", src, keys=["k"], broadcast_source=True)
-    rb = eng.merge_rows("b", src, keys=["k"], broadcast_source=False)
+    monkeypatch.setattr(eng, "_fits_broadcast", lambda df: True)
+    ra = eng.merge_rows("a", src, keys=["k"])
+    monkeypatch.setattr(eng, "_fits_broadcast", lambda df: False)
+    rb = eng.merge_rows("b", src, keys=["k"])
     assert ra == rb
     ta = spark.table(eng.qualified("a")).orderBy("k").collect()
     tb = spark.table(eng.qualified("b")).orderBy("k").collect()
@@ -439,14 +441,14 @@ def test_vacuum_orphans_repairs_crash_artifacts(spark, eng, monkeypatch):
     spark.catalog.refreshTable(qt)
     assert spark.table(qt).count() == 21  # the corruption mode
     # plus a stale scratch dir from a crashed DML
-    os.makedirs(os.path.join(eng.zones.root, "_dml", "t_deadbeef"), exist_ok=True)
-    open(os.path.join(eng.zones.root, "_dml", "t_deadbeef", "part-0.parquet"), "w").write("x")
+    os.makedirs(os.path.join(eng.zones.root, "_scratch", "t_deadbeef"), exist_ok=True)
+    open(os.path.join(eng.zones.root, "_scratch", "t_deadbeef", "part-0.parquet"), "w").write("x")
 
     assert eng.vacuum_orphans("t", dry_run=True) == 2
     assert spark.table(qt).count() == 21  # dry run touches nothing
     assert eng.vacuum_orphans("t") == 2
     assert spark.table(qt).count() == 20
-    assert not os.path.exists(os.path.join(eng.zones.root, "_dml", "t_deadbeef"))
+    assert not os.path.exists(os.path.join(eng.zones.root, "_scratch", "t_deadbeef"))
     # time travel unaffected (retention links live elsewhere)
     assert eng.read_snapshot("t", 1).count() == 20
 

@@ -471,7 +471,7 @@ def test_merge_upsert_idempotent(engine, spark):
 
 
 def test_vacuum_scratch_removes_orphans(engine):
-    orphan = os.path.join(engine.zones.root, "_compact", "crashed_attempt")
+    orphan = os.path.join(engine.zones.root, "_scratch", "crashed_attempt")
     os.makedirs(orphan)
     with open(os.path.join(orphan, "part-0.parquet"), "w") as f:
         f.write("junk")

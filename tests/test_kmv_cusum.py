@@ -18,6 +18,7 @@ leaks across users).
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from cbts_datalake_synnex_spark.operators import sketches
@@ -166,7 +167,12 @@ def test_engine_kmv_overlap_roundtrip(spark, tmp_path):
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
-def test_fold_column_stats_ladder_and_staleness(spark, tmp_path):
+@pytest.mark.parametrize("writer", ["saveAsTable", "write_curated"])
+def test_fold_column_stats_ladder_and_staleness(spark, tmp_path, writer):
+    """The fold's full / incremental / noop ladder on a table the
+    engine never journaled (``saveAsTable``: its live files are a
+    listing) and on an engine table (``write_curated``: its snapshot
+    manifest)."""
     import uuid
 
     from cbts_datalake_synnex_spark.engine import LakeEngine
@@ -174,12 +180,23 @@ def test_fold_column_stats_ladder_and_staleness(spark, tmp_path):
 
     db = f"t_fold_{uuid.uuid4().hex[:8]}"
     eng = LakeEngine(spark, str(tmp_path), database=db)
+
+    def write(df, mode):
+        if writer == "saveAsTable":
+            df.write.mode(mode).saveAsTable(eng.qualified("ft"))
+        else:
+            eng.write_curated("ft", df, mode=mode)
+
+    def sketch_tables():
+        tables = {k: spark.table(eng.qualified(f"ft_{k}_item")) for k in ("cms", "hll", "kmv")}
+        return {k: (t.schema, sorted(tuple(r) for r in t.collect())) for k, t in tables.items()}
+
     try:
         a = _items(spark, [f"k{i}" for i in range(100)])
         b = _items(spark, [f"k{i}" for i in range(80, 180)])
-        a.write.saveAsTable(eng.qualified("ft"))
+        write(a, "overwrite")
         assert eng.fold_join_column_stats("ft", "item", depth=2, width=32) == "full"
-        b.write.mode("append").saveAsTable(eng.qualified("ft"))
+        write(b, "append")
         assert (
             eng.fold_join_column_stats("ft", "item", depth=2, width=32)
             == "incremental"
@@ -193,10 +210,20 @@ def test_fold_column_stats_ladder_and_staleness(spark, tmp_path):
         cms = spark.table(eng.qualified("ft_cms_item"))
         mass = cms.groupBy("d").sum("cnt").collect()
         assert all(r["sum(cnt)"] == 200 for r in mass)
+        analyzed = sketch_tables()
+        assert [(f.name, f.dataType.simpleString()) for f in analyzed["cms"][0]] == [
+            ("d", "int"), ("bucket", "bigint"), ("cnt", "bigint"),
+            ("depth", "int"), ("width", "int"), ("salt", "string"),
+        ]
+        assert [f.name for f in analyzed["hll"][0]] == ["hll"]
+        assert [f.name for f in analyzed["kmv"][0]] == ["rank", "h", "k", "salt"]
         # spec change voids mergeability -> full rebuild
         assert eng.fold_join_column_stats("ft", "item", depth=3, width=32) == "full"
+        # ... and a full fold writes what the analyze wrote, schema included
+        assert eng.fold_join_column_stats("ft", "item", depth=2, width=32) == "full"
+        assert sketch_tables() == analyzed
         # OVERWRITE removes files -> mergeability voided -> full
-        a.write.mode("overwrite").saveAsTable(eng.qualified("ft"))
+        write(a, "overwrite")
         assert eng.fold_join_column_stats("ft", "item", depth=3, width=32) == "full"
         sk = spark.table(eng.qualified("ft_kmv_item")).select("rank", "h")
         fresh = sketches.kmv_build(
@@ -205,6 +232,12 @@ def test_fold_column_stats_ladder_and_staleness(spark, tmp_path):
         assert {(r["rank"], r["h"]) for r in sk.collect()} == {
             (r["rank"], r["h"]) for r in fresh.collect()
         }
+        # a compaction after an append retires folded files -> full
+        write(b, "append")
+        eng.compact_table("ft")
+        assert eng.fold_join_column_stats("ft", "item", depth=3, width=32) == "full"
+        mass = spark.table(eng.qualified("ft_cms_item")).groupBy("d").sum("cnt").collect()
+        assert all(r["sum(cnt)"] == 200 for r in mass)
     finally:
         spark.catalog.setCurrentDatabase("default")
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
