@@ -44,6 +44,7 @@ import json
 import os
 import re
 import shutil
+import threading
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -238,6 +239,9 @@ class LakeEngine:
         self.database = database
         self._clock = clock  # () -> datetime, injectable for tests
         self.table_format = table_format
+        # Serializes `_set_sidecar`'s read-modify-write: concurrent
+        # curates (`run_concurrent`) share the JSON sidecars.
+        self._sidecar_lock = threading.Lock()
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
 
     # ------------------------------------------------------------------
@@ -467,8 +471,6 @@ class LakeEngine:
         curates to DIFFERENT tables are safe; same-table writers still
         need external ordering, exactly as with concurrent Glue runs.
         """
-        import threading
-
         sem = threading.BoundedSemaphore(int(max_concurrent))
         results: dict[str, Any] = {}
         lock = threading.Lock()
@@ -1402,17 +1404,23 @@ class LakeEngine:
             return json.load(f)
 
     def _set_sidecar(self, name: str, key: str, value: Any) -> None:
-        """Set one entry of the sidecar ``name`` (``None`` removes it).
-        A catalog-only lake may get here before any zone write created
-        the root."""
-        data = self._sidecar(name)
-        if value is None:
-            data.pop(key, None)
-        else:
-            data[key] = value
-        os.makedirs(self.zones.root, exist_ok=True)
-        with open(os.path.join(self.zones.root, name), "w") as f:
-            json.dump(data, f, indent=2)
+        """Set one entry of the sidecar ``name`` (``None`` removes it),
+        under the engine's lock so concurrent writers keep each other's
+        entries; the file is replaced whole, so a reader never sees a
+        partial one. A catalog-only lake may get here before any zone
+        write created the root."""
+        path = os.path.join(self.zones.root, name)
+        with self._sidecar_lock:
+            data = self._sidecar(name)
+            if value is None:
+                data.pop(key, None)
+            else:
+                data[key] = value
+            os.makedirs(self.zones.root, exist_ok=True)
+            tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+            with open(tmp, "w") as f:
+                json.dump(data, f, indent=2)
+            os.replace(tmp, path)
 
     def _stat_table(self, table: str, kind: str, column: str) -> DataFrame:
         """The persisted statistic ``{table}_{kind}_{column}``; raises,
@@ -3159,6 +3167,9 @@ class LakeEngine:
             return history[-1]["files"]
         qtable = self.qualified(table)
         if self.spark.catalog.tableExists(qtable):
+            # another session may have written it since the file index
+            # was cached
+            self.spark.catalog.refreshTable(qtable)
             return [_spark_file(f) for f in self.spark.table(qtable).inputFiles()]
         return []
 

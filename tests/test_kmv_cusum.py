@@ -222,9 +222,10 @@ def test_fold_column_stats_ladder_and_staleness(spark, tmp_path, writer):
         # ... and a full fold writes what the analyze wrote, schema included
         assert eng.fold_join_column_stats("ft", "item", depth=2, width=32) == "full"
         assert sketch_tables() == analyzed
-        # OVERWRITE removes files -> mergeability voided -> full
+        # OVERWRITE removes files -> mergeability voided -> full (same
+        # spec as the ledger, so only the removed files can force it)
         write(a, "overwrite")
-        assert eng.fold_join_column_stats("ft", "item", depth=3, width=32) == "full"
+        assert eng.fold_join_column_stats("ft", "item", depth=2, width=32) == "full"
         sk = spark.table(eng.qualified("ft_kmv_item")).select("rank", "h")
         fresh = sketches.kmv_build(
             a.withColumnRenamed("item", "__item"), "__item", k=256
@@ -235,7 +236,7 @@ def test_fold_column_stats_ladder_and_staleness(spark, tmp_path, writer):
         # a compaction after an append retires folded files -> full
         write(b, "append")
         eng.compact_table("ft")
-        assert eng.fold_join_column_stats("ft", "item", depth=3, width=32) == "full"
+        assert eng.fold_join_column_stats("ft", "item", depth=2, width=32) == "full"
         mass = spark.table(eng.qualified("ft_cms_item")).groupBy("d").sum("cnt").collect()
         assert all(r["sum(cnt)"] == 200 for r in mass)
     finally:

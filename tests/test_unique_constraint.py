@@ -206,3 +206,34 @@ def test_analyze_membership_default_k_valid(spark, eng):
     eng.analyze_membership("t", "k")  # must not raise
     with pytest.raises(ValueError, match="at most 4"):
         eng.analyze_membership("t", "k", k=5)
+
+
+def test_concurrent_appends_keep_each_bloom_stamp(spark, eng):
+    """The Bloom freshness stamps of all tables share one JSON sidecar:
+    concurrent curates to different tables (`run_concurrent`) must
+    neither read a partial file nor drop each other's stamps."""
+    from cbts_datalake_synnex_spark.engine import _COLUMN_STATS
+
+    tables = ("t0", "t1")
+    for t in tables:
+        eng.write_curated(
+            t, _df(spark, [(i, "a") for i in range(1, 50)]),
+            mode="overwrite", partition_cols=[],
+        )
+        eng.add_unique_constraint(t, "pk", ["k"])
+        eng.analyze_membership(t, "k", n_bits=1 << 16, k=3)
+
+    def appends(t):
+        def run():
+            for n in range(3):
+                eng.write_curated(
+                    t, _df(spark, [(1000 + n, "b")]),
+                    mode="append", partition_cols=[],
+                )
+        return run
+
+    results = eng.run_concurrent({t: appends(t) for t in tables})
+    assert all(r is None for r in results.values()), results
+    stamps = eng._sidecar(_COLUMN_STATS)
+    for t in tables:
+        assert stamps[f"{t}_bloom_k"] == eng._current_snapshot_version(t)
