@@ -99,8 +99,9 @@ def _unique_specs(props: dict[str, str]) -> dict[str, list[str]]:
 
 # The JSON sidecars under the lake root (`LakeEngine._sidecar`): the
 # column-statistics ledgers (fold ledgers and Bloom freshness stamps),
-# and the materialized-view definitions with their refresh ledgers.
-_COLUMN_STATS, _MVIEWS = "_column_stats.json", "_mviews.json"
+# the materialized-view definitions with their refresh ledgers, and
+# the persistent indexes' specs.
+_COLUMN_STATS, _MVIEWS, _INDEXES = "_column_stats.json", "_mviews.json", "_indexes.json"
 
 # Persisted statistic kind (`{table}_{kind}_{column}`) → what it is and
 # the call that builds it (`LakeEngine._stat_table`).
@@ -604,6 +605,13 @@ class LakeEngine:
         still live is read from the table's directory, where the next
         commit to that table may retire it. A write of the frame to the
         same table stages it before retiring anything."""
+        return self._snapshot_frame(table, *self._snapshot_entry(table, version))
+
+    def _snapshot_entry(
+        self, table: str, version: int | None
+    ) -> tuple[dict[str, Any], StructType]:
+        """The log entry of snapshot ``version`` (default latest) and
+        the schema recorded at or before it, from one read of the log."""
         history = self.snapshot_history(table)
         if not history:
             raise ValueError(f"no snapshots recorded for table '{table}'")
@@ -613,14 +621,16 @@ class LakeEngine:
         for entry in history:
             schema = entry.get("schema", schema)
             if entry["version"] == version:
-                break
-        else:
-            raise ValueError(f"table '{table}' has no snapshot version {version}")
-        schema = StructType.fromJson(schema)
+                return entry, StructType.fromJson(schema)
+        raise ValueError(f"table '{table}' has no snapshot version {version}")
+
+    def _snapshot_frame(self, table: str, entry: dict[str, Any], schema: StructType) -> DataFrame:
+        """The files of snapshot ``entry`` read with ``schema`` (see
+        `read_snapshot`)."""
         found = self._locate(table, entry)
         if None in found:
             raise ValueError(
-                f"snapshot {version} of '{table}' is no longer materialized "
+                f"snapshot {entry['version']} of '{table}' is no longer materialized "
                 f"({len(found[None])}/{len(entry['files'])} files retired and vacuumed)"
             )
         if not found:
@@ -773,8 +783,8 @@ class LakeEngine:
         itself is journaled as a NEW version (history is append-only;
         a restore never falsifies what past versions contained).
         Returns the new current version number."""
-        snap = self.read_snapshot(table, version)
-        entry = next(h for h in self.snapshot_history(table) if h["version"] == version)
+        entry, schema = self._snapshot_entry(table, version)
+        snap = self._snapshot_frame(table, entry, schema)
         self.write_curated(
             table,
             snap,
@@ -803,16 +813,8 @@ class LakeEngine:
         retired. The clone starts its own snapshot/schema journal at
         v1. Returns the clone's location.
         """
-        history = self.snapshot_history(src_table)
-        if not history:
-            raise ValueError(f"no snapshots recorded for table '{src_table}'")
-        if version is None:
-            version = history[-1]["version"]
-        matches = [h for h in history if h["version"] == version]
-        if not matches:
-            raise ValueError(f"table '{src_table}' has no snapshot version {version}")
-        entry = matches[0]
-        snap = self.read_snapshot(src_table, version)  # validates materialization
+        entry, schema = self._snapshot_entry(src_table, version)
+        snap = self._snapshot_frame(src_table, entry, schema)  # validates materialization
         dst_loc = self.zones.curated(dst_table)
         if os.path.exists(dst_loc) and os.listdir(dst_loc):
             raise ValueError(f"clone destination not empty: {dst_loc}")
@@ -1396,7 +1398,7 @@ class LakeEngine:
 
     def _sidecar(self, name: str) -> dict[str, Any]:
         """The JSON sidecar ``name`` under the lake root (``{}`` before
-        its first write): `_COLUMN_STATS` or `_MVIEWS`."""
+        its first write): `_COLUMN_STATS`, `_MVIEWS` or `_INDEXES`."""
         path = os.path.join(self.zones.root, name)
         if not os.path.exists(path):
             return {}
@@ -3457,10 +3459,11 @@ class LakeEngine:
         `table_diff` classifies keys once (one full-outer key join on
         hashes — the unavoidable compare), then ONE `merge_rows` commit
         applies them: the snapshot rows of inserted/changed keys upsert
-        and the vanished keys delete. That change-sized merge source is
-        pinned with one eager `localCheckpoint`, so the counts, the
-        merge's file probe and its commit write read it instead of each
-        re-running the join. Files holding
+        and the vanished keys delete. The diff and that change-sized
+        merge source are each pinned with one eager `localCheckpoint`,
+        so the merge's file probe and its commit write read them instead
+        of each re-running the join; a sync that changes nothing runs
+        only the diff. Files holding
         no affected keys keep their inodes — the property a full
         overwrite loses, and at 100 TB the difference between a nightly
         sync that rewrites 0.1% of files and one that rewrites all of
@@ -3472,22 +3475,32 @@ class LakeEngine:
         if not self.spark.catalog.tableExists(qtable):
             raise ValueError(f"no such table: {qtable}")
         keys = list(keys)
-        # A checkpoint, not a cache: nothing the merge does to the
-        # table (an ALTER, a refresh) can re-run the diff mid-commit.
-        diff = table_diff(self.spark.table(qtable), snapshot, keys=keys).withColumnRenamed(
-            "change_type", "__change"
-        )
-        gone = F.col("__change") == "deleted"
-        source = (
-            snapshot.join(diff.filter(~gone), keys)
-            .unionByName(diff.filter(gone), allowMissingColumns=True)
+        # The key-sized diff is pinned by one eager checkpoint, which
+        # also fills the change counts (`Observation`); a sync with no
+        # change stops there. A checkpoint, not a cache: nothing the
+        # merge does to the table (an ALTER, a refresh) can re-run the
+        # diff mid-commit.
+        obs = Observation()
+        diff = (
+            table_diff(self.spark.table(qtable), snapshot, keys=keys)
+            .withColumnRenamed("change_type", "__change")
+            .observe(obs, *[
+                F.sum((F.col("__change") == c).cast("long")).alias(c)
+                for c in ("inserted", "changed", "deleted")
+            ])
             .localCheckpoint(eager=True)
         )
+        pinned = [diff]
         try:
-            counts = {"inserted": 0, "changed": 0, "deleted": 0}
-            for r in source.groupBy("__change").count().collect():
-                counts[r["__change"]] = int(r["count"])
+            counts = {c: int(n or 0) for c, n in obs.get.items()}
             if any(counts.values()):
+                gone = F.col("__change") == "deleted"
+                source = (
+                    snapshot.join(diff.filter(~gone), keys)
+                    .unionByName(diff.filter(gone), allowMissingColumns=True)
+                    .localCheckpoint(eager=True)
+                )
+                pinned.append(source)
                 self.merge_rows(
                     table,
                     source,
@@ -3498,7 +3511,8 @@ class LakeEngine:
                 )
         finally:
             # a local checkpoint's blocks outlive the frame: free them
-            source._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            for frame in pinned:
+                frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
         return counts
 
     def merge_rows(
@@ -3733,47 +3747,351 @@ class LakeEngine:
         )
 
     # ------------------------------------------------------------------
-    # Persistent near-dup admission index (round 9) — thin delegates to
-    # the module-level helpers below (kept module-level so the operator
-    # tier stays importable without an engine instance).
-    def build_dedup_index(self, index_name, corpus, id_col, text_col,
-                          shingle_size: int = 3, n_buckets: int = 32) -> None:
-        build_dedup_index(self, index_name, corpus, id_col, text_col,
-                          shingle_size=shingle_size, n_buckets=n_buckets)
+    # Persistent indexes. The near-dup admission index is the engine-
+    # managed form of the admission gate's `corpus_shingles=` reuse: a
+    # continuous-ingest pipeline probes the same corpus every night, so
+    # the corpus's shingle index is a set of TABLES — built once, probed
+    # per batch, appended per admission — and the nightly run never
+    # re-reads or re-tokenizes corpus text (layout and losslessness
+    # arguments on `operators/dedup.shingle_index_frames`). The IVF ANN
+    # index is its similarity sibling: centroids trained once and
+    # postings assigned once and bucketed by cell, so a probe moves only
+    # the query batch (the postings side's cogroup clustering
+    # requirement is satisfied by the bucket layout, zero exchange) and
+    # new vectors append WITHOUT retraining (frozen-centroid assignment;
+    # the staleness contract is the standard IVF one — recall drifts as
+    # the corpus distribution shifts, rebuild cadence is the operator's
+    # knob, and an exhaustive probe stays EXACT no matter how stale the
+    # centroids are). Each index's spec — what its build pinned — is
+    # one `_INDEXES` sidecar entry, so probes, appends and compactions
+    # cannot drift from the build.
+    def _index_spec(self, index_name: str, kind: str) -> dict[str, Any]:
+        """The spec ``build_{kind}_index`` recorded for ``index_name``."""
+        spec = self._sidecar(_INDEXES).get(index_name)
+        if spec is None or spec["kind"] != kind:
+            raise ValueError(f"no {kind} index '{index_name}': run build_{kind}_index first")
+        return spec
 
-    def admit_against_dedup_index(self, index_name, batch, id_col, text_col,
-                                  threshold: float = 0.7,
-                                  max_doc_freq: int | None = None) -> DataFrame:
-        return admit_against_dedup_index(self, index_name, batch, id_col,
-                                         text_col, threshold=threshold,
-                                         max_doc_freq=max_doc_freq)
+    def _write_dedup_index(self, index_name: str, frames, n_buckets: int, mode: str) -> None:
+        entries, docs, dfinc = frames
+        for suffix, frame in (("entries", entries), ("df", dfinc)):
+            write_bucketed(
+                self.spark, frame, self.qualified(f"{index_name}_{suffix}"), ["sh"],
+                n_buckets, mode=mode,
+            )
+        docs.write.format("parquet").mode(mode).saveAsTable(self.qualified(f"{index_name}_docs"))
 
-    def update_dedup_index(self, index_name, batch, decisions, id_col,
-                           text_col) -> None:
-        update_dedup_index(self, index_name, batch, decisions, id_col, text_col)
+    def build_dedup_index(
+        self,
+        index_name: str,
+        corpus: DataFrame,
+        id_col: str,
+        text_col: str,
+        shingle_size: int = 3,
+        n_buckets: int = 32,
+    ) -> None:
+        """Write the three index tables into the engine's database:
+        ``{index_name}_entries`` (sh, doc, n) bucketed+sorted by sh,
+        ``{index_name}_docs`` (doc, shs), ``{index_name}_df`` (sh, df)
+        bucketed by sh; then record the spec (shingle_size, n_buckets)."""
+        from cbts_datalake_synnex_spark.operators.dedup import shingle_index_frames
 
-    # ------------------------------------------------------------------
-    # Persistent ANN (IVF) index (round 9) — same thin-delegate shape.
-    def build_ann_index(self, index_name, vectors, id_col, vec_col,
-                        n_cells: int = 16, n_assign: int = 1,
-                        lloyd_iters: int = 8, n_buckets: int = 32,
-                        storage: str = "float",
-                        pq_m: int = 8, pq_codes: int = 16) -> None:
-        build_ann_index(self, index_name, vectors, id_col, vec_col,
-                        n_cells=n_cells, n_assign=n_assign,
-                        lloyd_iters=lloyd_iters, n_buckets=n_buckets,
-                        storage=storage, pq_m=pq_m, pq_codes=pq_codes)
+        frames = shingle_index_frames(corpus, id_col, text_col, shingle_size)
+        self._write_dedup_index(index_name, frames, int(n_buckets), "overwrite")
+        self._set_sidecar(_INDEXES, index_name, {
+            "kind": "dedup", "shingle_size": int(shingle_size), "n_buckets": int(n_buckets),
+        })
 
-    def update_ann_index(self, index_name, vectors, id_col, vec_col) -> None:
-        update_ann_index(self, index_name, vectors, id_col, vec_col)
+    def admit_against_dedup_index(
+        self,
+        index_name: str,
+        batch: DataFrame,
+        id_col: str,
+        text_col: str,
+        threshold: float = 0.7,
+        max_doc_freq: int | None = None,
+    ) -> DataFrame:
+        """Probe the persisted index: (id, admitted, blocked_by, jaccard)
+        per batch doc. Only the batch is tokenized; the index side of the
+        candidate join moves nothing (bucketed scan, or the tiny probe
+        prefix broadcasts into it)."""
+        from cbts_datalake_synnex_spark.operators.dedup import admission_against_index
 
-    def query_ann_index(self, index_name, queries, id_col, vec_col,
-                        k: int = 5, n_probe: int = 4, round_dp: int = 6,
-                        exclude_self: bool = True) -> DataFrame:
-        return query_ann_index(self, index_name, queries, id_col, vec_col,
-                               k=k, n_probe=n_probe, round_dp=round_dp,
-                               exclude_self=exclude_self)
+        spec = self._index_spec(index_name, "dedup")
+        return admission_against_index(
+            *(self.spark.table(self.qualified(f"{index_name}_{t}")) for t in ("entries", "docs", "df")),
+            batch,
+            id_col,
+            text_col,
+            threshold=threshold,
+            shingle_size=spec["shingle_size"],
+            max_doc_freq=max_doc_freq,
+        )
 
+    def update_dedup_index(
+        self,
+        index_name: str,
+        batch: DataFrame,
+        decisions: DataFrame,
+        id_col: str,
+        text_col: str,
+    ) -> None:
+        """Append the ADMITTED batch docs' shingles to the index — one
+        bucketed append per table, df rows as additive increments (readers
+        sum per sh); no corpus rewrite, no re-tokenize of anything but the
+        admitted slice. Appends use the spec's bucket count, so the
+        bucketed-join property survives every nightly update.
+
+        ``decisions`` is PINNED (localCheckpoint) before the first append:
+        its plan reads the very index tables being appended, so a lazy
+        frame re-evaluated afterwards would see the batch's own rows in
+        the index and block everything as a self-match. Pass the frame
+        straight from ``admit_against_dedup_index`` — or an already
+        checkpointed one, for which the pin is a no-op read."""
+        from cbts_datalake_synnex_spark.operators.dedup import shingle_index_frames
+
+        spec = self._index_spec(index_name, "dedup")
+        admitted = batch.join(
+            decisions.localCheckpoint().filter(F.col("admitted")).select(id_col), id_col
+        )
+        frames = shingle_index_frames(admitted, id_col, text_col, spec["shingle_size"])
+        self._write_dedup_index(index_name, frames, spec["n_buckets"], "append")
+
+    def compact_dedup_index(self, index_name: str) -> None:
+        """Maintenance for the persistent near-dup admission index (the
+        index sibling of `lc_snapshot_vacuum`): nightly appends leave
+        the ``_df`` table as document-frequency INCREMENT rows (several
+        per shingle after many nights) and the ``_entries`` table as one
+        small file-set per append. Compaction rewrites both under the
+        spec's bucket count (`_compact_index`) — ``_df`` merged to one
+        row per shingle (readers sum per sh, so pre-merging is
+        semantics-preserving by construction), ``_entries`` rewritten
+        as-is into a fresh bucketed+sorted layout (the append file
+        fragmentation is the thing being fixed). Probe decisions are
+        IDENTICAL before and after — the registry query certifies that
+        equality on a live index."""
+        n_buckets = self._index_spec(index_name, "dedup")["n_buckets"]
+        df_tbl, entries_tbl = f"{index_name}_df", f"{index_name}_entries"
+        self._compact_index(n_buckets, [
+            (
+                df_tbl,
+                self.spark.table(self.qualified(df_tbl))
+                .groupBy("sh")
+                .agg(F.sum("df").cast("bigint").alias("df")),
+                "sh",
+            ),
+            (entries_tbl, self.spark.table(self.qualified(entries_tbl)), "sh"),
+        ])
+
+    def _ann_model(self, index_name: str):
+        """(spec, centroids by cell, PQ codebooks or ``None``) of an ANN
+        index — the KB-sized driver-side state a probe or an append
+        assigns and encodes with."""
+        spec = self._index_spec(index_name, "ann")
+        cells = self.spark.table(self.qualified(f"{index_name}_cells")).orderBy("cell").collect()
+        books = None
+        if spec["storage"] == "pq":
+            # the nested codebook list from its m × n_codes rows
+            rows = self.spark.table(self.qualified(f"{index_name}_pq")).orderBy("sub", "code").collect()
+            books = [[] for _ in range(rows[-1]["sub"] + 1)]
+            for r in rows:
+                books[r["sub"]].append(list(r["centroid"]))
+        return spec, [list(r["centroid"]) for r in cells], books
+
+    def build_ann_index(
+        self,
+        index_name: str,
+        vectors: DataFrame,
+        id_col: str,
+        vec_col: str,
+        n_cells: int = 16,
+        n_assign: int = 1,
+        lloyd_iters: int = 8,
+        n_buckets: int = 32,
+        storage: str = "float",
+        pq_m: int = 8,
+        pq_codes: int = 16,
+    ) -> None:
+        """Write ``{index_name}_cells`` (cell, centroid) and the postings
+        table ``{index_name}_postings`` bucketed+sorted by cell, then
+        record the spec (n_assign, n_buckets, storage).
+
+        ``storage``: ``"float"`` stores raw double vectors — exhaustive
+        probes are EXACT (the registry-certified contract); ``"sq8"``
+        stores the 0..255 affine grid — 4× smaller postings, probes
+        dequantize in the scan projection, ranking follows the
+        quantized cosine (recall-gated in tests, NOT exact: keep float
+        where the exhaustive-equals-brute-force contract matters);
+        ``"pq"`` stores ``pq_m`` small-int codes per vector against a
+        trained ``{index_name}_pq`` codebook table — 32×+ postings
+        compression at dim=256/m=8 where a trained codebook is
+        affordable; probes decode coded centroids from the one-row
+        broadcast tensor inside the bucketed scan projection
+        (recall-gated in tests; the coarsest/cheapest storage tier)."""
+        from cbts_datalake_synnex_spark.operators import similarity
+
+        if storage not in ("float", "sq8", "pq"):
+            raise ValueError(f"storage: {storage!r}")
+        spark = self.spark
+        cents = similarity.train_cells_list(vectors, id_col, vec_col, n_cells, lloyd_iters)
+        if cents is None:
+            raise ValueError("cannot build an ANN index over an empty corpus")
+        spark.createDataFrame(
+            [(i, c) for i, c in enumerate(cents)], "cell int, centroid array<double>"
+        ).write.format("parquet").mode("overwrite").saveAsTable(
+            self.qualified(f"{index_name}_cells")
+        )
+        postings = similarity.assign_cells(
+            vectors, id_col, vec_col,
+            similarity._cmat_frame(spark, cents), min(n_assign, len(cents)),
+        )
+        books = None
+        if storage == "pq":
+            # non-empty: train_cells_list passed
+            books, _ = similarity.train_pq_books(vectors, id_col, vec_col, int(pq_m), int(pq_codes))
+            spark.createDataFrame(
+                [
+                    (j, c, [float(x) for x in cent])
+                    for j, book in enumerate(books)
+                    for c, cent in enumerate(book)
+                ],
+                "sub int, code int, centroid array<double>",
+            ).write.format("parquet").mode("overwrite").saveAsTable(
+                self.qualified(f"{index_name}_pq")
+            )
+        write_bucketed(
+            spark, _stored_postings(postings, storage, books),
+            self.qualified(f"{index_name}_postings"), ["cell"], int(n_buckets),
+        )
+        self._set_sidecar(_INDEXES, index_name, {
+            "kind": "ann", "n_assign": int(n_assign), "n_buckets": int(n_buckets),
+            "storage": storage,
+        })
+
+    def update_ann_index(
+        self, index_name: str, vectors: DataFrame, id_col: str, vec_col: str
+    ) -> None:
+        """Append new vectors' postings under the FROZEN centroid set
+        (and, for pq storage, the frozen codebook) — one bucketed
+        append, no retrain, no corpus re-read. Appends use the spec's
+        bucket count, so the bucketed-probe property survives every
+        update.
+
+        Incoming ids already present in the postings table are dropped
+        (anti-join on the id column): duplicate postings for the same
+        ``cand_id`` would consume slots in the per-cell top-k cut before
+        the final dedup runs, silently pushing a legitimate k-th
+        neighbor out of an exhaustive probe. Scale shape: the
+        corpus-sized postings table is scanned ONCE with the (small,
+        distinct-id) incoming batch broadcast against it to find already-
+        indexed ids; the resulting overlap set is at most batch-sized, so
+        the final anti-join against the batch broadcasts too — the big
+        table is never shuffled."""
+        from cbts_datalake_synnex_spark.operators import similarity
+
+        spec, cents, books = self._ann_model(index_name)
+        postings_tbl = self.qualified(f"{index_name}_postings")
+        # Dedup WITHIN the incoming batch first: duplicate ids inside one
+        # batch would insert duplicate postings just like ids already
+        # indexed, re-creating the per-cell top-k slot-poisoning the
+        # existing-id guard prevents. One row per id, deterministic pick
+        # (min by vector) so repeated calls stay idempotent. NULL vectors
+        # are dropped BEFORE the extreme: Spark struct ordering sorts
+        # NULL fields first, so a duplicated id with one NULL-vector row
+        # would deterministically keep the NULL and discard the real
+        # vector, appending a useless posting.
+        vectors = (
+            vectors.filter(F.col(vec_col).isNotNull())
+            .groupBy(id_col)
+            .agg(F.min(F.struct(F.col(vec_col).alias("v"))).alias("__one"))
+            .select(F.col(id_col), F.col("__one.v").alias(vec_col))
+        )
+        incoming_ids = vectors.select(F.col(id_col))
+        dup_ids = (
+            self.spark.table(postings_tbl)
+            .select(F.col("cand_id").alias(id_col))
+            .join(F.broadcast(incoming_ids), on=id_col, how="left_semi")
+            .distinct()
+        )
+        fresh = vectors.join(F.broadcast(dup_ids), on=id_col, how="left_anti")
+        postings = similarity.assign_cells(
+            fresh, id_col, vec_col,
+            similarity._cmat_frame(self.spark, cents), min(spec["n_assign"], len(cents)),
+        )
+        write_bucketed(
+            self.spark, _stored_postings(postings, spec["storage"], books),
+            postings_tbl, ["cell"], spec["n_buckets"], mode="append",
+        )
+
+    def query_ann_index(
+        self,
+        index_name: str,
+        queries: DataFrame,
+        id_col: str,
+        vec_col: str,
+        k: int = 5,
+        n_probe: int = 4,
+        round_dp: int = 6,
+        exclude_self: bool = True,
+    ) -> DataFrame:
+        """Probe the persisted index: (query_id, cand_id, cosine, rank)
+        per query. Only the query batch is assigned and shuffled; the
+        postings side reads motionless from its bucketed layout. With
+        ``n_probe >= n_cells`` the result is the exact rounded-cosine
+        top-k regardless of centroid staleness."""
+        from cbts_datalake_synnex_spark.operators import similarity
+
+        spec, cents, books = self._ann_model(index_name)
+        return similarity.ann_probe(
+            _postings_cv(
+                self.spark.table(self.qualified(f"{index_name}_postings")),
+                spec["storage"],
+                books,
+            ),
+            cents,
+            queries,
+            id_col,
+            vec_col,
+            k=k,
+            n_probe=n_probe,
+            round_dp=round_dp,
+            exclude_self=exclude_self,
+        )
+
+    def compact_ann_index(self, index_name: str) -> None:
+        """Maintenance for the persistent IVF ANN index — the similarity
+        sibling of `compact_dedup_index`: every frozen-centroid append
+        (`update_ann_index`) adds a file set to the postings table;
+        after many nights the bucketed scan reads many small files per
+        bucket. Compaction rewrites the postings ONCE under the spec's
+        bucket count (`_compact_index`) — contents identical (probe
+        equality is certified by the registry query), file set fresh,
+        the bucketed-motionless probe property preserved (the
+        post-compaction probe re-runs the zero-exchange plan pin)."""
+        n_buckets = self._index_spec(index_name, "ann")["n_buckets"]
+        tbl = f"{index_name}_postings"
+        self._compact_index(n_buckets, [(tbl, self.spark.table(self.qualified(tbl)), "cell")])
+
+    def _compact_index(self, n_buckets: int, tables) -> None:
+        """Rewrite each (table, frame, bucket column) of an index: the
+        frame is written to a ``_compact`` twin bucketed+sorted into
+        ``n_buckets``, which `_swap_staged_table` then swaps in, so no
+        point of the swap has dropped data that isn't fully staged.
+
+        The bucketed writer emits one file per (task, bucket), and
+        key-hash repartitioning does NOT align tasks with bucket ids
+        (measured), so the rewrite runs as round-robin tasks, one per
+        `_TARGET_FILE_BYTES` the frame scans (at least 1): an index
+        table up to that size ends with one file per non-empty bucket,
+        a larger one with about one file per bucket and task — still a
+        collapse from nights × tasks after a year of appends."""
+        from cbts_datalake_synnex_spark.plans.budget import estimate_scan_bytes
+
+        for table, frame, bucket_col in tables:
+            staged = self.qualified(f"{table}_compact")
+            tasks = max(1, -(-estimate_scan_bytes(frame) // _TARGET_FILE_BYTES))  # ceil
+            write_bucketed(self.spark, frame.repartition(tasks), staged, [bucket_col], n_buckets)
+            _swap_staged_table(self, staged, self.qualified(table))
 
 def _latest_per_key(df: DataFrame, keys: Sequence[str], sequence_col: str) -> DataFrame:
     """CDC ordering: the latest change (max ``sequence_col``) per key."""
@@ -3928,10 +4246,11 @@ def write_bucketed(
     table: str,
     bucket_cols: Sequence[str],
     n_buckets: int = 32,
-    sort: bool = True,
+    mode: str = "overwrite",
 ) -> None:
-    """Bucketed table write — the co-located-join primitive (SURVEY
-    §4.2 / "partitioning & shuffle").
+    """Bucketed+sorted table write in ``mode`` (``overwrite`` or
+    ``append``) — the co-located-join primitive (SURVEY §4.2 /
+    "partitioning & shuffle").
 
     Hash-bucketing both sides of a recurring join on the join key means
     the join runs with ZERO exchanges: each task reads matching bucket
@@ -3946,223 +4265,9 @@ def write_bucketed(
     ≈ total-cores×2 at the target scale so each bucket fits in one
     task's memory.
     """
-    writer = df.write.format("parquet").mode("overwrite")
-    writer = writer.bucketBy(n_buckets, *bucket_cols)
-    if sort:
-        writer = writer.sortBy(*bucket_cols)
-    writer.saveAsTable(table)
-
-
-# ----------------------------------------------------------------------
-# Persistent near-dup admission index (round 9 — VERDICT r8 #3): the
-# engine-managed form of the admission gate's `corpus_shingles=` reuse.
-# A real continuous-ingest pipeline probes the same corpus every night;
-# these helpers make the corpus's shingle index a TABLE — built once,
-# probed per batch, appended per admission — so the nightly run never
-# re-reads or re-tokenizes corpus text. Layout and losslessness
-# arguments live on `operators/dedup.shingle_index_frames`.
-def build_dedup_index(
-    engine: "LakeEngine",
-    index_name: str,
-    corpus: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_size: int = 3,
-    n_buckets: int = 32,
-) -> None:
-    """Write the three index tables into the engine's database:
-    ``{index_name}_entries`` (sh, doc, n) bucketed+sorted by sh,
-    ``{index_name}_docs`` (doc, shs), ``{index_name}_df`` (sh, df)
-    bucketed by sh, plus a one-row ``{index_name}_meta`` pinning
-    (shingle_size, n_buckets) so probes can't drift from the build."""
-    from cbts_datalake_synnex_spark.operators.dedup import shingle_index_frames
-
-    entries, docs, dfinc = shingle_index_frames(
-        corpus, id_col, text_col, shingle_size
-    )
-    spark = engine.spark
-    write_bucketed(
-        spark, entries, engine.qualified(f"{index_name}_entries"), ["sh"], n_buckets
-    )
-    write_bucketed(
-        spark, dfinc, engine.qualified(f"{index_name}_df"), ["sh"], n_buckets
-    )
-    docs.write.format("parquet").mode("overwrite").saveAsTable(
-        engine.qualified(f"{index_name}_docs")
-    )
-    spark.createDataFrame(
-        [(int(shingle_size), int(n_buckets))], "shingle_size int, n_buckets int"
-    ).write.format("parquet").mode("overwrite").saveAsTable(
-        engine.qualified(f"{index_name}_meta")
-    )
-
-
-def admit_against_dedup_index(
-    engine: "LakeEngine",
-    index_name: str,
-    batch: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.7,
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """Probe the persisted index: (id, admitted, blocked_by, jaccard)
-    per batch doc. Only the batch is tokenized; the index side of the
-    candidate join moves nothing (bucketed scan, or the tiny probe
-    prefix broadcasts into it)."""
-    from cbts_datalake_synnex_spark.operators.dedup import admission_against_index
-
-    spark = engine.spark
-    meta = spark.table(engine.qualified(f"{index_name}_meta")).first()
-    return admission_against_index(
-        spark.table(engine.qualified(f"{index_name}_entries")),
-        spark.table(engine.qualified(f"{index_name}_docs")),
-        spark.table(engine.qualified(f"{index_name}_df")),
-        batch,
-        id_col,
-        text_col,
-        threshold=threshold,
-        shingle_size=int(meta["shingle_size"]),
-        max_doc_freq=max_doc_freq,
-    )
-
-
-def update_dedup_index(
-    engine: "LakeEngine",
-    index_name: str,
-    batch: DataFrame,
-    decisions: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> None:
-    """Append the ADMITTED batch docs' shingles to the index — one
-    bucketed append per table, df rows as additive increments (readers
-    sum per sh); no corpus rewrite, no re-tokenize of anything but the
-    admitted slice. Appends use the meta-pinned bucket spec, so the
-    bucketed-join property survives every nightly update.
-
-    ``decisions`` is PINNED (localCheckpoint) before the first append:
-    its plan reads the very index tables being appended, so a lazy
-    frame re-evaluated afterwards would see the batch's own rows in
-    the index and block everything as a self-match. Pass the frame
-    straight from ``admit_against_dedup_index`` — or an already
-    checkpointed one, for which the pin is a no-op read."""
-    from cbts_datalake_synnex_spark.operators.dedup import shingle_index_frames
-
-    spark = engine.spark
-    meta = spark.table(engine.qualified(f"{index_name}_meta")).first()
-    admitted = batch.join(
-        decisions.localCheckpoint().filter(F.col("admitted")).select(id_col), id_col
-    )
-    entries, docs, dfinc = shingle_index_frames(
-        admitted, id_col, text_col, int(meta["shingle_size"])
-    )
-    nb = int(meta["n_buckets"])
-    entries.write.format("parquet").mode("append").bucketBy(nb, "sh").sortBy(
-        "sh"
-    ).saveAsTable(engine.qualified(f"{index_name}_entries"))
-    dfinc.write.format("parquet").mode("append").bucketBy(nb, "sh").sortBy(
-        "sh"
-    ).saveAsTable(engine.qualified(f"{index_name}_df"))
-    docs.write.format("parquet").mode("append").saveAsTable(
-        engine.qualified(f"{index_name}_docs")
-    )
-
-
-# ----------------------------------------------------------------------
-# Persistent ANN (IVF) index (round 9) — the similarity-search sibling
-# of the near-dup admission index: a real retrieval pipeline probes the
-# same embedded corpus every batch; these helpers make the IVF index a
-# pair of TABLES — centroids trained once, postings assigned once and
-# bucketed by cell — so a probe moves only the query batch (the
-# postings side's cogroup clustering requirement is satisfied by the
-# bucket layout, zero exchange) and new vectors append WITHOUT
-# retraining (frozen-centroid assignment; the staleness contract is the
-# standard IVF one — recall drifts as the corpus distribution shifts,
-# rebuild cadence is the operator's knob, and an exhaustive probe stays
-# EXACT no matter how stale the centroids are).
-def compact_dedup_index(
-    engine: "LakeEngine",
-    index_name: str,
-    parallelism: int = 1,
-) -> None:
-    """Maintenance for the persistent near-dup admission index
-    (round 10 — the index sibling of `lc_snapshot_vacuum`): nightly
-    appends leave the ``_df`` table as document-frequency INCREMENT
-    rows (several per shingle after many nights) and the ``_entries``
-    table as one small file-set per append. Compaction rewrites both
-    under the SAME meta-pinned bucket spec — ``_df`` merged to one
-    row per shingle (readers sum per sh, so pre-merging is
-    semantics-preserving by construction), ``_entries`` rewritten
-    as-is into a fresh bucketed+sorted layout (the append file
-    fragmentation is the thing being fixed). Probe decisions are
-    IDENTICAL before and after — the registry query certifies that
-    equality on a live index.
-
-    Rewrite staging: each table materializes to a ``_compact`` twin
-    first, then swaps via rename-aside (live → ``_old``, staged →
-    live, drop ``_old`` — :func:`_swap_staged_table`), so no point in
-    the swap has dropped data that isn't already fully staged: a
-    failure mid-swap leaves BOTH complete tables on disk and repair
-    is a single RENAME, never a rebuild (ADVICE r10 — the previous
-    DROP-then-RENAME order had a window where the only copy lived
-    under the staged name)."""
-    spark = engine.spark
-    meta = spark.table(engine.qualified(f"{index_name}_meta")).first()
-    nb = int(meta["n_buckets"])
-    for tbl, frame in (
-        (
-            f"{index_name}_df",
-            spark.table(engine.qualified(f"{index_name}_df"))
-            .groupBy("sh")
-            .agg(F.sum("df").cast("bigint").alias("df")),
-        ),
-        (f"{index_name}_entries", spark.table(engine.qualified(f"{index_name}_entries"))),
-    ):
-        staged = engine.qualified(f"{tbl}_compact")
-        # one file per non-empty bucket at parallelism=1
-        # (see compact_ann_index's file-count note)
-        write_bucketed(
-            spark, frame.repartition(int(parallelism)), staged, ["sh"], nb
-        )
-        _swap_staged_table(engine, staged, engine.qualified(tbl))
-
-
-def compact_ann_index(
-    engine: "LakeEngine",
-    index_name: str,
-    parallelism: int = 1,
-) -> None:
-    """Maintenance for the persistent IVF ANN index — the similarity
-    sibling of :func:`compact_dedup_index` (round 10): every
-    frozen-centroid append (`update_ann_index`) adds a file set to the
-    postings table; after many nights the bucketed scan reads many
-    small files per bucket. Compaction rewrites the postings ONCE
-    under the meta-pinned bucket spec via the same staged DROP+RENAME
-    swap — contents identical (probe equality is certified by the
-    registry query), file set fresh, the bucketed-motionless probe
-    property preserved (the post-compaction probe re-runs the
-    zero-exchange plan pin)."""
-    spark = engine.spark
-    meta = spark.table(engine.qualified(f"{index_name}_meta")).first()
-    nb = int(meta["n_buckets"])
-    tbl = f"{index_name}_postings"
-    staged = engine.qualified(f"{tbl}_compact")
-    # the bucketed writer emits one file per (task, bucket), so output
-    # file count = parallelism × buckets-touched-per-task (measured:
-    # key-hash repartitioning does NOT align tasks with bucket ids).
-    # parallelism=1 gives exactly one file per non-empty bucket — the
-    # full defrag; raise it when one task can't hold the table and
-    # accept `parallelism` files per bucket, still a collapse from
-    # nights × tasks after a year of appends.
-    write_bucketed(
-        spark,
-        spark.table(engine.qualified(tbl)).repartition(int(parallelism)),
-        staged,
-        ["cell"],
-        nb,
-    )
-    _swap_staged_table(engine, staged, engine.qualified(tbl))
+    df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols).sortBy(
+        *bucket_cols
+    ).saveAsTable(table)
 
 
 def _swap_staged_table(engine: "LakeEngine", staged: str, live: str) -> None:
@@ -4291,33 +4396,58 @@ def write_sorted(
         )
 
 
-def _quantize_postings(postings: DataFrame) -> DataFrame:
-    """(cell, cand_id, cv) → (cell, cand_id, zero, scale, qv): the SQ8
-    storage form — per-vector 0..255 affine grid (the
-    `similarity.scalar_quantize` arithmetic with the cell column kept),
-    4× smaller postings IO at the documented ~0.98 recall."""
+def _stored_postings(postings: DataFrame, storage: str, books) -> DataFrame:
+    """(cell, cand_id, cv) in an ANN index's ``storage`` form:
+    ``float`` keeps ``cv``; ``sq8`` stores (zero, scale, qv), the
+    per-vector 0..255 affine grid (the `similarity.scalar_quantize`
+    arithmetic with the cell column kept), 4× smaller postings IO at
+    the documented ~0.98 recall; ``pq`` stores ``codes`` against the
+    codebooks ``books``: unit-normalize (norm materialized BEFORE the
+    lambda — no CSE inside HOFs), then the shared nearest-centroid
+    encoder, m small ints per vector — 32×+ less postings IO than raw
+    doubles at dim=256, m=8."""
+    from cbts_datalake_synnex_spark.operators import similarity
+
     v = F.col("cv")
-    mn, mx = F.array_min(v), F.array_max(v)
-    scale = F.when(mx > mn, (mx - mn) / F.lit(255.0)).otherwise(F.lit(1.0))
-    return postings.select(
-        "cell",
-        "cand_id",
-        mn.alias("zero"),
-        scale.alias("scale"),
-        F.transform(v, lambda x: F.round((x - mn) / scale, 0).cast("int")).alias("qv"),
-    )
+    if storage == "sq8":
+        mn, mx = F.array_min(v), F.array_max(v)
+        scale = F.when(mx > mn, (mx - mn) / F.lit(255.0)).otherwise(F.lit(1.0))
+        return postings.select(
+            "cell",
+            "cand_id",
+            mn.alias("zero"),
+            scale.alias("scale"),
+            F.transform(v, lambda x: F.round((x - mn) / scale, 0).cast("int")).alias("qv"),
+        )
+    if storage == "pq":
+        norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
+        return (
+            postings.select(
+                "cell", "cand_id", "cv", F.greatest(norm, F.lit(1e-12)).alias("__cn")
+            )
+            .crossJoin(F.broadcast(similarity.pq_book_df(postings.sparkSession, books)))
+            .select(
+                "cell",
+                "cand_id",
+                similarity.pq_encode_codes(
+                    F.transform(v, lambda x: x.cast("double") / F.col("__cn")),
+                    len(books[0][0]),
+                ).alias("codes"),
+            )
+        )
+    return postings.select("cell", "cand_id", "cv")
 
 
-def _postings_cv(
-    postings: DataFrame, storage: str, book_df: DataFrame | None = None
-) -> DataFrame:
+def _postings_cv(postings: DataFrame, storage: str, books) -> DataFrame:
     """Present a postings table as (cell, cand_id, cv) regardless of
     storage form — SQ8 dequantizes as a pure projection over the
-    bucketed scan; PQ decodes by concatenating coded centroids from
-    the ONE-ROW broadcast codebook tensor (a BroadcastNestedLoopJoin
-    preserves the streamed side's bucketed distribution, so neither
-    form adds a cell exchange and the motionless-probe plan pin still
-    holds)."""
+    bucketed scan; PQ decodes by concatenating coded centroids of
+    ``books`` from the ONE-ROW broadcast codebook tensor (a
+    BroadcastNestedLoopJoin preserves the streamed side's bucketed
+    distribution, so neither form adds a cell exchange and the
+    motionless-probe plan pin still holds)."""
+    from cbts_datalake_synnex_spark.operators import similarity
+
     if storage == "sq8":
         return postings.select(
             "cell",
@@ -4328,261 +4458,12 @@ def _postings_cv(
             ).alias("cv"),
         )
     if storage == "pq":
-        from cbts_datalake_synnex_spark.operators import similarity
-
-        assert book_df is not None, "pq storage needs the codebook frame"
-        return postings.crossJoin(F.broadcast(book_df)).select(
+        return postings.crossJoin(
+            F.broadcast(similarity.pq_book_df(postings.sparkSession, books))
+        ).select(
             "cell",
             "cand_id",
             similarity.pq_decode_cv(F.col("codes")).alias("cv"),
         )
     return postings.select("cell", "cand_id", "cv")
 
-
-def _pq_books_from_table(spark, name: str):
-    """Rebuild the nested codebook list (and subdim) from the persisted
-    ``{index}_pq`` table — KB-sized (m × n_codes rows), the centroid-
-    collect posture."""
-    rows = spark.table(name).orderBy("sub", "code").collect()
-    m = max(r["sub"] for r in rows) + 1
-    books = [[] for _ in range(m)]
-    for r in rows:
-        books[r["sub"]].append(list(r["centroid"]))
-    return books, len(books[0][0])
-
-
-def _encode_pq_postings(
-    postings: DataFrame, book_df: DataFrame, sd: int
-) -> DataFrame:
-    """(cell, cand_id, cv) → (cell, cand_id, codes): unit-normalize
-    (norm materialized BEFORE the lambda — no CSE inside HOFs), then
-    the shared nearest-centroid encoder. m small ints per vector —
-    32×+ less postings IO than raw doubles at dim=256, m=8."""
-    from cbts_datalake_synnex_spark.operators import similarity
-
-    v = F.col("cv")
-    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-    return (
-        postings.select(
-            "cell", "cand_id", "cv", F.greatest(norm, F.lit(1e-12)).alias("__cn")
-        )
-        .crossJoin(F.broadcast(book_df))
-        .select(
-            "cell",
-            "cand_id",
-            similarity.pq_encode_codes(
-                F.transform(v, lambda x: x.cast("double") / F.col("__cn")), sd
-            ).alias("codes"),
-        )
-    )
-
-
-def build_ann_index(
-    engine: "LakeEngine",
-    index_name: str,
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_cells: int = 16,
-    n_assign: int = 1,
-    lloyd_iters: int = 8,
-    n_buckets: int = 32,
-    storage: str = "float",
-    pq_m: int = 8,
-    pq_codes: int = 16,
-) -> None:
-    """Write ``{index_name}_cells`` (cell, centroid), the postings
-    table ``{index_name}_postings`` bucketed+sorted by cell, and a
-    one-row ``{index_name}_meta`` pinning
-    (n_cells, n_assign, n_buckets, storage) so probes and appends
-    can't drift from the build.
-
-    ``storage``: ``"float"`` stores raw double vectors — exhaustive
-    probes are EXACT (the registry-certified contract); ``"sq8"``
-    stores the 0..255 affine grid (round 11) — 4× smaller postings,
-    probes dequantize in the scan projection, ranking follows the
-    quantized cosine (recall-gated in tests, NOT exact: keep float
-    where the exhaustive-equals-brute-force contract matters);
-    ``"pq"`` (round 12, VERDICT r11 #6) stores ``pq_m`` small-int
-    codes per vector against a trained ``{index_name}_pq`` codebook
-    table — 32×+ postings compression at dim=256/m=8 where a trained
-    codebook is affordable; probes decode coded centroids from the
-    one-row broadcast tensor inside the bucketed scan projection
-    (recall-gated in tests; the coarsest/cheapest storage tier)."""
-    from cbts_datalake_synnex_spark.operators import similarity
-
-    if storage not in ("float", "sq8", "pq"):
-        raise ValueError(f"storage: {storage!r}")
-    spark = engine.spark
-    cents = similarity.train_cells_list(vectors, id_col, vec_col, n_cells, lloyd_iters)
-    if cents is None:
-        raise ValueError("cannot build an ANN index over an empty corpus")
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cell int, centroid array<double>"
-    ).write.format("parquet").mode("overwrite").saveAsTable(
-        engine.qualified(f"{index_name}_cells")
-    )
-    postings = similarity.assign_cells(
-        vectors, id_col, vec_col,
-        similarity._cmat_frame(spark, cents), min(n_assign, len(cents)),
-    )
-    if storage == "pq":
-        trained = similarity.train_pq_books(
-            vectors, id_col, vec_col, int(pq_m), int(pq_codes)
-        )
-        assert trained is not None  # non-empty: train_cells_list passed
-        books, sd = trained
-        spark.createDataFrame(
-            [
-                (j, c, [float(x) for x in cent])
-                for j, book in enumerate(books)
-                for c, cent in enumerate(book)
-            ],
-            "sub int, code int, centroid array<double>",
-        ).write.format("parquet").mode("overwrite").saveAsTable(
-            engine.qualified(f"{index_name}_pq")
-        )
-        stored = _encode_pq_postings(
-            postings, similarity.pq_book_df(spark, books), sd
-        )
-    elif storage == "sq8":
-        stored = _quantize_postings(postings)
-    else:
-        stored = postings.select("cell", "cand_id", "cv")
-    write_bucketed(
-        spark, stored,
-        engine.qualified(f"{index_name}_postings"), ["cell"], n_buckets,
-    )
-    spark.createDataFrame(
-        [(len(cents), int(n_assign), int(n_buckets), storage)],
-        "n_cells int, n_assign int, n_buckets int, storage string",
-    ).write.format("parquet").mode("overwrite").saveAsTable(
-        engine.qualified(f"{index_name}_meta")
-    )
-
-
-def update_ann_index(
-    engine: "LakeEngine",
-    index_name: str,
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-) -> None:
-    """Append new vectors' postings under the FROZEN centroid set —
-    one bucketed append, no retrain, no corpus re-read. Appends use
-    the meta-pinned bucket spec so the bucketed-probe property
-    survives every update.
-
-    Incoming ids already present in the postings table are dropped
-    (anti-join on the id column, ADVICE r9): duplicate postings for
-    the same ``cand_id`` would consume slots in the per-cell top-k
-    cut before the final dedup runs, silently pushing a legitimate
-    k-th neighbor out of an exhaustive probe. Scale shape: the
-    corpus-sized postings table is scanned ONCE with the (small,
-    distinct-id) incoming batch broadcast against it to find already-
-    indexed ids; the resulting overlap set is at most batch-sized, so
-    the final anti-join against the batch broadcasts too — the big
-    table is never shuffled."""
-    from cbts_datalake_synnex_spark.operators import similarity
-
-    spark = engine.spark
-    meta = spark.table(engine.qualified(f"{index_name}_meta")).first()
-    cent_rows = (
-        spark.table(engine.qualified(f"{index_name}_cells")).orderBy("cell").collect()
-    )
-    cents = [list(r["centroid"]) for r in cent_rows]
-    # Dedup WITHIN the incoming batch first (ADVICE r10): duplicate ids
-    # inside one batch would insert duplicate postings just like ids
-    # already indexed, re-creating the per-cell top-k slot-poisoning
-    # the existing-id guard prevents. One row per id, deterministic
-    # pick (min by vector) so repeated calls stay idempotent. NULL
-    # vectors are dropped BEFORE the extreme (ADVICE r11): Spark
-    # struct ordering sorts NULL fields first, so a duplicated id with
-    # one NULL-vector row would deterministically keep the NULL and
-    # discard the real vector, appending a useless posting.
-    vectors = (
-        vectors.filter(F.col(vec_col).isNotNull())
-        .groupBy(id_col)
-        .agg(F.min(F.struct(F.col(vec_col).alias("v"))).alias("__one"))
-        .select(F.col(id_col), F.col("__one.v").alias(vec_col))
-    )
-    incoming_ids = vectors.select(F.col(id_col))
-    dup_ids = (
-        spark.table(engine.qualified(f"{index_name}_postings"))
-        .select(F.col("cand_id").alias(id_col))
-        .join(F.broadcast(incoming_ids), on=id_col, how="left_semi")
-        .distinct()
-    )
-    fresh = vectors.join(F.broadcast(dup_ids), on=id_col, how="left_anti")
-    postings = similarity.assign_cells(
-        fresh, id_col, vec_col,
-        similarity._cmat_frame(spark, cents),
-        min(int(meta["n_assign"]), len(cents)),
-    )
-    storage = meta["storage"]
-    if storage == "pq":
-        # encode with the FROZEN persisted codebook — same posture as
-        # the frozen centroid set: appends never retrain
-        books, sd = _pq_books_from_table(
-            spark, engine.qualified(f"{index_name}_pq")
-        )
-        stored = _encode_pq_postings(
-            postings, similarity.pq_book_df(spark, books), sd
-        )
-    elif storage == "sq8":
-        stored = _quantize_postings(postings)
-    else:
-        stored = postings.select("cell", "cand_id", "cv")
-    stored.write.format("parquet").mode(
-        "append"
-    ).bucketBy(int(meta["n_buckets"]), "cell").sortBy("cell").saveAsTable(
-        engine.qualified(f"{index_name}_postings")
-    )
-
-
-def query_ann_index(
-    engine: "LakeEngine",
-    index_name: str,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 5,
-    n_probe: int = 4,
-    round_dp: int = 6,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Probe the persisted index: (query_id, cand_id, cosine, rank)
-    per query. Only the query batch is assigned and shuffled; the
-    postings side reads motionless from its bucketed layout. With
-    ``n_probe >= n_cells`` the result is the exact rounded-cosine
-    top-k regardless of centroid staleness."""
-    from cbts_datalake_synnex_spark.operators import similarity
-
-    spark = engine.spark
-    cent_rows = (
-        spark.table(engine.qualified(f"{index_name}_cells")).orderBy("cell").collect()
-    )
-    cents = [list(r["centroid"]) for r in cent_rows]
-    meta = spark.table(engine.qualified(f"{index_name}_meta")).first()
-    storage = meta["storage"]
-    book_df = None
-    if storage == "pq":
-        books, _sd = _pq_books_from_table(
-            spark, engine.qualified(f"{index_name}_pq")
-        )
-        book_df = similarity.pq_book_df(spark, books)
-    return similarity.ann_probe(
-        _postings_cv(
-            spark.table(engine.qualified(f"{index_name}_postings")),
-            storage,
-            book_df,
-        ),
-        cents,
-        queries,
-        id_col,
-        vec_col,
-        k=k,
-        n_probe=n_probe,
-        round_dp=round_dp,
-        exclude_self=exclude_self,
-    )

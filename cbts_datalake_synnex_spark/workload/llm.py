@@ -4741,7 +4741,7 @@ def x8_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 # K++ [EXT] — admission-index COMPACTION (round 10): nightly appends
 # fragment the index (_df holds increment rows, _entries small file
 # sets); engine.compact_dedup_index rewrites both under the
-# meta-pinned bucket spec via a staged-twin DROP+RENAME swap. The
+# spec-pinned bucket count via a staged-twin DROP+RENAME swap. The
 # query certifies, on a LIVE index mid-lifecycle: (a) batch-2
 # decisions identical before and after compaction (exceptAll both
 # ways — RAISES on any drift), (b) the _df table actually merged to
@@ -4782,13 +4782,12 @@ def x8_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="K++ [EXT] — admission-index compaction "
     "(engine.compact_dedup_index): _df increments merged to one row "
-    "per shingle, _entries rewritten, both under the meta-pinned "
-    "bucket spec with a staged DROP+RENAME swap; probe decisions "
+    "per shingle, _entries rewritten, both under the spec-pinned "
+    "bucket count with a staged DROP+RENAME swap; probe decisions "
     "certified identical pre/post (raises on drift or no-op), oracle "
     "re-derives the post-compaction batch-2 probe from scratch.",
 )
 def lc_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cbts_datalake_synnex_spark.engine import compact_dedup_index
     from cbts_datalake_synnex_spark.workload.lifecycle import (
         _materialize,
         _scratch_engine,
@@ -4816,7 +4815,7 @@ def lc_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "lifecycle staging failed: the _df table carries no "
                 "increment rows, compaction would be vacuous"
             )
-        compact_dedup_index(eng, "nd")
+        eng.compact_dedup_index("nd")
         post_rows = spark.table(df_tbl).count()
         if post_rows != distinct_sh:
             raise RuntimeError(
@@ -5025,7 +5024,7 @@ def pipeline_epoch_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
 # K++ [EXT] — ANN-index compaction (round 10): the IVF sibling of
 # lc_index_compact — nightly frozen-centroid appends fragment the
 # postings file set; engine.compact_ann_index rewrites it once under
-# the meta-pinned bucket spec (staged DROP+RENAME). Certified on a
+# the spec-pinned bucket count (staged DROP+RENAME). Certified on a
 # live index: file count strictly shrinks, the post-compaction probe
 # still plans as a motionless bucketed read (the x3_ann_index_probe
 # pin re-asserted), and probe results are IDENTICAL pre/post —
@@ -5054,7 +5053,7 @@ def pipeline_epoch_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="K++ [EXT] — ANN postings compaction "
     "(engine.compact_ann_index): fragmented append file sets "
-    "rewritten once under the meta-pinned bucket spec; file count "
+    "rewritten once under the spec-pinned bucket count; file count "
     "shrinks, the motionless-bucketed-probe pin re-asserted, probe "
     "results certified identical pre/post via the exhaustive top-5 "
     "oracle.",
@@ -5062,7 +5061,6 @@ def pipeline_epoch_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lc_ann_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import re
 
-    from cbts_datalake_synnex_spark.engine import compact_ann_index
     from cbts_datalake_synnex_spark.plans.inspect import explain_str
     from cbts_datalake_synnex_spark.workload.lifecycle import (
         _materialize,
@@ -5089,7 +5087,7 @@ def lc_ann_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vix", q, "vec_id", "embedding", k=5, n_probe=8, exclude_self=True
         ).localCheckpoint()
         pre_files = n_files()
-        compact_ann_index(eng, "vix")
+        eng.compact_ann_index("vix")
         post_files = n_files()
         if post_files >= pre_files:
             raise RuntimeError(

@@ -129,23 +129,44 @@ def test_update_ann_index_intra_batch_duplicates_collapse(spark, eng):
     assert {r["cand_id"]: r["count"] for r in posted} == {50: 1, 51: 1, 52: 1}
 
 
-def test_compact_swap_leaves_only_live_table_and_clears_stale_old(spark, eng):
-    base = _vecs(spark, range(0, 40))
-    eng.build_ann_index("c", base, "vec_id", "embedding", n_cells=4, n_assign=1)
+def _ann_index(spark, eng):
+    eng.build_ann_index("c", _vecs(spark, range(0, 40)), "vec_id", "embedding", n_cells=4, n_assign=1)
     eng.update_ann_index("c", _vecs(spark, range(40, 60)), "vec_id", "embedding")
+    return eng.compact_ann_index, {"c_postings": None}
+
+
+def _dedup_index(spark, eng):
+    def docs(ids):
+        return spark.createDataFrame(
+            [(i, f"words {i % 7} about {i % 5} the lake {i}") for i in ids], "doc_id bigint, text string"
+        )
+
+    eng.build_dedup_index("c", docs(range(0, 20)), "doc_id", "text", n_buckets=4)
+    batch = docs(range(20, 40))
+    decisions = eng.admit_against_dedup_index("c", batch, "doc_id", "text")
+    eng.update_dedup_index("c", batch, decisions, "doc_id", "text")
+    # _df compacts to one row per shingle: compare its sums per shingle
+    return eng.compact_dedup_index, {"c_entries": None, "c_df": "sh"}
+
+
+@pytest.mark.parametrize("index", [_ann_index, _dedup_index], ids=["ann", "dedup"])
+def test_compact_swap_leaves_only_live_table_and_clears_stale_old(spark, eng, index):
+    compact, tables = index(spark, eng)
+
+    def contents(table, sum_by):
+        df = spark.table(eng.qualified(table))
+        if sum_by:
+            df = df.groupBy(sum_by).agg(F.sum("df"))
+        return sorted(map(tuple, df.collect()))
+
     # a stale `_old` twin from a previously crashed swap must not
     # block the rename-aside
-    spark.createDataFrame([(0,)], "junk bigint").write.saveAsTable(
-        eng.qualified("c_postings_old")
-    )
-    before = sorted(
-        map(tuple, spark.table(eng.qualified("c_postings")).collect())
-    )
-    from cbts_datalake_synnex_spark.engine import compact_ann_index
-
-    compact_ann_index(eng, "c")
-    after = sorted(map(tuple, spark.table(eng.qualified("c_postings")).collect()))
-    assert after == before
+    for t in tables:
+        spark.createDataFrame([(0,)], "junk bigint").write.saveAsTable(eng.qualified(f"{t}_old"))
+    before = {t: contents(t, by) for t, by in tables.items()}
+    compact("c")
+    assert {t: contents(t, by) for t, by in tables.items()} == before
     names = {t.name for t in spark.catalog.listTables(eng.database)}
-    assert "c_postings" in names
-    assert "c_postings_old" not in names and "c_postings_compact" not in names
+    for t in tables:
+        assert t in names
+        assert f"{t}_old" not in names and f"{t}_compact" not in names

@@ -143,6 +143,21 @@ def test_sync_to_snapshot_commits_once(spark, eng, spark_jobs):
     assert got == {(1, "a"), (2, "B"), (4, "d")}
 
 
+def test_sync_to_snapshot_without_changes_runs_only_the_diff(spark, eng, spark_jobs):
+    """A sync that changes nothing pins the key-sized diff, reads its
+    counts from that one checkpoint and stops: no merge source, no
+    commit."""
+    rows = [(i, f"v{i}") for i in range(2000)]
+    eng.write_curated("s", _df(spark, rows), mode="overwrite", partition_cols=[])
+    before = len(eng.snapshot_history("s"))
+    counts, jobs = spark_jobs(lambda: eng.sync_to_snapshot("s", _df(spark, rows), keys=["k"]))
+    assert counts == {"inserted": 0, "changed": 0, "deleted": 0}
+    # 3 jobs at local[2] and local[4]; 6 when the merge source was
+    # joined in and checkpointed before the counts
+    assert jobs < 6
+    assert len(eng.snapshot_history("s")) == before
+
+
 def test_stale_bloom_disabled_after_overwrite(spark, eng):
     """ADVICE r12 (high): a non-append mutation used to leave the
     persisted filter with FALSE NEGATIVES — the bloom said non-member,
